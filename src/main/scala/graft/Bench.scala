@@ -49,10 +49,38 @@ object Bench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Sessions.local(cpus)
+  /** What [[measure]] observed: each query's successful pass times in
+    * pass order (empty = failed every pass), the passes run, and the
+    * host-speed calibration pair taken after warm-up.
+    */
+  final case class Timing(passes: Seq[(String, List[Double])], runs: Int,
+      calibCpu: Double, calibSpark: Double) {
+
+    /** Per-query median; -1 sentinel for a query that failed in EVERY
+      * pass, so a crash is never mistaken for a fast success. */
+    def medians: Seq[(String, Double)] = passes.map { case (q, ts) =>
+      val s = ts.sorted
+      q -> (if (s.isEmpty) -1.0
+        else if (s.size % 2 == 1) s(s.size / 2)
+        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2)
+    }
+
+    def errors: Seq[String] = passes.collect { case (q, Nil) => q }
+
+    def total: Double = medians.map(_._2).filter(_ >= 0).sum
+  }
+
+  /** The one warm-up + timing loop ([[main]] and [[Probe]] share it):
+    * warm every query at sf0.001, settle, calibrate the host, then
+    * time `SPARK_GRAFT_BENCH_RUNS` (default 3) alternating passes over
+    * `names` at `sfDir`. `listener`, if given, is attached for the
+    * timed passes only.
+    */
+  def measure(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      names: Seq[String],
+      listener: Option[org.apache.spark.scheduler.SparkListener] = None)
+      : Timing = {
+    val fns = SparkEntry.queries
     // warmup: run EVERY query once at the smallest SF. The schemas are
     // identical across SFs, so each query's generated code and JIT'd
     // hot loops are exactly the ones the measured run executes —
@@ -70,31 +98,29 @@ object Bench {
     // impossible here — mute globally for its duration; a real
     // scale-killer's warning still surfaces unmuted in the measured
     // passes below
-    muteGwinWarnings(mute = true) {
-      val warmups = SparkEntry.benchQueries.toSeq.map { case (_, fn) =>
+    try muteGwinWarnings(mute = true) {
+      val warmups = names.map { q =>
         scala.concurrent.Future {
-          try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+          try fns(q)(spark, warmDir).write.format("noop").mode("overwrite").save()
           catch { case scala.util.control.NonFatal(_) => () }
         }
       }
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(warmups),
         scala.concurrent.duration.Duration.Inf)
-    }
-    pool.shutdown()
+    } finally pool.shutdown()
     // settle before measuring: the warmup leaves cached plans plus a
     // GC + ContextCleaner backlog (broadcast/shuffle cleanup runs
     // async) that otherwise lands on whichever queries run first
     spark.catalog.clearCache()
     System.gc()
     Thread.sleep(3000)
-    // host-speed calibration pair (graft.core.Calib — shared with
-    // graft.Anchor so full-sweep snapshots and solo-anchor tables
-    // normalize identically)
+    // host-speed calibration pair (graft.core.Calib) — full-sweep
+    // snapshots and solo-anchor tables normalize identically
     val calibCpu = graft.core.Calib.median3(graft.core.Calib.cpuMd5())
     val calibSpark =
       graft.core.Calib.median3(graft.core.Calib.sparkRange(spark))
-    // 3 ALTERNATING full passes, reporting the per-query MEDIAN: a
+    // ALTERNATING full passes, reporting the per-query MEDIAN: a
     // transient VM stall (noisy neighbor, GC storm) hits one contiguous
     // stretch of ONE pass, so the median of three passes separated in
     // time is immune — a single-run bench once reported 54 s for a query
@@ -102,11 +128,11 @@ object Bench {
     // back-to-back repeats of each query) is what buys that time
     // separation.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val names = SparkEntry.benchQueries.toSeq.sortBy(_._1).map(_._1)
-    val times =
-      scala.collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
+    val times = scala.collection.mutable.Map.empty[String, List[Double]]
+      .withDefaultValue(Nil)
+    listener.foreach(spark.sparkContext.addSparkListener)
     for (_ <- 1 to runs; name <- names) {
-      val fn = SparkEntry.benchQueries(name)
+      val fn = fns(name)
       val t0 = System.nanoTime()
       // noop sink: materializes every output column (a bare .count()
       // would let Catalyst prune all per-row computation away and
@@ -115,43 +141,37 @@ object Bench {
         muteGwinWarnings(Gwin.allowed(name)) {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         }
-        times(name) = ((System.nanoTime() - t0) / 1e9) :: times(name)
+        times(name) = times(name) :+ (System.nanoTime() - t0) / 1e9
       } catch { case scala.util.control.NonFatal(_) => () }
     }
-    def median(xs: List[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+    listener.foreach { l =>
+      Thread.sleep(300) // let the listener bus deliver the last events
+      spark.sparkContext.removeSparkListener(l)
     }
-    // a query only counts as errored if it failed in EVERY pass; -1
-    // sentinel so a crash is never mistaken for a fast success
-    val results = names.map { name =>
-      val ts = times(name)
-      name -> (if (ts.nonEmpty) median(ts) else -1.0)
-    }
-    val errors = names.filter(times(_).isEmpty)
-    // headline total sums the ORACLE-CHECKED queries only, so it stays
-    // comparable across rounds; bench-only attribution labels (q240a/b)
-    // report in "queries" but don't double-count the work q240 already
-    // counts
-    val total = results
-      .filter { case (k, _) => SparkEntry.queries.contains(k) }
-      .map(_._2).filter(_ >= 0).sum
+    Timing(names.map(q => q -> times(q)), runs, calibCpu, calibSpark)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = graft.core.Sessions.local(cpus)
+    val t = measure(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted)
     // full payload to a FILE, one compact ≤1900-byte line to stdout —
     // the driver keeps only the last ~2000 stdout chars, and round 9's
     // single 12 KB line came back front-truncated (parsed: null). See
     // BenchFormat for the contract.
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       "/root/repo/BENCH_FULL.json")
-    val fullJson = BenchFormat.fullJson(results, total, runs, calibCpu,
-      calibSpark, errors, sfDir)
+    val fullJson = BenchFormat.fullJson(t.medians, t.total, t.runs,
+      t.calibCpu, t.calibSpark, t.errors, sfDir)
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] could not write $fullPath: $e")
     }
-    println(BenchFormat.compactLine(results, total, runs, calibCpu,
-      calibSpark, errors, sfDir, fullPath))
+    println(BenchFormat.compactLine(t.medians, t.total, t.runs,
+      t.calibCpu, t.calibSpark, t.errors, sfDir, fullPath))
     spark.stop()
   }
 }

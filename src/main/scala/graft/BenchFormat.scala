@@ -13,7 +13,7 @@ package graft
   *  - the line still covers EVERY query: medians ride as a centisecond
   *    integer array (`cs`) in sorted-query-name order — ~4 bytes per
   *    query instead of ~35 for `"name":1.234` pairs. Decode against
-  *    the full payload's key order, or `sort(benchQueries.keys)`;
+  *    the full payload's key order, or `sort(SparkEntry.queries.keys)`;
   *  - the complete name → seconds map (millisecond precision) is
   *    written to the file named by `full` (default
   *    `/root/repo/BENCH_FULL.json`), the artifact bench_compare.py and

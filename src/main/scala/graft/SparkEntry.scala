@@ -33,24 +33,4 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allQueries.flatMap(q => q.oracle.map(q.name -> _)).toMap
-
-  /** The bench surface: every oracle-checked query plus bench-only
-    * cost-attribution labels (no oracle — their composites are the
-    * checked queries). Currently: q240's eager LM training vs its
-    * broadcast scoring pass, timed apart.
-    */
-  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    queries ++ Map(
-      "q240a_lm_train" -> (Extended15.lmTrainBench _),
-      "q240b_lm_score" -> (Extended15.lmScoreBench _),
-      // q307's ladder, one label per stage (the q240a/b memo
-      // pattern): each recomputes ITS stage fresh against the memoized
-      // previous stage, so sum(a..f) ≈ the composite and a composite
-      // regression attributes to a stage from the driver artifact
-      "q307a_exact" -> (Extended31.exactBench _),
-      "q307b_substr" -> (Extended31.substrBench _),
-      "q307c_minhash" -> (Extended31.minhashBench _),
-      "q307d_semdedup" -> (Extended31.semdedupBench _),
-      "q307e_decontam" -> (Extended31.decontamBench _),
-      "q307f_pack" -> (Extended31.packBench _))
 }

@@ -8,8 +8,9 @@ package graft.core
   * host-vs-plan question, answered mechanically by bench_compare).
   * The two probes measure DIFFERENT host dimensions: cpu_md5 =
   * single-thread CPU, spark_range = parallel throughput + scheduler.
-  * Shared by [[graft.Bench]] and [[graft.Anchor]] so the full-sweep
-  * snapshots and the solo-anchor tables normalize identically.
+  * Taken by [[graft.Bench.measure]], so the full-sweep snapshots and
+  * the solo-anchor tables ([[graft.Probe]] `anchor`) normalize
+  * identically.
   */
 object Calib {
 

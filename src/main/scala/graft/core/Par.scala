@@ -15,38 +15,39 @@ package graft.core
   */
 object Par {
 
-  /** Evaluate `a` and `b` concurrently, return both. Exceptions from
-    * either thunk propagate to the caller (after both settle).
+  /** Evaluate `a` (on the caller's thread) and `b` (via [[bg]])
+    * concurrently, return both. Both outcomes are observed before
+    * anything is rethrown, so neither thunk is still running when
+    * join2 throws: if only one failed its exception propagates; if
+    * both failed, `a`'s propagates with `b`'s attached as suppressed.
     */
   def join2[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      val fa = scala.concurrent.Future(a)
-      val fb = scala.concurrent.Future(b)
-      val ra = scala.concurrent.Await.result(fa,
-        scala.concurrent.duration.Duration.Inf)
-      val rb = scala.concurrent.Await.result(fb,
-        scala.concurrent.duration.Duration.Inf)
-      (ra, rb)
-    } finally pool.shutdown()
+    val fb = bg(b)
+    val ra = scala.util.Try(a)
+    val rb = scala.util.Try(fb())
+    (ra, rb) match {
+      case (scala.util.Failure(ea), scala.util.Failure(eb)) =>
+        ea.addSuppressed(eb)
+        throw ea
+      case _ => (ra.get, rb.get)
+    }
   }
 
   /** Start `a` on a background thread NOW; the returned thunk blocks
-    * until the result is ready. For the "one stage input is
-    * independent of the whole chain" shape (q307's benchmark gram
-    * set): kick the build off before stage 1, collect it where the
-    * consuming stage needs it.
+    * until the result is ready and rethrows `a`'s failure. For the
+    * "one stage input is independent of the whole chain" shape
+    * (q307's benchmark gram set): kick the build off before stage 1,
+    * collect it where the consuming stage needs it. The thread is a
+    * daemon, so a thunk nobody collects cannot keep the JVM alive.
     */
   def bg[A](a: => A): () => A = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val f = scala.concurrent.Future(a)
+    val task = new java.util.concurrent.FutureTask[A](() => a)
+    val t = new Thread(task, "graft-par-bg")
+    t.setDaemon(true)
+    t.start()
     () =>
-      try scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
+      try task.get()
+      catch { case e: java.util.concurrent.ExecutionException =>
+        throw e.getCause }
   }
 }

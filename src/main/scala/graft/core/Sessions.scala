@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** The one local-session recipe every entry point (Bench, Verify,
-  * Explain, PlanScan, Scratch) shares: `local[cpus]` with the shuffle
+  * Probe, PlanScan) shares: `local[cpus]` with the shuffle
   * width matched to the core count (not the 200 default — a local run
   * has no 200-slot cluster to fill), UTC pinned (the cross-engine
   * oracle compares wall-clock values), and no UI. Keeping it in one

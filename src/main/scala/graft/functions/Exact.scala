@@ -36,10 +36,4 @@ object Exact {
     * across engines and shows up in the hash compare.
     */
   def dsumRaw(c: Column): Column = sum(c).cast("double")
-
-  // SQL-side equivalents, for building oracle strings.
-  def sqlSum(expr: String): String =
-    s"CAST(SUM(CAST($expr AS DECIMAL(18,2))) AS DOUBLE)"
-  def sqlAvg(expr: String): String =
-    s"CAST(CAST(SUM(CAST($expr AS DECIMAL(18,2))) AS DOUBLE) / COUNT($expr) AS DOUBLE)"
 }

@@ -79,7 +79,7 @@ object NaiveBayes {
     val classCounts = docs.groupBy(col(labelCol).as("label"))
       .agg(count(lit(1)).as("_ndc"))
       .localCheckpoint() // C rows; prior join + the nDocs fold read it
-    val nDocs = classCounts.agg(sum(col("_ndc")))
+    val nDocs = classCounts.agg(coalesce(sum(col("_ndc")), lit(0L)))
       .head().getLong(0)
     val classes = classCounts
       .join(wc.groupBy(col("label")).agg(sum(col("cwc")).as("_nc")),

@@ -126,40 +126,16 @@ object Extended15 {
       |  CAST(SUM(CASE WHEN d_bits * 10 > d_n * 58 THEN 1 ELSE 0 END)
       |    AS BIGINT) AS n_high
       |FROM doc GROUP BY 1 ORDER BY 1""".stripMargin) { (spark, dir) =>
-    lmScoreAgg(spark, dir, lmTrainFresh(spark, dir))
-  }
-
-  /** q240's two phases, factored so the bench can time them apart:
-    * training (eager — localCheckpoints + a constants collect) and
-    * the broadcast scoring pass. */
-  private def lmDocs(spark: org.apache.spark.sql.SparkSession,
-      dir: String) = {
     import spark.implicits._
-    Tables.loadParallel(spark, dir, "documents")
+    def docs = Tables.loadParallel(spark, dir, "documents")
       .select($"doc_id", $"source", $"text")
-  }
-
-  private def lmTrainFresh(spark: org.apache.spark.sql.SparkSession,
-      dir: String): graft.operators.LangModel.BigramLm = {
-    import spark.implicits._
+    // training is eager (localCheckpoints + a constants collect) on
+    // the trusted slice; the pruned model broadcasts into the scoring
     val lm = graft.operators.LangModel.trainBigram(
-      lmDocs(spark, dir)
-        .filter($"source".isin("src0", "src1", "src2", "src3", "src4")),
+      docs.filter($"source".isin("src0", "src1", "src2", "src3", "src4")),
       $"text", biK = 512, uniK = 24)
-    lmCache((spark, dir)) = lm
-    lm
-  }
-
-  private val lmCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      graft.operators.LangModel.BigramLm]
-
-  private def lmScoreAgg(spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      lm: graft.operators.LangModel.BigramLm): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
     graft.operators.LangModel
-      .scoreBits(lmDocs(spark, dir), Seq("doc_id", "source"), $"text", lm)
+      .scoreBits(docs, Seq("doc_id", "source"), $"text", lm)
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
         sum($"d_bits").as("sum_bits"),
@@ -171,24 +147,6 @@ object Extended15 {
         $"n_high")
       .orderBy($"source")
   }
-
-  /** Bench-only cost attribution for q240 (no oracle — q240 itself is
-    * the oracle-checked composite): `q240a_lm_train` re-trains the
-    * pruned model every call, so its median is the training cost;
-    * `q240b_lm_score` scores with the memoized model (populated by
-    * q240a, which the bench always runs first in name order), so its
-    * median is the PER-DOCUMENT scoring cost — the number that scales
-    * with corpus size at 100 TB, where training is a fixed cost on
-    * the trusted slice.
-    */
-  def lmTrainBench(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    lmTrainFresh(spark, dir).bi
-
-  def lmScoreBench(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    lmScoreAgg(spark, dir,
-      lmCache.getOrElse((spark, dir), lmTrainFresh(spark, dir)))
 
   /** Count-min turnstile maintenance ([[graft.functions.CountMin]]):
     * per-period token sketches (the maintained state) merge by vector

@@ -198,11 +198,7 @@ object Extended31 {
     // corpus scale re-scans with column pruning beat materializing
     // the text column into executor storage. Stages take `docs` as a
     // parameter now (one place to change if that trade ever flips).
-    val docs = docsOf(spark, dir)
-    // the composite always runs every stage FRESH (never the bench
-    // derivatives' memo — the oracle-checked artifact must be
-    // self-contained)
-    //
+    val docs = Tables.loadParallel(spark, dir, "documents")
     // r13, guide §2.6: the decontamination stage's benchmark gram set
     // (the held-out test split of the RAW corpus) is the one stage
     // input independent of the whole survivor chain — build and
@@ -214,12 +210,12 @@ object Extended31 {
         docs.filter(TextFunctions.datasetSplit($"doc_id") === "test"),
         "doc_id", "text", n = 13).localCheckpoint()
     }
-    val s1 = stage1(spark, dir, docs)
-    val s2 = stage2(spark, dir, s1, docs)
-    val s3 = stage3(spark, dir, s2, docs)
+    val s1 = stage1(spark, docs)
+    val s2 = stage2(spark, s1, docs)
+    val s3 = stage3(spark, s2, docs)
     val s4 = stage4(spark, dir, s3)
-    val s5 = stage5(spark, dir, s4, docs, Some(benchGrams()))
-    val s6 = stage6(spark, dir, s5, docs)
+    val s5 = stage5(spark, s4, docs, benchGrams())
+    val s6 = stage6(spark, s5, docs)
     Seq(
       census("0_raw", docs.select($"doc_id")),
       census("1_exact", s1), census("2_exactsubstr", s2),
@@ -229,19 +225,13 @@ object Extended31 {
       .orderBy($"stage")
   }
 
-  // ---- the ladder stages, factored so q307 composes them fresh and
-  // the q307a–f bench derivatives can time each one in isolation ----
-
-  private def docsOf(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    Tables.loadParallel(spark, dir, "documents")
+  // ---- the ladder stages q307 composes ----
 
   /** stage 1 — exact dedup: keep the min doc_id per fingerprint
     * (q43's key); a map-side-combined group-by, never a window.
     * Checkpointed: every later stage count + stage 2 read it.
     */
   private def stage1(spark: org.apache.spark.sql.SparkSession,
-      dir: String,
       docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
@@ -257,7 +247,7 @@ object Extended31 {
     * cover at least HALF its tokens (the verbatim-copy docs).
     */
   private def stage2(spark: org.apache.spark.sql.SparkSession,
-      dir: String, s1: org.apache.spark.sql.DataFrame,
+      s1: org.apache.spark.sql.DataFrame,
       docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
@@ -279,7 +269,7 @@ object Extended31 {
     * the substring gate can't see).
     */
   private def stage3(spark: org.apache.spark.sql.SparkSession,
-      dir: String, s2: org.apache.spark.sql.DataFrame,
+      s2: org.apache.spark.sql.DataFrame,
       docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
@@ -314,21 +304,16 @@ object Extended31 {
     * external to the dedup chain).
     */
   private def stage5(spark: org.apache.spark.sql.SparkSession,
-      dir: String, s4: org.apache.spark.sql.DataFrame,
+      s4: org.apache.spark.sql.DataFrame,
       docs: org.apache.spark.sql.DataFrame,
-      benchGrams: Option[org.apache.spark.sql.DataFrame] = None)
+      benchGrams: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val train = docs.join(s4, "doc_id")
       .filter(TextFunctions.datasetSplit($"doc_id") === "train")
     // the benchmark gram set is chain-independent: the composite
-    // prefetches it on a background thread (guide §2.6) and passes it
-    // in; the q307e derivative keeps building it inline so its bench
-    // label still carries the full stage cost (attribution contract)
-    val grams = benchGrams.getOrElse(Decontam.benchGramsOf(
-      docs.filter(TextFunctions.datasetSplit($"doc_id") === "test"),
-      "doc_id", "text", n = 13))
-    val dirty = Decontam.ngramAuditGrams(train, grams,
+    // prefetches it on a background thread (guide §2.6) and passes it in
+    val dirty = Decontam.ngramAuditGrams(train, benchGrams,
         "doc_id", "text", n = 13)
       .filter($"longest_run" >= 13)
       .select($"doc_id")
@@ -342,7 +327,7 @@ object Extended31 {
     * NOT checkpointed — it is the ladder's lazy tail.
     */
   private def stage6(spark: org.apache.spark.sql.SparkSession,
-      dir: String, s5: org.apache.spark.sql.DataFrame,
+      s5: org.apache.spark.sql.DataFrame,
       docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
@@ -373,81 +358,6 @@ object Extended31 {
       .select(lit(stage).as("stage"),
         org.apache.spark.sql.functions.col("n_survivors"),
         org.apache.spark.sql.functions.col("id_checksum"))
-  }
-
-  // ---- bench-only per-stage derivatives (q307a–f): the q240a/b
-  // memo pattern. Each derivative recomputes ITS stage fresh every
-  // call and memoizes the result; its input comes from the memo,
-  // which the alphabetically-earlier derivative repopulated moments
-  // before (Bench runs labels in name order within a pass). So the
-  // median of q307<x> is that stage's own cost, sum(a..f) ≈ the
-  // composite, and a regression in the 6.9 s composite is
-  // attributable to a stage from the driver artifact alone.
-  // BENCH_ONLY_DERIVATIVES in drift_check ties each label to its
-  // oracle-checked composite (q307).
-
-  private val stageCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int),
-      org.apache.spark.sql.DataFrame]
-
-  private def cachedStage(spark: org.apache.spark.sql.SparkSession,
-      dir: String, k: Int): org.apache.spark.sql.DataFrame =
-    stageCache.getOrElse((spark, dir, k), freshStage(spark, dir, k))
-
-  private def freshStage(spark: org.apache.spark.sql.SparkSession,
-      dir: String, k: Int): org.apache.spark.sql.DataFrame = {
-    // derivatives keep the per-stage docsOf lineage (NOT the
-    // composite's shared checkpoint) so each label still carries its
-    // own load cost — the attribution contract
-    val out = k match {
-      case 1 => stage1(spark, dir, docsOf(spark, dir))
-      case 2 => stage2(spark, dir, cachedStage(spark, dir, 1),
-        docsOf(spark, dir))
-      case 3 => stage3(spark, dir, cachedStage(spark, dir, 2),
-        docsOf(spark, dir))
-      case 4 => stage4(spark, dir, cachedStage(spark, dir, 3))
-      case 5 => stage5(spark, dir, cachedStage(spark, dir, 4),
-        docsOf(spark, dir))
-      case _ => stage6(spark, dir, cachedStage(spark, dir, 5),
-        docsOf(spark, dir))
-    }
-    stageCache((spark, dir, k)) = out
-    out
-  }
-
-  private def stageBench(label: String, k: Int)(
-      spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
-    census(label, freshStage(spark, dir, k))
-
-  def exactBench(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    stageBench("1_exact", 1)(spark, dir)
-  def substrBench(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    stageBench("2_exactsubstr", 2)(spark, dir)
-  def minhashBench(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    stageBench("3_minhash", 3)(spark, dir)
-  def semdedupBench(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    stageBench("4_semdedup", 4)(spark, dir)
-  def decontamBench(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    stageBench("5_decontam", 5)(spark, dir)
-  def packBench(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val out = stageBench("6_pack", 6)(spark, dir)
-    // f is the ladder's last derivative (labels run in name order per
-    // pass): drop the memo now so the checkpointed stage outputs stop
-    // pinning executor storage for the ~300 queries that run after
-    // (r12 verdict #3). The DataFrame just built holds its own strong
-    // refs to the checkpoint RDDs it reads — clearing the map only
-    // releases the blocks once the bench drops the DF and the
-    // ContextCleaner collects them. The next pass's q307a repopulates
-    // from scratch (each derivative recomputes ITS stage fresh).
-    stageCache.clear()
-    out
   }
 
   val all: Seq[Q] = Seq(q307_curation_e2e)

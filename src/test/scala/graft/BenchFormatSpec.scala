@@ -26,7 +26,7 @@ class BenchFormatSpec extends SparkSpec {
 
   test("the REAL bench surface fits the budget with headroom (names " +
     "from SparkEntry, worst-case 2-digit-second medians)") {
-    val rs = SparkEntry.benchQueries.keys.toSeq.sorted
+    val rs = SparkEntry.queries.keys.toSeq.sorted
       .map(_ -> 12.345) // 4-digit centiseconds for every single query
     val line = BenchFormat.compactLine(rs, rs.map(_._2).sum, 3, 1.234,
       2.345, Nil, "/root/testdata/sf0.1", "/root/repo/BENCH_FULL.json")

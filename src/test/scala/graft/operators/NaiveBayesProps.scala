@@ -98,4 +98,12 @@ object NaiveBayesProps extends Properties("NaiveBayes") {
     // for both; tie breaks to the smaller label "x"; n_tok = 0
     out.toList == List((9L, "x", 1L, 0L))
   }
+
+  property("empty labeled corpus trains an empty model (no NPE on " +
+      "the doc-count fold)") = {
+    val model = NaiveBayes.train(
+      List.empty[(Long, String, String)].toDF("doc_id", "lang", "text"),
+      "lang", org.apache.spark.sql.functions.col("text"), 3)
+    model.bits.count() == 0L && model.classes.count() == 0L
+  }
 }

@@ -35,10 +35,11 @@ def _compact_line(doc):
 
 def _bench_universe():
     """The bench label universe this checkout knows: EXCHANGES.txt
-    query names plus drift_check's declared bench-only derivative
-    labels. Used as the plausibility gate before any cs-array decode
-    (r11 ADVICE: a same-count label rename between rounds must refuse
-    loudly, never misattribute times to the wrong names)."""
+    query names (what Bench times now) plus drift_check's
+    RETIRED_BENCH_LABELS (what r12/r13 artifacts also timed). Used as
+    the plausibility gate before any cs-array decode (r11 ADVICE: a
+    same-count label rename between rounds must refuse loudly, never
+    misattribute times to the wrong names)."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     names = set()
     path = os.path.join(repo, "EXCHANGES.txt")
@@ -46,13 +47,9 @@ def _bench_universe():
         for line in open(path):
             if line.strip():
                 names.add(line.split()[0])
-    try:
-        sys.path.insert(0, os.path.join(repo, "tools"))
-        import drift_check
-        names |= set(drift_check.BENCH_ONLY_DERIVATIVES)
-    except Exception:
-        pass
-    return names
+    sys.path.insert(0, os.path.join(repo, "tools"))
+    from drift_check import RETIRED_BENCH_LABELS
+    return names | RETIRED_BENCH_LABELS if names else set()
 
 
 def _from_compact(line):
@@ -66,7 +63,7 @@ def _from_compact(line):
     against the line's own slow-20 entries and value total (r11
     ADVICE: the old code trusted the full file unverified on that
     path). Decoding the cs array first checks the label set against
-    the committed ledger universe; anything else gives up to a loud
+    the label universe this checkout knows; anything else gives up to a loud
     empty result."""
     full = line.get("full", "")
     cs = line.get("cs") or []
@@ -119,22 +116,24 @@ def _from_compact(line):
               " — stale full file; ignoring this artifact's queries",
               file=sys.stderr)
         return {}
+    # no full file for this surface (absent, or rewritten by a run
+    # over another surface): last resort, decode cs against the
+    # universe when the counts line up exactly. That universe is the
+    # r12/r13 surface while the ledger is unchanged since then; the
+    # current ledger alone is never used, its 311 names collide in
+    # count with r11's different 311.
+    universe = _bench_universe()
+    if len(cs) == nq and universe and len(universe) == nq:
+        print(f"NOTE: no full payload for this {nq}-label surface — "
+              "decoding cs against the ledger + retired-label universe "
+              "(same label count)", file=sys.stderr)
+        return {n: c / 100.0
+                for n, c in zip(sorted(universe), cs) if c >= 0}
     if fq:
         print(f"NOTE: {full} has {len(fq)} labels but the compact "
               f"line says nq={nq} — surface mismatch, cannot decode "
               "the cs array; ignoring this artifact's queries",
               file=sys.stderr)
-        return {}
-    # no usable full file at all: decode cs against the CURRENT
-    # ledger universe when the counts line up exactly (last resort,
-    # only sound while the surface hasn't changed since the artifact)
-    universe = _bench_universe()
-    if len(cs) == nq and universe and len(universe) == nq:
-        print("NOTE: no full payload — decoding cs against the "
-              "current ledger universe (same label count)",
-              file=sys.stderr)
-        return {n: c / 100.0
-                for n, c in zip(sorted(universe), cs) if c >= 0}
     return {}
 
 

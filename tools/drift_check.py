@@ -6,16 +6,17 @@ diverge from the code. Not shipped engine code — a development harness
 wired into tools/preflight.sh.
 
 Checks:
-  1. EXCHANGES.txt and EXCHANGES_sf0.1.txt hold the same query set
-     (sorted-identical rows — the cross-SF identity, cheaply re-stated
-     here so a stale ledger fails even before sbt runs).
+  1. EXCHANGES.txt is the one committed plan ledger every check below
+     reads; the cross-SF identity of its counts is checked live
+     against the sf0.001 and sf0.1 plans by ExchangeLedgerSpec.
   2. Every ledger query name appears in COVERAGE.md — a new query
      without documentation is drift in the other direction.
   3. STATUS.md's headline "**N oracle-checked queries**" equals the
      ledger row count.
   4. Every BENCH_local_*.json referenced in STATUS.md exists on disk,
      and the newest one covers every ledger query (the phantom
-     snapshot class).
+     snapshot class); 4b. its labels are a subset of the ledger plus
+     RETIRED_BENCH_LABELS.
   5. Every queries/Extended*.scala object is registered in
      SparkEntry.scala (an unregistered file is dead surface).
   6. The no-partition-less-window rule, made mechanical: every ledger
@@ -56,21 +57,16 @@ GWIN_ALLOWLIST = {
 }
 
 
-# Bench-only labels: timing splits of an oracle-checked composite,
-# registered in SparkEntry.benchQueries but (by design) carrying no
-# CORRECTNESS row. Check 4b asserts bench-label set = ledger set ∪
-# exactly these, and that each one's composite IS oracle-checked — so
-# the bench-vs-oracle count difference stays mechanical, not tribal.
-BENCH_ONLY_DERIVATIVES = {
-    "q240a_lm_train": "q240_backoff_lm_bits",
-    "q240b_lm_score": "q240_backoff_lm_bits",
-    "q307a_exact": "q307_curation_e2e",
-    "q307b_substr": "q307_curation_e2e",
-    "q307c_minhash": "q307_curation_e2e",
-    "q307d_semdedup": "q307_curation_e2e",
-    "q307e_decontam": "q307_curation_e2e",
-    "q307f_pack": "q307_curation_e2e",
-}
+# Bench labels with no oracle row that committed snapshots up to round
+# 13 carry: timing splits of q240 and q307, since deleted. Bench now
+# times exactly the oracle surface, so this set is frozen — check 4b
+# accepts these names in old snapshots and nothing else beyond the
+# ledger.
+RETIRED_BENCH_LABELS = frozenset({
+    "q240a_lm_train", "q240b_lm_score",
+    "q307a_exact", "q307b_substr", "q307c_minhash",
+    "q307d_semdedup", "q307e_decontam", "q307f_pack",
+})
 
 
 def read(path):
@@ -81,28 +77,21 @@ def read(path):
 def main() -> int:
     errs = []
 
-    led = [l.split()[0] for l in read("EXCHANGES.txt").splitlines() if l.strip()]
-    led_sf = [l.split()[0] for l in read("EXCHANGES_sf0.1.txt").splitlines()
-              if l.strip()]
-    if sorted(led) != sorted(led_sf):
-        errs.append("EXCHANGES.txt vs EXCHANGES_sf0.1.txt: query sets differ "
-                    f"({len(led)} vs {len(led_sf)} rows)")
+    rows = [l for l in read("EXCHANGES.txt").splitlines() if l.strip()]
+    led = [l.split()[0] for l in rows]
 
-    for ledger in ("EXCHANGES.txt", "EXCHANGES_sf0.1.txt"):
-        for line in read(ledger).splitlines():
-            if not line.strip():
-                continue
-            name = line.split()[0]
-            m = re.search(r"\bgwin=(\d+)\b", line)
-            if not m:
-                errs.append(f"{ledger}: {name} has no gwin= count "
-                            "(stale ledger format — regenerate)")
-            elif int(m.group(1)) > 0 and name not in GWIN_ALLOWLIST:
-                errs.append(
-                    f"{ledger}: {name} plans {m.group(1)} partition-less "
-                    "window(s) and is not on the bounded-input allowlist "
-                    "— rewrite via PrefixSum.withOrdinals or annotate "
-                    "its boundedness in GWIN_ALLOWLIST")
+    for line in rows:
+        name = line.split()[0]
+        m = re.search(r"\bgwin=(\d+)\b", line)
+        if not m:
+            errs.append(f"EXCHANGES.txt: {name} has no gwin= count "
+                        "(stale ledger format — regenerate)")
+        elif int(m.group(1)) > 0 and name not in GWIN_ALLOWLIST:
+            errs.append(
+                f"EXCHANGES.txt: {name} plans {m.group(1)} partition-less "
+                "window(s) and is not on the bounded-input allowlist "
+                "— rewrite via PrefixSum.withOrdinals or annotate "
+                "its boundedness in GWIN_ALLOWLIST")
 
     coverage = read("COVERAGE.md")
     undocumented = [q for q in led if q not in coverage]
@@ -134,25 +123,14 @@ def main() -> int:
             errs.append(f"{os.path.basename(newest)} missing medians for "
                         f"{len(missing)} ledger queries: "
                         f"{', '.join(sorted(missing)[:10])}")
-        # 4b. chain of custody for bench-only labels: anything the
-        # bench times beyond the oracle surface must be a DECLARED
-        # derivative of an oracle-checked composite
-        extra = set(data.get("queries", {})) - set(led)
-        undeclared = sorted(extra - set(BENCH_ONLY_DERIVATIVES))
-        if undeclared:
+        # 4b. snapshot labels ⊆ ledger ∪ retired: anything the bench
+        # timed beyond the oracle surface must be a retired label
+        unknown = sorted(set(data.get("queries", {})) - set(led)
+                         - RETIRED_BENCH_LABELS)
+        if unknown:
             errs.append(f"{os.path.basename(newest)} times "
-                        f"{len(undeclared)} labels with no oracle row and "
-                        f"no BENCH_ONLY_DERIVATIVES entry: {undeclared[:10]}")
-        for label, composite in BENCH_ONLY_DERIVATIVES.items():
-            if label not in extra:
-                errs.append(f"declared bench-only derivative {label} is "
-                            f"not in {os.path.basename(newest)} (stale "
-                            "declaration — remove it or re-register the "
-                            "label in SparkEntry.benchQueries)")
-            if composite not in led:
-                errs.append(f"{label}'s composite {composite} is not "
-                            "oracle-checked — a derivative must split an "
-                            "oracle-green query")
+                        f"{len(unknown)} labels with no oracle row that "
+                        f"are not RETIRED_BENCH_LABELS: {unknown[:10]}")
 
     # determinism-sweep ledger: set-identical to the query surface,
     # coverage never stale (every query swept within ~one rotation;
@@ -245,7 +223,7 @@ def main() -> int:
         for e in errs:
             print(f"  - {e}")
         return 1
-    print(f"DRIFT: OK ({len(led)} queries consistent across ledgers, "
+    print(f"DRIFT: OK ({len(led)} queries consistent across ledger, "
           "COVERAGE, STATUS, bench snapshot, SparkEntry)")
     return 0
 

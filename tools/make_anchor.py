@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """Build the round's solo steady-state anchor (r11 verdict ask #1):
 pick the top-N slowest ORACLE-CHECKED queries from the newest
-committed full-sweep snapshot (bench-only derivatives excluded — they
-time against a memo an isolated run would not have) and run
-graft.Anchor on them at sf0.1, writing BENCH_anchor_r<N>.json.
+committed full-sweep snapshot (older snapshots also carry retired
+bench-only labels, which the ledger filter drops) and run
+`graft.Probe anchor` on them at sf0.1, writing BENCH_anchor_r<N>.json.
 Two anchors from different rounds feed preflight stage 5's
 engine-drift gate via bench_compare --gate. Not shipped engine code —
 a development harness.
@@ -40,9 +40,9 @@ def main() -> int:
           f"{os.path.basename(snaps[-1])}: {names}")
     out = os.path.join(REPO, f"BENCH_anchor_r{rnd}.json")
     cmd = ["sbt", "-batch",
-           "runMain graft.Anchor " + sf_dir + " " + out + " "
-           + " ".join(names)]
-    rc = subprocess.run(cmd, cwd=REPO).returncode
+           "runMain graft.Probe anchor " + sf_dir + " " + " ".join(names)]
+    env = dict(os.environ, SPARK_GRAFT_BENCH_FULL=out)
+    rc = subprocess.run(cmd, cwd=REPO, env=env).returncode
     if rc == 0 and os.path.exists(out):
         print(f"anchor written: {out}")
         return 0
