@@ -641,7 +641,10 @@ object Graph {
     * Per round: two keyed min-aggregates + one self-join, all
     * hash-partitioned; membership checkpointed once (the loop
     * invariant), labels checkpointed per round (O(1) plan depth);
-    * loud non-convergence like [[boundedCost]].
+    * loud non-convergence like [[boundedCost]]. Below
+    * `localSolveMaxRows` membership rows a driver union-find replaces
+    * the loop; that fast path runs a `count()` and a `collect()` while
+    * the DataFrame is being built, not when it executes.
     *
     * @param membership rows (id, key): document `id` contains /
     *                   belongs to `key` (fingerprint, LSH bucket,
@@ -692,7 +695,9 @@ object Graph {
           if (nodeOrd.lt(rd, rk)) parent(rk) = rd else parent(rd) = rk
         }
       }
-      return parent.keys.collect { case d @ (0, id) => (id, find(d)._2) }
+      // snapshot the nodes first: find() path-compresses `parent`
+      return parent.keysIterator.toArray
+        .collect { case d @ (0, id) => (id, find(d)._2) }
         .toSeq.toDF("id", "comp")
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("id"))

@@ -4,30 +4,26 @@ import org.apache.spark.sql.types.TimestampType
 import graft.core.Tables
 
 /** Harness-parity regression: run events queries the way the DRIVER
-  * harness does — a session with NO graft-specific legacy confs, reading
-  * the real driver-generated testdata. Round 4 failed precisely because
-  * the repo's own entry points carried a `nanosAsLong` workaround while
+  * harness does — a session with NO graft-specific confs, reading the
+  * real driver-generated testdata. Round 4 failed precisely because the
+  * repo's own entry points carried a legacy parquet workaround while
   * the regenerated `events.parquet` (ts: timestamp[us]) made every
   * vanilla-session read resolve `ts` as TIMESTAMP_NTZ and the `ts DIV
   * 1000` arithmetic fail analysis. This spec pins the contract: loading
-  * `events` from the actual testdata must yield TimestampType and run
-  * end-to-end with zero session prerequisites beyond UTC (which every
-  * entry point — ours and the driver's — pins).
+  * `events` must yield TimestampType and run end-to-end with zero
+  * session prerequisites beyond UTC (which every entry point — ours
+  * and the driver's — pins). `Tables.load` reads with declared schemas;
+  * that they match the parquet footers is TablesSpec's contract.
   */
 class HarnessParitySpec extends SparkSpec {
 
   private lazy val vanilla = {
     val s = spark.newSession()
-    // defensively return the legacy knob to its default so this session
-    // matches a fresh driver session even if a future test sets it
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s
   }
 
   test("events.ts resolves to TimestampType with no legacy confs") {
-    assert(
-      vanilla.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
     val ev = Tables.load(vanilla, sfDir, "events")
     assert(ev.schema("ts").dataType == TimestampType)
     assert(ev.count() > 0)
@@ -45,10 +41,12 @@ class HarnessParitySpec extends SparkSpec {
 
   test("EVERY query analyzes in a vanilla session against the real " +
     "testdata (round-4's failure class, surface-wide)") {
-    // analysis alone (no execution) resolves schemas against the
-    // actual parquet footers and type-checks every expression — the
+    // analysis alone (no execution) resolves every query against the
+    // declared table schemas and type-checks every expression — the
     // exact layer where the regenerated events.parquet broke 67
-    // queries. Cheap enough to sweep the whole surface.
+    // queries (footer drift is caught by TablesSpec, since analysis no
+    // longer reads the footers). Cheap enough to sweep the whole
+    // surface.
     // 8-way concurrent (suite wall time, r12 verdict #1): building a
     // query's DataFrame runs its eager checkpoints, so the "analysis"
     // sweep was serializing ~311 small jobs. Session forced outside

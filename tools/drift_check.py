@@ -26,6 +26,10 @@ Checks:
      count must sit on the allowlist below with its boundedness
      argument. This is the r8-verdict gap: three corpus-scale global
      windows survived seven rounds of prose-only review.
+  8. No file under src/main/scala except core/Tables.scala calls
+     `read.parquet`, so every driver-table read goes through the
+     declared schemas in Tables (no footer-inference job, one schema
+     source).
 """
 import glob
 import json
@@ -217,6 +221,15 @@ def main() -> int:
         if f"{obj}.all" not in entry:
             errs.append(f"queries/{obj}.scala exists but {obj}.all is not "
                         "registered in SparkEntry")
+
+    # 8. one schema source: parquet reads only through core.Tables
+    tables_src = os.path.join(REPO, "src/main/scala/graft/core/Tables.scala")
+    for f in sorted(glob.glob(os.path.join(REPO, "src/main/scala/**/*.scala"),
+                              recursive=True)):
+        if f != tables_src and re.search(r"\bread\s*\.\s*parquet\b",
+                                         open(f, encoding="utf-8").read()):
+            errs.append(f"{os.path.relpath(f, REPO)} calls read.parquet — "
+                        "read driver tables through core.Tables.load")
 
     if errs:
         print("DRIFT: FAIL")
