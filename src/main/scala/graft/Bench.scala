@@ -2,8 +2,8 @@ package graft
 object Bench {
 
   /** Run `f` with the global-window warning muted — ONLY for queries
-    * [[Gwin]] allowlists (ledger gwin= rows with GwinBoundsSpec
-    * bounds, or declared eager-bounded). Their warnings are
+    * [[Gwin]] declares (final-plan windows in `Gwin.LedgerBounds`, or
+    * eager ones in `Gwin.EagerGwinAllowed`). Their warnings are
     * indistinguishable in the log from a real scale-killer's, so
     * muting them makes a NEW unbounded-window warning stand out in
     * the bench tail instead of drowning among the known-benign ones.
@@ -11,7 +11,8 @@ object Bench {
     * Muted by message CONTENT, not logger level (r11 ADVICE): a
     * log4j2 filter drops exactly the "No Partition Defined" text, so
     * a different WindowExec warning from an allowlisted query still
-    * surfaces — the same discrimination GwinWarningSweepSpec applies.
+    * surfaces — the same discrimination QueriesSmokeSpec's warning
+    * sweep applies.
     */
   private[graft] def muteGwinWarnings[A](mute: Boolean)(f: => A): A = {
     if (!mute) return f
@@ -26,8 +27,8 @@ object Bench {
             .contains(Gwin.WarningText)) Filter.Result.DENY
         else Filter.Result.NEUTRAL
     }
-    // resolve the context through SPARK's classloader (the sweep
-    // spec's lesson: under layered classloaders the default context
+    // resolve the context through SPARK's classloader (the warning
+    // sweep's lesson: under layered classloaders the default context
     // can differ from the one the Spark jars' loggers live in)
     val ctx = LogManager.getContext(
       classOf[org.apache.spark.sql.execution.window.WindowExec]

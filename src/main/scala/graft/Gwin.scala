@@ -1,14 +1,13 @@
 package graft
 
-/** THE single source for the bounded global-window allowlist (r11
-  * verdict ask #7): `Bench`'s per-query warning mute and
-  * `GwinWarningSweepSpec`'s attribution allowlist both read THIS
-  * object, which itself derives from the committed exchange ledger's
-  * `gwin=` counts (the same rows drift_check and GwinBoundsSpec gate)
-  * plus the one declared-eager set below. A query rename now breaks
-  * exactly one declaration — previously Bench.scala and the sweep
-  * spec each parsed the ledger and Bench carried the eager set, a
-  * three-artifact coupling a rename could silently skew.
+/** THE single declaration of the bounded partition-less-window
+  * allowlist: `Bench`'s per-query warning mute, `GwinBoundsSpec`'s
+  * executable bounds and `QueriesSmokeSpec`'s warning-attribution
+  * test all read THIS object. `GwinBoundsSpec` also pins
+  * [[LedgerBounds]]' names to the `gwin>0` rows of the committed
+  * `EXCHANGES.txt` (which `ExchangeLedgerSpec` pins to the live
+  * plans), so a query rename or a new global window breaks exactly
+  * one declaration.
   */
 object Gwin {
 
@@ -26,53 +25,41 @@ object Gwin {
     */
   val WarningText = "No Partition Defined"
 
-  /** Repo root for the committed ledger — overridable so a checkout
-    * at another path doesn't silently read no ledger (r11 ADVICE:
-    * the old hard-coded /root/repo swallowed that case without a
-    * diagnostic).
+  /** Queries whose FINAL plan carries a partition-less window (their
+    * ledger row says gwin>0) -> (max rows into any of those windows,
+    * why that bound is structural). Anything else with gwin>0 fails
+    * `GwinBoundsSpec`: rewrite it via PrefixSum.withOrdinals /
+    * Percentiles range partitioning (see q125/q126/q212's round-9
+    * rewrites) instead of adding it here.
     */
-  private def repoRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo")
-
-  /** Queries allowlisted for a bounded-input partition-less window,
-    * read from the committed exchange ledger's gwin= counts (the same
-    * source drift_check + GwinBoundsSpec gate) — so the mute list
-    * can't drift from the allowlist. A read failure logs to stderr
-    * and un-mutes everything (the benign direction: extra warnings,
-    * never hidden ones).
-    */
-  lazy val ledgerAllowed: Set[String] = {
-    val path = s"$repoRoot/EXCHANGES.txt"
-    try {
-      val src = scala.io.Source.fromFile(path)
-      try src.getLines().flatMap { l =>
-        val parts = l.trim.split("\\s+")
-        val g = parts.collectFirst {
-          case s if s.startsWith("gwin=") => s.drop(5).toInt
-        }
-        if (parts.nonEmpty && g.exists(_ > 0)) Some(parts(0)) else None
-      }.toSet
-      finally src.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[gwin] cannot read $path ($e) — no " +
-          "queries will be gwin-muted (set SPARK_GRAFT_REPO to the " +
-          "checkout root)")
-        Set.empty
-    }
-  }
+  val LedgerBounds: Map[String, (Long, String)] = Map(
+    "q107_null_ordering" -> ((350L,
+      "customer filtered to c_custkey <= 300 before the sort/window")),
+    "q112_vocab_encode" -> ((100L,
+      "the rank window runs AFTER .limit(100)")),
+    "q194_temperature_mix" -> ((64L,
+      "apportionment over one row per language")),
+    "q209_seasonality" -> ((48L, "24 clock-hour rollup rows")),
+    "q214_changepoint" -> ((512L, "per-day rollup, calendar-bounded")),
+    "q23_frames" -> ((2600L,
+      "per-day rollup over o_orderdate: the TPC-H order calendar is " +
+        "1992-01-01..1998-08-02 = 2406 distinct days at ANY corpus " +
+        "size")),
+    "q275_doremi_mix" -> ((64L,
+      "largest-remainder over the 20-row strata table")),
+    "q282_interleave_schedule" -> ((64L,
+      "apportionment/schedule windows over one row per source")))
 
   /** Queries whose BOUNDED partition-less windows execute EAGERLY
     * (inside a localCheckpoint during query construction) — invisible
     * to the final-plan ledger (their gwin= is 0) yet still warning at
     * runtime. Each entry's boundedness is executable in
-    * GwinBoundsSpec's eager section (drift_check 7b enforces that).
-    * Found round 11: q239's apportionment windows
-    * (allocateLargestRemainder over the per-source stratum table) run
-    * under `alloc.localCheckpoint()`.
+    * GwinBoundsSpec's eager section. Found round 11: q239's
+    * apportionment windows (allocateLargestRemainder over the
+    * per-source stratum table) run under `alloc.localCheckpoint()`.
     */
   val EagerGwinAllowed: Set[String] = Set("q239_stratified_sample")
 
   def allowed(name: String): Boolean =
-    ledgerAllowed(name) || EagerGwinAllowed(name)
+    LedgerBounds.contains(name) || EagerGwinAllowed(name)
 }

@@ -42,8 +42,8 @@ object PlanScan {
     * WindowGroupLimitExec with an empty partitionSpec — Spark's "No
     * Partition Defined: moving all data to a single partition" path):
     * the one plan shape that is quietly correct at sf0.1 and fatal at
-    * 100 TB. drift_check fails any nonzero gwin outside an allowlist
-    * annotated with its boundedness argument.
+    * 100 TB. GwinBoundsSpec fails any nonzero gwin outside
+    * `Gwin.LedgerBounds`, which declares each query's bound and why.
     */
   def exchangeCounts(df: org.apache.spark.sql.DataFrame)
       : (Int, Int, Int, Int) = {

@@ -7,47 +7,22 @@ import org.apache.spark.sql.execution.window.{WindowExecBase,
   WindowGroupLimitExec}
 
 /** EXECUTABLE bounds for the partition-less-window allowlist — the r9
-  * verdict's "prose, not proof" gap. `tools/drift_check.py`'s
-  * GWIN_ALLOWLIST said WHY each global window's input is bounded
-  * ("20-row strata", "24 clock-hour rollup") but nothing enforced it;
-  * one refactor could sneak an unbounded global window back in under
-  * an allowlisted name.
+  * verdict's "prose, not proof" gap: an allowlist that only said WHY
+  * each global window's input is bounded ("20-row strata", "24
+  * clock-hour rollup") let one refactor sneak an unbounded global
+  * window back in under an allowlisted name.
   *
-  * This spec executes, for EVERY allowlisted query, the exact physical
-  * subplan feeding each partition-less WindowExec /
+  * This spec executes, for EVERY query in `Gwin.LedgerBounds`, the
+  * exact physical subplan feeding each partition-less WindowExec /
   * WindowGroupLimitExec and asserts its row count is under the
-  * documented bound. The bounds are SF-independent by construction
+  * declared bound. The bounds are SF-independent by construction
   * (constant-key filters, post-limit positions, calendar/stratum
   * rollups), so they are asserted at BOTH sf0.001 and sf0.01 — a bound
-  * that secretly scales with the corpus fails the larger SF.
-  *
-  * drift_check.py cross-references this file: every GWIN_ALLOWLIST
-  * entry must appear here with a numeric bound, so deleting a row from
-  * this spec (or renaming the query) fails preflight, not just review.
+  * that secretly scales with the corpus fails the larger SF. It also
+  * pins the declaration to the committed ledger: the `gwin>0` rows of
+  * EXCHANGES.txt must be exactly the declared names.
   */
 class GwinBoundsSpec extends SparkSpec {
-
-  /** query -> (max rows into any of its partition-less windows, why
-    * that bound is structural). Keep keys in lockstep with
-    * tools/drift_check.py GWIN_ALLOWLIST (drift_check enforces it).
-    */
-  private val bounds: Map[String, (Long, String)] = Map(
-    "q107_null_ordering" -> ((350L,
-      "customer filtered to c_custkey <= 300 before the sort/window")),
-    "q112_vocab_encode" -> ((100L,
-      "the rank window runs AFTER .limit(100)")),
-    "q194_temperature_mix" -> ((64L,
-      "apportionment over one row per language")),
-    "q209_seasonality" -> ((48L, "24 clock-hour rollup rows")),
-    "q214_changepoint" -> ((512L, "per-day rollup, calendar-bounded")),
-    "q23_frames" -> ((2600L,
-      "per-day rollup over o_orderdate: the TPC-H order calendar is " +
-        "1992-01-01..1998-08-02 = 2406 distinct days at ANY corpus " +
-        "size")),
-    "q275_doremi_mix" -> ((64L,
-      "largest-remainder over the 20-row strata table")),
-    "q282_interleave_schedule" -> ((64L,
-      "apportionment/schedule windows over one row per source")))
 
   /** The subplans feeding each partition-less window of `df`'s FINAL
     * physical plan, executed to an exact row count. The query runs to
@@ -90,11 +65,13 @@ class GwinBoundsSpec extends SparkSpec {
   // ledger counts (gwin=0) yet still take Spark's single-partition
   // path at runtime (found round 11 via q239's bench warnings). Their
   // boundedness is asserted here on the exact input the eager window
-  // ingests; Gwin.EagerGwinAllowed mutes exactly these labels.
+  // ingests; Gwin.EagerGwinAllowed declares exactly these labels.
   test("q239_stratified_sample's EAGER apportionment windows " +
     "(allocateLargestRemainder under alloc.localCheckpoint) ingest " +
     "one row per source — bounded at any corpus size") {
     import org.apache.spark.sql.functions.{count, lit}
+    assert(Gwin.EagerGwinAllowed == Set("q239_stratified_sample"),
+      "every Gwin.EagerGwinAllowed entry needs its own eager bound test")
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach {
       dir =>
         // the stratum table IS the window input: documents grouped by
@@ -113,7 +90,23 @@ class GwinBoundsSpec extends SparkSpec {
     }
   }
 
-  for ((name, (bound, why)) <- bounds.toSeq.sortBy(_._1)) {
+  test("the gwin>0 rows of EXCHANGES.txt are exactly the queries " +
+    "Gwin.LedgerBounds declares") {
+    val rows = scala.util.Using.resource(
+      scala.io.Source.fromFile("EXCHANGES.txt"))(_.getLines().toList)
+    val planned = rows.map(_.split(" "))
+      .collect { case p if p.exists(f =>
+        f.startsWith("gwin=") && f != "gwin=0") => p(0) }
+      .toSet
+    val declared = Gwin.LedgerBounds.keySet
+    assert(planned == declared,
+      s"ledger gwin>0 rows without a declared bound: " +
+        s"${(planned -- declared).toSeq.sorted} (rewrite via " +
+        "PrefixSum.withOrdinals, or declare a bound in Gwin); declared " +
+        s"but gwin=0 in the ledger: ${(declared -- planned).toSeq.sorted}")
+  }
+
+  for ((name, (bound, why)) <- Gwin.LedgerBounds.toSeq.sortBy(_._1)) {
     test(s"$name: every partition-less window ingests <= $bound rows " +
       s"($why), at sf0.001 and sf0.01") {
       val run = SparkEntry.queries.getOrElse(name,
@@ -123,8 +116,7 @@ class GwinBoundsSpec extends SparkSpec {
           val counts = gwinInputCounts(run(spark, dir))
           assert(counts.nonEmpty,
             s"$name plans NO partition-less window at $dir — stale " +
-              "allowlist entry: remove it from GwinBoundsSpec AND " +
-              "tools/drift_check.py GWIN_ALLOWLIST")
+              "allowlist entry: remove it from Gwin.LedgerBounds")
           counts.foreach(c => assert(c <= bound,
             s"$name at $dir: a partition-less window ingests $c rows " +
               s"> documented bound $bound — the boundedness argument " +

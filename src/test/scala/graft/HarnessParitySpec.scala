@@ -3,95 +3,26 @@ package graft
 import org.apache.spark.sql.types.TimestampType
 import graft.core.Tables
 
-/** Harness-parity regression: run events queries the way the DRIVER
-  * harness does — a session with NO graft-specific confs, reading the
-  * real driver-generated testdata. Round 4 failed precisely because the
-  * repo's own entry points carried a legacy parquet workaround while
-  * the regenerated `events.parquet` (ts: timestamp[us]) made every
+/** Harness-parity regression: read events the way an external caller
+  * does — a session with NO graft-specific confs, reading the real
+  * generated testdata. Round 4 failed precisely because the repo's own
+  * entry points carried a legacy parquet workaround while the
+  * regenerated `events.parquet` (ts: timestamp[us]) made every
   * vanilla-session read resolve `ts` as TIMESTAMP_NTZ and the `ts DIV
-  * 1000` arithmetic fail analysis. This spec pins the contract: loading
-  * `events` must yield TimestampType and run end-to-end with zero
-  * session prerequisites beyond UTC (which every entry point — ours
-  * and the driver's — pins). `Tables.load` reads with declared schemas;
-  * that they match the parquet footers is TablesSpec's contract.
+  * 1000` arithmetic fail analysis. This spec pins the contract:
+  * loading `events` must yield TimestampType with zero session
+  * prerequisites beyond UTC, which every entry point pins.
+  * `Tables.load` reads with declared schemas; that they match the
+  * parquet footers is TablesSpec's contract, and QueriesSmokeSpec
+  * executes every query in such a vanilla session.
   */
 class HarnessParitySpec extends SparkSpec {
 
-  private lazy val vanilla = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    s
-  }
-
   test("events.ts resolves to TimestampType with no legacy confs") {
+    val vanilla = spark.newSession()
+    vanilla.conf.set("spark.sql.session.timeZone", "UTC")
     val ev = Tables.load(vanilla, sfDir, "events")
     assert(ev.schema("ts").dataType == TimestampType)
     assert(ev.count() > 0)
-  }
-
-  test("events query runs end-to-end in a vanilla session") {
-    val df = SparkEntry.queries("q2_count_distinct")(vanilla, sfDir)
-    assert(df.count() > 0)
-  }
-
-  test("sessionize (heaviest events consumer) runs in a vanilla session") {
-    val df = SparkEntry.queries("q50_sessionize")(vanilla, sfDir)
-    assert(df.count() > 0)
-  }
-
-  test("EVERY query analyzes in a vanilla session against the real " +
-    "testdata (round-4's failure class, surface-wide)") {
-    // analysis alone (no execution) resolves every query against the
-    // declared table schemas and type-checks every expression — the
-    // exact layer where the regenerated events.parquet broke 67
-    // queries (footer drift is caught by TablesSpec, since analysis no
-    // longer reads the footers). Cheap enough to sweep the whole
-    // surface.
-    // 8-way concurrent (suite wall time, r12 verdict #1): building a
-    // query's DataFrame runs its eager checkpoints, so the "analysis"
-    // sweep was serializing ~311 small jobs. Session forced outside
-    // the pool (lazy-val monitor).
-    val v = vanilla
-    val failures = PlanScan.sweep8(SparkEntry.allQueries) { q =>
-      try {
-        q.run(v, sfDir).queryExecution.analyzed
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.take(200)}")
-      }
-    }.flatten
-    assert(failures.isEmpty,
-      s"${failures.size} queries fail analysis in a vanilla session:\n" +
-        failures.mkString("\n"))
-  }
-
-  test("a rotating ~20-query sample EXECUTES conf-free (runtime layer, " +
-    "not just analysis)") {
-    // Analysis catches schema/type divergence; codegen, shuffles, and
-    // expression evaluation only fail at execution. Executing all 217
-    // per `sbt test` is too slow, so a deterministic sample rotates
-    // with the build round (CORRECTNESS_r* files count the completed
-    // rounds) — over ~11 rounds every query executes conf-free at
-    // least once. noop-write, same as Bench, so every output column
-    // actually materializes.
-    val round = Option(new java.io.File("/root/repo").listFiles())
-      .map(_.count(_.getName.matches("CORRECTNESS_r\\d+\\.json")))
-      .getOrElse(0)
-    val names = SparkEntry.allQueries.map(_.name).sorted
-    val sample = new scala.util.Random(round.toLong)
-      .shuffle(names).take(20)
-    val v = vanilla
-    val failures = PlanScan.sweep8(sample) { name =>
-      try {
-        SparkEntry.queries(name)(v, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"$name: ${e.getMessage.take(200)}")
-      }
-    }.flatten
-    assert(failures.isEmpty,
-      s"round-$round sample: ${failures.size} queries fail execution " +
-        s"in a vanilla session:\n" + failures.mkString("\n"))
   }
 }

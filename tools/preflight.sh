@@ -3,7 +3,9 @@
 # exit 0 before any end-of-round commit. Runs, in order:
 #   1. full `sbt test` — includes ExchangeLedgerSpec, which checks the
 #      committed EXCHANGES.txt against the live sf0.001 plans AND the
-#      sf0.001-vs-sf0.1 cross-SF identity, so ledger drift fails here;
+#      sf0.001-vs-sf0.1 cross-SF identity, so ledger drift fails here.
+#      The stage also fails if the run changes `git status --porcelain`:
+#      tests must not write tracked (or untracked, unignored) files;
 #   2. the full oracle sweep at sf0.01 (graft.Verify +
 #      tools/check_oracle.py) — every declared query must hash-match;
 #   3. tools/drift_check.py — ledgers/COVERAGE/STATUS/bench-snapshot/
@@ -17,10 +19,18 @@ rec=tools/preflight_last.txt
 fail=0
 
 echo "[preflight] 1/5 sbt test..."
+tree_before=$(git status --porcelain)
 if sbt -batch test > /tmp/preflight_test.log 2>&1; then
   t_ok="PASS ($(grep -Eo 'Passed: Total [0-9]+' /tmp/preflight_test.log | tail -1))"
 else
   t_ok="FAIL (see /tmp/preflight_test.log)"
+  fail=1
+fi
+tree_after=$(git status --porcelain)
+if [ "$tree_after" != "$tree_before" ]; then
+  t_ok="FAIL (the test run changed git status: $(diff \
+    <(echo "$tree_before") <(echo "$tree_after") | grep '^[<>]' \
+    | tr '\n' ' '))"
   fail=1
 fi
 echo "[preflight] sbt test: $t_ok"
@@ -76,7 +86,7 @@ echo "[preflight] bench gate: $b_ok"
 # stage 5: SOLO-ANCHOR gate (r11 verdict ask #1) — the full-sweep
 # snapshots of r9b–r11b were all host-noise-bound; the committed
 # BENCH_anchor_r*.json tables time the top queries ONE AT A TIME
-# (graft.Anchor via tools/make_anchor.py), so two anchors from
+# (`graft.Probe anchor` via tools/make_anchor.py), so two anchors from
 # different rounds gate engine drift on the expensive queries without
 # in-sweep contention. Skipped (recorded) while only one anchor
 # exists — that one is the baseline the next round compares against.
