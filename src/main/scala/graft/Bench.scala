@@ -92,24 +92,16 @@ object Bench {
     // jobs from separate threads fine, and the tiny sf0.001 jobs
     // underutilize local[32] one at a time
     val warmDir = "/root/testdata/sf0.001"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
     // warmup is 8-way concurrent, so per-query mute scoping is
     // impossible here — mute globally for its duration; a real
     // scale-killer's warning still surfaces unmuted in the measured
     // passes below
-    try muteGwinWarnings(mute = true) {
-      val warmups = names.map { q =>
-        scala.concurrent.Future {
-          try fns(q)(spark, warmDir).write.format("noop").mode("overwrite").save()
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
+    muteGwinWarnings(mute = true) {
+      graft.core.Par.sweep8(names) { q =>
+        try fns(q)(spark, warmDir).write.format("noop").mode("overwrite").save()
+        catch { case scala.util.control.NonFatal(_) => () }
       }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(warmups),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
+    }
     // settle before measuring: the warmup leaves cached plans plus a
     // GC + ContextCleaner backlog (broadcast/shuffle cleanup runs
     // async) that otherwise lands on whichever queries run first

@@ -99,7 +99,7 @@ object PlanScan {
     */
   def exchangeLedgerLines(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Seq[String] =
-    sweep8(SparkEntry.allQueries.sortBy(_.name)) { q =>
+    graft.core.Par.sweep8(SparkEntry.allQueries.sortBy(_.name)) { q =>
       try {
         val (s, b, f, g) = exchangeCounts(q.run(spark, sfDir))
         s"${q.name} shuffle=$s broadcast=$b scans=$f gwin=$g"
@@ -108,21 +108,6 @@ object PlanScan {
           s"${q.name} ERROR ${e.getMessage.take(80).replace('\n', ' ')}"
       }
     }
-
-  /** Map `f` over `xs` 8-way concurrently, preserving order. The
-    * sweep-suite scaffold: per-item work must be independent and
-    * exception-total (wrap its own try/catch when an error is data).
-    */
-  private[graft] def sweep8[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.traverse(xs)(x =>
-        scala.concurrent.Future(f(x))),
-      scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
-  }
 
   /** `runMain graft.PlanScan exchanges [sfDir] [outFile]`: the
     * per-query exchange-count ledger. Checked in as EXCHANGES.txt and

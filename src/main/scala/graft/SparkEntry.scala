@@ -30,7 +30,7 @@ object SparkEntry {
     allQueries.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables (every query declares one). */
   def oracleSql: Map[String, String] =
     allQueries.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -10,13 +10,6 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
-    // dump queries 8 at a time: each writes its own directory, Spark
-    // schedules concurrent jobs from separate threads, and the small
-    // per-query jobs underutilize local[32] one at a time. Results
-    // are deterministic per query regardless of scheduling.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
     // soft per-query wall-time ceiling: a pathological plan regression
     // (e.g. a lost broadcast degrading to a corpus nested-loop) should
     // fail the sweep LOUDLY, not just slow it. 20× a generous sf0.01
@@ -25,24 +18,22 @@ object Verify {
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_BUDGET_SEC", "120").toDouble
     val times = new java.util.concurrent.ConcurrentHashMap[String, Double]
-    val dumps = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
-        scala.concurrent.Future {
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
-            times.put(name, (System.nanoTime() - t0) / 1e9)
-          } catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          }
+    // dump queries 8 at a time: each writes its own directory, Spark
+    // schedules concurrent jobs from separate threads, and the small
+    // per-query jobs underutilize local[32] one at a time. Results
+    // are deterministic per query regardless of scheduling.
+    graft.core.Par.sweep8(SparkEntry.queries.toSeq
+        .filter { case (name, _) => only.isEmpty || only(name) }) {
+      case (name, fn) =>
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          times.put(name, (System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-      }
-    scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(dumps),
-      scala.concurrent.duration.Duration.Inf)
-    pool.shutdown()
+    }
     val breaches = scala.jdk.CollectionConverters
       .MapHasAsScala(times).asScala.toSeq
       .filter(_._2 > budgetSec).sortBy(-_._2)

@@ -50,4 +50,21 @@ object Par {
       catch { case e: java.util.concurrent.ExecutionException =>
         throw e.getCause }
   }
+
+  /** Map `f` over `xs` 8-way concurrently on one fixed pool, preserving
+    * order; the pool is shut down however `f` ends. The full-surface
+    * sweep shape (Verify's dump, Bench's warm-up, the exchange ledger,
+    * the tier-1 query sweep): per-item work must be independent and
+    * exception-total — wrap its own try/catch when an error is data.
+    */
+  def sweep8[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    try scala.concurrent.Await.result(
+      scala.concurrent.Future.traverse(xs)(x =>
+        scala.concurrent.Future(f(x))),
+      scala.concurrent.duration.Duration.Inf)
+    finally pool.shutdown()
+  }
 }

@@ -2,11 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One engine query: a Spark implementation plus (when SQL-expressible)
-  * a DuckDB oracle over the same parquet tables. Colocating the two
-  * keeps output column names in lockstep — the driver's compare sorts
-  * columns by name before hashing, so every computed column must carry
-  * the same alias on both sides.
+/** One engine query: a Spark implementation plus its DuckDB oracle
+  * over the same parquet tables. Colocating the two keeps output
+  * column names in lockstep — the driver's compare sorts columns by
+  * name before hashing, so every computed column must carry the same
+  * alias on both sides.
   */
 final case class Q(
     name: String,
@@ -17,7 +17,4 @@ object Q {
   def apply(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): Q =
     Q(name, Some(oracle), run)
-
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, None, run)
 }

@@ -15,9 +15,7 @@ import graft.operators.{Distributional, IncrementalAgg}
   * [[Distributional.bucketCounts]] (a B-bounded mergeable partial),
   * the model accumulates via [[IncrementalAgg.mergePartials]], the
   * divergence is the same order-free integer-KL as q219, and the
-  * exactly-once contract is [[StreamingJobs.IncrementalAggSink]]'s:
-  * the caller persists the epoch id atomically with the model and
-  * replayed epochs ≤ the watermark are skipped.
+  * exactly-once rule is [[EpochSink]]'s.
   *
   * Scale shape: the only distributed work per batch is one
   * map-side-combined count aggregate over the batch; the KL compare
@@ -65,42 +63,33 @@ object DriftMonitor {
   final case class DriftRow(epoch_id: Long, n_toks: Long,
       kl_scaled: Long, psi_scaled: Long)
 
-  /** foreachBatch sink. `load`/`save` persist the (b, n) model —
-    * `save` must persist the epoch id atomically with it and
-    * `loadLastEpoch` report it back on restart (the IncrementalAggSink
-    * contract); `record` appends to the drift ledger (replay-safe
-    * because guarded by the same epoch watermark).
+  /** foreachBatch sink; state is the (b, n) model. `record` appends
+    * to the drift ledger.
     */
   class Sink(
       b: Int,
-      load: () => Option[DataFrame],
+      load: () => Option[(DataFrame, Long)],
       save: (DataFrame, Long) => Unit,
-      record: DriftRow => Unit,
-      loadLastEpoch: () => Option[Long] = () => None) {
-    private var lastMerged: Long = -1L
+      record: DriftRow => Unit) extends EpochSink[DataFrame](load, save) {
 
-    def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
-      if (lastMerged < 0) lastMerged = loadLastEpoch().getOrElse(-1L)
-      if (epochId > lastMerged) {
-        // checkpoint: the counts feed the KL compare AND the merge,
-        // and foreachBatch frames must not be recomputed across jobs
-        val counts = Distributional.bucketCounts(batch, b)
-          .localCheckpoint()
-        load() match {
-          case Some(model) =>
-            val (kl, psi, nToks) = divergences(counts, model, b)
-            record(DriftRow(epochId, nToks, kl, psi))
-            save(IncrementalAgg.mergePartials(model, counts,
-              Seq("b"), Seq("n")), epochId)
-          case None =>
-            val nToks = counts.agg(sum(col("n"))).head() match {
-              case r if r.isNullAt(0) => 0L
-              case r => r.getLong(0)
-            }
-            record(DriftRow(epochId, nToks, 0L, 0L))
-            save(counts, epochId)
-        }
-        lastMerged = epochId
+    protected def step(batch: DataFrame, epochId: Long,
+        prior: Option[DataFrame]): DataFrame = {
+      // checkpoint: the counts feed the KL compare AND the merge,
+      // and foreachBatch frames must not be recomputed across jobs
+      val counts = Distributional.bucketCounts(batch, b)
+        .localCheckpoint()
+      prior match {
+        case Some(model) =>
+          val (kl, psi, nToks) = divergences(counts, model, b)
+          record(DriftRow(epochId, nToks, kl, psi))
+          IncrementalAgg.mergePartials(model, counts, Seq("b"), Seq("n"))
+        case None =>
+          val nToks = counts.agg(sum(col("n"))).head() match {
+            case r if r.isNullAt(0) => 0L
+            case r => r.getLong(0)
+          }
+          record(DriftRow(epochId, nToks, 0L, 0L))
+          counts
       }
     }
   }

@@ -15,11 +15,7 @@ import graft.operators.Bpe
   * character level — token budgets silently buy less text. q223 is the
   * batch view of the same curve; this is its per-epoch guard.
   *
-  * Same exactly-once contract as [[DriftMonitor.Sink]]: `save`
-  * persists the (n_words, n_tokens) running totals atomically with
-  * the epoch id, `loadLastEpoch` reports the watermark back on
-  * restart, and replayed epochs ≤ the watermark are skipped. Per
-  * batch, the only distributed work is one map-side-combined
+  * Per batch, the only distributed work is one map-side-combined
   * two-counter aggregate; everything integer, so ledgers are
   * bit-reproducible across replays and run widths.
   */
@@ -51,22 +47,18 @@ object FertilityMonitor {
   /** foreachBatch sink; state is the (n_words, n_tokens) running pair. */
   class Sink(
       merges: Seq[Bpe.Merge],
-      load: () => Option[(Long, Long)],
+      load: () => Option[((Long, Long), Long)],
       save: ((Long, Long), Long) => Unit,
-      record: FertilityRow => Unit,
-      loadLastEpoch: () => Option[Long] = () => None) {
-    private var lastMerged: Long = -1L
+      record: FertilityRow => Unit)
+      extends EpochSink[(Long, Long)](load, save) {
 
-    def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
-      if (lastMerged < 0) lastMerged = loadLastEpoch().getOrElse(-1L)
-      if (epochId > lastMerged) {
-        val (nw, nt) = counts(batch, merges)
-        val (cw, ct) = load().getOrElse((0L, 0L))
-        val (tw, tt) = (cw + nw, ct + nt)
-        record(FertilityRow(epochId, nw, nt, bp(nt, nw), bp(tt, tw)))
-        save((tw, tt), epochId)
-        lastMerged = epochId
-      }
+    protected def step(batch: DataFrame, epochId: Long,
+        prior: Option[(Long, Long)]): (Long, Long) = {
+      val (nw, nt) = counts(batch, merges)
+      val (cw, ct) = prior.getOrElse((0L, 0L))
+      val (tw, tt) = (cw + nw, ct + nt)
+      record(FertilityRow(epochId, nw, nt, bp(nt, nw), bp(tt, tw)))
+      (tw, tt)
     }
   }
 }

@@ -16,14 +16,6 @@ import graft.operators.{Dedup, Graph}
   * a full offline run (spec-proven), while per-epoch cost stays
   * delta-shaped: band the batch, one bucket join, verify collisions,
   * solve a delta-sized graph.
-  *
-  * Exactly-once contract as [[FertilityMonitor.Sink]]: `save`
-  * persists (index, labels) atomically with the epoch id — it MUST
-  * materialize them (checkpoint / table write) before returning,
-  * because the batch DataFrame they derive from is only valid inside
-  * the epoch — `loadLastEpoch` reports the watermark back on
-  * restart, and replayed epochs ≤ the watermark are skipped without
-  * touching state.
   */
 object GroupMaintainer {
 
@@ -34,39 +26,35 @@ object GroupMaintainer {
 
   /** foreachBatch sink; state is the (band index, labels) pair. */
   class Sink(
-      load: () => Option[(DataFrame, DataFrame)],
-      save: (DataFrame, DataFrame, Long) => Unit,
+      load: () => Option[((DataFrame, DataFrame), Long)],
+      save: ((DataFrame, DataFrame), Long) => Unit,
       record: EpochStats => Unit,
-      loadLastEpoch: () => Option[Long] = () => None,
-      jaccardThreshold: Double = 0.8, k: Int = 16, bands: Int = 4) {
-    private var lastMerged: Long = -1L
+      jaccardThreshold: Double = 0.8, k: Int = 16, bands: Int = 4)
+      extends EpochSink[(DataFrame, DataFrame)](load, save) {
 
-    def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
-      if (lastMerged < 0) lastMerged = loadLastEpoch().getOrElse(-1L)
-      if (epochId > lastMerged) {
-        val (index, labels) = load().getOrElse {
-          // bootstrap: schema-correct empties derived from the batch
-          (Dedup.bandIndex(batch.limit(0), "text", "doc_id", k, bands),
-            batch.limit(0).select(col("doc_id").as("id"),
-              col("doc_id").as("comp")))
-        }
-        val pairs = Dedup.incrementalNearDupPairs(index, batch,
-            "text", "doc_id", jaccardThreshold, k, bands)
-          .localCheckpoint() // consumed by the CC solve AND the count
-        val newLabels = Graph.incrementalComponents(labels, pairs)
-          .localCheckpoint() // one materialization for stats + save
-        val newIndex = index.unionByName(
-          Dedup.bandIndex(batch, "text", "doc_id", k, bands))
-        val g = newLabels.groupBy(col("comp"))
-          .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-          .agg(coalesce(count(lit(1)), lit(0L)).as("g"),
-            coalesce(sum(col("n")), lit(0L)).as("m"))
-          .head()
-        record(EpochStats(epochId, batch.count(), pairs.count(),
-          g.getLong(0), g.getLong(1)))
-        save(newIndex, newLabels, epochId)
-        lastMerged = epochId
+    protected def step(batch: DataFrame, epochId: Long,
+        prior: Option[(DataFrame, DataFrame)]): (DataFrame, DataFrame) = {
+      val (index, labels) = prior.getOrElse {
+        // bootstrap: schema-correct empties derived from the batch
+        (Dedup.bandIndex(batch.limit(0), "text", "doc_id", k, bands),
+          batch.limit(0).select(col("doc_id").as("id"),
+            col("doc_id").as("comp")))
       }
+      val pairs = Dedup.incrementalNearDupPairs(index, batch,
+          "text", "doc_id", jaccardThreshold, k, bands)
+        .localCheckpoint() // consumed by the CC solve AND the count
+      val newLabels = Graph.incrementalComponents(labels, pairs)
+        .localCheckpoint() // one materialization for stats + save
+      val newIndex = index.unionByName(
+        Dedup.bandIndex(batch, "text", "doc_id", k, bands))
+      val g = newLabels.groupBy(col("comp"))
+        .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
+        .agg(coalesce(count(lit(1)), lit(0L)).as("g"),
+          coalesce(sum(col("n")), lit(0L)).as("m"))
+        .head()
+      record(EpochStats(epochId, batch.count(), pairs.count(),
+        g.getLong(0), g.getLong(1)))
+      (newIndex, newLabels)
     }
   }
 }

@@ -17,14 +17,9 @@ import graft.functions.{MisraGries, MisraGriesSummary}
   * candidate set provably ⊇ every item with true frequency >
   * n_total/(k+1) for ANY epoch split (Agarwal et al., PODS'12 —
   * MisraGriesProps proves the law under random splits), so a reader
-  * needing exact counts recounts only the ≤ k candidates.
-  *
-  * Same exactly-once contract as [[DriftMonitor.Sink]]: `save`
-  * persists (summary, total) atomically with the epoch id,
-  * `loadLastEpoch` reports the watermark back on restart, replayed
-  * epochs ≤ the watermark are skipped. Merging is deterministic
-  * given (state, batch summary), so replays reproduce ledger rows
-  * exactly; everything is integer.
+  * needing exact counts recounts only the ≤ k candidates. Merging is
+  * deterministic given (state, batch summary), so replays reproduce
+  * ledger rows exactly; everything is integer.
   */
 object HeavyHittersMonitor {
 
@@ -52,25 +47,22 @@ object HeavyHittersMonitor {
   class Sink(
       itemCol: String,
       k: Int,
-      load: () => Option[(Map[String, Long], Long)],
+      load: () => Option[((Map[String, Long], Long), Long)],
       save: ((Map[String, Long], Long), Long) => Unit,
-      record: HeavyRow => Unit,
-      loadLastEpoch: () => Option[Long] = () => None) {
+      record: HeavyRow => Unit)
+      extends EpochSink[(Map[String, Long], Long)](load, save) {
     private val mg = new MisraGriesSummary(k)
-    private var lastMerged: Long = -1L
 
-    def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
-      if (lastMerged < 0) lastMerged = loadLastEpoch().getOrElse(-1L)
-      if (epochId > lastMerged) {
-        val (bm, bn) = batchSummary(batch, itemCol, k)
-        val (cm, cn) = load().getOrElse((Map.empty[String, Long], 0L))
-        val (nm, nn) = (mg.merge(cm, bm), cn + bn)
-        record(HeavyRow(epochId, bn, nn,
-          bm.keys.toSeq.sorted, nm.keys.toSeq.sorted,
-          nn / (k + 1)))
-        save((nm, nn), epochId)
-        lastMerged = epochId
-      }
+    protected def step(batch: DataFrame, epochId: Long,
+        prior: Option[(Map[String, Long], Long)])
+        : (Map[String, Long], Long) = {
+      val (bm, bn) = batchSummary(batch, itemCol, k)
+      val (cm, cn) = prior.getOrElse((Map.empty[String, Long], 0L))
+      val (nm, nn) = (mg.merge(cm, bm), cn + bn)
+      record(HeavyRow(epochId, bn, nn,
+        bm.keys.toSeq.sorted, nm.keys.toSeq.sorted,
+        nn / (k + 1)))
+      (nm, nn)
     }
   }
 }

@@ -17,14 +17,11 @@ import graft.functions.TDigest
   * per-batch digest table — the quantile analogue of q110's HLL
   * maintenance.
   *
-  * Same exactly-once contract as [[DriftMonitor.Sink]]: `save`
-  * persists the digest atomically with the epoch id, `loadLastEpoch`
-  * reports the watermark back on restart, and replayed epochs ≤ the
-  * watermark are skipped. Merging is deterministic given (state,
-  * batch sketch), so a replayed epoch reproduces the ledger row
-  * bit-for-bit. Estimates carry t-digest's calibrated rank error
-  * (see [[TDigest]]'s scaladoc); the spec checks them against exact
-  * order-statistic envelopes, never for equality.
+  * Merging is deterministic given (state, batch sketch), so a
+  * replayed epoch reproduces the ledger row bit-for-bit. Estimates
+  * carry t-digest's calibrated rank error (see [[TDigest]]'s
+  * scaladoc); the spec checks them against exact order-statistic
+  * envelopes, never for equality.
   */
 object QuantileMonitor {
 
@@ -67,24 +64,19 @@ object QuantileMonitor {
   /** foreachBatch sink; state is the running digest. */
   class Sink(
       valueCol: String,
-      load: () => Option[TDigest.Sketch],
+      load: () => Option[(TDigest.Sketch, Long)],
       save: (TDigest.Sketch, Long) => Unit,
       record: QuantileRow => Unit,
-      delta: Int = 100,
-      loadLastEpoch: () => Option[Long] = () => None) {
-    private var lastMerged: Long = -1L
+      delta: Int = 100) extends EpochSink[TDigest.Sketch](load, save) {
 
-    def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
-      if (lastMerged < 0) lastMerged = loadLastEpoch().getOrElse(-1L)
-      if (epochId > lastMerged) {
-        val b = batchSketch(batch, valueCol, delta)
-        val cum = merge(load().getOrElse(Empty), b, delta)
-        record(QuantileRow(
-          epochId, b.weights.sum, cum.weights.sum,
-          est(b, 0.5), est(b, 0.95), est(cum, 0.5), est(cum, 0.95)))
-        save(cum, epochId)
-        lastMerged = epochId
-      }
+    protected def step(batch: DataFrame, epochId: Long,
+        prior: Option[TDigest.Sketch]): TDigest.Sketch = {
+      val b = batchSketch(batch, valueCol, delta)
+      val cum = merge(prior.getOrElse(Empty), b, delta)
+      record(QuantileRow(
+        epochId, b.weights.sum, cum.weights.sum,
+        est(b, 0.5), est(b, 0.95), est(cum, 0.5), est(cum, 0.95)))
+      cum
     }
   }
 }

@@ -44,13 +44,9 @@ import graft.operators.{Decontam, Dedup, ExactSubstr}
   * standing state, exact verify on collided candidates only. State
   * grows with the curated corpus (it IS the standing corpus's
   * fingerprint set, stage-2 entrant text, and band index) and lives
-  * behind the same load/save seam as [[GroupMaintainer.Sink]]: in
-  * production those are persisted tables (the reference's
-  * yesterday⟗today cumulation pattern, `pipeline_query.sql:40-42`,
-  * applied to dedup state); `save` MUST materialize before returning
-  * (batch frames are only valid inside their epoch) and report the
-  * epoch watermark back through `loadLastEpoch` so replayed epochs
-  * are skipped without touching state.
+  * behind the [[EpochSink]] load/save seam: in production those are
+  * persisted tables (the reference's yesterday⟗today cumulation
+  * pattern, `pipeline_query.sql:40-42`, applied to dedup state).
   */
 object StreamingCuration {
 
@@ -80,18 +76,16 @@ object StreamingCuration {
     *
     * @param benchmark  static held-out split (idCol/textCol shape) the
     *                   decontam stage audits against
-    * @param load/save/record/loadLastEpoch  the
-    *                   [[GroupMaintainer.Sink]] exactly-once contract
+    * @param load/save  the [[EpochSink]] store
     */
   class Sink(
       benchmark: DataFrame,
-      load: () => Option[LadderState],
+      load: () => Option[(LadderState, Long)],
       save: (LadderState, Long) => Unit,
       record: EpochStats => Unit,
-      loadLastEpoch: () => Option[Long] = () => None,
       jaccardThreshold: Double = 0.8, k: Int = 16, bands: Int = 4,
-      substrK: Int = 8, substrMinTokens: Int = 16, decontamN: Int = 13) {
-    private var lastMerged: Long = -1L
+      substrK: Int = 8, substrMinTokens: Int = 16, decontamN: Int = 13)
+      extends EpochSink[LadderState](load, save) {
 
     private def bootstrap(batch: DataFrame): LadderState = {
       val empty = batch.select(col("doc_id"), col("text")).limit(0)
@@ -109,70 +103,67 @@ object StreamingCuration {
       (r.getLong(0), r.getLong(1))
     }
 
-    def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
-      if (lastMerged < 0) lastMerged = loadLastEpoch().getOrElse(-1L)
-      if (epochId > lastMerged) {
-        val st = load().getOrElse(bootstrap(batch))
-        val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
+    protected def step(batch: DataFrame, epochId: Long,
+        prior: Option[LadderState]): LadderState = {
+      val st = prior.getOrElse(bootstrap(batch))
+      val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
 
-        // 1_exact — min id per fingerprint in the batch, minus
-        // fingerprints the standing corpus already keeps
-        val i1 = b
-          .select(col("doc_id"),
-            TextFunctions.fingerprint(col("text")).as("_fp"))
-          .groupBy(col("_fp")).agg(min(col("doc_id")).as("doc_id"))
-          .join(st.fpKept.select(col("_fp")), Seq("_fp"), "left_anti")
-          .localCheckpoint() // feeds census, d1, and the state union
-        val d1 = b.join(i1.select(col("doc_id")), "doc_id")
-          .localCheckpoint() // stage-2 entrants: census side + state
+      // 1_exact — min id per fingerprint in the batch, minus
+      // fingerprints the standing corpus already keeps
+      val i1 = b
+        .select(col("doc_id"),
+          TextFunctions.fingerprint(col("text")).as("_fp"))
+        .groupBy(col("_fp")).agg(min(col("doc_id")).as("doc_id"))
+        .join(st.fpKept.select(col("_fp")), Seq("_fp"), "left_anti")
+        .localCheckpoint() // feeds census, d1, and the state union
+      val d1 = b.join(i1.select(col("doc_id")), "doc_id")
+        .localCheckpoint() // stage-2 entrants: census side + state
 
-        // 2_exactsubstr — batch spans vs standing entrants ∪ earlier
-        // in this batch; the operator asserts the append-only contract
-        val cov = ExactSubstr.incrementalDupSpans(st.substrDocs, d1,
-            "doc_id", "text", substrK, substrMinTokens)
-          .groupBy(col("doc").as("doc_id")).agg(sum(col("len")).as("_dup"))
-        val i2 = d1
-          .select(col("doc_id"),
-            size(TextFunctions.lowerTokens(col("text"))).as("_n"))
-          .join(cov, Seq("doc_id"), "left")
-          .filter(coalesce(col("_dup"), lit(0L)) * 2 < col("_n"))
-          .select(col("doc_id"))
-          .localCheckpoint()
-        val d2 = b.join(i2, "doc_id").localCheckpoint()
+      // 2_exactsubstr — batch spans vs standing entrants ∪ earlier
+      // in this batch; the operator asserts the append-only contract
+      val cov = ExactSubstr.incrementalDupSpans(st.substrDocs, d1,
+          "doc_id", "text", substrK, substrMinTokens)
+        .groupBy(col("doc").as("doc_id")).agg(sum(col("len")).as("_dup"))
+      val i2 = d1
+        .select(col("doc_id"),
+          size(TextFunctions.lowerTokens(col("text"))).as("_n"))
+        .join(cov, Seq("doc_id"), "left")
+        .filter(coalesce(col("_dup"), lit(0L)) * 2 < col("_n"))
+        .select(col("doc_id"))
+        .localCheckpoint()
+      val d2 = b.join(i2, "doc_id").localCheckpoint()
 
-        // 3_minhash — vs the maintained entrant band index
-        val i3 = Dedup.incrementalNearDup(st.bandIdx, d2,
-            "text", "doc_id", jaccardThreshold, k, bands)
-          .filter(!col("is_dup"))
-          .select(col("id").as("doc_id"))
-          .localCheckpoint()
+      // 3_minhash — vs the maintained entrant band index
+      val i3 = Dedup.incrementalNearDup(st.bandIdx, d2,
+          "text", "doc_id", jaccardThreshold, k, bands)
+        .filter(!col("is_dup"))
+        .select(col("id").as("doc_id"))
+        .localCheckpoint()
 
-        // 4_decontam — the batch's train split vs the static benchmark
-        val train = b.join(i3, "doc_id")
-          .filter(TextFunctions.datasetSplit(col("doc_id")) === "train")
-        val dirty = Decontam.ngramAudit(train, benchmark,
-            "doc_id", "text", decontamN)
-          .filter(col("longest_run") >= decontamN)
-          .select(col("doc_id"))
-        val i4 = train.select(col("doc_id"))
-          .join(dirty, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
+      // 4_decontam — the batch's train split vs the static benchmark
+      val train = b.join(i3, "doc_id")
+        .filter(TextFunctions.datasetSplit(col("doc_id")) === "train")
+      val dirty = Decontam.ngramAudit(train, benchmark,
+          "doc_id", "text", decontamN)
+        .filter(col("longest_run") >= decontamN)
+        .select(col("doc_id"))
+      val i4 = train.select(col("doc_id"))
+        .join(dirty, Seq("doc_id"), "left_anti")
+        .localCheckpoint()
 
-        val (n1, c1) = census(i1.select(col("doc_id")))
-        val (n2, c2) = census(i2)
-        val (n3, c3) = census(i3)
-        val (n4, c4) = census(i4)
-        record(EpochStats(epochId, b.count(),
-          n1, c1, n2, c2, n3, c3, n4, c4))
+      val (n1, c1) = census(i1.select(col("doc_id")))
+      val (n2, c2) = census(i2)
+      val (n3, c3) = census(i3)
+      val (n4, c4) = census(i4)
+      record(EpochStats(epochId, b.count(),
+        n1, c1, n2, c2, n3, c3, n4, c4))
 
-        save(LadderState(
-          st.fpKept.unionByName(i1),
-          st.substrDocs.unionByName(d1),
-          st.bandIdx.unionByName(
-            Dedup.bandIndex(d2, "text", "doc_id", k, bands)),
-          st.kept.unionByName(i4)), epochId)
-        lastMerged = epochId
-      }
+      LadderState(
+        st.fpKept.unionByName(i1),
+        st.substrDocs.unionByName(d1),
+        st.bandIdx.unionByName(
+          Dedup.bandIndex(d2, "text", "doc_id", k, bands)),
+        st.kept.unionByName(i4))
     }
   }
 

@@ -278,7 +278,8 @@ object StreamingJobs {
     // epoch ids are monotonic, so one high-watermark long replaces an
     // ever-growing Set (which would leak one boxed Long per micro-batch
     // for the process lifetime); a re-delivered batch always carries an
-    // already-seen (≤ watermark) epoch — the IncrementalAggSink pattern
+    // already-seen (≤ watermark) epoch — `EpochSink`'s rule with a
+    // process-local watermark instead of a store
     private var maxSeen = Long.MinValue
     def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
       if (epochId > maxSeen) {
@@ -330,37 +331,23 @@ object StreamingJobs {
     * merge ≡ recompute law q103 proves in batch). This is the
     * append-stream alternative to an output-mode=update stateful agg:
     * each epoch costs one delta aggregation + one key-wise merge
-    * regardless of history size.
-    *
-    * Exactly-once across RESTARTS needs more than in-memory dedup —
-    * a merge is not idempotent the way a batch overwrite is, so a
-    * replayed epoch would double-merge its delta. The contract: the
-    * caller persists the epoch id ATOMICALLY with the merged table
-    * (`save(df, epochId)` — e.g. write table + id to a staging
-    * location and rename) and reports it back via `loadLastEpoch`; on
-    * restart the sink skips every replayed epoch ≤ that watermark.
-    * Within a run, epoch ids are monotonic, so a single watermark
-    * (not an ever-growing set) also bounds memory.
+    * regardless of history size. A merge is not idempotent the way a
+    * batch overwrite is, so the table lives in an [[EpochSink]] store.
     */
   class IncrementalAggSink(
       aggregate: DataFrame => DataFrame,
       keys: Seq[String], sumCols: Seq[String],
       maxCols: Seq[String] = Nil, minCols: Seq[String] = Nil,
-      load: () => Option[DataFrame],
-      save: (DataFrame, Long) => Unit,
-      loadLastEpoch: () => Option[Long] = () => None) {
-    private var lastMerged: Long = -1L
-    def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
-      if (lastMerged < 0) lastMerged = loadLastEpoch().getOrElse(-1L)
-      if (epochId > lastMerged) {
-        val delta = aggregate(batch)
-        val merged = load() match {
-          case Some(base) => graft.operators.IncrementalAgg
-            .mergePartials(base, delta, keys, sumCols, maxCols, minCols)
-          case None => delta
-        }
-        save(merged, epochId)
-        lastMerged = epochId
+      load: () => Option[(DataFrame, Long)],
+      save: (DataFrame, Long) => Unit)
+      extends EpochSink[DataFrame](load, save) {
+    protected def step(batch: DataFrame, epochId: Long,
+        prior: Option[DataFrame]): DataFrame = {
+      val delta = aggregate(batch)
+      prior match {
+        case Some(base) => graft.operators.IncrementalAgg
+          .mergePartials(base, delta, keys, sumCols, maxCols, minCols)
+        case None => delta
       }
     }
   }

@@ -23,13 +23,9 @@ import graft.functions.{CountMin, CountMinSketch}
   * in the epoch each change lands. A delete that was never inserted
   * drives a counter negative and fails LOUDLY ([[CountMin.retract]]'s
   * guard) instead of corrupting the state — the
-  * [[graft.operators.Upsert]] changelog contract, sketch-sized.
-  *
-  * Same exactly-once contract as [[DriftMonitor.Sink]]: state saves
-  * atomically with the epoch id, `loadLastEpoch` reports the
-  * watermark on restart, replayed epochs ≤ watermark are skipped, and
-  * the merge is deterministic given (state, batch), so a replayed
-  * epoch reproduces its ledger row bit-for-bit.
+  * [[graft.operators.Upsert]] changelog contract, sketch-sized. The
+  * merge is deterministic given (state, batch), so a replayed epoch
+  * reproduces its ledger row bit-for-bit.
   */
 object TurnstileMonitor {
 
@@ -62,27 +58,23 @@ object TurnstileMonitor {
       opCol: String,
       itemCol: String,
       watchlist: Seq[String],
-      load: () => Option[Array[Long]],
+      load: () => Option[(Array[Long], Long)],
       save: (Array[Long], Long) => Unit,
       record: TurnstileRow => Unit,
-      width: Int = CountMin.DefaultWidth,
-      loadLastEpoch: () => Option[Long] = () => None) {
-    private var lastMerged: Long = -1L
+      width: Int = CountMin.DefaultWidth)
+      extends EpochSink[Array[Long]](load, save) {
 
-    def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
-      if (lastMerged < 0) lastMerged = loadLastEpoch().getOrElse(-1L)
-      if (epochId > lastMerged) {
-        val (ins, del, ni, nd) = batchGrids(batch, opCol, itemCol, width)
-        val prev = load().getOrElse(new Array[Long](CountMin.Depth * width))
-        val added = new CountMinSketch(width).merge(prev.clone(), ins)
-        val cur = CountMin.retract(added, del)
-        val prevN = prev.slice(0, width).sum // row 0 holds every item once
-        record(TurnstileRow(epochId, ni, nd, prevN + ni - nd,
-          watchlist.map(k =>
-            k -> CountMin.estimate(cur, k, width)).toMap))
-        save(cur, epochId)
-        lastMerged = epochId
-      }
+    protected def step(batch: DataFrame, epochId: Long,
+        prior: Option[Array[Long]]): Array[Long] = {
+      val (ins, del, ni, nd) = batchGrids(batch, opCol, itemCol, width)
+      val prev = prior.getOrElse(new Array[Long](CountMin.Depth * width))
+      val added = new CountMinSketch(width).merge(prev.clone(), ins)
+      val cur = CountMin.retract(added, del)
+      val prevN = prev.slice(0, width).sum // row 0 holds every item once
+      record(TurnstileRow(epochId, ni, nd, prevN + ni - nd,
+        watchlist.map(k =>
+          k -> CountMin.estimate(cur, k, width)).toMap))
+      cur
     }
   }
 }

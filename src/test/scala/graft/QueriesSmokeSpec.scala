@@ -46,7 +46,7 @@ class QueriesSmokeSpec extends SparkSpec {
     // attached earlier
     s4.range(1).count()
     countWarnings(s4) {
-      PlanScan.sweep8(SparkEntry.allQueries) { q =>
+      graft.core.Par.sweep8(SparkEntry.allQueries) { q =>
         q.name -> atBothWidths(s4, s7, q.name)(q.run(_, sfDir))
       }.toMap
     }

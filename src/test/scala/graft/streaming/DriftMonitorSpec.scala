@@ -46,14 +46,14 @@ class DriftMonitorSpec extends SparkSpec {
     "vocab flip spikes, replays and restarts are idempotent") {
     implicit val ctx = spark.sqlContext
 
-    var model: Option[DataFrame] = None
-    var lastEpoch: Option[Long] = None
+    var store: Option[(DataFrame, Long)] = None
+    def model = store.map(_._1)
     val ledger = collection.mutable.ListBuffer.empty[DriftMonitor.DriftRow]
-    val sink = new DriftMonitor.Sink(B,
-      load = () => model,
-      save = (df, e) => { model = Some(df.localCheckpoint())
-        lastEpoch = Some(e) },
+    def mkSink() = new DriftMonitor.Sink(B,
+      load = () => store,
+      save = (df, e) => store = Some((df.localCheckpoint(), e)),
       record = ledger += _)
+    val sink = mkSink()
 
     val batch1 = (1 to 20).map(i => (i.toLong, "aa bb cc aa"))
     val batch2 = (1 to 10).map(i => (i.toLong, "aa bb cc bb"))
@@ -96,15 +96,10 @@ class DriftMonitorSpec extends SparkSpec {
     assert(model.get.as[(Long, Long)].collect().toSet == modelBefore,
       "replayed epoch double-merged the model")
 
-    // restart: a NEW sink instance (fresh in-memory watermark) must
-    // recover the epoch watermark from the persisted contract and
-    // still skip the replay
-    val restarted = new DriftMonitor.Sink(B,
-      load = () => model,
-      save = (df, e) => { model = Some(df.localCheckpoint())
-        lastEpoch = Some(e) },
-      record = ledger += _,
-      loadLastEpoch = () => lastEpoch)
+    // restart: a NEW sink instance, built from the store alone, must
+    // recover the epoch committed with the model and still skip the
+    // replay
+    val restarted = mkSink()
     restarted.apply(batch3.toDF("doc_id", "text"), 2L)
     assert(ledger.size == 3 &&
       model.get.as[(Long, Long)].collect().toSet == modelBefore,

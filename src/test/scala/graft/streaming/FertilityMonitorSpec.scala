@@ -54,15 +54,14 @@ class FertilityMonitorSpec extends SparkSpec {
           org.apache.spark.sql.functions.col("text"))), 6)
     assert(merges.nonEmpty)
 
-    var state: Option[(Long, Long)] = None
-    var lastEpoch: Option[Long] = None
+    var store: Option[((Long, Long), Long)] = None
+    def state = store.map(_._1)
     val ledger =
       collection.mutable.ListBuffer.empty[FertilityMonitor.FertilityRow]
     def mkSink() = new FertilityMonitor.Sink(merges,
-      load = () => state,
-      save = (s, e) => { state = Some(s); lastEpoch = Some(e) },
-      record = ledger += _,
-      loadLastEpoch = () => lastEpoch)
+      load = () => store,
+      save = (s, e) => store = Some((s, e)),
+      record = ledger += _)
     val sink = mkSink()
 
     val input = MemoryStream[(Long, String)]

@@ -30,18 +30,16 @@ class GroupMaintainerSpec extends SparkSpec {
       "replay and restart are idempotent") {
     implicit val ctx = spark.sqlContext
 
-    var state: Option[(DataFrame, DataFrame)] = None
-    var lastEpoch: Option[Long] = None
+    var store: Option[((DataFrame, DataFrame), Long)] = None
+    def state = store.map(_._1)
     val stats =
       collection.mutable.ListBuffer.empty[GroupMaintainer.EpochStats]
     def mkSink() = new GroupMaintainer.Sink(
-      load = () => state,
-      save = (idx, lab, e) => {
-        state = Some((idx.localCheckpoint(), lab)) // lab pre-checkpointed
-        lastEpoch = Some(e)
+      load = () => store,
+      save = { case ((idx, lab), e) =>
+        store = Some(((idx.localCheckpoint(), lab), e)) // lab pre-checkpointed
       },
-      record = stats += _,
-      loadLastEpoch = () => lastEpoch)
+      record = stats += _)
     val sink = mkSink()
 
     val input = MemoryStream[(Long, String)]

@@ -30,15 +30,14 @@ class HeavyHittersMonitorSpec extends SparkSpec {
     val b2 = steady(2, 500)
     val b3 = steady(3, 200) ++ Seq.fill(400)("flood")
 
-    var state: Option[(Map[String, Long], Long)] = None
-    var lastEpoch: Option[Long] = None
+    var store: Option[((Map[String, Long], Long), Long)] = None
+    def state = store.map(_._1)
     val ledger =
       collection.mutable.ListBuffer.empty[HeavyHittersMonitor.HeavyRow]
     def mkSink() = new HeavyHittersMonitor.Sink("token", K,
-      load = () => state,
-      save = (s, e) => { state = Some(s); lastEpoch = Some(e) },
-      record = ledger += _,
-      loadLastEpoch = () => lastEpoch)
+      load = () => store,
+      save = (s, e) => store = Some((s, e)),
+      record = ledger += _)
     val sink = mkSink()
 
     val input = MemoryStream[String]

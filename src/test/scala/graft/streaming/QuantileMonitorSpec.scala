@@ -38,15 +38,14 @@ class QuantileMonitorSpec extends SparkSpec {
     val b2 = mix(2, 700, tail = false)
     val b3 = mix(3, 600, tail = true)
 
-    var state: Option[TDigest.Sketch] = None
-    var lastEpoch: Option[Long] = None
+    var store: Option[(TDigest.Sketch, Long)] = None
+    def state = store.map(_._1)
     val ledger =
       collection.mutable.ListBuffer.empty[QuantileMonitor.QuantileRow]
     def mkSink() = new QuantileMonitor.Sink("latency_ms",
-      load = () => state,
-      save = (s, e) => { state = Some(s); lastEpoch = Some(e) },
-      record = ledger += _,
-      loadLastEpoch = () => lastEpoch)
+      load = () => store,
+      save = (s, e) => store = Some((s, e)),
+      record = ledger += _)
     val sink = mkSink()
 
     val input = MemoryStream[Double]

@@ -17,12 +17,12 @@ import graft.operators.{Decontam, Dedup, ExactSubstr}
   * a half-copied doc with high shingle Jaccard but sub-half coverage
   * (stage 3), and a train doc sharing a 5-token run with a test-split
   * doc (stage 4) — so the equality is never vacuous. Replay and
-  * restart respect the epoch watermark (the GroupMaintainer
-  * contract), and the pure `flatMapGroupsWithState` stage-1 operator
-  * is pinned on BOTH arrival orders: id-ordered arrival reproduces
-  * the batch min-per-fingerprint rule; out-of-order arrival keeps the
-  * first arrival — the honest streaming semantics the ladder sink's
-  * append-only contract exists to avoid.
+  * restart respect the epoch committed with the state
+  * ([[EpochSink]]), and the pure `flatMapGroupsWithState` stage-1
+  * operator is pinned on BOTH arrival orders: id-ordered arrival
+  * reproduces the batch min-per-fingerprint rule; out-of-order arrival
+  * keeps the first arrival — the honest streaming semantics the ladder
+  * sink's append-only contract exists to avoid.
   */
 class StreamingCurationSpec extends SparkSpec {
   import spark.implicits._
@@ -37,13 +37,13 @@ class StreamingCurationSpec extends SparkSpec {
   private val SubMinTok = 4
   private val NGram = 3
 
-  private def mkSink(state: () => Option[StreamingCuration.LadderState],
+  private def mkSink(
+      load: () => Option[(StreamingCuration.LadderState, Long)],
       saveF: (StreamingCuration.LadderState, Long) => Unit,
       record: StreamingCuration.EpochStats => Unit,
-      lastEpoch: () => Option[Long],
       benchmark: DataFrame) =
-    new StreamingCuration.Sink(benchmark, state, saveF, record,
-      lastEpoch, jaccardThreshold = Jac, k = K, bands = Bands,
+    new StreamingCuration.Sink(benchmark, load, saveF, record,
+      jaccardThreshold = Jac, k = K, bands = Bands,
       substrK = SubK, substrMinTokens = SubMinTok, decontamN = NGram)
 
   // ---- corpus construction -------------------------------------
@@ -142,18 +142,15 @@ class StreamingCurationSpec extends SparkSpec {
     val allDocs = corpus.toDF("doc_id", "text").localCheckpoint()
     val benchmark = benchmarkOf(allDocs).localCheckpoint()
 
-    var state: Option[StreamingCuration.LadderState] = None
-    var lastEpoch: Option[Long] = None
+    var store: Option[(StreamingCuration.LadderState, Long)] = None
+    def state = store.map(_._1)
     val stats = collection.mutable.ListBuffer
       .empty[StreamingCuration.EpochStats]
-    def sinkOf() = mkSink(() => state,
-      (s, e) => {
-        state = Some(StreamingCuration.LadderState(
-          s.fpKept.localCheckpoint(), s.substrDocs.localCheckpoint(),
-          s.bandIdx.localCheckpoint(), s.kept.localCheckpoint()))
-        lastEpoch = Some(e)
-      },
-      stats += _, () => lastEpoch, benchmark)
+    def sinkOf() = mkSink(() => store,
+      (s, e) => store = Some((StreamingCuration.LadderState(
+        s.fpKept.localCheckpoint(), s.substrDocs.localCheckpoint(),
+        s.bandIdx.localCheckpoint(), s.kept.localCheckpoint()), e)),
+      stats += _, benchmark)
     val sink = sinkOf()
 
     val input = MemoryStream[(Long, String)]

@@ -36,18 +36,28 @@ class StreamingJobsSpec extends SparkSpec {
       s"2024-01-01T$t.000Z")
 
   test("tumbling 5-min host agg finalizes windows past the watermark") {
-    val out = runAppend(StreamingJobs.tumblingHostAgg)(Seq(
+    val batches = Seq(
       Seq(ev("a.com", "1.1.1.1", "00:00:10"),
-        ev("a.com", "1.1.1.1", "00:01:00"),
+        ev("a.com", "1.1.1.1", "00:01:00").copy(referrer = "ref2"),
         ev("b.com", "2.2.2.2", "00:02:00"),
         ev("a.com", "1.1.1.1", "00:06:00")),
       // advances watermark to 00:19:45 → both windows finalize
-      Seq(ev("a.com", "1.1.1.1", "00:20:00"))))
+      Seq(ev("a.com", "1.1.1.1", "00:20:00")))
+    val out = runAppend(StreamingJobs.tumblingHostAgg)(batches)
     val rows = out.select(
         date_format($"event_hour", "HH:mm").as("w"), $"host", $"num_hits")
       .as[(String, String, Long)].collect().toSet
     assert(rows == Set(("00:00", "a.com", 2L), ("00:00", "b.com", 1L),
       ("00:05", "a.com", 1L)))
+    // F4: the same windows keyed by referrer too — a.com's first
+    // window splits across its two referrers
+    val byRef = runAppend(StreamingJobs.tumblingHostReferrerAgg)(batches)
+      .select(date_format($"event_hour", "HH:mm").as("w"), $"host",
+        $"referrer", $"num_hits")
+      .as[(String, String, String, Long)].collect().toSet
+    assert(byRef == Set(("00:00", "a.com", "ref", 1L),
+      ("00:00", "a.com", "ref2", 1L), ("00:00", "b.com", "ref", 1L),
+      ("00:05", "a.com", "ref", 1L)))
   }
 
   test("late data beyond the 15s watermark is dropped") {
@@ -279,15 +289,15 @@ class StreamingJobsSpec extends SparkSpec {
 
   test("incremental-agg sink maintains merge ≡ recompute across epochs") {
     implicit val ctx = spark.sqlContext
-    var table: Option[DataFrame] = None
-    var epoch: Option[Long] = None
+    var store: Option[(DataFrame, Long)] = None
+    def table = store.map(_._1)
+    def epoch = store.map(_._2)
     def mkSink() = new StreamingJobs.IncrementalAggSink(
       aggregate = b => b.groupBy($"host")
         .agg(count(lit(1)).as("n"), sum(length($"url")).as("chars")),
       keys = Seq("host"), sumCols = Seq("n", "chars"),
-      load = () => table,
-      save = (df, id) => { table = Some(df.localCheckpoint()); epoch = Some(id) },
-      loadLastEpoch = () => epoch)
+      load = () => store,
+      save = (df, id) => store = Some((df.localCheckpoint(), id)))
     val sink = mkSink()
     val input = MemoryStream[WebEvent]
     val q = input.toDF().writeStream

@@ -52,17 +52,16 @@ class TurnstileMonitorSpec extends SparkSpec {
       out.toSeq
     }
 
-    var state: Option[Array[Long]] = None
-    var lastEpoch: Option[Long] = None
+    var store: Option[(Array[Long], Long)] = None
+    def state = store.map(_._1)
     val ledger =
       collection.mutable.ListBuffer.empty[TurnstileMonitor.TurnstileRow]
     def mkSink() = new TurnstileMonitor.Sink("op", "w",
       watchlist = Seq("tokA", "tokB"),
-      load = () => state,
-      save = (s, e) => { state = Some(s); lastEpoch = Some(e) },
+      load = () => store,
+      save = (s, e) => store = Some((s, e)),
       record = ledger += _,
-      width = W,
-      loadLastEpoch = () => lastEpoch)
+      width = W)
 
     val input = MemoryStream[(String, String)]
     val q = input.toDF().toDF("op", "w")

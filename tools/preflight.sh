@@ -4,6 +4,9 @@
 #   1. full `sbt test` — includes ExchangeLedgerSpec, which checks the
 #      committed EXCHANGES.txt against the live sf0.001 plans AND the
 #      sf0.001-vs-sf0.1 cross-SF identity, so ledger drift fails here.
+#      It runs EXHAUSTIVELY: the `set` removes build.sbt's 25-case,
+#      4-worker ScalaCheck default, so properties run ScalaCheck's own
+#      100 cases (explicit per-property overrides keep their counts).
 #      The stage also fails if the run changes `git status --porcelain`:
 #      tests must not write tracked (or untracked, unignored) files;
 #   2. the full oracle sweep at sf0.01 (graft.Verify +
@@ -19,8 +22,10 @@ rec=tools/preflight_last.txt
 fail=0
 
 echo "[preflight] 1/5 sbt test..."
+exhaustive='set Test/testOptions -= Tests.Argument(TestFrameworks.ScalaCheck,
+  "-minSuccessfulTests", "25", "-workers", "4")'
 tree_before=$(git status --porcelain)
-if sbt -batch test > /tmp/preflight_test.log 2>&1; then
+if sbt -batch "$exhaustive" test > /tmp/preflight_test.log 2>&1; then
   t_ok="PASS ($(grep -Eo 'Passed: Total [0-9]+' /tmp/preflight_test.log | tail -1))"
 else
   t_ok="FAIL (see /tmp/preflight_test.log)"
