@@ -24,6 +24,23 @@ object Extended11 {
 
   private val R = 16
 
+  /** The recursive encode over `dw(w, …)`: iteration `i` of `enc` holds
+    * each word's `|`-delimited tokens after the first `i` merges.
+    */
+  private val EncCte =
+    """enc AS (
+      |  SELECT w,
+      |    '|' || array_to_string(string_split(w, ''), '||') || '|' AS s,
+      |    0 AS i
+      |  FROM dw
+      |  UNION ALL
+      |  SELECT t.w,
+      |    replace(t.s, '|' || t.m.a || '||' || t.m.b || '|',
+      |            '|' || t.m.a || t.m.b || '|'),
+      |    t.i + 1
+      |  FROM (SELECT e.w, e.s, e.i, f.merges[e.i + 1] AS m
+      |        FROM enc e, fin f WHERE e.i < len(f.merges)) t)""".stripMargin
+
   /** The shared learning-loop oracle prefix: `fin.merges` is the
     * learned (a, b, cnt) list in rank order.
     */
@@ -109,18 +126,7 @@ object Extended11 {
       |        FROM documents) t
       |  WHERE regexp_matches(w, '^[a-z0-9]+$$') GROUP BY 1, 2),
       |dw AS (SELECT DISTINCT w FROM sw),
-      |enc AS (
-      |  SELECT w,
-      |    '|' || array_to_string(string_split(w, ''), '||') || '|' AS s,
-      |    0 AS i
-      |  FROM dw
-      |  UNION ALL
-      |  SELECT t.w,
-      |    replace(t.s, '|' || t.m.a || '||' || t.m.b || '|',
-      |            '|' || t.m.a || t.m.b || '|'),
-      |    t.i + 1
-      |  FROM (SELECT e.w, e.s, e.i, f.merges[e.i + 1] AS m
-      |        FROM enc e, fin f WHERE e.i < len(f.merges)) t),
+      |$EncCte,
       |wt AS (SELECT e.w, string_split(trim(e.s, '|'), '||') AS toks
       |       FROM enc e, fin f WHERE e.i = len(f.merges)),
       |s1 AS (SELECT sw.source, SUM(sw.n) AS n_words,
@@ -195,18 +201,7 @@ object Extended11 {
       |  FROM (SELECT unnest(merges) AS m,
       |          generate_subscripts(merges, 1) AS rank FROM fin) t, nch),
       |dw AS (SELECT DISTINCT w FROM wf),
-      |enc AS (
-      |  SELECT w,
-      |    '|' || array_to_string(string_split(w, ''), '||') || '|' AS s,
-      |    0 AS i
-      |  FROM dw
-      |  UNION ALL
-      |  SELECT t.w,
-      |    replace(t.s, '|' || t.m.a || '||' || t.m.b || '|',
-      |            '|' || t.m.a || t.m.b || '|'),
-      |    t.i + 1
-      |  FROM (SELECT e.w, e.s, e.i, f.merges[e.i + 1] AS m
-      |        FROM enc e, fin f WHERE e.i < len(f.merges)) t),
+      |$EncCte,
       |wt AS (SELECT e.w, string_split(trim(e.s, '|'), '||') AS toks
       |       FROM enc e, fin f WHERE e.i = len(f.merges)),
       |wi AS (SELECT w, list(id ORDER BY i) AS ids FROM (
@@ -269,18 +264,7 @@ object Extended11 {
     "q223_fertility_curve",
     s"""WITH RECURSIVE $learnSql,
       |dw AS (SELECT w, f FROM wf),
-      |enc AS (
-      |  SELECT w,
-      |    '|' || array_to_string(string_split(w, ''), '||') || '|' AS s,
-      |    0 AS i
-      |  FROM dw
-      |  UNION ALL
-      |  SELECT t.w,
-      |    replace(t.s, '|' || t.m.a || '||' || t.m.b || '|',
-      |            '|' || t.m.a || t.m.b || '|'),
-      |    t.i + 1
-      |  FROM (SELECT e.w, e.s, e.i, f.merges[e.i + 1] AS m
-      |        FROM enc e, fin f WHERE e.i < len(f.merges)) t)
+      |$EncCte
       |SELECT CAST(enc.i AS INT) AS budget,
       |  CAST(SUM(dw.f) AS BIGINT) AS n_words,
       |  CAST(SUM(dw.f * len(string_split(trim(enc.s, '|'), '||')))

@@ -12,24 +12,6 @@ import graft.operators.{IncrementalAgg, Similarity}
   */
 object Extended12 {
 
-  private val simhashPairsSql =
-    """tok AS (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS w
-      |  FROM documents),
-      |h AS (SELECT doc_id, ('0x' || substr(md5(w), 1, 15))::BIGINT AS hv FROM tok),
-      |bits AS (SELECT doc_id, j,
-      |    SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) t
-      |  GROUP BY 1, 2),
-      |sig AS (SELECT doc_id,
-      |    CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << j ELSE 0 END) AS BIGINT) AS sh
-      |  FROM bits GROUP BY doc_id),
-      |banded AS (SELECT doc_id, sh, b, (sh >> (b * 15)) & 32767 AS bv
-      |  FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b) t),
-      |pairs AS (SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-      |  FROM banded a JOIN banded b
-      |    ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id
-      |  WHERE bit_count(xor(a.sh, b.sh)) <= 3)""".stripMargin
-
   /** The q58/q228 md5 split bucket as DuckDB SQL over expression e. */
   private def splitSql(e: String): String =
     s"""CASE WHEN ('0x' || substr(md5(CAST($e AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'train'
@@ -178,14 +160,8 @@ object Extended12 {
     */
   val q228_leakage_split: Q = Q(
     "q228_leakage_split",
-    s"""WITH RECURSIVE $simhashPairsSql,
-      |sym AS (SELECT u AS a, v AS b FROM pairs
-      |  UNION ALL SELECT v, u FROM pairs),
-      |reach(id, lab) AS (
-      |  SELECT DISTINCT a, a FROM sym
-      |  UNION
-      |  SELECT s.b, r.lab FROM reach r JOIN sym s ON r.id = s.a),
-      |cc AS (SELECT id, MIN(lab) AS comp FROM reach GROUP BY id),
+    s"""WITH RECURSIVE ${OracleSql.SimhashPairs},
+      |${OracleSql.components("pairs", "")},
       |rep AS (SELECT d.doc_id, d.n_chars, cc.comp,
       |    COALESCE(cc.comp, d.doc_id) AS rep
       |  FROM documents d LEFT JOIN cc ON d.doc_id = cc.id)
@@ -235,14 +211,8 @@ object Extended12 {
     */
   val q229_incremental_cc: Q = Q(
     "q229_incremental_cc",
-    s"""WITH RECURSIVE $simhashPairsSql,
-      |sym AS (SELECT u AS a, v AS b FROM pairs
-      |  UNION ALL SELECT v, u FROM pairs),
-      |reach(id, lab) AS (
-      |  SELECT DISTINCT a, a FROM sym
-      |  UNION
-      |  SELECT s.b, r.lab FROM reach r JOIN sym s ON r.id = s.a),
-      |cc AS (SELECT id, MIN(lab) AS comp FROM reach GROUP BY id)
+    s"""WITH RECURSIVE ${OracleSql.SimhashPairs},
+      |${OracleSql.components("pairs", "")}
       |SELECT comp, COUNT(*) AS n_members,
       |  COUNT(CASE WHEN id % 10 < 2 THEN 1 END) AS n_new_docs
       |FROM cc GROUP BY 1 HAVING COUNT(*) >= 2 ORDER BY 1""".stripMargin) {
@@ -283,7 +253,7 @@ object Extended12 {
     */
   val q230_sticky_split: Q = Q(
     "q230_sticky_split",
-    s"""WITH RECURSIVE $simhashPairsSql,
+    s"""WITH RECURSIVE ${OracleSql.SimhashPairs},
       |op AS (SELECT u, v FROM pairs WHERE u % 10 >= 2 AND v % 10 >= 2),
       |so AS (SELECT u AS a, v AS b FROM op UNION ALL SELECT v, u FROM op),
       |ro(id, lab) AS (
@@ -380,15 +350,9 @@ object Extended12 {
     */
   val q231_retract_group: Q = Q(
     "q231_retract_group",
-    s"""WITH RECURSIVE $simhashPairsSql,
+    s"""WITH RECURSIVE ${OracleSql.SimhashPairs},
       |op AS (SELECT u, v FROM pairs WHERE u % 10 >= 2 AND v % 10 >= 2),
-      |sym AS (SELECT u AS a, v AS b FROM op
-      |  UNION ALL SELECT v, u FROM op),
-      |reach(id, lab) AS (
-      |  SELECT DISTINCT a, a FROM sym
-      |  UNION
-      |  SELECT s.b, r.lab FROM reach r JOIN sym s ON r.id = s.a),
-      |cc AS (SELECT id, MIN(lab) AS comp FROM reach GROUP BY id)
+      |${OracleSql.components("op", "")}
       |SELECT comp, COUNT(*) AS n_members FROM cc
       |GROUP BY 1 HAVING COUNT(*) >= 2 ORDER BY 1""".stripMargin) {
     (spark, dir) =>

@@ -213,48 +213,43 @@ object Extended13 {
     * bit-deterministic VectorDot fold with id tie-breaks.
     */
   val q235_label_consistency: Q = Q(
-    "q235_label_consistency", {
-      def dotD(a: String, b: String) =
-        s"""list_reduce(list_transform(range(1, 65),
-           |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)),
-           |      (x, y) -> x + y)""".stripMargin
-      s"""WITH p AS (SELECT vec_id AS pid, embedding AS pe
-         |  FROM embeddings WHERE vec_id < 4),
-         |b AS (SELECT vec_id,
-         |    CAST(SUM(CASE WHEN ${dotD("e.embedding", "p.pe")} > 0
-         |      THEN 1::BIGINT << pid ELSE 0 END) AS BIGINT) AS bucket
-         |  FROM embeddings e CROSS JOIN p GROUP BY vec_id),
-         |v AS (SELECT * FROM (SELECT vec_id, embedding, label,
-         |    sqrt(${dotD("embedding", "embedding")}) AS vn, bucket
-         |  FROM embeddings JOIN b USING (vec_id)) t WHERE vn > 0),
-         |pairs AS (SELECT a.vec_id, a.label, n.label AS nb_label,
-         |    n.vec_id AS nb_id,
-         |    ${dotD("a.embedding", "n.embedding")} / (a.vn * n.vn) AS cos
-         |  FROM v a JOIN v n USING (bucket)
-         |  WHERE n.vec_id != a.vec_id),
-         |topk AS (SELECT vec_id, label, nb_label FROM (
-         |    SELECT vec_id, label, nb_label,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY cos DESC, nb_id) AS rn
-         |    FROM pairs) t WHERE rn <= 5),
-         |scored AS (SELECT vec_id, label, COUNT(*) AS n_nb,
-         |    COUNT(CASE WHEN nb_label = label THEN 1 END) AS n_agree
-         |  FROM topk GROUP BY 1, 2),
-         |per_label AS (SELECT label, COUNT(*) AS n_scored,
-         |    CAST(SUM(n_nb) AS BIGINT) AS sum_nb,
-         |    CAST(SUM(n_agree) AS BIGINT) AS sum_agree,
-         |    COUNT(CASE WHEN 2 * n_agree < n_nb THEN 1 END) AS n_suspect
-         |  FROM scored GROUP BY 1),
-         |tot AS (SELECT label, COUNT(*) AS n_vecs FROM embeddings
-         |  GROUP BY 1)
-         |SELECT t.label, t.n_vecs,
-         |  COALESCE(pl.n_scored, 0) AS n_scored,
-         |  COALESCE(pl.sum_nb, 0) AS sum_nb,
-         |  COALESCE(pl.sum_agree, 0) AS sum_agree,
-         |  COALESCE(pl.n_suspect, 0) AS n_suspect
-         |FROM tot t LEFT JOIN per_label pl ON t.label = pl.label
-         |ORDER BY t.label""".stripMargin
-    }) { (spark, dir) =>
+    "q235_label_consistency",
+    s"""WITH p AS (SELECT vec_id AS pid, embedding AS pe
+      |  FROM embeddings WHERE vec_id < 4),
+      |b AS (SELECT vec_id,
+      |    CAST(SUM(CASE WHEN ${OracleSql.dotWrapped("e.embedding", "p.pe")} > 0
+      |      THEN 1::BIGINT << pid ELSE 0 END) AS BIGINT) AS bucket
+      |  FROM embeddings e CROSS JOIN p GROUP BY vec_id),
+      |v AS (SELECT * FROM (SELECT vec_id, embedding, label,
+      |    sqrt(${OracleSql.dotWrapped("embedding", "embedding")}) AS vn, bucket
+      |  FROM embeddings JOIN b USING (vec_id)) t WHERE vn > 0),
+      |pairs AS (SELECT a.vec_id, a.label, n.label AS nb_label,
+      |    n.vec_id AS nb_id,
+      |    ${OracleSql.dotWrapped("a.embedding", "n.embedding")} / (a.vn * n.vn) AS cos
+      |  FROM v a JOIN v n USING (bucket)
+      |  WHERE n.vec_id != a.vec_id),
+      |topk AS (SELECT vec_id, label, nb_label FROM (
+      |    SELECT vec_id, label, nb_label,
+      |      ROW_NUMBER() OVER (PARTITION BY vec_id
+      |        ORDER BY cos DESC, nb_id) AS rn
+      |    FROM pairs) t WHERE rn <= 5),
+      |scored AS (SELECT vec_id, label, COUNT(*) AS n_nb,
+      |    COUNT(CASE WHEN nb_label = label THEN 1 END) AS n_agree
+      |  FROM topk GROUP BY 1, 2),
+      |per_label AS (SELECT label, COUNT(*) AS n_scored,
+      |    CAST(SUM(n_nb) AS BIGINT) AS sum_nb,
+      |    CAST(SUM(n_agree) AS BIGINT) AS sum_agree,
+      |    COUNT(CASE WHEN 2 * n_agree < n_nb THEN 1 END) AS n_suspect
+      |  FROM scored GROUP BY 1),
+      |tot AS (SELECT label, COUNT(*) AS n_vecs FROM embeddings
+      |  GROUP BY 1)
+      |SELECT t.label, t.n_vecs,
+      |  COALESCE(pl.n_scored, 0) AS n_scored,
+      |  COALESCE(pl.sum_nb, 0) AS sum_nb,
+      |  COALESCE(pl.sum_agree, 0) AS sum_agree,
+      |  COALESCE(pl.n_suspect, 0) AS n_suspect
+      |FROM tot t LEFT JOIN per_label pl ON t.label = pl.label
+      |ORDER BY t.label""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     import graft.operators.Similarity
     val emb = Tables.loadParallel(spark, dir, "embeddings")

@@ -154,12 +154,7 @@ object Extended14 {
     */
   val q238_mg_incremental: Q = Q(
     "q238_mg_incremental",
-    """WITH t AS (SELECT unnest(string_split_regex(lower(text), '\s+')) AS tok
-      |  FROM documents),
-      |tot AS (SELECT COUNT(*) AS n FROM t)
-      |SELECT tok, COUNT(*) AS cnt FROM t GROUP BY 1
-      |HAVING COUNT(*) * 100 > (SELECT n FROM tot)
-      |ORDER BY cnt DESC, tok""".stripMargin) { (spark, dir) =>
+    OracleSql.HeavyHitterOracle) { (spark, dir) =>
     import spark.implicits._
     import graft.functions.{MisraGries, MisraGriesSummary}
     val toks = Tables.loadParallel(spark, dir, "documents")

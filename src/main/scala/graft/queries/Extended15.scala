@@ -316,6 +316,19 @@ object Extended15 {
       .toDF("true_pairs", "est_pairs", "over_mass")
   }
 
+  /** q244/q245's per-doc `scored(score, y)`: stopword score and
+    * is-English label.
+    */
+  private val ScoredCte =
+    """scored AS (SELECT
+      |    (10000 * len(list_filter(string_split_regex(lower(text),
+      |        '\s+'),
+      |      w -> list_contains(['the','a','of','and','to','in','is',
+      |        'for','on','with'], w))))
+      |      // len(string_split_regex(lower(text), '\s+')) AS score,
+      |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+      |  FROM documents)""".stripMargin
+
   /** Isotonic score calibration ([[graft.operators.Calibrate]]):
     * pool-adjacent-violators fits the best MONOTONE map from the
     * stopword-share score (integer basis points) to P(lang = 'en') —
@@ -332,15 +345,8 @@ object Extended15 {
     */
   val q244_isotonic_calibration: Q = Q(
     "q244_isotonic_calibration",
-    """WITH RECURSIVE
-      |scored AS (SELECT
-      |    (10000 * len(list_filter(string_split_regex(lower(text),
-      |        '\s+'),
-      |      w -> list_contains(['the','a','of','and','to','in','is',
-      |        'for','on','with'], w))))
-      |      // len(string_split_regex(lower(text), '\s+')) AS score,
-      |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-      |  FROM documents),
+    s"""WITH RECURSIVE
+      |$ScoredCte,
       |mm AS (SELECT MIN(score) AS lo,
       |    MAX(score) - MIN(score) + 1 AS width FROM scored),
       |bins AS (SELECT (score - (SELECT lo FROM mm)) * 16
@@ -412,14 +418,7 @@ object Extended15 {
     */
   val q245_rank_eval: Q = Q(
     "q245_rank_eval",
-    """WITH scored AS (SELECT
-      |    (10000 * len(list_filter(string_split_regex(lower(text),
-      |        '\s+'),
-      |      w -> list_contains(['the','a','of','and','to','in','is',
-      |        'for','on','with'], w))))
-      |      // len(string_split_regex(lower(text), '\s+')) AS score,
-      |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-      |  FROM documents),
+    s"""WITH $ScoredCte,
       |ps AS (SELECT score AS s, COUNT(*) AS cnt,
       |    CAST(SUM(y) AS BIGINT) AS pos FROM scored GROUP BY 1),
       |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n,
@@ -465,27 +464,6 @@ object Extended15 {
     graft.operators.RankEval.aucAndBestF1(scored, "score", "y")
   }
 
-  /** The q42 langid CASE, shared by the kappa oracle. */
-  private[queries] val guessedSql: String =
-    """CASE
-      |    WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-      |    WHEN len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['the','a','of','and','to','is'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['der','die','und','das','ist','nicht'], w)))
-      |     AND len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['the','a','of','and','to','is'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['el','los','de','es','una','que'], w)))
-      |     AND len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['the','a','of','and','to','is'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['le','les','et','est','une','dans'], w)))
-      |    THEN 'en'
-      |    WHEN len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['der','die','und','das','ist','nicht'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['el','los','de','es','una','que'], w)))
-      |     AND len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['der','die','und','das','ist','nicht'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['le','les','et','est','une','dans'], w)))
-      |    THEN 'de'
-      |    WHEN len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['el','los','de','es','una','que'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['le','les','et','est','une','dans'], w)))
-      |    THEN 'es'
-      |    ELSE 'fr' END""".stripMargin
-
   /** Cohen's κ between the heuristic language-ID and the annotated
     * language ([[graft.operators.Association.cohensKappa]]) — q42
     * shows the confusion MATRIX; this reduces it to the
@@ -498,7 +476,7 @@ object Extended15 {
     */
   val q246_cohens_kappa: Q = Q(
     "q246_cohens_kappa",
-    s"""WITH conf AS (SELECT lang AS a, $guessedSql AS b, COUNT(*) AS o
+    s"""WITH conf AS (SELECT lang AS a, ${OracleSql.guessedSql} AS b, COUNT(*) AS o
       |  FROM documents GROUP BY 1, 2),
       |tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM conf),
       |agree AS (SELECT CAST(COALESCE(SUM(o), 0) AS BIGINT) AS ag
@@ -567,6 +545,20 @@ object Extended15 {
       "source", "lang")
   }
 
+  /** q248/q249's replicate means over `w(n_chars, rep, u)`: Poisson
+    * weights `wt`, per-replicate sums `m`, and the sorted means `ord`.
+    */
+  private val BootstrapCtes =
+    s"""wt AS (SELECT rep, n_chars,
+      |    ${graft.operators.Bootstrap.weightSql("u")}
+      |      AS wgt
+      |  FROM w),
+      |m AS (SELECT rep, CAST(SUM(wgt * n_chars) AS BIGINT) AS num,
+      |    CAST(SUM(wgt) AS BIGINT) AS den FROM wt GROUP BY 1),
+      |ord AS (SELECT CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS mu,
+      |    ROW_NUMBER() OVER (ORDER BY CAST(num AS DOUBLE)
+      |      / CAST(den AS DOUBLE)) AS rk FROM m)""".stripMargin
+
   /** 95% bootstrap CI on mean document length
     * ([[graft.operators.Bootstrap.meanCi]]) — error bars for corpus
     * statistics via the DETERMINISTIC Poisson bootstrap: each
@@ -584,15 +576,7 @@ object Extended15 {
       |    ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':'
       |      || CAST(r.rep AS VARCHAR)), 1, 15))::BIGINT AS u
       |  FROM documents d CROSS JOIN reps r),
-      |wt AS (SELECT rep, n_chars,
-      |    ${graft.operators.Bootstrap.weightSql("u")}
-      |      AS wgt
-      |  FROM w),
-      |m AS (SELECT rep, CAST(SUM(wgt * n_chars) AS BIGINT) AS num,
-      |    CAST(SUM(wgt) AS BIGINT) AS den FROM wt GROUP BY 1),
-      |ord AS (SELECT CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS mu,
-      |    ROW_NUMBER() OVER (ORDER BY CAST(num AS DOUBLE)
-      |      / CAST(den AS DOUBLE)) AS rk FROM m),
+      |$BootstrapCtes,
       |tot AS (SELECT COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS s
       |  FROM documents)
       |SELECT tot.n, CAST(tot.s AS DOUBLE) / tot.n AS mean_v,
@@ -624,10 +608,7 @@ object Extended15 {
       |  FROM documents),
       |h AS (SELECT doc_id,
       |    ('0x' || substr(md5(w), 1, 15))::BIGINT AS hv FROM tok),
-      |bits AS (SELECT doc_id, j,
-      |    SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) t
-      |  GROUP BY 1, 2),
+      |${OracleSql.SimhashBitsCte},
       |sig AS (SELECT doc_id,
       |    CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << j ELSE 0 END)
       |      AS BIGINT) AS sh
@@ -638,13 +619,7 @@ object Extended15 {
       |  FROM banded a JOIN banded b
       |    ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id
       |  WHERE bit_count(xor(a.sh, b.sh)) <= 3),
-      |sym AS (SELECT u AS a, v AS b FROM prs
-      |  UNION ALL SELECT v, u FROM prs),
-      |reach(id, lab) AS (
-      |  SELECT DISTINCT a, a FROM sym
-      |  UNION
-      |  SELECT s.b, r.lab FROM reach r JOIN sym s ON r.id = s.a),
-      |cc AS (SELECT id, MIN(lab) AS comp FROM reach GROUP BY id),
+      |${OracleSql.components("prs", "")},
       |g AS (SELECT d.doc_id, d.n_chars,
       |    COALESCE(cc.comp, d.doc_id) AS grp
       |  FROM documents d LEFT JOIN cc ON cc.id = d.doc_id),
@@ -653,15 +628,7 @@ object Extended15 {
       |    ('0x' || substr(md5(CAST(g.grp AS VARCHAR) || ':'
       |      || CAST(r.rep AS VARCHAR)), 1, 15))::BIGINT AS u
       |  FROM g CROSS JOIN reps r),
-      |wt AS (SELECT rep, n_chars,
-      |    ${graft.operators.Bootstrap.weightSql("u")}
-      |      AS wgt
-      |  FROM w),
-      |m AS (SELECT rep, CAST(SUM(wgt * n_chars) AS BIGINT) AS num,
-      |    CAST(SUM(wgt) AS BIGINT) AS den FROM wt GROUP BY 1),
-      |ord AS (SELECT CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS mu,
-      |    ROW_NUMBER() OVER (ORDER BY CAST(num AS DOUBLE)
-      |      / CAST(den AS DOUBLE)) AS rk FROM m),
+      |$BootstrapCtes,
       |tot AS (SELECT COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS s,
       |    COUNT(DISTINCT grp) AS n_groups FROM g)
       |SELECT tot.n, tot.n_groups,

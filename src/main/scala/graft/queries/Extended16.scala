@@ -21,16 +21,6 @@ import graft.operators.{Calibrate, RankCorr, RankEval, RetrievalEval,
   */
 object Extended16 {
 
-  /** q245's stopword-rate score, shared by four queries here: basis
-    * points of lexicon tokens among all whitespace tokens.
-    */
-  private val SwSql =
-    """len(list_filter(string_split_regex(lower(text), '\s+'),
-      |      w -> list_contains(['the','a','of','and','to','in','is',
-      |        'for','on','with'], w)))""".stripMargin
-  private val NtSql = """len(string_split_regex(lower(text), '\s+'))"""
-  private val ScoreSql = s"(10000 * $SwSql) // $NtSql"
-
   private def swScore(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
@@ -42,16 +32,12 @@ object Extended16 {
       .withColumn("score", expr("(10000 * sw) div nt"))
   }
 
-  /** 64-dim float cosine, DuckDB side (q47's form — both engines fold
+  /** 64-dim float cosine, DuckDB side (both engines fold
     * left-to-right, so the doubles agree bitwise).
     */
-  private def dotQ(a: String, b: String): String =
-    s"""list_reduce(list_transform(range(1, 65),
-       |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)),
-       |      (x, y) -> x + y)""".stripMargin
   private def cosQ(a: String, b: String): String =
-    s"""${dotQ(a, b)}
-       |    / (sqrt(${dotQ(a, a)}) * sqrt(${dotQ(b, b)}))""".stripMargin
+    s"""${OracleSql.dotWrapped(a, b)}
+       |    / (sqrt(${OracleSql.dotWrapped(a, a)}) * sqrt(${OracleSql.dotWrapped(b, b)}))""".stripMargin
 
   /** nDCG@10 / MRR / recall@10 of brute-force cosine retrieval
     * ([[Similarity.bruteForceTopK]]) against the label-match relevance
@@ -154,12 +140,6 @@ object Extended16 {
     * corpus is touched only by the two retrievers themselves.
     */
   val q251_rrf_fusion: Q = {
-    val codesSql =
-      """CASE WHEN mx > mn THEN list_transform(embedding,
-        |    v -> LEAST(CAST(FLOOR((CAST(v AS DOUBLE) - mn) * 255
-        |      / (mx - mn)) AS BIGINT), 255))
-        |  ELSE list_transform(embedding, v -> CAST(0 AS BIGINT))
-        |  END""".stripMargin
     Q("q251_rrf_fusion",
       s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe
         |  FROM embeddings WHERE vec_id < 8),
@@ -168,11 +148,7 @@ object Extended16 {
         |  FROM q, embeddings WHERE vec_id <> qid),
         |ra AS (SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
         |    ORDER BY cos DESC, cid) AS rank FROM sc),
-        |r0 AS (SELECT vec_id, embedding,
-        |    CAST(list_min(embedding) AS DOUBLE) AS mn,
-        |    CAST(list_max(embedding) AS DOUBLE) AS mx
-        |  FROM embeddings),
-        |c AS (SELECT vec_id, $codesSql AS codes FROM r0),
+        |${OracleSql.quantCodesCtes("r0")},
         |qc AS (SELECT vec_id AS qid, codes AS qcodes FROM c
         |  WHERE vec_id < 8),
         |sb AS (SELECT qc.qid, c.vec_id AS cid,
@@ -246,7 +222,7 @@ object Extended16 {
     */
   val q252_rank_corr: Q = Q(
     "q252_rank_corr",
-    s"""WITH s0 AS (SELECT $ScoreSql AS sc, n_chars FROM documents),
+    s"""WITH s0 AS (SELECT ${OracleSql.ScoreSql} AS sc, n_chars FROM documents),
       |s AS (SELECT (sc * 64) // 10001 AS x,
       |    LEAST(n_chars // 64, 63) AS y FROM s0),
       |cells AS (SELECT x, y, CAST(COUNT(*) AS BIGINT) AS c
@@ -307,7 +283,6 @@ object Extended16 {
       |    ELSE -((10000 * num * num) // (varx * vary)) END AS BIGINT)
       |    AS rho2_signed_bp
       |FROM fin""".stripMargin) { (spark, dir) =>
-    import spark.implicits._
     RankCorr.spearmanKendall(
       swScore(spark, dir)
         .select(expr("(score * 64) div 10001").as("qx"),
@@ -328,14 +303,9 @@ object Extended16 {
     */
   val q253_fleiss_kappa: Q = Q(
     "q253_fleiss_kappa",
-    s"""WITH r AS (
-      |  SELECT doc_id, CASE WHEN lang = 'en' THEN 'en' ELSE 'other'
-      |    END AS cat FROM documents
+    s"""WITH ${OracleSql.LangRatersSql}
       |  UNION ALL
-      |  SELECT doc_id, CASE WHEN (${Extended15.guessedSql}) = 'en'
-      |    THEN 'en' ELSE 'other' END FROM documents
-      |  UNION ALL
-      |  SELECT doc_id, CASE WHEN $ScoreSql >= 1500 THEN 'en'
+      |  SELECT doc_id, CASE WHEN ${OracleSql.ScoreSql} >= 1500 THEN 'en'
       |    ELSE 'other' END FROM documents),
       |nij AS (SELECT doc_id, cat, CAST(COUNT(*) AS BIGINT) AS nij
       |  FROM r GROUP BY 1, 2),
@@ -380,7 +350,7 @@ object Extended16 {
     */
   val q254_group_auc: Q = Q(
     "q254_group_auc",
-    s"""WITH scored AS (SELECT source, $ScoreSql AS s,
+    s"""WITH scored AS (SELECT source, ${OracleSql.ScoreSql} AS s,
       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
       |  FROM documents),
       |ps AS (SELECT source, s, CAST(COUNT(*) AS BIGINT) AS cnt,
@@ -418,7 +388,7 @@ object Extended16 {
     */
   val q255_ece: Q = Q(
     "q255_ece",
-    s"""WITH scored AS (SELECT $ScoreSql AS s,
+    s"""WITH scored AS (SELECT ${OracleSql.ScoreSql} AS s,
       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
       |  FROM documents),
       |b AS (SELECT LEAST((s * 10) // 10000, 9) AS bin,

@@ -20,13 +20,6 @@ import graft.operators.{Association, Mmr, NaiveBayes, Profile}
   */
 object Extended17 {
 
-  private val SwSql =
-    """len(list_filter(string_split_regex(lower(text), '\s+'),
-      |      w -> list_contains(['the','a','of','and','to','in','is',
-      |        'for','on','with'], w)))""".stripMargin
-  private val NtSql = """len(string_split_regex(lower(text), '\s+'))"""
-  private val ScoreSql = s"(10000 * $SwSql) // $NtSql"
-
   /** Multinomial Naive Bayes language router
     * ([[NaiveBayes]]): train on even doc_ids, predict the odd ones.
     * Every Laplace log-probability is a difference of exact
@@ -107,15 +100,10 @@ object Extended17 {
     */
   val q257_krippendorff: Q = Q(
     "q257_krippendorff",
-    s"""WITH r AS (
-      |  SELECT doc_id, CASE WHEN lang = 'en' THEN 'en' ELSE 'other'
-      |    END AS cat FROM documents
+    s"""WITH ${OracleSql.LangRatersSql}
+      |  WHERE ${OracleSql.NtSql} >= 12
       |  UNION ALL
-      |  SELECT doc_id, CASE WHEN (${Extended15.guessedSql}) = 'en'
-      |    THEN 'en' ELSE 'other' END FROM documents
-      |  WHERE $NtSql >= 12
-      |  UNION ALL
-      |  SELECT doc_id, CASE WHEN $ScoreSql >= 1500 THEN 'en'
+      |  SELECT doc_id, CASE WHEN ${OracleSql.ScoreSql} >= 1500 THEN 'en'
       |    ELSE 'other' END FROM documents),
       |nuc AS (SELECT doc_id, cat, CAST(COUNT(*) AS BIGINT) AS nuc
       |  FROM r GROUP BY 1, 2),
@@ -171,9 +159,9 @@ object Extended17 {
     "q258_mcnemar",
     s"""WITH s AS (SELECT
       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS t,
-      |    CASE WHEN (${Extended15.guessedSql}) = 'en' THEN 1 ELSE 0
+      |    CASE WHEN (${OracleSql.guessedSql}) = 'en' THEN 1 ELSE 0
       |      END AS a,
-      |    CASE WHEN $ScoreSql >= 1500 THEN 1 ELSE 0 END AS b
+      |    CASE WHEN ${OracleSql.ScoreSql} >= 1500 THEN 1 ELSE 0 END AS b
       |  FROM documents),
       |agg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
       |    CAST(SUM(CASE WHEN a = t AND b = t THEN 1 ELSE 0 END)
@@ -284,12 +272,6 @@ object Extended17 {
     * corpus.
     */
   val q261_mmr_rerank: Q = {
-    val codesSql =
-      """CASE WHEN mx > mn THEN list_transform(embedding,
-        |    v -> LEAST(CAST(FLOOR((CAST(v AS DOUBLE) - mn) * 255
-        |      / (mx - mn)) AS BIGINT), 255))
-        |  ELSE list_transform(embedding, v -> CAST(0 AS BIGINT))
-        |  END""".stripMargin
     def dotCodes(a: String, b: String): String =
       s"""CAST(list_reduce(list_transform(range(1, 65),
          |      i -> $a[i] * $b[i]), (x, y) -> x + y) AS BIGINT)"""
@@ -312,11 +294,7 @@ object Extended17 {
         else "")
     }.mkString(",\n")
     Q("q261_mmr_rerank",
-      s"""WITH r0 AS (SELECT vec_id, embedding,
-        |    CAST(list_min(embedding) AS DOUBLE) AS mn,
-        |    CAST(list_max(embedding) AS DOUBLE) AS mx
-        |  FROM embeddings),
-        |c AS (SELECT vec_id, $codesSql AS codes FROM r0),
+      s"""WITH ${OracleSql.quantCodesCtes("r0")},
         |qc AS (SELECT vec_id AS qid, codes AS qcodes FROM c
         |  WHERE vec_id < 6),
         |sc AS (SELECT qc.qid, c.vec_id AS cid, c.codes,
@@ -400,8 +378,8 @@ object Extended17 {
     */
   val q262_dup_span_removal: Q = Q(
     "q262_dup_span_removal",
-    """WITH t AS (SELECT doc_id,
-      |    string_split_regex(lower(text), '\s+') AS tk FROM documents),
+    s"""WITH t AS (SELECT doc_id,
+      |    string_split_regex(lower(text), '\\s+') AS tk FROM documents),
       |g0 AS (SELECT doc_id, tk,
       |    unnest(range(1, greatest(len(tk) - 7, 0) + 1)) AS i FROM t),
       |occ AS (SELECT doc_id, i AS pos,
@@ -415,13 +393,7 @@ object Extended17 {
       |  WHERE NOT (o.doc_id = c.md AND o.pos = c.mp)),
       |mpos AS (SELECT DISTINCT m.doc_id, m.pos + o.o AS i
       |  FROM marks m CROSS JOIN (SELECT unnest(range(0, 8)) AS o) o),
-      |pos AS (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i
-      |  FROM t),
-      |keep AS (SELECT p.doc_id, p.i, p.tk[p.i] AS w FROM pos p
-      |  ANTI JOIN mpos USING (doc_id, i)),
-      |agg AS (SELECT doc_id,
-      |    array_to_string(list(w ORDER BY i), ' ') AS clean_text,
-      |    CAST(COUNT(*) AS BIGINT) AS n_kept FROM keep GROUP BY 1)
+      |${OracleSql.StripKeepCtes}
       |SELECT t.doc_id, COALESCE(a.clean_text, '') AS clean_text,
       |  CAST(len(t.tk) AS BIGINT) AS n_tokens,
       |  CAST(len(t.tk) - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed

@@ -21,13 +21,6 @@ import graft.operators.{Association, Profile, Robust}
   */
 object Extended18 {
 
-  private val SwSql =
-    """len(list_filter(string_split_regex(lower(text), '\s+'),
-      |      w -> list_contains(['the','a','of','and','to','in','is',
-      |        'for','on','with'], w)))""".stripMargin
-  private val NtSql = """len(string_split_regex(lower(text), '\s+'))"""
-  private val ScoreSql = s"(10000 * $SwSql) // $NtSql"
-
   /** The three-rater long form shared by q264/q265: the annotation,
     * the marker-lexicon guesser (ABSTAINS on short docs — exercises
     * the null-doesn't-vote path), and the stopword-score threshold.
@@ -37,11 +30,11 @@ object Extended18 {
       |    CASE WHEN lang = 'en' THEN 'en' ELSE 'other' END AS cat
       |  FROM documents
       |  UNION ALL
-      |  SELECT doc_id, 'r2', CASE WHEN (${Extended15.guessedSql}) = 'en'
+      |  SELECT doc_id, 'r2', CASE WHEN (${OracleSql.guessedSql}) = 'en'
       |    THEN 'en' ELSE 'other' END FROM documents
-      |  WHERE $NtSql >= 12
+      |  WHERE ${OracleSql.NtSql} >= 12
       |  UNION ALL
-      |  SELECT doc_id, 'r3', CASE WHEN $ScoreSql >= 1500 THEN 'en'
+      |  SELECT doc_id, 'r3', CASE WHEN ${OracleSql.ScoreSql} >= 1500 THEN 'en'
       |    ELSE 'other' END FROM documents""".stripMargin
 
   private val ConsensusSql =
@@ -130,7 +123,7 @@ object Extended18 {
     */
   val q266_robust_outlier_gate: Q = Q(
     "q266_robust_outlier_gate",
-    s"""WITH d AS (SELECT doc_id, CAST($NtSql AS BIGINT) AS n_tokens
+    s"""WITH d AS (SELECT doc_id, CAST(${OracleSql.NtSql} AS BIGINT) AS n_tokens
       |  FROM documents),
       |c AS (SELECT n_tokens AS v, CAST(COUNT(*) AS BIGINT) AS c
       |  FROM d GROUP BY 1),

@@ -67,66 +67,6 @@ object Extended19 {
       .orderBy($"qid", $"rnk")
   }
 
-  private[queries] def lmCtes(p: String, where: String): String =
-    s"""${p}tok AS (SELECT unnest(string_split_regex(lower(text),
-      |    '\\s+')) AS w FROM documents $where),
-      |${p}tr AS (SELECT unnest(t[:-2]) AS w1, unnest(t[2:]) AS w2
-      |  FROM (SELECT string_split_regex(lower(text), '\\s+') AS t
-      |        FROM documents $where) x
-      |  WHERE len(t) >= 2),
-      |${p}uni0 AS (SELECT w, COUNT(*) AS c FROM ${p}tok GROUP BY 1),
-      |${p}uni AS (SELECT w, c FROM ${p}uni0
-      |  ORDER BY c DESC, w LIMIT 24),
-      |${p}bi AS (SELECT b.w1, b.w2, b.c12, u.c AS c1
-      |  FROM (SELECT w1, w2, COUNT(*) AS c12 FROM ${p}tr GROUP BY 1, 2
-      |        ORDER BY COUNT(*) DESC, w1, w2 LIMIT 512) b
-      |  JOIN ${p}uni0 u ON u.w = b.w1),
-      |${p}k AS (SELECT CAST(SUM(c) AS BIGINT) AS n, COUNT(*) AS v
-      |  FROM ${p}uni)""".stripMargin
-
-  /** The q270 winnowing pair chain (tokens → k-gram hashes →
-    * window-then-filter argmin → df-capped fingerprint index →
-    * shared-count pairs), shared with the q279 community query: the
-    * window min is computed over ALL keyed rows in `selw` and the
-    * complete-window filter `i <= nh - 3` applies OUTSIDE it (SQL
-    * evaluates WHERE before window functions — filtering inside the
-    * window block truncated the tail frames, the round-7 red row).
-    * Ends with CTE `pairs(a, b, shared)`.
-    */
-  private[queries] val winnowPairCtes: String =
-    """tok AS (SELECT doc_id AS doc,
-      |    string_split_regex(lower(text), '\s+') AS t FROM documents),
-      |g AS (SELECT doc, len(t) - 4 AS nh, t,
-      |    unnest(range(1, greatest(len(t) - 4, 0) + 1)) AS i FROM tok),
-      |occ AS (SELECT doc, nh, i,
-      |    ('0x' || substr(md5(array_to_string(t[i:i+4], ' ')), 1, 15))
-      |      ::BIGINT AS hv FROM g),
-      |keyed AS (SELECT doc, nh, i,
-      |    printf('%016x:%09d', hv, i) AS key FROM occ),
-      |selw AS (SELECT doc, nh, i, MIN(key) OVER (PARTITION BY doc
-      |      ORDER BY i ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING)
-      |      AS sel
-      |  FROM keyed),
-      |sel AS (SELECT DISTINCT doc, sel FROM selw WHERE i <= nh - 3),
-      |fps AS (SELECT DISTINCT doc,
-      |    ('0x' || substr(sel, 1, 16))::BIGINT AS fp FROM sel),
-      |keep AS (SELECT fp FROM fps GROUP BY fp
-      |  HAVING COUNT(*) BETWEEN 2 AND 20),
-      |kept AS (SELECT f.doc, f.fp FROM fps f JOIN keep USING (fp)),
-      |pairs AS (SELECT x.doc AS a, y.doc AS b,
-      |    CAST(COUNT(*) AS BIGINT) AS shared
-      |  FROM kept x JOIN kept y ON x.fp = y.fp AND x.doc < y.doc
-      |  GROUP BY 1, 2)""".stripMargin
-
-  private[queries] def bitsSql(p: String, alias: String): String =
-    s"""CASE WHEN ${alias}b.c12 IS NOT NULL
-      |  THEN (length(bin(${alias}b.c1)) - 1)
-      |    - (length(bin(${alias}b.c12)) - 1)
-      |  ELSE 1 + (length(bin((SELECT n FROM ${p}k)
-      |      + (SELECT v FROM ${p}k))) - 1)
-      |    - (length(bin(COALESCE(${alias}u.c, 0) + 1)) - 1)
-      |  END""".stripMargin
-
   /** DSIR-style importance selection ([[LangModel.contrastBits]]):
     * target backoff LM trained on the `lang = 'en'` slice, source LM
     * on the whole corpus (both pruned uni 24 / bi 512 — the q240
@@ -137,21 +77,14 @@ object Extended19 {
     */
   val q269_dsir_select: Q = Q(
     "q269_dsir_select",
-    s"""WITH ${lmCtes("t", "WHERE lang = 'en'")},
-      |${lmCtes("s", "")},
+    s"""WITH ${OracleSql.lmCtes("t", "WHERE lang = 'en'")},
+      |${OracleSql.lmCtes("s", "")},
       |dtr AS (SELECT doc_id, lang, unnest(t[:-2]) AS w1,
       |    unnest(t[2:]) AS w2
       |  FROM (SELECT doc_id, lang,
       |        string_split_regex(lower(text), '\\s+') AS t
       |        FROM documents) x WHERE len(t) >= 2),
-      |sc AS (SELECT doc_id, lang,
-      |    ${bitsSql("t", "t")} AS bt,
-      |    ${bitsSql("s", "s")} AS bs
-      |  FROM dtr
-      |  LEFT JOIN tbi tb ON dtr.w1 = tb.w1 AND dtr.w2 = tb.w2
-      |  LEFT JOIN tuni tu ON dtr.w2 = tu.w
-      |  LEFT JOIN sbi sb ON dtr.w1 = sb.w1 AND dtr.w2 = sb.w2
-      |  LEFT JOIN suni su ON dtr.w2 = su.w),
+      |${OracleSql.contrastScores("doc_id, lang")},
       |doc AS (SELECT doc_id, lang,
       |    CAST(SUM(bt) AS BIGINT) AS t_bits,
       |    CAST(SUM(bs) AS BIGINT) AS s_bits,
@@ -184,7 +117,7 @@ object Extended19 {
     */
   val q270_winnow_overlap: Q = Q(
     "q270_winnow_overlap",
-    s"""WITH $winnowPairCtes
+    s"""WITH ${OracleSql.winnowPairCtes}
       |SELECT a, b, shared FROM pairs
       |ORDER BY shared DESC, a, b LIMIT 30""".stripMargin) {
     (spark, dir) =>

@@ -339,12 +339,7 @@ object Extended2 {
     */
   val q108_percentile_rank: Q = Q(
     "q108_percentile_rank",
-    """SELECT o_orderstatus,
-      |  quantile_cont(o_totalprice, 0.5) AS median_price,
-      |  quantile_cont(o_totalprice, 0.9) AS p90_price,
-      |  COUNT(*) AS n_orders
-      |FROM orders
-      |GROUP BY 1 ORDER BY 1""".stripMargin) { (spark, dir) =>
+    OracleSql.StatusPercentilesOracle) { (spark, dir) =>
     import spark.implicits._
     Percentiles.exactCont(
         Tables.load(spark, dir, "orders"),

@@ -32,13 +32,7 @@ object Extended20 {
     */
   val q271_blocklist_scan: Q = Q(
     "q271_blocklist_scan",
-    """WITH s AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-      |  FROM documents),
-      |g AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i + 1] AS gram
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM s) x),
-      |top AS (SELECT gram FROM (
-      |  SELECT gram, COUNT(*) AS df FROM g GROUP BY 1
-      |  ORDER BY df DESC, gram LIMIT 20)),
+    s"""WITH ${OracleSql.TopBigramCtes},
       |hits AS (SELECT d.doc_id,
       |    CAST(SUM(CASE WHEN contains(lower(d.text), p.gram)
       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
@@ -82,29 +76,8 @@ object Extended20 {
     */
   val q272_soft_dedup_weights: Q = Q(
     "q272_soft_dedup_weights",
-    """WITH RECURSIVE tok AS (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS w
-      |  FROM documents),
-      |h AS (SELECT doc_id, ('0x' || substr(md5(w), 1, 15))::BIGINT AS hv FROM tok),
-      |bits AS (SELECT doc_id, j,
-      |    SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) t
-      |  GROUP BY 1, 2),
-      |sig AS (SELECT doc_id,
-      |    CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << j ELSE 0 END) AS BIGINT) AS sh
-      |  FROM bits GROUP BY doc_id),
-      |banded AS (SELECT doc_id, sh, b, (sh >> (b * 15)) & 32767 AS bv
-      |  FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b) t),
-      |pairs AS (SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-      |  FROM banded a JOIN banded b
-      |    ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id
-      |  WHERE bit_count(xor(a.sh, b.sh)) <= 3),
-      |sym AS (SELECT u AS a, v AS b FROM pairs
-      |  UNION ALL SELECT v, u FROM pairs),
-      |reach(id, lab) AS (
-      |  SELECT DISTINCT a, a FROM sym
-      |  UNION
-      |  SELECT s.b, r.lab FROM reach r JOIN sym s ON r.id = s.a),
-      |cc AS (SELECT id, MIN(lab) AS comp FROM reach GROUP BY id),
+    s"""WITH RECURSIVE ${OracleSql.SimhashPairs},
+      |${OracleSql.components("pairs", "")},
       |sz AS (SELECT comp, CAST(COUNT(*) AS BIGINT) AS n_members
       |  FROM cc GROUP BY 1)
       |SELECT d.doc_id, COALESCE(cc.comp, d.doc_id) AS comp,

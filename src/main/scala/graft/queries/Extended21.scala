@@ -29,13 +29,7 @@ object Extended21 {
     */
   val q274_blocklist_attribution: Q = Q(
     "q274_blocklist_attribution",
-    """WITH s AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-      |  FROM documents),
-      |g AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i + 1] AS gram
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM s) x),
-      |top AS (SELECT gram FROM (
-      |  SELECT gram, COUNT(*) AS df FROM g GROUP BY 1
-      |  ORDER BY df DESC, gram LIMIT 20)),
+    s"""WITH ${OracleSql.TopBigramCtes},
       |occ AS (SELECT d.doc_id, p.gram,
       |    CAST(COUNT(*) FILTER (WHERE
       |      substr(lower(d.text), i, len(p.gram)) = p.gram)
@@ -82,20 +76,13 @@ object Extended21 {
     */
   val q275_doremi_mix: Q = Q(
     "q275_doremi_mix",
-    s"""WITH ${Extended19.lmCtes("t", "WHERE lang = 'en'")},
-      |${Extended19.lmCtes("s", "")},
+    s"""WITH ${OracleSql.lmCtes("t", "WHERE lang = 'en'")},
+      |${OracleSql.lmCtes("s", "")},
       |dtr AS (SELECT source, unnest(t[:-2]) AS w1, unnest(t[2:]) AS w2
       |  FROM (SELECT source,
       |        string_split_regex(lower(text), '\\s+') AS t
       |        FROM documents) x WHERE len(t) >= 2),
-      |sc AS (SELECT source,
-      |    ${Extended19.bitsSql("t", "t")} AS bt,
-      |    ${Extended19.bitsSql("s", "s")} AS bs
-      |  FROM dtr
-      |  LEFT JOIN tbi tb ON dtr.w1 = tb.w1 AND dtr.w2 = tb.w2
-      |  LEFT JOIN tuni tu ON dtr.w2 = tu.w
-      |  LEFT JOIN sbi sb ON dtr.w1 = sb.w1 AND dtr.w2 = sb.w2
-      |  LEFT JOIN suni su ON dtr.w2 = su.w),
+      |${OracleSql.contrastScores("source")},
       |agg AS (SELECT source,
       |    CAST(SUM(bt) AS BIGINT) AS t_bits,
       |    CAST(SUM(bs) AS BIGINT) AS s_bits,
@@ -145,20 +132,8 @@ object Extended21 {
   val q276_dedup_threshold_sweep: Q = Q(
     "q276_dedup_threshold_sweep",
     s"""WITH s AS (SELECT doc_id,
-      |    ${TrainingData.JacShingleSql} AS sh FROM documents),
-      |h AS (SELECT doc_id, ('0x' || substr(md5(x), 1, 15))::BIGINT AS hv
-      |  FROM (SELECT doc_id, unnest(sh) AS x FROM s WHERE len(sh) > 0) t),
-      |seeds(i, seed) AS (VALUES ${graft.operators.Dedup.MinhashSeeds
-        .take(16).zipWithIndex.map { case (s, i) => s"($i, $s::BIGINT)" }
-        .mkString(", ")}),
-      |sig AS (SELECT doc_id, i, CAST(MIN(xor(hv, seed)) AS VARCHAR) AS mh
-      |  FROM h CROSS JOIN seeds GROUP BY doc_id, i),
-      |band AS (SELECT doc_id,
-      |    md5(string_agg(mh, ',' ORDER BY i)) AS band_hash
-      |  FROM sig GROUP BY doc_id, i // 4),
-      |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM band a JOIN band b
-      |    ON a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+      |    ${OracleSql.shingles(3)} AS sh FROM documents),
+      |${OracleSql.minhashPairs("s", "")},
       |v AS (SELECT id_a, id_b,
       |    CAST(10000 * len(list_intersect(sa.sh, sb.sh))
       |      // (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.functions.TextFunctions
 import graft.operators.{CdcChunk, Graph, Profile, Winnow}
 import graft.plans.{Md5PrefixLong, UnicodeNormalize}
 
@@ -31,21 +30,7 @@ object Extended22 {
     */
   val q277_cdc_chunks: Q = Q(
     "q277_cdc_chunks",
-    """WITH tok AS (SELECT doc_id,
-      |    string_split_regex(lower(text), '\s+') AS t FROM documents),
-      |b AS (SELECT doc_id, t, len(t) AS n FROM tok),
-      |c AS (SELECT doc_id, t, n,
-      |    list_filter(range(3, n + 1), j ->
-      |      ('0x' || substr(md5(array_to_string(t[j-2:j], ' ')),
-      |        1, 15))::BIGINT % 8 = 0) AS cuts FROM b),
-      |e AS (SELECT doc_id, t, n,
-      |    CASE WHEN len(cuts) > 0 AND cuts[-1] = n THEN cuts
-      |         ELSE list_append(cuts, n) END AS ends FROM c),
-      |ch AS (SELECT doc_id, n,
-      |    unnest(list_transform(range(1, len(ends) + 1), x ->
-      |      array_to_string(t[(CASE WHEN x = 1 THEN 1
-      |          ELSE ends[x - 1] + 1 END):ends[x]], ' ')))
-      |      AS chunk FROM e),
+    s"""WITH ${OracleSql.CdcChunkCtes},
       |occ AS (SELECT chunk, COUNT(*) AS cnt FROM ch GROUP BY 1)
       |SELECT c2.doc_id, CAST(MIN(c2.n) AS BIGINT) AS n_tok,
       |  CAST(COUNT(*) AS BIGINT) AS n_chunks,
@@ -103,7 +88,7 @@ object Extended22 {
     */
   val q279_lpa_communities: Q = Q(
     "q279_lpa_communities",
-    s"""WITH ${Extended19.winnowPairCtes},
+    s"""WITH ${OracleSql.winnowPairCtes},
       |nodes AS (SELECT DISTINCT a AS v FROM pairs
       |  UNION SELECT DISTINCT b AS v FROM pairs),
       |adj AS (SELECT a AS v, b AS u FROM pairs

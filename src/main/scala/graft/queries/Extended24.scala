@@ -22,7 +22,7 @@ object Extended24 {
     */
   val q284_bipartite_dedup: Q = Q(
     "q284_bipartite_dedup",
-    s"""WITH RECURSIVE ${Extended19.winnowPairCtes},
+    s"""WITH RECURSIVE ${OracleSql.winnowPairCtes},
       |sym AS (SELECT a AS u, b AS v FROM pairs
       |  UNION ALL SELECT b, a FROM pairs),
       |reach(id, lab) AS (

@@ -25,7 +25,7 @@ object Extended25 {
     */
   val q285_winnow_containment: Q = Q(
     "q285_winnow_containment",
-    s"""WITH ${Extended19.winnowPairCtes},
+    s"""WITH ${OracleSql.winnowPairCtes},
       |nf AS (SELECT doc, CAST(COUNT(*) AS BIGINT) AS nfp FROM kept
       |  GROUP BY 1),
       |dir AS (SELECT a AS doc, b AS partner, shared FROM pairs
@@ -57,22 +57,8 @@ object Extended25 {
     */
   val q286_cdc_incremental: Q = Q(
     "q286_cdc_incremental",
-    """WITH cut AS (SELECT MAX(doc_id) // 2 AS c FROM documents),
-      |tok AS (SELECT doc_id,
-      |    string_split_regex(lower(text), '\s+') AS t FROM documents),
-      |b AS (SELECT doc_id, t, len(t) AS n FROM tok),
-      |c AS (SELECT doc_id, t, n,
-      |    list_filter(range(3, n + 1), j ->
-      |      ('0x' || substr(md5(array_to_string(t[j-2:j], ' ')),
-      |        1, 15))::BIGINT % 8 = 0) AS cuts FROM b),
-      |e AS (SELECT doc_id, t, n,
-      |    CASE WHEN len(cuts) > 0 AND cuts[-1] = n THEN cuts
-      |         ELSE list_append(cuts, n) END AS ends FROM c),
-      |ch AS (SELECT doc_id, n,
-      |    unnest(list_transform(range(1, len(ends) + 1), x ->
-      |      array_to_string(t[(CASE WHEN x = 1 THEN 1
-      |          ELSE ends[x - 1] + 1 END):ends[x]], ' ')))
-      |      AS chunk FROM e),
+    s"""WITH cut AS (SELECT MAX(doc_id) // 2 AS c FROM documents),
+      |${OracleSql.CdcChunkCtes},
       |hist AS (SELECT DISTINCT chunk FROM ch
       |  WHERE doc_id <= (SELECT c FROM cut)),
       |delta AS (SELECT doc_id, chunk FROM ch

@@ -52,16 +52,7 @@ object Extended26 {
   val q287_dup_span_detect: Q = Q(
     "q287_dup_span_detect",
     s"""WITH $DupRunCtes,
-      |o AS (SELECT doc_id, s, s + len AS e,
-      |    MAX(s + len) OVER (PARTITION BY doc_id ORDER BY s, s + len
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe
-      |  FROM marks),
-      |isl AS (SELECT doc_id, s, e,
-      |    SUM(CASE WHEN maxe IS NULL OR s > maxe THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY doc_id ORDER BY s, e) AS island
-      |  FROM o),
-      |sp AS (SELECT doc_id, island, MIN(s) AS s, MAX(e) AS e
-      |  FROM isl GROUP BY 1, 2)
+      |${OracleSql.spanIslands("marks", "")}
       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
       |  CAST(SUM(e - s) AS BIGINT) AS dup_tokens,
       |  CAST(MAX(e - s) AS BIGINT) AS max_span
@@ -89,13 +80,7 @@ object Extended26 {
       |mp0 AS (SELECT doc_id, unnest(range(s + 1, s + len + 1)) AS i
       |  FROM marks),
       |mpos AS (SELECT DISTINCT doc_id, i FROM mp0),
-      |pos AS (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i
-      |  FROM t),
-      |keep AS (SELECT p.doc_id, p.i, p.tk[p.i] AS w FROM pos p
-      |  ANTI JOIN mpos USING (doc_id, i)),
-      |agg AS (SELECT doc_id,
-      |    array_to_string(list(w ORDER BY i), ' ') AS clean_text,
-      |    CAST(COUNT(*) AS BIGINT) AS n_kept FROM keep GROUP BY 1)
+      |${OracleSql.StripKeepCtes}
       |SELECT t.doc_id, md5(COALESCE(a.clean_text, '')) AS clean_md5,
       |  CAST(len(t.tk) AS BIGINT) AS n_tokens,
       |  CAST(len(t.tk) - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed
@@ -171,16 +156,7 @@ object Extended26 {
       |cutc AS (SELECT MAX(doc_id) // 2 AS cut FROM documents),
       |m2 AS (SELECT m.doc_id, m.s, m.len FROM marks m, cutc
       |  WHERE m.doc_id > cutc.cut),
-      |o AS (SELECT doc_id, s, s + len AS e,
-      |    MAX(s + len) OVER (PARTITION BY doc_id ORDER BY s, s + len
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe
-      |  FROM m2),
-      |isl AS (SELECT doc_id, s, e,
-      |    SUM(CASE WHEN maxe IS NULL OR s > maxe THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY doc_id ORDER BY s, e) AS island
-      |  FROM o),
-      |sp AS (SELECT doc_id, island, MIN(s) AS s, MAX(e) AS e
-      |  FROM isl GROUP BY 1, 2)
+      |${OracleSql.spanIslands("m2", "")}
       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
       |  CAST(SUM(e - s) AS BIGINT) AS dup_tokens,
       |  CAST(MAX(e - s) AS BIGINT) AS max_span

@@ -30,30 +30,6 @@ object Extended27 {
       |r AS (SELECT w, c, ROW_NUMBER() OVER (ORDER BY c DESC, w) AS rk
       |  FROM wc)""".stripMargin
 
-  // q294/q297/q299/q300 shared oracle CTEs: int8 codes + floor-mean
-  // centroids + all (point, centroid) squared distances (DuckDB
-  // inlines CTEs lazily, so queries referencing only `c` pay only `c`)
-  private[queries] val CentroidCtes =
-    """r0 AS (SELECT vec_id, label, embedding,
-      |    CAST(list_min(embedding) AS DOUBLE) AS mn,
-      |    CAST(list_max(embedding) AS DOUBLE) AS mx FROM embeddings),
-      |c AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-      |    CASE WHEN mx > mn THEN list_transform(embedding,
-      |        v -> LEAST(CAST(FLOOR((CAST(v AS DOUBLE) - mn) * 255
-      |          / (mx - mn)) AS BIGINT), 255))
-      |      ELSE list_transform(embedding, v -> CAST(0 AS BIGINT))
-      |      END AS codes FROM r0),
-      |ds AS (SELECT label, i, CAST(SUM(codes[i]) AS BIGINT) AS s,
-      |    COUNT(*) AS cnt
-      |  FROM c, (SELECT unnest(range(1, 65)) AS i) ii GROUP BY 1, 2),
-      |cent AS (SELECT label, list(s // cnt ORDER BY i) AS cent
-      |  FROM ds GROUP BY 1),
-      |pd AS (SELECT p.vec_id, p.label, cc.label AS clabel,
-      |    CAST(list_reduce(list_transform(range(1, 65),
-      |      i -> (p.codes[i] - cc.cent[i]) * (p.codes[i] - cc.cent[i])),
-      |      (x, y) -> x + y) AS BIGINT) AS d2
-      |  FROM c p, cent cc)""".stripMargin
-
   /** Zipf's-law fit ([[Profile.zipfFit]]): integer OLS of
     * ⌊log₂ count⌋ on ⌊log₂ rank⌋ over the token vocabulary — slope in
     * milli (≈ −1000 for natural text) and r² in basis points, plus
@@ -124,7 +100,7 @@ object Extended27 {
     */
   val q294_cluster_quality: Q = Q(
     "q294_cluster_quality",
-    s"""WITH $CentroidCtes,
+    s"""WITH ${OracleSql.CentroidCtes},
       |ab0 AS (SELECT vec_id, label,
       |    MAX(CASE WHEN clabel = label THEN d2 END) AS a,
       |    MIN(CASE WHEN clabel <> label THEN d2 END) AS b0
@@ -263,7 +239,7 @@ object Extended27 {
     */
   val q297_centroid_confusion: Q = Q(
     "q297_centroid_confusion",
-    s"""WITH $CentroidCtes,
+    s"""WITH ${OracleSql.CentroidCtes},
       |asg AS (SELECT vec_id, label, clabel,
       |    ROW_NUMBER() OVER (PARTITION BY vec_id
       |      ORDER BY d2, clabel) AS rn FROM pd)

@@ -31,7 +31,7 @@ object Extended28 {
     */
   val q299_davies_bouldin: Q = Q(
     "q299_davies_bouldin",
-    s"""WITH ${Extended27.CentroidCtes},
+    s"""WITH ${OracleSql.CentroidCtes},
       |st AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n,
       |    CAST(SUM(d2) AS BIGINT) AS a_sum
       |  FROM pd WHERE clabel = label GROUP BY 1),
@@ -80,7 +80,7 @@ object Extended28 {
         else "")
     }.mkString(",\n")
     Q("q300_kcenter_coreset",
-      s"""WITH ${Extended27.CentroidCtes},
+      s"""WITH ${OracleSql.CentroidCtes},
         |s1 AS (SELECT vec_id, codes FROM c ORDER BY vec_id LIMIT 1),
         |d1 AS (SELECT d.vec_id, d.codes,
         |    ${dD("d.codes", "s.codes")} AS md

@@ -88,40 +88,9 @@ object Extended29 {
     */
   val q305_semantic_dedup: Q = Q(
     "q305_semantic_dedup",
-    """WITH RECURSIVE c AS (SELECT vec_id AS centroid_id, embedding AS ce
+    s"""WITH RECURSIVE c AS (SELECT vec_id AS centroid_id, embedding AS ce
       |  FROM embeddings WHERE vec_id < 8),
-      |scored AS (SELECT vec_id, centroid_id,
-      |    list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(embedding[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)), (x, y) -> x + y)
-      |    / (sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y))
-      |     * sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)), (x, y) -> x + y)))
-      |    AS cos
-      |  FROM embeddings, c),
-      |assign AS (SELECT vec_id, centroid_id FROM (
-      |  SELECT vec_id, centroid_id,
-      |    ROW_NUMBER() OVER (PARTITION BY vec_id
-      |      ORDER BY cos DESC, centroid_id) AS rn
-      |  FROM scored) t WHERE rn = 1),
-      |sided AS (SELECT a.vec_id, a.centroid_id, e.embedding,
-      |    sqrt(list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
-      |      (x, y) -> x + y)) AS nrm
-      |  FROM assign a JOIN embeddings e USING (vec_id)),
-      |pairs AS (SELECT x.vec_id AS u, y.vec_id AS v
-      |  FROM sided x JOIN sided y
-      |    ON x.centroid_id = y.centroid_id AND x.vec_id < y.vec_id
-      |  WHERE list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)),
-      |      (a, b) -> a + b) / (x.nrm * y.nrm) >= 0.30),
-      |sym AS (SELECT u AS a, v AS b FROM pairs
-      |  UNION ALL SELECT v, u FROM pairs),
-      |reach(id, lab) AS (
-      |  SELECT DISTINCT a, a FROM sym
-      |  UNION
-      |  SELECT s.b, r.lab FROM reach r JOIN sym s ON r.id = s.a),
-      |cc AS (SELECT id, MIN(lab) AS comp FROM reach GROUP BY id)
+      |${OracleSql.semDedupCtes("embeddings", "")}
       |SELECT centroid_id,
       |  CAST(COUNT(*) AS BIGINT) AS n_vectors,
       |  CAST(SUM(CASE WHEN k.comp IS NULL OR k.comp = s.vec_id

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.Exact._
 import graft.functions.{MisraGries, TextFunctions}
-import graft.functions.TextFunctions.{lowerTokens, chunksOfTokens, shinglesOfTokens}
+import graft.functions.TextFunctions.{lowerTokens, chunksOfTokens}
 
 /** Round-4 batch: distribution ranks (NTILE / PERCENT_RANK /
   * CUME_DIST), bounded-memory exact heavy hitters, chunk-level
@@ -14,13 +14,6 @@ import graft.functions.TextFunctions.{lowerTokens, chunksOfTokens, shinglesOfTok
   * embedding int8 quantization, and hash-priority weighted sampling.
   */
 object Extended3 {
-
-  // DuckDB form of the sorted distinct 3-gram shingle array (mirrors
-  // TextFunctions.shinglesOfTokens + array_sort, the q44 pattern)
-  private val SortedShingleSql =
-    """list_sort(list_distinct(list_transform(
-      |  range(1, greatest(len(string_split_regex(lower(text), '\s+')) - 2, 1) + 1),
-      |  i -> array_to_string(string_split_regex(lower(text), '\s+')[i:i+2], ' '))))""".stripMargin
 
   /** Customer balance deciles: NTILE(10) over a TOTAL order (balance,
     * then key — ties must break deterministically or the bucket
@@ -116,12 +109,7 @@ object Extended3 {
     */
   val q127_heavy_hitters: Q = Q(
     "q127_heavy_hitters",
-    """WITH t AS (SELECT unnest(string_split_regex(lower(text), '\s+')) AS tok
-      |  FROM documents),
-      |tot AS (SELECT COUNT(*) AS n FROM t)
-      |SELECT tok, COUNT(*) AS cnt FROM t GROUP BY 1
-      |HAVING COUNT(*) * 100 > (SELECT n FROM tot)
-      |ORDER BY cnt DESC, tok""".stripMargin) { (spark, dir) =>
+    OracleSql.HeavyHitterOracle) { (spark, dir) =>
     import spark.implicits._
     // both passes read the exploded tokens; checkpoint so the corpus
     // tokenizes once (locally — at 100 TB you re-read instead and each
@@ -217,7 +205,7 @@ object Extended3 {
     */
   val q130_containment: Q = Q(
     "q130_containment",
-    s"""WITH s AS (SELECT doc_id, $SortedShingleSql AS sh FROM documents),
+    s"""WITH s AS (SELECT doc_id, ${OracleSql.SortedShingleSql} AS sh FROM documents),
       |p AS (SELECT doc_id AS id_probe, sh AS sh_p FROM s
       |  WHERE doc_id < 10 AND len(sh) > 0)
       |SELECT id_probe, s.doc_id AS id_doc,
@@ -535,15 +523,10 @@ object Extended3 {
     */
   val q139_kmeans_update: Q = Q(
     "q139_kmeans_update",
-    """WITH c AS (SELECT vec_id AS centroid_id, embedding AS ce
+    s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS ce
       |  FROM embeddings WHERE vec_id < 8),
       |scored AS (SELECT vec_id, centroid_id,
-      |    list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(embedding[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)), (x, y) -> x + y)
-      |    / (sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y))
-      |     * sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)), (x, y) -> x + y)))
+      |    ${OracleSql.cosine("embedding", "ce")}
       |    AS cos
       |  FROM embeddings, c),
       |a AS (SELECT vec_id, centroid_id FROM (

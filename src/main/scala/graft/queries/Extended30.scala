@@ -28,12 +28,9 @@ object Extended30 {
     */
   val q306_ngram_decontam: Q = Q(
     "q306_ngram_decontam",
-    """WITH t AS (SELECT doc_id, source,
-      |    string_split_regex(lower(text), '\s+') AS tk,
-      |    CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90
-      |         THEN 'train'
-      |         WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 95
-      |         THEN 'val' ELSE 'test' END AS split
+    s"""WITH t AS (SELECT doc_id, source,
+      |    string_split_regex(lower(text), '\\s+') AS tk,
+      |    ${OracleSql.SplitSql} AS split
       |  FROM documents),
       |g AS (SELECT doc_id, source, split, tk,
       |    unnest(range(1, greatest(len(tk) - 12, 0) + 1)) AS i FROM t),

@@ -38,134 +38,19 @@ object Extended31 {
   // q305; decontam 13-gram dirty run >= 13 = q306; pack rule = q75
   // at a budget of 500 tokens/source so the greedy cut bites on the
   // post-dedup corpus)
-  private[queries] val MinhashSeedsSql = graft.operators.Dedup.MinhashSeeds
-    .take(16).zipWithIndex.map { case (s, i) => s"($i, $s::BIGINT)" }
-    .mkString(", ")
-
   val q307_curation_e2e: Q = Q(
     "q307_curation_e2e",
     s"""WITH RECURSIVE
-      |fp AS (SELECT doc_id,
-      |    md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f
-      |  FROM documents),
-      |s1 AS (SELECT MIN(doc_id) AS doc_id FROM fp GROUP BY f),
-      |t2 AS (SELECT d.doc_id,
-      |    string_split_regex(lower(d.text), '\\s+') AS tk
-      |  FROM documents d JOIN s1 USING (doc_id)),
-      |g2 AS (SELECT doc_id, tk,
-      |    unnest(range(1, greatest(len(tk) - 7, 0) + 1)) AS i FROM t2),
-      |occ2 AS (SELECT doc_id, i - 1 AS pos,
-      |    ('0x' || substr(md5(array_to_string(tk[i:i+7], ' ')), 1, 15))
-      |      ::BIGINT AS hv FROM g2),
-      |m2 AS (SELECT a.doc_id AS da, b.doc_id AS db, a.pos AS pa, b.pos AS pb
-      |  FROM occ2 a JOIN occ2 b ON a.hv = b.hv AND a.doc_id < b.doc_id),
-      |r2 AS (SELECT da, db, pa - pb AS diag, pb,
-      |    pb - ROW_NUMBER() OVER (PARTITION BY da, db, pa - pb
-      |      ORDER BY pb) AS grp FROM m2),
-      |runs2 AS (SELECT da, db, diag, grp, MIN(pb) AS s,
-      |    COUNT(*) + 7 AS len FROM r2 GROUP BY 1, 2, 3, 4),
-      |marks2 AS (SELECT DISTINCT db AS doc_id, s, len FROM runs2
-      |  WHERE len >= 16),
-      |o2 AS (SELECT doc_id, s, s + len AS e,
-      |    MAX(s + len) OVER (PARTITION BY doc_id ORDER BY s, s + len
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe
-      |  FROM marks2),
-      |isl2 AS (SELECT doc_id, s, e,
-      |    SUM(CASE WHEN maxe IS NULL OR s > maxe THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY doc_id ORDER BY s, e) AS island
-      |  FROM o2),
-      |sp2 AS (SELECT doc_id, island, MIN(s) AS s, MAX(e) AS e
-      |  FROM isl2 GROUP BY 1, 2),
-      |cov2 AS (SELECT doc_id, SUM(e - s) AS dup FROM sp2 GROUP BY 1),
-      |s2 AS (SELECT t.doc_id FROM t2 t LEFT JOIN cov2 c USING (doc_id)
-      |  WHERE COALESCE(c.dup, 0) * 2 < len(t.tk)),
-      |d2 AS (SELECT d.doc_id, d.text FROM documents d JOIN s2 USING (doc_id)),
-      |sh3 AS (SELECT doc_id, list_distinct(list_transform(
-      |    range(1, greatest(len(string_split_regex(lower(text), '\\s+')) - 2, 1) + 1),
-      |    i -> array_to_string(string_split_regex(lower(text), '\\s+')[i:i+2], ' ')))
-      |    AS sh FROM d2),
-      |h3 AS (SELECT doc_id, ('0x' || substr(md5(x), 1, 15))::BIGINT AS hv
-      |  FROM (SELECT doc_id, unnest(sh) AS x FROM sh3 WHERE len(sh) > 0) t),
-      |seeds(i, seed) AS (VALUES $MinhashSeedsSql),
-      |sig3 AS (SELECT doc_id, i, CAST(MIN(xor(hv, seed)) AS VARCHAR) AS mh
-      |  FROM h3 CROSS JOIN seeds GROUP BY doc_id, i),
-      |band3 AS (SELECT doc_id,
-      |    md5(string_agg(mh, ',' ORDER BY i)) AS band_hash
-      |  FROM sig3 GROUP BY doc_id, i // 4),
-      |cand3 AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM band3 a JOIN band3 b
-      |    ON a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-      |drop3 AS (SELECT DISTINCT id_b FROM cand3
-      |  JOIN sh3 sa ON cand3.id_a = sa.doc_id
-      |  JOIN sh3 sb ON cand3.id_b = sb.doc_id
-      |  WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-      |      / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-      |      >= 0.8),
-      |s3 AS (SELECT doc_id FROM d2
-      |  WHERE doc_id NOT IN (SELECT id_b FROM drop3)),
+      |${OracleSql.CurationStagesSql},
       |c4 AS (SELECT vec_id AS centroid_id, embedding AS ce
       |  FROM embeddings WHERE vec_id < 8),
       |e4 AS (SELECT e.vec_id, e.embedding FROM embeddings e
       |  JOIN s3 ON e.vec_id = s3.doc_id),
-      |scored4 AS (SELECT vec_id, centroid_id,
-      |    list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(embedding[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)), (x, y) -> x + y)
-      |    / (sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y))
-      |     * sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)), (x, y) -> x + y)))
-      |    AS cos
-      |  FROM e4, c4),
-      |assign4 AS (SELECT vec_id, centroid_id FROM (
-      |  SELECT vec_id, centroid_id,
-      |    ROW_NUMBER() OVER (PARTITION BY vec_id
-      |      ORDER BY cos DESC, centroid_id) AS rn
-      |  FROM scored4) t WHERE rn = 1),
-      |sided4 AS (SELECT a.vec_id, a.centroid_id, e.embedding,
-      |    sqrt(list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
-      |      (x, y) -> x + y)) AS nrm
-      |  FROM assign4 a JOIN e4 e USING (vec_id)),
-      |pairs4 AS (SELECT x.vec_id AS u, y.vec_id AS v
-      |  FROM sided4 x JOIN sided4 y
-      |    ON x.centroid_id = y.centroid_id AND x.vec_id < y.vec_id
-      |  WHERE list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)),
-      |      (a, b) -> a + b) / (x.nrm * y.nrm) >= 0.30),
-      |sym4 AS (SELECT u AS a, v AS b FROM pairs4
-      |  UNION ALL SELECT v, u FROM pairs4),
-      |reach4(id, lab) AS (
-      |  SELECT DISTINCT a, a FROM sym4
-      |  UNION
-      |  SELECT s.b, r.lab FROM reach4 r JOIN sym4 s ON r.id = s.a),
-      |cc4 AS (SELECT id, MIN(lab) AS comp FROM reach4 GROUP BY id),
+      |${OracleSql.semDedupCtes("e4", "4")},
       |s4 AS (SELECT s.vec_id AS doc_id FROM sided4 s
       |  LEFT JOIN cc4 k ON s.vec_id = k.id
       |  WHERE k.comp IS NULL OR k.comp = s.vec_id),
-      |t5 AS (SELECT d.doc_id,
-      |    string_split_regex(lower(d.text), '\\s+') AS tk
-      |  FROM documents d JOIN s4 USING (doc_id)
-      |  WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90),
-      |tb AS (SELECT string_split_regex(lower(text), '\\s+') AS tk
-      |  FROM documents
-      |  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 >= 95),
-      |g5 AS (SELECT doc_id, tk,
-      |    unnest(range(1, greatest(len(tk) - 12, 0) + 1)) AS i FROM t5),
-      |occ5 AS (SELECT doc_id, i - 1 AS pos,
-      |    ('0x' || substr(md5(array_to_string(tk[i:i+12], ' ')), 1, 15))
-      |      ::BIGINT AS hv FROM g5),
-      |gb AS (SELECT tk,
-      |    unnest(range(1, greatest(len(tk) - 12, 0) + 1)) AS i FROM tb),
-      |bench5 AS (SELECT DISTINCT
-      |    ('0x' || substr(md5(array_to_string(tk[i:i+12], ' ')), 1, 15))
-      |      ::BIGINT AS hv FROM gb),
-      |hit5 AS (SELECT o.doc_id, o.pos FROM occ5 o JOIN bench5 b USING (hv)),
-      |r5 AS (SELECT doc_id,
-      |    pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos)
-      |      AS grp FROM hit5),
-      |dirty5 AS (SELECT DISTINCT doc_id FROM
-      |  (SELECT doc_id, grp, COUNT(*) AS cnt FROM r5 GROUP BY 1, 2)
-      |  WHERE cnt >= 13),
+      |${OracleSql.decontamCtes("s4")},
       |s5 AS (SELECT doc_id FROM t5
       |  WHERE doc_id NOT IN (SELECT doc_id FROM dirty5)),
       |d6 AS (SELECT d.doc_id, d.source,

@@ -86,6 +86,16 @@ object Extended4 {
       .orderBy($"id")
   }
 
+  /** q142/q163's SCD rows over the daily classes `d`: one
+    * `scd(user_id, activity_class, start_day, end_day)` row per streak.
+    */
+  private val ScdCtes =
+    s"""${OracleSql.ScdStreakCtes},
+      |scd AS (
+      |  SELECT user_id, activity_class,
+      |    MIN(day) AS start_day, MAX(day) AS end_day
+      |  FROM s GROUP BY user_id, activity_class, streak)""".stripMargin
+
   /** SCD point-in-time (AS OF) lookup: the q30 backfilled type-2 table
     * filtered to the rows whose [start_day, end_day] interval covers
     * the as-of date — "what was every user's activity class on
@@ -96,24 +106,12 @@ object Extended4 {
     */
   val q142_scd_pit: Q = Q(
     "q142_scd_pit",
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT user_id, CAST(ts AS DATE) AS day,
       |    CASE WHEN COUNT(*) >= 3 THEN 'active' ELSE 'light' END
       |      AS activity_class
       |  FROM events GROUP BY 1, 2),
-      |c AS (
-      |  SELECT *, CASE WHEN activity_class =
-      |      LAG(activity_class) OVER (PARTITION BY user_id ORDER BY day)
-      |    THEN 0 ELSE 1 END AS changed
-      |  FROM d),
-      |s AS (
-      |  SELECT *, SUM(changed) OVER (PARTITION BY user_id ORDER BY day
-      |    ROWS UNBOUNDED PRECEDING) AS streak
-      |  FROM c),
-      |scd AS (
-      |  SELECT user_id, activity_class,
-      |    MIN(day) AS start_day, MAX(day) AS end_day
-      |  FROM s GROUP BY user_id, activity_class, streak)
+      |$ScdCtes
       |SELECT user_id, activity_class, start_day, end_day FROM scd
       |WHERE start_day <= DATE '2024-01-15' AND end_day >= DATE '2024-01-15'
       |ORDER BY user_id""".stripMargin) { (spark, dir) =>
@@ -650,12 +648,6 @@ object Extended4 {
       .orderBy($"o_orderkey")
   }
 
-  // q44's sorted distinct 3-gram shingle array, DuckDB form
-  private val SortedShingleSql =
-    """list_sort(list_distinct(list_transform(
-      |  range(1, greatest(len(string_split_regex(lower(text), '\s+')) - 2, 1) + 1),
-      |  i -> array_to_string(string_split_regex(lower(text), '\s+')[i:i+2], ' '))))""".stripMargin
-
   /** Exact set-similarity join ([[graft.operators.Dedup.thresholdJoin]]):
     * ALL document pairs with shingle Jaccard ≥ 0.7, found by prefix
     * filtering (rare-first global order; no false negatives by the
@@ -665,7 +657,7 @@ object Extended4 {
     */
   val q157_similarity_join: Q = Q(
     "q157_similarity_join",
-    s"""WITH s AS (SELECT doc_id, $SortedShingleSql AS sh FROM documents),
+    s"""WITH s AS (SELECT doc_id, ${OracleSql.SortedShingleSql} AS sh FROM documents),
       |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       |    len(list_intersect(a.sh, b.sh)) AS i,
       |    len(a.sh) + len(b.sh) AS s
@@ -876,24 +868,12 @@ object Extended4 {
     */
   val q163_scd_temporal_join: Q = Q(
     "q163_scd_temporal_join",
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT user_id, CAST(ts AS DATE) AS day, COUNT(*) AS n_events,
       |    CASE WHEN COUNT(*) >= 3 THEN 'active' ELSE 'light' END
       |      AS activity_class
       |  FROM events GROUP BY 1, 2),
-      |c AS (
-      |  SELECT *, CASE WHEN activity_class =
-      |      LAG(activity_class) OVER (PARTITION BY user_id ORDER BY day)
-      |    THEN 0 ELSE 1 END AS changed
-      |  FROM d),
-      |s AS (
-      |  SELECT *, SUM(changed) OVER (PARTITION BY user_id ORDER BY day
-      |    ROWS UNBOUNDED PRECEDING) AS streak
-      |  FROM c),
-      |scd AS (
-      |  SELECT user_id, activity_class,
-      |    MIN(day) AS start_day, MAX(day) AS end_day
-      |  FROM s GROUP BY user_id, activity_class, streak)
+      |$ScdCtes
       |SELECT scd.activity_class, COUNT(*) AS n_user_days,
       |  CAST(SUM(d.n_events) AS BIGINT) AS total_events
       |FROM d JOIN scd ON d.user_id = scd.user_id
@@ -1055,18 +1035,8 @@ object Extended4 {
     * re-evaluate per element inside the code lambda.
     */
   val q166_quantized_topk: Q = {
-    val codesSql =
-      """CASE WHEN mx > mn THEN list_transform(embedding,
-        |    v -> LEAST(CAST(FLOOR((CAST(v AS DOUBLE) - mn) * 255
-        |      / (mx - mn)) AS BIGINT), 255))
-        |  ELSE list_transform(embedding, v -> CAST(0 AS BIGINT))
-        |  END""".stripMargin
     Q("q166_quantized_topk",
-      s"""WITH r AS (SELECT vec_id, embedding,
-        |    CAST(list_min(embedding) AS DOUBLE) AS mn,
-        |    CAST(list_max(embedding) AS DOUBLE) AS mx
-        |  FROM embeddings),
-        |c AS (SELECT vec_id, $codesSql AS codes FROM r),
+      s"""WITH ${OracleSql.quantCodesCtes("r")},
         |q AS (SELECT codes AS qc FROM c WHERE vec_id = 0)
         |SELECT c.vec_id,
         |  CAST(list_reduce(list_transform(range(1, 65),
@@ -1109,18 +1079,9 @@ object Extended4 {
     */
   val q167_incremental_neardup: Q = Q(
     "q167_incremental_neardup",
-    s"""WITH s AS (SELECT doc_id, $SortedShingleSql AS sh
+    s"""WITH s AS (SELECT doc_id, ${OracleSql.SortedShingleSql} AS sh
       |  FROM documents),
-      |h AS (SELECT doc_id, ('0x' || substr(md5(x), 1, 15))::BIGINT AS hv
-      |  FROM (SELECT doc_id, unnest(sh) AS x FROM s WHERE len(sh) > 0) t),
-      |seeds(i, seed) AS (VALUES ${graft.operators.Dedup.MinhashSeeds
-        .take(16).zipWithIndex.map { case (s, i) => s"($i, $s::BIGINT)" }
-        .mkString(", ")}),
-      |sig AS (SELECT doc_id, i, CAST(MIN(xor(hv, seed)) AS VARCHAR) AS mh
-      |  FROM h CROSS JOIN seeds GROUP BY doc_id, i),
-      |band AS (SELECT doc_id,
-      |    md5(string_agg(mh, ',' ORDER BY i)) AS band_hash
-      |  FROM sig GROUP BY doc_id, i // 4),
+      |${OracleSql.minhashBands("s", "")},
       |cand AS (SELECT DISTINCT d.doc_id AS did, o.doc_id AS oid
       |  FROM band d JOIN band o ON d.band_hash = o.band_hash
       |  WHERE d.doc_id % 5 = 0

@@ -417,6 +417,35 @@ object Extended5 {
       .filter(col("rank") <= 5)
   }
 
+  /** The PQ oracles' scaled vectors `q(vec_id, qv)` and their four
+    * 16-dim subvectors `sub(vec_id, sub, v)`.
+    */
+  private val PqSubCtes =
+    """q AS (SELECT vec_id,
+      |    list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)
+      |      * 1000000) AS BIGINT)) AS qv
+      |  FROM embeddings),
+      |sub AS (SELECT vec_id, s.s AS sub, qv[s.s*16+1 : s.s*16+16] AS v
+      |  FROM q, LATERAL (SELECT unnest(range(4)) AS s) s)""".stripMargin
+
+  /** [[PqSubCtes]] plus the codebook `csub` (vectors 0..3), each
+    * vector's `codes`, and the ADC distance table `adc` of queries 0..4.
+    */
+  private val PqAdcCtes =
+    s"""$PqSubCtes,
+      |csub AS (SELECT vec_id AS cid, sub, v AS cv FROM sub
+      |  WHERE vec_id < 4),
+      |codes AS (SELECT vec_id, sub,
+      |    CAST(arg_min(cid, dist*4 + cid) AS BIGINT) AS code
+      |  FROM (SELECT sub.vec_id, sub.sub, cid,
+      |      CAST(list_sum(list_transform(list_zip(v, cv),
+      |        p -> (p[1]-p[2])*(p[1]-p[2]))) AS BIGINT) AS dist
+      |    FROM sub JOIN csub USING (sub)) GROUP BY 1, 2),
+      |adc AS (SELECT sub.vec_id AS qid, sub.sub, cid,
+      |    CAST(list_sum(list_transform(list_zip(v, cv),
+      |      p -> (p[1]-p[2])*(p[1]-p[2]))) AS BIGINT) AS adist
+      |  FROM sub JOIN csub USING (sub) WHERE sub.vec_id < 5)""".stripMargin
+
   /** Product-quantization codebook assignment — the IVF-PQ building
     * block q133's scalar int8 codes don't cover: split each 64-dim
     * embedding into m=4 16-dim subvectors, assign each to its nearest
@@ -438,12 +467,7 @@ object Extended5 {
     */
   val q176_pq_assign: Q = Q(
     "q176_pq_assign",
-    """WITH q AS (SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)
-      |      * 1000000) AS BIGINT)) AS qv
-      |  FROM embeddings),
-      |sub AS (SELECT vec_id, s.s AS sub, qv[s.s*16+1 : s.s*16+16] AS v
-      |  FROM q, LATERAL (SELECT unnest(range(4)) AS s) s),
+    s"""WITH $PqSubCtes,
       |csub AS (SELECT vec_id AS cid, s.s AS sub,
       |    qv[s.s*16+1 : s.s*16+16] AS cv
       |  FROM q, LATERAL (SELECT unnest(range(4)) AS s) s
@@ -487,24 +511,7 @@ object Extended5 {
     */
   val q177_pq_search: Q = Q(
     "q177_pq_search",
-    """WITH q AS (SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)
-      |      * 1000000) AS BIGINT)) AS qv
-      |  FROM embeddings),
-      |sub AS (SELECT vec_id, s.s AS sub, qv[s.s*16+1 : s.s*16+16] AS v
-      |  FROM q, LATERAL (SELECT unnest(range(4)) AS s) s),
-      |csub AS (SELECT vec_id AS cid, sub, v AS cv FROM sub
-      |  WHERE vec_id < 4),
-      |codes AS (SELECT vec_id, sub,
-      |    CAST(arg_min(cid, dist*4 + cid) AS BIGINT) AS code
-      |  FROM (SELECT sub.vec_id, sub.sub, cid,
-      |      CAST(list_sum(list_transform(list_zip(v, cv),
-      |        p -> (p[1]-p[2])*(p[1]-p[2]))) AS BIGINT) AS dist
-      |    FROM sub JOIN csub USING (sub)) GROUP BY 1, 2),
-      |adc AS (SELECT sub.vec_id AS qid, sub.sub, cid,
-      |    CAST(list_sum(list_transform(list_zip(v, cv),
-      |      p -> (p[1]-p[2])*(p[1]-p[2]))) AS BIGINT) AS adist
-      |  FROM sub JOIN csub USING (sub) WHERE sub.vec_id < 5),
+    s"""WITH $PqAdcCtes,
       |scored AS (SELECT qid, codes.vec_id AS vid,
       |    CAST(SUM(adist) AS BIGINT) AS adist
       |  FROM codes JOIN adc ON codes.sub = adc.sub
@@ -541,24 +548,7 @@ object Extended5 {
     */
   val q178_pq_recall: Q = Q(
     "q178_pq_recall",
-    """WITH q AS (SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE)
-      |      * 1000000) AS BIGINT)) AS qv
-      |  FROM embeddings),
-      |sub AS (SELECT vec_id, s.s AS sub, qv[s.s*16+1 : s.s*16+16] AS v
-      |  FROM q, LATERAL (SELECT unnest(range(4)) AS s) s),
-      |csub AS (SELECT vec_id AS cid, sub, v AS cv FROM sub
-      |  WHERE vec_id < 4),
-      |codes AS (SELECT vec_id, sub,
-      |    CAST(arg_min(cid, dist*4 + cid) AS BIGINT) AS code
-      |  FROM (SELECT sub.vec_id, sub.sub, cid,
-      |      CAST(list_sum(list_transform(list_zip(v, cv),
-      |        p -> (p[1]-p[2])*(p[1]-p[2]))) AS BIGINT) AS dist
-      |    FROM sub JOIN csub USING (sub)) GROUP BY 1, 2),
-      |adc AS (SELECT sub.vec_id AS qid, sub.sub, cid,
-      |    CAST(list_sum(list_transform(list_zip(v, cv),
-      |      p -> (p[1]-p[2])*(p[1]-p[2]))) AS BIGINT) AS adist
-      |  FROM sub JOIN csub USING (sub) WHERE sub.vec_id < 5),
+    s"""WITH $PqAdcCtes,
       |approx AS (SELECT qid, vid FROM (
       |  SELECT qid, vid, ROW_NUMBER() OVER (PARTITION BY qid
       |      ORDER BY adist, vid) AS rank

@@ -12,10 +12,6 @@ import graft.operators.{Dedup, Similarity}
   */
 object Extended6 {
 
-  private def dotD(a: String, b: String) =
-    s"""list_reduce(list_transform(range(1, 65),
-       |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)""".stripMargin
-
   /** Cluster-scoped semantic dedup — the SemDeDup shape (Abbas et al.
     * 2023, arXiv:2303.09540): embed → cluster → compare pairs ONLY
     * within a cluster → drop every vector with a higher-similarity
@@ -43,23 +39,13 @@ object Extended6 {
     */
   val q182_semdedup: Q = Q(
     "q182_semdedup",
-    s"""WITH v AS (SELECT vec_id, embedding,
-       |    sqrt(${dotD("embedding", "embedding")}) AS vn
-       |  FROM embeddings),
-       |cn AS (SELECT vec_id AS centroid_id, embedding AS ce, vn AS cnm
-       |  FROM v WHERE vec_id < 8),
-       |assign AS (SELECT vec_id, centroid_id FROM (
-       |    SELECT v.vec_id, cn.centroid_id,
-       |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |        ${dotD("v.embedding", "cn.ce")} / (v.vn * cn.cnm) DESC,
-       |        cn.centroid_id) AS rn
-       |    FROM v, cn) t WHERE rn = 1),
+    s"""WITH ${OracleSql.IvfAssignCtes},
        |rem AS (SELECT DISTINCT b.vec_id
        |  FROM assign a JOIN assign b
        |    ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
        |  JOIN v va ON a.vec_id = va.vec_id
        |  JOIN v vb ON b.vec_id = vb.vec_id
-       |  WHERE ${dotD("va.embedding", "vb.embedding")} / (va.vn * vb.vn)
+       |  WHERE ${OracleSql.dot("va.embedding", "vb.embedding")} / (va.vn * vb.vn)
        |    >= 0.35)
        |SELECT a.vec_id, a.centroid_id,
        |  a.vec_id NOT IN (SELECT vec_id FROM rem) AS kept
@@ -101,18 +87,7 @@ object Extended6 {
     */
   val q183_keep_best: Q = Q(
     "q183_keep_best",
-    """WITH tok AS (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS w
-      |  FROM documents),
-      |h AS (SELECT doc_id, ('0x' || substr(md5(w), 1, 15))::BIGINT AS hv FROM tok),
-      |bits AS (SELECT doc_id, j,
-      |    SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) t
-      |  GROUP BY 1, 2),
-      |sig AS (SELECT doc_id,
-      |    CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << j ELSE 0 END) AS BIGINT) AS sh
-      |  FROM bits GROUP BY doc_id),
-      |banded AS (SELECT doc_id, sh, b, (sh >> (b * 15)) & 32767 AS bv
-      |  FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b) t),
+    s"""WITH ${OracleSql.SimhashBanded},
       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       |  FROM banded a JOIN banded b
       |    ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id

@@ -16,13 +16,6 @@ import graft.operators.AsOfJoin
   */
 object Extended7 {
 
-  // distinct 5-gram shingles, DuckDB form (docs are ≥10 tokens, so the
-  // short-text guard the Spark kernel carries never fires here)
-  private val Sh5Sql =
-    """list_distinct(list_transform(
-      |  range(1, greatest(len(string_split_regex(lower(text), '\s+')) - 4, 1) + 1),
-      |  i -> array_to_string(string_split_regex(lower(text), '\s+')[i:i+4], ' ')))""".stripMargin
-
   /** n-gram benchmark decontamination: a test-split document is
     * contaminated if ANY of its 5-gram shingles also occurs in the
     * train split — the GPT-3-style n-gram overlap check, strictly
@@ -40,12 +33,9 @@ object Extended7 {
   val q189_ngram_contamination: Q = Q(
     "q189_ngram_contamination",
     s"""WITH g AS (SELECT doc_id, source,
-      |    CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90
-      |         THEN 'train'
-      |         WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 95
-      |         THEN 'val' ELSE 'test' END AS split,
+      |    ${OracleSql.SplitSql} AS split,
       |    ('0x' || substr(md5(sh), 1, 15))::BIGINT AS hv
-      |  FROM (SELECT doc_id, source, unnest($Sh5Sql) AS sh
+      |  FROM (SELECT doc_id, source, unnest(${OracleSql.shingles(5)}) AS sh
       |        FROM documents) t),
       |tr AS (SELECT DISTINCT hv FROM g WHERE split = 'train'),
       |hits AS (SELECT g.doc_id, g.source, g.hv FROM g

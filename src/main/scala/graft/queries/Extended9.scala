@@ -109,23 +109,13 @@ object Extended9 {
     */
   val q199_hard_negatives: Q = Q(
     "q199_hard_negatives",
-    """WITH q AS (SELECT vec_id AS qid, label AS qlabel, embedding AS qe
+    s"""WITH q AS (SELECT vec_id AS qid, label AS qlabel, embedding AS qe
       |  FROM embeddings WHERE vec_id < 10),
       |scored AS (SELECT qid, vec_id AS cid,
-      |    list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(qe[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)
-      |    / (sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y))
-      |     * sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+      |    ${OracleSql.cosine("qe", "embedding")}
       |    AS cos
       |  FROM q, embeddings WHERE label != qlabel)
-      |SELECT qid, CAST(rank AS INT) AS rank, cid, cos FROM (
-      |  SELECT qid, cid, cos,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rank
-      |  FROM scored) t
-      |WHERE rank <= 5
-      |ORDER BY qid, rank""".stripMargin) { (spark, dir) =>
+      |${OracleSql.topCosine(5)}""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val emb = Tables.loadParallel(spark, dir, "embeddings")
     val probes = emb.filter($"vec_id" < 10)
@@ -137,13 +127,6 @@ object Extended9 {
       .select($"qid", $"rank".cast("int").as("rank"), $"cid", $"cos")
       .orderBy($"qid", $"rank")
   }
-
-  // distinct 5-gram shingles, DuckDB form (Extended7's convention —
-  // docs are ≥10 tokens, so the short-text guard never fires here)
-  private val Sh5Sql =
-    """list_distinct(list_transform(
-      |  range(1, greatest(len(string_split_regex(lower(text), '\s+')) - 4, 1) + 1),
-      |  i -> array_to_string(string_split_regex(lower(text), '\s+')[i:i+4], ' ')))""".stripMargin
 
   /** Curriculum binning: quartile difficulty bins per language by
     * document length (`ntile` over the total order (n_chars, doc_id),
@@ -191,7 +174,7 @@ object Extended9 {
     "q201_source_overlap",
     s"""WITH g AS (SELECT DISTINCT source,
       |    ('0x' || substr(md5(sh), 1, 15))::BIGINT AS hv
-      |  FROM (SELECT source, unnest($Sh5Sql) AS sh FROM documents) t)
+      |  FROM (SELECT source, unnest(${OracleSql.shingles(5)}) AS sh FROM documents) t)
       |SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS n_shared
       |FROM g a JOIN g b ON a.hv = b.hv AND a.source < b.source
       |GROUP BY src_a, src_b
@@ -428,6 +411,21 @@ object Extended9 {
       .orderBy($"mult".desc, $"hot_key")
   }
 
+  /** q206/q211's last prior click/view `touch` per event, over events
+    * `e` in (us, event_id) order.
+    */
+  private val TouchCtes =
+    """e AS (SELECT user_id, epoch_ns(ts) // 1000 AS us,
+      |    event_type, event_id FROM events),
+      |t AS (SELECT user_id, us, event_type,
+      |    last_value(CASE WHEN event_type IN ('click', 'view')
+      |      THEN struct_pack(tus := us, tet := event_type) END
+      |      IGNORE NULLS)
+      |      OVER (PARTITION BY user_id ORDER BY us, event_id
+      |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+      |      AS touch
+      |  FROM e)""".stripMargin
+
   /** Last-touch attribution: each purchase credits the most recent
     * click/view by the SAME user within 30 minutes, else 'none' — as
     * ONE user-keyed window pass (`last(..., ignoreNulls)` over the
@@ -439,16 +437,7 @@ object Extended9 {
     */
   val q206_attribution: Q = Q(
     "q206_attribution",
-    """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS us,
-      |    event_type, event_id FROM events),
-      |t AS (SELECT user_id, us, event_type,
-      |    last_value(CASE WHEN event_type IN ('click', 'view')
-      |      THEN struct_pack(tus := us, tet := event_type) END
-      |      IGNORE NULLS)
-      |      OVER (PARTITION BY user_id ORDER BY us, event_id
-      |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-      |      AS touch
-      |  FROM e)
+    s"""WITH $TouchCtes
       |SELECT COALESCE(CASE WHEN touch.tus >= us - 1800000000
       |    THEN touch.tet END, 'none') AS attributed,
       |  COUNT(*) AS n_purchases
@@ -646,16 +635,7 @@ object Extended9 {
     */
   val q211_attribution_windows: Q = Q(
     "q211_attribution_windows",
-    """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS us,
-      |    event_type, event_id FROM events),
-      |t AS (SELECT user_id, us, event_type,
-      |    last_value(CASE WHEN event_type IN ('click', 'view')
-      |      THEN struct_pack(tus := us, tet := event_type) END
-      |      IGNORE NULLS)
-      |      OVER (PARTITION BY user_id ORDER BY us, event_id
-      |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-      |      AS touch
-      |  FROM e),
+    s"""WITH $TouchCtes,
       |w AS (SELECT unnest([5, 30, 120]) AS window_min)
       |SELECT window_min,
       |  COALESCE(CASE WHEN touch.tus

@@ -20,19 +20,11 @@ object Patterns {
     */
   val q30_scd_streaks: Q = Q(
     "q30_scd_streaks",
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT user_id, CAST(ts AS DATE) AS day,
       |    CASE WHEN COUNT(*) >= 3 THEN 'active' ELSE 'light' END AS activity_class
       |  FROM events GROUP BY 1, 2),
-      |c AS (
-      |  SELECT *, CASE WHEN activity_class =
-      |      LAG(activity_class) OVER (PARTITION BY user_id ORDER BY day)
-      |    THEN 0 ELSE 1 END AS changed
-      |  FROM d),
-      |s AS (
-      |  SELECT *, SUM(changed) OVER (PARTITION BY user_id ORDER BY day
-      |    ROWS UNBOUNDED PRECEDING) AS streak
-      |  FROM c)
+      |${OracleSql.ScdStreakCtes}
       |SELECT user_id, activity_class,
       |  MIN(day) AS start_day, MAX(day) AS end_day
       |FROM s GROUP BY user_id, activity_class, streak
@@ -80,17 +72,23 @@ object Patterns {
       .orderBy($"user_id")
   }
 
+  /** q32/q53's user-day calendar: active days `a`, first days `f`, and
+    * `cal(user_id, first_day, day)` from each first day to the last.
+    */
+  private val CalendarCtes =
+    """a AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
+      |f AS (SELECT user_id, MIN(day) AS first_day FROM a GROUP BY 1),
+      |bounds AS (SELECT MAX(day) AS end_day FROM a),
+      |cal AS (SELECT user_id, first_day,
+      |    CAST(unnest(generate_series(first_day, end_day, INTERVAL 1 DAY)) AS DATE) AS day
+      |  FROM f, bounds)""".stripMargin
+
   /** Growth accounting (reference `growth_accounting.sql:19-34`):
     * per-day counts of new/retained/resurrected/churned/stale users.
     */
   val q32_growth_accounting: Q = Q(
     "q32_growth_accounting",
-    """WITH a AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-      |f AS (SELECT user_id, MIN(day) AS first_day FROM a GROUP BY 1),
-      |bounds AS (SELECT MAX(day) AS end_day FROM a),
-      |cal AS (SELECT user_id, first_day,
-      |    CAST(unnest(generate_series(first_day, end_day, INTERVAL 1 DAY)) AS DATE) AS day
-      |  FROM f, bounds),
+    s"""WITH $CalendarCtes,
       |j AS (SELECT cal.user_id, cal.day, cal.first_day,
       |    (t.user_id IS NOT NULL) AS active,
       |    (y.user_id IS NOT NULL) AS active_yday
@@ -346,12 +344,7 @@ object Patterns {
     */
   val q53_growth_weekly: Q = Q(
     "q53_growth_weekly",
-    """WITH a AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-      |f AS (SELECT user_id, MIN(day) AS first_day FROM a GROUP BY 1),
-      |bounds AS (SELECT MAX(day) AS end_day FROM a),
-      |cal AS (SELECT user_id, first_day,
-      |    CAST(unnest(generate_series(first_day, end_day, INTERVAL 1 DAY)) AS DATE) AS day
-      |  FROM f, bounds),
+    s"""WITH $CalendarCtes,
       |j AS (SELECT cal.user_id, cal.day, cal.first_day,
       |    EXISTS (SELECT 1 FROM a WHERE a.user_id = cal.user_id
       |            AND a.day BETWEEN cal.day - 6 AND cal.day) AS wa,

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.Exact._
@@ -260,12 +259,7 @@ object Relational {
     */
   val q62_percentiles: Q = Q(
     "q62_percentiles",
-    """SELECT o_orderstatus,
-      |  quantile_cont(o_totalprice, 0.5) AS median_price,
-      |  quantile_cont(o_totalprice, 0.9) AS p90_price,
-      |  COUNT(*) AS n_orders
-      |FROM orders
-      |GROUP BY 1 ORDER BY 1""".stripMargin) { (spark, dir) =>
+    OracleSql.StatusPercentilesOracle) { (spark, dir) =>
     import spark.implicits._
     Tables.load(spark, dir, "orders")
       .groupBy($"o_orderstatus")

@@ -13,11 +13,6 @@ import graft.operators.{Dedup, Multimodal, Similarity}
   */
 object TrainingData {
 
-  private[queries] val JacShingleSql =
-    """list_distinct(list_transform(
-      |  range(1, greatest(len(string_split_regex(lower(text), '\s+')) - 2, 1) + 1),
-      |  i -> array_to_string(string_split_regex(lower(text), '\s+')[i:i+2], ' ')))""".stripMargin
-
   /** Token statistics per language (whitespace + BPE-ish counts). */
   val q40_token_stats: Q = Q(
     "q40_token_stats",
@@ -80,24 +75,7 @@ object TrainingData {
   /** Language-ID confusion matrix: heuristic guess vs label. */
   val q42_langid_confusion: Q = Q(
     "q42_langid_confusion",
-    """SELECT lang AS labeled, CASE
-      |    WHEN len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) > 0 THEN 'zh'
-      |    WHEN len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['the','a','of','and','to','is'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['der','die','und','das','ist','nicht'], w)))
-      |     AND len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['the','a','of','and','to','is'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['el','los','de','es','una','que'], w)))
-      |     AND len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['the','a','of','and','to','is'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['le','les','et','est','une','dans'], w)))
-      |    THEN 'en'
-      |    WHEN len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['der','die','und','das','ist','nicht'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['el','los','de','es','una','que'], w)))
-      |     AND len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['der','die','und','das','ist','nicht'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['le','les','et','est','une','dans'], w)))
-      |    THEN 'de'
-      |    WHEN len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['el','los','de','es','una','que'], w)))
-      |      >= len(list_filter(string_split_regex(lower(text), '\s+'), w -> list_contains(['le','les','et','est','une','dans'], w)))
-      |    THEN 'es'
-      |    ELSE 'fr' END AS guessed,
+    s"""SELECT lang AS labeled, ${OracleSql.guessedSql} AS guessed,
       |  COUNT(*) AS n_docs
       |FROM documents
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (spark, dir) =>
@@ -133,7 +111,7 @@ object TrainingData {
     */
   val q44_jaccard_pairs: Q = Q(
     "q44_jaccard_pairs",
-    s"""WITH s AS (SELECT doc_id, $JacShingleSql AS sh FROM documents)
+    s"""WITH s AS (SELECT doc_id, ${OracleSql.shingles(3)} AS sh FROM documents)
       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
       |    / len(list_distinct(list_concat(a.sh, b.sh))) AS jac
@@ -166,14 +144,8 @@ object TrainingData {
     */
   val q45_minhash_lsh: Q = Q(
     "q45_minhash_lsh",
-    s"""WITH s AS (SELECT doc_id, $JacShingleSql AS sh FROM documents),
-      |h AS (SELECT doc_id, ('0x' || substr(md5(x), 1, 15))::BIGINT AS hv
-      |  FROM (SELECT doc_id, unnest(sh) AS x FROM s WHERE len(sh) > 0) t),
-      |seeds(i, seed) AS (VALUES ${graft.operators.Dedup.MinhashSeeds
-        .zipWithIndex.map { case (s, i) => s"($i, $s::BIGINT)" }
-        .mkString(", ")}),
-      |sig AS (SELECT doc_id, i, CAST(MIN(xor(hv, seed)) AS VARCHAR) AS mh
-      |  FROM h CROSS JOIN seeds GROUP BY doc_id, i),
+    s"""WITH s AS (SELECT doc_id, ${OracleSql.shingles(3)} AS sh FROM documents),
+      |${OracleSql.minhashSig("s", "")},
       |band AS (SELECT doc_id, CAST(i // 4 AS INT) AS band_id,
       |    md5(string_agg(mh, ',' ORDER BY i)) AS band_hash
       |  FROM sig GROUP BY doc_id, i // 4)
@@ -191,13 +163,7 @@ object TrainingData {
   /** SimHash signatures: 60-bit content hash + popcount per doc. */
   val q46_simhash: Q = Q(
     "q46_simhash",
-    """WITH tok AS (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS w
-      |  FROM documents),
-      |h AS (SELECT doc_id, ('0x' || substr(md5(w), 1, 15))::BIGINT AS hv FROM tok),
-      |bits AS (SELECT doc_id, j,
-      |    SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) t
-      |  GROUP BY 1, 2)
+    s"""WITH ${OracleSql.SimhashBits}
       |SELECT doc_id,
       |  CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << j ELSE 0 END) AS BIGINT) AS simhash,
       |  CAST(bit_count(CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << j ELSE 0 END) AS BIGINT)) AS INT) AS n_bits
@@ -216,22 +182,12 @@ object TrainingData {
     */
   val q47_cosine_topk: Q = Q(
     "q47_cosine_topk",
-    """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5),
+    s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5),
       |scored AS (SELECT qid, vec_id AS cid,
-      |    list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(qe[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)
-      |    / (sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y))
-      |     * sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+      |    ${OracleSql.cosine("qe", "embedding")}
       |    AS cos
       |  FROM q, embeddings WHERE vec_id != qid)
-      |SELECT qid, CAST(rank AS INT) AS rank, cid, cos FROM (
-      |  SELECT qid, cid, cos,
-      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rank
-      |  FROM scored) t
-      |WHERE rank <= 5
-      |ORDER BY qid, rank""".stripMargin) { (spark, dir) =>
+      |${OracleSql.topCosine(5)}""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val emb = Tables.loadParallel(spark, dir, "embeddings")
     val queries = emb.filter($"vec_id" < 5)
@@ -247,14 +203,9 @@ object TrainingData {
     */
   val q48_ivf_assign: Q = Q(
     "q48_ivf_assign",
-    """WITH c AS (SELECT vec_id AS centroid_id, embedding AS ce FROM embeddings WHERE vec_id < 8),
+    s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS ce FROM embeddings WHERE vec_id < 8),
       |scored AS (SELECT vec_id, centroid_id,
-      |    list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(embedding[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)), (x, y) -> x + y)
-      |    / (sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y))
-      |     * sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE)), (x, y) -> x + y)))
+      |    ${OracleSql.cosine("embedding", "ce")}
       |    AS cos
       |  FROM embeddings, c)
       |SELECT centroid_id, COUNT(*) AS n_vectors FROM (
@@ -388,15 +339,10 @@ object TrainingData {
     */
   val q59_embedding_neardup: Q = Q(
     "q59_embedding_neardup",
-    """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
+    s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
       |           WHERE vec_id < 100),
       |scored AS (SELECT qid, vec_id AS cid,
-      |    list_reduce(list_transform(range(1, 65),
-      |      i -> CAST(qe[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)
-      |    / (sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y))
-      |     * sqrt(list_reduce(list_transform(range(1, 65),
-      |        i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)))
+      |    ${OracleSql.cosine("qe", "embedding")}
       |    AS cos
       |  FROM q, embeddings WHERE vec_id != qid)
       |SELECT qid, cid AS nearest_id, cos AS nearest_cos,
@@ -425,43 +371,24 @@ object TrainingData {
     * the approximate result itself, not a brute-force stand-in.
     */
   val q63_ivf_search: Q = Q(
-    "q63_ivf_search", {
-      def dotD(a: String, b: String) =
-        s"""list_reduce(list_transform(range(1, 65),
-           |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)""".stripMargin
-      s"""WITH v AS (SELECT vec_id, embedding,
-         |    sqrt(${dotD("embedding", "embedding")}) AS vn
-         |  FROM embeddings),
-         |cn AS (SELECT vec_id AS centroid_id, embedding AS ce, vn AS cnm
-         |  FROM v WHERE vec_id < 8),
-         |assign AS (SELECT vec_id, centroid_id FROM (
-         |    SELECT v.vec_id, cn.centroid_id,
-         |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-         |        ${dotD("v.embedding", "cn.ce")} / (v.vn * cn.cnm) DESC,
-         |        cn.centroid_id) AS rn
-         |    FROM v, cn) t WHERE rn = 1),
-         |q AS (SELECT vec_id AS qid, embedding AS qe, vn AS qn
-         |  FROM v WHERE vec_id BETWEEN 100 AND 104),
-         |probes AS (SELECT qid, centroid_id FROM (
-         |    SELECT q.qid, cn.centroid_id,
-         |      ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
-         |        ${dotD("q.qe", "cn.ce")} / (q.qn * cn.cnm) DESC,
-         |        cn.centroid_id) AS rn
-         |    FROM q, cn) t WHERE rn <= 2),
-         |cand AS (SELECT p.qid, a.vec_id
-         |  FROM probes p JOIN assign a USING (centroid_id)
-         |  WHERE a.vec_id != p.qid),
-         |scored AS (SELECT cand.qid, cand.vec_id AS cid,
-         |    ${dotD("q.qe", "v.embedding")} / (q.qn * v.vn) AS cos
-         |  FROM cand JOIN v ON cand.vec_id = v.vec_id
-         |  JOIN q ON cand.qid = q.qid)
-         |SELECT qid, CAST(rank AS INT) AS rank, cid, cos FROM (
-         |  SELECT qid, cid, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rank
-         |  FROM scored) t
-         |WHERE rank <= 3
-         |ORDER BY qid, rank""".stripMargin
-    }) { (spark, dir) =>
+    "q63_ivf_search",
+    s"""WITH ${OracleSql.IvfAssignCtes},
+      |q AS (SELECT vec_id AS qid, embedding AS qe, vn AS qn
+      |  FROM v WHERE vec_id BETWEEN 100 AND 104),
+      |probes AS (SELECT qid, centroid_id FROM (
+      |    SELECT q.qid, cn.centroid_id,
+      |      ROW_NUMBER() OVER (PARTITION BY q.qid ORDER BY
+      |        ${OracleSql.dot("q.qe", "cn.ce")} / (q.qn * cn.cnm) DESC,
+      |        cn.centroid_id) AS rn
+      |    FROM q, cn) t WHERE rn <= 2),
+      |cand AS (SELECT p.qid, a.vec_id
+      |  FROM probes p JOIN assign a USING (centroid_id)
+      |  WHERE a.vec_id != p.qid),
+      |scored AS (SELECT cand.qid, cand.vec_id AS cid,
+      |    ${OracleSql.dot("q.qe", "v.embedding")} / (q.qn * v.vn) AS cos
+      |  FROM cand JOIN v ON cand.vec_id = v.vec_id
+      |  JOIN q ON cand.qid = q.qid)
+      |${OracleSql.topCosine(3)}""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val emb = Tables.loadParallel(spark, dir, "embeddings")
     val centroids = emb.filter($"vec_id" < 8)
@@ -483,30 +410,21 @@ object TrainingData {
     * not just the re-rank.
     */
   val q70_srp_search: Q = Q(
-    "q70_srp_search", {
-      def dotD(a: String, b: String) =
-        s"""list_reduce(list_transform(range(1, 65),
-           |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)""".stripMargin
-      s"""WITH p AS (SELECT vec_id AS pid, embedding AS pe FROM embeddings WHERE vec_id < 8),
-         |b AS (SELECT vec_id,
-         |    CAST(SUM(CASE WHEN ${dotD("e.embedding", "p.pe")} > 0
-         |      THEN 1::BIGINT << pid ELSE 0 END) AS BIGINT) AS bucket
-         |  FROM embeddings e CROSS JOIN p GROUP BY vec_id),
-         |v AS (SELECT vec_id, embedding,
-         |    sqrt(${dotD("embedding", "embedding")}) AS vn, bucket
-         |  FROM embeddings JOIN b USING (vec_id)),
-         |q AS (SELECT vec_id AS qid, embedding AS qe, vn AS qn, bucket
-         |  FROM v WHERE vec_id BETWEEN 8 AND 12),
-         |scored AS (SELECT q.qid, v.vec_id AS cid,
-         |    ${dotD("q.qe", "v.embedding")} / (q.qn * v.vn) AS cos
-         |  FROM v JOIN q USING (bucket) WHERE v.vec_id != q.qid)
-         |SELECT qid, CAST(rank AS INT) AS rank, cid, cos FROM (
-         |  SELECT qid, cid, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rank
-         |  FROM scored) t
-         |WHERE rank <= 5
-         |ORDER BY qid, rank""".stripMargin
-    }) { (spark, dir) =>
+    "q70_srp_search",
+    s"""WITH p AS (SELECT vec_id AS pid, embedding AS pe FROM embeddings WHERE vec_id < 8),
+      |b AS (SELECT vec_id,
+      |    CAST(SUM(CASE WHEN ${OracleSql.dot("e.embedding", "p.pe")} > 0
+      |      THEN 1::BIGINT << pid ELSE 0 END) AS BIGINT) AS bucket
+      |  FROM embeddings e CROSS JOIN p GROUP BY vec_id),
+      |v AS (SELECT vec_id, embedding,
+      |    sqrt(${OracleSql.dot("embedding", "embedding")}) AS vn, bucket
+      |  FROM embeddings JOIN b USING (vec_id)),
+      |q AS (SELECT vec_id AS qid, embedding AS qe, vn AS qn, bucket
+      |  FROM v WHERE vec_id BETWEEN 8 AND 12),
+      |scored AS (SELECT q.qid, v.vec_id AS cid,
+      |    ${OracleSql.dot("q.qe", "v.embedding")} / (q.qn * v.vn) AS cos
+      |  FROM v JOIN q USING (bucket) WHERE v.vec_id != q.qid)
+      |${OracleSql.topCosine(5)}""".stripMargin) { (spark, dir) =>
     import spark.implicits._
     val emb = Tables.loadParallel(spark, dir, "embeddings")
     // index metadata: 8 plane vectors, collected once on the driver
@@ -563,7 +481,7 @@ object TrainingData {
     */
   val q72_boilerplate_ngrams: Q = Q(
     "q72_boilerplate_ngrams",
-    s"""WITH s AS (SELECT doc_id, $JacShingleSql AS sh FROM documents)
+    s"""WITH s AS (SELECT doc_id, ${OracleSql.shingles(3)} AS sh FROM documents)
       |SELECT shingle, COUNT(*) AS n_docs FROM (
       |  SELECT doc_id, unnest(sh) AS shingle FROM s) t
       |GROUP BY shingle
@@ -590,12 +508,9 @@ object TrainingData {
     */
   val q73_contamination: Q = Q(
     "q73_contamination",
-    """WITH f AS (SELECT source,
-      |    md5(array_to_string(string_split_regex(lower(text), '\s+')[1:8], ' ')) AS fp,
-      |    CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90
-      |         THEN 'train'
-      |         WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 95
-      |         THEN 'val' ELSE 'test' END AS split
+    s"""WITH f AS (SELECT source,
+      |    md5(array_to_string(string_split_regex(lower(text), '\\s+')[1:8], ' ')) AS fp,
+      |    ${OracleSql.SplitSql} AS split
       |  FROM documents)
       |SELECT source, COUNT(*) AS n_test,
       |  CAST(SUM(CASE WHEN fp IN (SELECT fp FROM f WHERE split = 'train')
@@ -766,20 +681,8 @@ object TrainingData {
     */
   val q78_neardup_pipeline: Q = Q(
     "q78_neardup_pipeline",
-    s"""WITH s AS (SELECT doc_id, $JacShingleSql AS sh FROM documents),
-      |h AS (SELECT doc_id, ('0x' || substr(md5(x), 1, 15))::BIGINT AS hv
-      |  FROM (SELECT doc_id, unnest(sh) AS x FROM s WHERE len(sh) > 0) t),
-      |seeds(i, seed) AS (VALUES ${graft.operators.Dedup.MinhashSeeds
-        .take(16).zipWithIndex.map { case (s, i) => s"($i, $s::BIGINT)" }
-        .mkString(", ")}),
-      |sig AS (SELECT doc_id, i, CAST(MIN(xor(hv, seed)) AS VARCHAR) AS mh
-      |  FROM h CROSS JOIN seeds GROUP BY doc_id, i),
-      |band AS (SELECT doc_id,
-      |    md5(string_agg(mh, ',' ORDER BY i)) AS band_hash
-      |  FROM sig GROUP BY doc_id, i // 4),
-      |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM band a JOIN band b
-      |    ON a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+    s"""WITH s AS (SELECT doc_id, ${OracleSql.shingles(3)} AS sh FROM documents),
+      |${OracleSql.minhashPairs("s", "")},
       |dropped AS (SELECT DISTINCT id_b FROM cand
       |  JOIN s sa ON cand.id_a = sa.doc_id
       |  JOIN s sb ON cand.id_b = sb.doc_id
@@ -811,18 +714,7 @@ object TrainingData {
     */
   val q79_simhash_neardup: Q = Q(
     "q79_simhash_neardup",
-    """WITH tok AS (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS w
-      |  FROM documents),
-      |h AS (SELECT doc_id, ('0x' || substr(md5(w), 1, 15))::BIGINT AS hv FROM tok),
-      |bits AS (SELECT doc_id, j,
-      |    SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) t
-      |  GROUP BY 1, 2),
-      |sig AS (SELECT doc_id,
-      |    CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << j ELSE 0 END) AS BIGINT) AS sh
-      |  FROM bits GROUP BY doc_id),
-      |banded AS (SELECT doc_id, sh, b, (sh >> (b * 15)) & 32767 AS bv
-      |  FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b) t),
+    s"""WITH ${OracleSql.SimhashBanded},
       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
       |    CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS dist
       |  FROM banded a JOIN banded b
@@ -908,29 +800,8 @@ object TrainingData {
     */
   val q88_neardup_groups: Q = Q(
     "q88_neardup_groups",
-    """WITH RECURSIVE tok AS (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS w
-      |  FROM documents),
-      |h AS (SELECT doc_id, ('0x' || substr(md5(w), 1, 15))::BIGINT AS hv FROM tok),
-      |bits AS (SELECT doc_id, j,
-      |    SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      |  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS j) t
-      |  GROUP BY 1, 2),
-      |sig AS (SELECT doc_id,
-      |    CAST(SUM(CASE WHEN s > 0 THEN 1::BIGINT << j ELSE 0 END) AS BIGINT) AS sh
-      |  FROM bits GROUP BY doc_id),
-      |banded AS (SELECT doc_id, sh, b, (sh >> (b * 15)) & 32767 AS bv
-      |  FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b) t),
-      |pairs AS (SELECT DISTINCT a.doc_id AS u, b.doc_id AS v
-      |  FROM banded a JOIN banded b
-      |    ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id
-      |  WHERE bit_count(xor(a.sh, b.sh)) <= 3),
-      |sym AS (SELECT u AS a, v AS b FROM pairs
-      |  UNION ALL SELECT v, u FROM pairs),
-      |reach(id, lab) AS (
-      |  SELECT DISTINCT a, a FROM sym
-      |  UNION
-      |  SELECT s.b, r.lab FROM reach r JOIN sym s ON r.id = s.a),
-      |cc AS (SELECT id, MIN(lab) AS comp FROM reach GROUP BY id)
+    s"""WITH RECURSIVE ${OracleSql.SimhashPairs},
+      |${OracleSql.components("pairs", "")}
       |SELECT comp, COUNT(*) AS n_members FROM cc
       |GROUP BY 1 HAVING COUNT(*) >= 2 ORDER BY 1""".stripMargin) {
     (spark, dir) =>

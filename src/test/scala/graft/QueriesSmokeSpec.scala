@@ -108,8 +108,33 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("query names are distinct") {
+    // queries and oracleSql are toMap'd: a repeated name would drop a
+    // query silently
+    val dups = SparkEntry.allQueries.groupBy(_.name)
+      .collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"repeated query names: ${dups.toSeq.sorted}")
+  }
+
   test("every oracle key has a matching query") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
+      s"queries without an oracle: " +
+        s"${(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet)
+          .toSeq.sorted}; oracles without a query: " +
+        s"${(SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet)
+          .toSeq.sorted}")
+  }
+
+  test("every oracle SQL is fully expanded") {
+    // a fragment spliced into a plain """ string stays `$name`, and a
+    // margin left unstripped leads its line with one `|` (`||` is
+    // DuckDB's concatenation)
+    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
+      case (name, sql) =>
+        UnexpandedFragment.findFirstIn(sql).map(m => s"$name: $m") ++
+          LeftoverMargin.findFirstIn(sql).map(m => s"$name: ${m.trim}")
+    }
+    assert(bad.isEmpty, s"oracles with unexpanded text: ${bad.mkString("; ")}")
   }
 }
 
@@ -131,6 +156,12 @@ object QueriesSmokeSpec {
     * logged on any of those threads names its query. */
   private val QueryProperty = "graft.sweep.query"
   private val Unattributed = "<no query>"
+
+  /** An interpolation left in oracle text: `$` and a name or `{`. */
+  private val UnexpandedFragment = """\$[A-Za-z_{]\S*""".r
+
+  /** A line led by a single margin `|` (not DuckDB's `||`). */
+  private val LeftoverMargin = """(?m)^[ \t]*\|(?!\|).*$""".r
 
   /** A vanilla child session: UTC and the shuffle width, no
     * graft-specific conf. */

@@ -25,6 +25,11 @@ Checks:
      `read.parquet`, so every driver-table read goes through the
      declared schemas in Tables (no footer-inference job, one schema
      source).
+  7. Repeated oracle SQL does not grow back (a ratchet): the source
+     lines in queries/*.scala covered by a 5-line `|`-margin window
+     whose trimmed text (over 150 characters) occurs in 2+ places stay
+     at or below MAX_REPEATED_SQL_LINES. A fragment more than one query
+     uses belongs in queries.OracleSql.
 """
 import glob
 import json
@@ -45,10 +50,37 @@ RETIRED_BENCH_LABELS = frozenset({
     "q307d_semdedup", "q307e_decontam", "q307f_pack",
 })
 
+# Check 7's ceiling: the repeated-window line count once the shared
+# oracle fragments moved into queries.OracleSql (726 before). Lower it
+# when a change removes more; never raise it.
+MAX_REPEATED_SQL_LINES = 34
+WINDOW, WINDOW_MIN_CHARS = 5, 150
+
 
 def read(path):
     with open(os.path.join(REPO, path), encoding="utf-8") as f:
         return f.read()
+
+
+def repeated_sql_windows():
+    """Check 7's measure: ({text: [(file, first line)]} for every
+    5-line margin window over 150 trimmed characters that occurs 2+
+    times, the set of (file, line) those windows cover)."""
+    occ = {}
+    for f in sorted(glob.glob(os.path.join(
+            REPO, "src/main/scala/graft/queries/*.scala"))):
+        lines = open(f, encoding="utf-8").read().splitlines()
+        for i in range(len(lines) - WINDOW + 1):
+            win = [l.strip() for l in lines[i:i + WINDOW]]
+            if all(l.startswith("|") for l in win):
+                key = "\n".join(l[1:].strip() for l in win)
+                if len(key) > WINDOW_MIN_CHARS:
+                    occ.setdefault(key, []).append(
+                        (os.path.basename(f), i + 1))
+    repeated = {k: v for k, v in occ.items() if len(v) >= 2}
+    covered = {(f, i + j) for v in repeated.values() for f, i in v
+               for j in range(WINDOW)}
+    return repeated, covered
 
 
 def main() -> int:
@@ -113,6 +145,17 @@ def main() -> int:
             errs.append(f"{os.path.relpath(f, REPO)} calls read.parquet — "
                         "read driver tables through core.Tables.load")
 
+    # 7. repeated oracle SQL ratchet
+    repeated, covered = repeated_sql_windows()
+    if len(covered) > MAX_REPEATED_SQL_LINES:
+        worst = sorted(repeated.items(), key=lambda kv: -len(kv[1]))[:5]
+        errs.append(
+            f"{len(covered)} queries/ lines sit in repeated 5-line oracle "
+            f"SQL windows (ceiling {MAX_REPEATED_SQL_LINES}); move the "
+            "shared fragment into queries.OracleSql. Worst: " +
+            "; ".join(", ".join(f"{f}:{i}" for f, i in v) +
+                      f" {k.splitlines()[0]!r}" for k, v in worst))
+
     if errs:
         print("DRIFT: FAIL")
         for e in errs:
@@ -120,7 +163,7 @@ def main() -> int:
         return 1
     print(f"DRIFT: OK ({len(led)} queries consistent across ledger, "
           "COVERAGE, STATUS, bench snapshot, SparkEntry; parquet read "
-          "only in Tables)")
+          f"only in Tables; {len(covered)} repeated oracle SQL lines)")
     return 0
 
 
