@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test harness: one local session per suite, UTC, small shuffle
   * width (mirrors the reference's own lab setting,
-  * `Caching.ipynb:92`), plus a chispa-style DataFrame equality assert
+  * `Caching.ipynb:92`), the engine's `file:` filesystem
+  * (`Sessions.localFs`, so every sink and streaming spec runs on what
+  * the mains run), plus a chispa-style DataFrame equality assert
   * (reference test pattern, `3-spark-fundamentals/src/tests/`).
   */
 trait SparkSpec extends AnyFunSuite {
@@ -51,6 +53,7 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         "/root/repo/target/spark-warehouse")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.Sessions.localFs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

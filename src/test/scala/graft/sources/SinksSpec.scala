@@ -123,9 +123,7 @@ class SinksSpec extends SparkSpec {
       ($"id" % 64).cast("int").as("x"),
       ($"id" / 64).cast("int").as("y"))
     def sumBoxArea(table: String): Long = {
-      val loc = new java.net.URI(spark.sql(s"DESCRIBE FORMATTED $table")
-        .filter("col_name = 'Location'")
-        .select("data_type").head().getString(0))
+      val loc = Sinks.tableLocation(spark, table)
       val fs = org.apache.hadoop.fs.FileSystem.get(
         loc, spark.sparkContext.hadoopConfiguration)
       val files = fs.listStatus(new org.apache.hadoop.fs.Path(loc))

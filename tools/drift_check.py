@@ -30,6 +30,10 @@ Checks:
      whose trimmed text (over 150 characters) occurs in 2+ places stay
      at or below MAX_REPEATED_SQL_LINES. A fragment more than one query
      uses belongs in queries.OracleSql.
+  8. One session recipe: under src/main, `SparkSession.builder` appears
+     only in core/Sessions.scala; under src/test, only in SparkSpec.scala,
+     which applies `Sessions.localFs` — so the tests run on the same
+     `file:` filesystem as the mains.
 """
 import glob
 import json
@@ -156,6 +160,22 @@ def main() -> int:
             "; ".join(", ".join(f"{f}:{i}" for f, i in v) +
                       f" {k.splitlines()[0]!r}" for k, v in worst))
 
+    # 8. one session recipe, and the tests share its filesystem
+    recipes = {"src/main": "src/main/scala/graft/core/Sessions.scala",
+               "src/test": "src/test/scala/graft/SparkSpec.scala"}
+    for tree, home in recipes.items():
+        for f in sorted(glob.glob(os.path.join(REPO, tree, "**/*.scala"),
+                                  recursive=True)):
+            rel = os.path.relpath(f, REPO)
+            if rel != home and "SparkSession.builder" in open(
+                    f, encoding="utf-8").read():
+                errs.append(f"{rel} builds a SparkSession — build it only in "
+                            f"{home}")
+    if not re.search(r"\.config\(\s*(graft\.core\.)?Sessions\.localFs\s*\)",
+                     read(recipes["src/test"])):
+        errs.append(f"{recipes['src/test']} does not apply Sessions.localFs — "
+                    "the tests would run on another file: filesystem")
+
     if errs:
         print("DRIFT: FAIL")
         for e in errs:
@@ -163,7 +183,8 @@ def main() -> int:
         return 1
     print(f"DRIFT: OK ({len(led)} queries consistent across ledger, "
           "COVERAGE, STATUS, bench snapshot, SparkEntry; parquet read "
-          f"only in Tables; {len(covered)} repeated oracle SQL lines)")
+          f"only in Tables; {len(covered)} repeated oracle SQL lines; "
+          "one session recipe)")
     return 0
 
 
