@@ -51,12 +51,12 @@ object Gwin {
       "apportionment/schedule windows over one row per source")))
 
   /** Queries whose BOUNDED partition-less windows execute EAGERLY
-    * (inside a localCheckpoint during query construction) — invisible
+    * (inside a core.Barrier during query construction) — invisible
     * to the final-plan ledger (their gwin= is 0) yet still warning at
     * runtime. Each entry's boundedness is executable in
     * GwinBoundsSpec's eager section. Found round 11: q239's
     * apportionment windows (allocateLargestRemainder over the
-    * per-source stratum table) run under `alloc.localCheckpoint()`.
+    * per-source stratum table) run inside the barrier on `alloc`.
     */
   val EagerGwinAllowed: Set[String] = Set("q239_stratified_sample")
 

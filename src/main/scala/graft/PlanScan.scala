@@ -89,7 +89,7 @@ object PlanScan {
   /** One ledger line per query, sorted by name. Queries are planned
     * 8 at a time from a thread pool (r12 verdict #1 — suite wall
     * time): building a query's DataFrame executes its eager
-    * `localCheckpoint()`s, so a sequential sweep serializes ~311
+    * `core.Barrier` cuts, so a sequential sweep serializes ~311
     * small Spark jobs behind single-threaded Catalyst planning.
     * Concurrent planning on one session is supported (Bench's warmup
     * has run 8-way since r9), and the counted plan is per-query

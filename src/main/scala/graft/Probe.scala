@@ -104,10 +104,12 @@ object Probe {
           yield a - b).getOrElse(-1L)
         val m = i.taskMetrics
         // first query frame in the callsite stack beats the generic
-        // "withThreadLocalCaptured" every AQE-materialized stage gets
+        // "withThreadLocalCaptured" every AQE-materialized stage gets;
+        // a barrier's long form leads with its own frame
         val site = (i.name.linesIterator.take(1).toSeq ++
           i.details.linesIterator.find(l => l.contains("graft.") &&
-            !l.contains("graft.Bench") && !l.contains("graft.Probe")))
+            !l.contains("graft.Bench") && !l.contains("graft.Probe") &&
+            !l.contains("graft.core.Barrier")))
           .mkString(" | ").trim
         val ds = durs.getOrElse(i.stageId,
           mutable.ArrayBuffer.empty[Long]).sorted

@@ -3,7 +3,7 @@ package graft.core
 /** Overlap independent eager stages from the driver (optimization
   * guide §2.6 "overlap independent jobs"): Spark happily runs several
   * jobs at once inside one application — multi-stage query bodies
-  * whose `localCheckpoint()` barriers are independent of each other
+  * whose [[Barrier]] cuts are independent of each other
   * only serialize because the driver calls them sequentially.
   * Results are deterministic: each thunk builds the same DataFrame it
   * would have built sequentially; only the JOB SCHEDULE overlaps.

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 
 /** Categorical association metrics over BOUNDED contingency tables —
   * the dataset-audit questions "does the automatic labeler agree with
@@ -146,7 +147,7 @@ object Association {
       .reduce(_ unionByName _)
     val nij = longForm.groupBy($"item", $"cat")
       .agg(count(lit(1)).as("nij"))
-      .localCheckpoint() // S, c_j, and N all read it
+      .transform(Barrier(_)) // S, c_j, and N all read it
     // Two-level agg keeps per-item totals m_u in hand so duplicate
     // item rows (m_u != n, breaking the N·n invariant) fail loudly
     // below rather than silently corrupting the counts.
@@ -227,7 +228,7 @@ object Association {
       .agg(count(lit(1)).as("nuc"))
       .withColumn("m", sum($"nuc").over(Window.partitionBy($"item")))
       .filter($"m" >= 2)
-      .localCheckpoint() // O_L, n_c, and n all read it
+      .transform(Barrier(_)) // O_L, n_c, and n all read it
     val o = nuc.agg(
       coalesce(sum(($"nuc" * ($"m" - $"nuc") *
         expr(s"${L}L DIV (m - 1)")).cast("decimal(38,0)")),
@@ -317,13 +318,13 @@ object Association {
   /** Per-rater reliability against the [[majorityVote]] consensus:
     * `rater, n_rated, n_agree, agree_bp` — "which labeler should I
     * re-brief?". The long vote form materializes ONCE
-    * (localCheckpoint: (item, rater, cat) triples — the upstream
+    * (a barrier: (item, rater, cat) triples — the upstream
     * featurization is the expensive part and must not run twice) and
     * feeds both the consensus reduce and the item-keyed agree join.
     */
   def raterReliability(df: DataFrame, itemCol: String,
       raterCols: Seq[String]): DataFrame = {
-    val longForm = votesLong(df, itemCol, raterCols).localCheckpoint()
+    val longForm = Barrier(votesLong(df, itemCol, raterCols))
     val consensus = consensusOf(longForm)
       .select(col("item"), col("consensus"))
     longForm.join(consensus, Seq("item"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.functions.TextFunctions
 import graft.operators.LangModel.flog2
 
@@ -31,7 +32,7 @@ import graft.operators.LangModel.flog2
   *
   * Scale shape: the corpus is touched twice (a column-pruned stats
   * pass for D/T, and the tokenize→postings pass); postings
-  * localCheckpoint once for their two consumers (document frequency,
+  * checkpoint once for their two consumers (document frequency,
   * scoring). Scoring is map-side all the way to the (qid, doc)
   * combine: the query-term table and the query-restricted df table
   * BROADCAST into the postings scan — no shuffled join touches a
@@ -67,7 +68,7 @@ object Bm25 {
         explode(col("_t")).as("w"))
       .groupBy(col("doc"), col("dl"), col("w"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // document frequency + scoring both read it
+      .transform(Barrier(_)) // document frequency + scoring both read it
     val qTerms = queries.select(col("qid"), col("w"))
     // df restricted to the query vocabulary -> broadcastable
     val dfq = postings.groupBy(col("w")).agg(count(lit(1)).as("df"))

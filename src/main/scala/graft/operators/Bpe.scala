@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Barrier
 
 /** Byte-pair-encoding induction AND application — the tokenizer-training
   * step of a pretraining pipeline (reference analogue: the token-level
@@ -129,7 +130,7 @@ object Bpe {
             // periodic cut. Every 16 rounds, pin the current
             // vocabulary table and restart the chain from it —
             // per-round wall time stays flat at any merge count.
-            if (round % 16 == 0) cur = cur.localCheckpoint()
+            if (round % 16 == 0) cur = Barrier(cur)
           case None => done = true
         }
       }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 
 /** Isotonic calibration by pool-adjacent-violators (PAV) — the
   * classifier-calibration step between "score every document" and
@@ -132,7 +133,7 @@ object Calibrate {
       .agg(count(lit(1)).as("n"), sum($"_y").as("pos"),
         sum($"_s").as("conf_sum"))
       .withColumn("gap_abs", abs(lit(10000) * $"pos" - $"conf_sum"))
-      .localCheckpoint() // ≤ nBins rows; the total reads it too — the
+      .transform(Barrier(_)) // ≤ nBins rows; the total reads it too — the
                          // corpus aggregate must not run twice
     val tot = perBin.agg(sum($"gap_abs").as("_g"), sum($"n").as("_nt"))
     perBin.crossJoin(broadcast(tot))

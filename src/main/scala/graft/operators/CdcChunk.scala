@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.functions.{Let, TextFunctions}
 import graft.plans.Md5PrefixLong
 
@@ -84,7 +85,7 @@ object CdcChunk {
         explode(chunksOfTokens(
           TextFunctions.lowerTokens(col(textCol)), k, m)).as("chunk"))
       .select(col("doc_id"), Md5PrefixLong(col("chunk")).as("ch"))
-      .localCheckpoint() // history index + delta probe both read it
+      .transform(Barrier(_)) // history index + delta probe both read it
     val hist = chunks.filter(col("doc_id") <= cut)
       .select(col("ch")).distinct()
       .withColumn("_hit", lit(1L))
@@ -115,7 +116,7 @@ object CdcChunk {
         explode(col("_s.chunks")).as("chunk"))
       .select(col("doc_id"), col("n_tok"),
         Md5PrefixLong(col("chunk")).as("ch"))
-      .localCheckpoint() // occurrence count + per-doc rollup both read
+      .transform(Barrier(_)) // occurrence count + per-doc rollup both read
     val occ = ch.groupBy(col("ch")).agg(count(lit(1)).as("cnt"))
     ch.join(occ, Seq("ch"))
       .groupBy(col("doc_id"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.functions.Let
 
 /** Embedding-cluster quality audit in EXACT integer space — "are the
@@ -51,7 +52,7 @@ object ClusterEval {
     * array<struct<l, cv>>): per-dimension floor-means from one
     * map-side-combinable posexplode aggregate, assembled
     * deterministically (array_sort on (dim, cv) / (l, cv)) and
-    * localCheckpointed — one bounded row distilled from a corpus
+    * checkpointed — one bounded row distilled from a corpus
     * pass, never recomputed for the broadcast.
     */
   private def centsRow(pts: DataFrame): DataFrame =
@@ -67,7 +68,7 @@ object ClusterEval {
       .agg(array_sort(collect_list(
         struct(col("label").as("l"), col("cent").as("cv"))))
         .as("cents"))
-      .localCheckpoint()
+      .transform(Barrier(_))
 
   private def selectPts(vecs: DataFrame, idCol: String,
       labelCol: String, codesCol: String): DataFrame =
@@ -162,7 +163,7 @@ object ClusterEval {
           c => c("l") === col("label")), 1)("cv")))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n"), sum(col("a")).as("a_sum"))
-      .localCheckpoint() // k rows distilled from the corpus pass —
+      .transform(Barrier(_)) // k rows distilled from the corpus pass —
                          // both sides of the ratio table read it
     val centTable = cents
       .select(explode(col("cents")).as("c"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.functions.TextFunctions
 
 /** Benchmark-driven n-gram decontamination audit — the GPT-3 rule
@@ -70,7 +71,7 @@ object Decontam {
       .join(broadcast(benchGrams), Seq("hv"), "left")
       .select(col("doc"), col("pos"),
         coalesce(col("_hit"), lit(0)).as("hit"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val census = perGram.groupBy(col("doc"))
       .agg(count(lit(1)).as("n_grams"),
         sum(col("hit")).cast("long").as("n_hit"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.functions.{Let, TextFunctions}
 
 /** Deduplication operators for training-data pipelines: exact
@@ -261,7 +262,7 @@ object Dedup {
       textCol: String, idCol: String, jaccardThreshold: Double = 0.8,
       k: Int = 16, bands: Int = 4): DataFrame = {
     val d = bandIndex(delta, textCol, idCol, k, bands)
-      .localCheckpoint() // joined against history AND itself
+      .transform(Barrier(_)) // joined against history AND itself
     // candidate generation moves IDS ONLY: the band join and its
     // multi-band dedup run over (did, oid) pairs — shuffling and
     // distinct-comparing the full shingle arrays here would move
@@ -393,7 +394,7 @@ object Dedup {
       .select(col(idCol).as("_id"),
         TextFunctions.sortedShingles(col(textCol)).as("_sh"))
       .filter(size(col("_sh")) > 0)
-      .localCheckpoint() // read by the frequency agg AND both verify joins
+      .transform(Barrier(_)) // read by the frequency agg AND both verify joins
     // Candidate generation runs entirely in HASH space (round-12
     // optimization): project each doc's shingle SET through xxhash64
     // (array_distinct: colliding strings merge so it stays a set).
@@ -434,7 +435,7 @@ object Dedup {
         posexplode(expr(s"slice(_rh, 1, size(_rh) " +
           s"- ((size(_rh) * $thresholdBp + 9999) DIV 10000) + 1)"))
           .as(Seq("_p", "_h")))
-      .localCheckpoint() // self-joined: avoid re-running the ranking twice
+      .transform(Barrier(_)) // self-joined: avoid re-running the ranking twice
     // Two candidate-stage prunes, both free integer arithmetic INSIDE
     // the join before any array-carrying row is built:
     //  - length band: J ≥ t forces t·|B| ≤ |A| ≤ |B|/t (the
@@ -651,7 +652,7 @@ object Dedup {
     // because the distinct and the final membership join both read it
     val sigs = df
       .select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val sigPairs =
       simhashSigPairs(sigs.select(col("sig")).distinct(), maxDist, bands)
     // CC over the signature graph (pairs-sized, not corpus-sized);
@@ -661,7 +662,7 @@ object Dedup {
     val membership = sigs
       .join(sigComp, Seq("sig"), "left_outer")
       .select(col("id"), coalesce(col("_sc"), col("sig")).as("key"))
-      .localCheckpoint() // key-min agg + the comp join both read it
+      .transform(Barrier(_)) // key-min agg + the comp join both read it
     // one key per doc ⇒ the bipartite CC is a star forest: comp is
     // simply min(doc id) over the key, joined back — no iteration.
     // shuffle_hash pinned: comp is corpus-cardinality (one row per
@@ -724,16 +725,12 @@ object Dedup {
     // verify stage too) and the band keys; materialized because
     // candidates and both verify sides re-read it. At scale this is
     // the staged signature table a curator would persist anyway.
-    // localCheckpoint, not cache: CacheManager entries outlive the
-    // query and accumulate across a shared session, while checkpoint
-    // blocks are released by the ContextCleaner once this plan is
-    // garbage-collected.
     val staged = df
       .withColumn("_sh", TextFunctions.sortedShingles(col(textCol)))
       .withColumn("_sig", minhashSignature(col("_sh"), k))
       .withColumn("_bands", lshBandKeys(col("_sig"), bands, bandRows(k, bands)))
       .select(col(idCol).as("_id"), col("_sh"), col("_bands"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val exploded = staged
       .select(col("_id"), explode_outer(col("_bands")).as("band_hash"))
       .filter(col("band_hash").isNotNull)
@@ -809,7 +806,7 @@ object Dedup {
             TextFunctions.positionalShingles(col(textCol), k)))
           .as(Seq("pos", "hv")))
       .filter(col("hv").isNotNull)
-      .localCheckpoint() // self-joined: don't re-shingle both sides
+      .transform(Barrier(_)) // self-joined: don't re-shingle both sides
     val g = maxDf match {
       case Some(cap) =>
         // df-cap: one hash-keyed agg, broadcast-joined back as a
@@ -874,7 +871,7 @@ object Dedup {
             TextFunctions.positionalShingles(col(textCol), k)))
           .as(Seq("pos", "hv")))
       .filter(col("hv").isNotNull)
-      .localCheckpoint() // canonical agg + mark join both read it
+      .transform(Barrier(_)) // canonical agg + mark join both read it
     val canon = occ.groupBy(col("hv"))
       .agg(min(struct(col("doc"), col("pos"))).as("can"))
     val marks = occ.join(canon, Seq("hv"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.plans.Md5PrefixLongs
 
 /** Distributional scoring over hashed feature spaces — the kernels
@@ -58,11 +59,11 @@ object Distributional {
   def dsirScores(docs: DataFrame, isTarget: Column,
       b: Int = DefaultBuckets): DataFrame = {
     val tok = tokenBuckets(docs.withColumn("is_tgt", isTarget), b)
-      .localCheckpoint() // the model pass AND the scoring pass read it
+      .transform(Barrier(_)) // the model pass AND the scoring pass read it
     val m = tok.groupBy(col("b")).agg(
         sum(when(col("is_tgt"), 1L).otherwise(0L)).as("tc"),
         sum(when(col("is_tgt"), 0L).otherwise(1L)).as("rc"))
-      .localCheckpoint() // feeds the totals AND the per-bucket LLR
+      .transform(Barrier(_)) // feeds the totals AND the per-bucket LLR
     val tots = m.agg(sum(col("tc")).as("tt"), sum(col("rc")).as("rt"))
     val llr = m.crossJoin(broadcast(tots))
       .select(col("b"), floor(log(
@@ -129,13 +130,13 @@ object Distributional {
     val c = tokenBuckets(docs, b)
       .groupBy(col("source"), col("b"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // feeds the totals AND the dense grid
+      .transform(Barrier(_)) // feeds the totals AND the dense grid
     val t = c.groupBy(col("source")).agg(sum(col("n")).as("tot"))
     val grid = t.crossJoin(spark.range(b).select(col("id").as("b")))
     val d = grid.join(c, Seq("source", "b"), "left")
       .select(col("source"), col("tot"), col("b"),
         coalesce(col("n"), lit(0L)).as("n"))
-      .localCheckpoint() // both sides of the pair join read it
+      .transform(Barrier(_)) // both sides of the pair join read it
     val p = d.select(col("source").as("src_p"), col("tot").as("tp"),
       col("b"), col("n").as("np"))
     val q = d.select(col("source").as("src_q"), col("tot").as("tq"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.functions.{Let, TextFunctions}
 
 /** Minimal-length EXACT substring dedup across documents (the
@@ -153,8 +154,7 @@ object ExactSubstr {
           graft.plans.Md5PrefixLongs(
             TextFunctions.positionalShingles(col(textCol), k)))
           .as(Seq("pos", "hv")))
-      .filter(col("hv").isNotNull)
-      .localCheckpoint()
+      .filter(col("hv").isNotNull).transform(Barrier(_))
 
   private def capDf(g0: DataFrame, maxDf: Option[Long]): DataFrame =
     maxDf match {

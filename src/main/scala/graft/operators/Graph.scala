@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 
 /** Property-graph-over-relational modeling (reference
   * `lecture-lab/graph_ddls.sql:7-33`): vertices(identifier, type,
@@ -149,7 +150,7 @@ object Graph {
     * transitive closure a near-dup pair list needs to become dedup
     * GROUPS (chain a~b~c collapses to one component even when a≁c
     * directly). Each iteration is one distributed join+aggregate;
-    * `localCheckpoint` truncates the lineage so the plan does not
+    * a [[Barrier]] truncates the lineage so the plan does not
     * grow with iterations (the classic Spark iterative-algorithm
     * discipline). Converges in O(log diameter) rounds: plain
     * propagation for the first rounds (shallow near-dup clusters
@@ -168,7 +169,7 @@ object Graph {
     // per round
     val sym = edges.select(col("u").as("a"), col("v").as("b"))
       .unionByName(edges.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint()
+      .transform(Barrier(_))
     // hybrid solve, the AQE-broadcast discipline: an iterative
     // distributed loop costs several jobs PER ROUND in fixed overhead,
     // which dominates utterly when the post-LSH graph is small (a
@@ -208,8 +209,7 @@ object Graph {
           col("id"))
     }
     var labels = sym.select(col("a").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint()
+      .withColumn("comp", col("id")).transform(Barrier(_))
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
@@ -228,7 +228,7 @@ object Graph {
             .as("comp"),
           (coalesce(col("ncomp"), col("comp")) < col("comp"))
             .as("_chg"))
-        .localCheckpoint()
+        .transform(Barrier(_))
       // the first round always changes labels on a non-empty graph
       // (every vertex starts self-labeled with ≥1 edge), so its count
       // job is skipped — but ONLY when another round will run the real
@@ -254,7 +254,7 @@ object Graph {
             "left")
           .select(col("id"),
             coalesce(col("_pcomp"), col("comp")).as("comp"))
-          .localCheckpoint()
+          .transform(Barrier(_))
       }
       i += 1
     }
@@ -304,7 +304,7 @@ object Graph {
       .distinct()
     // delta-endpoint labels: Δ-bounded, reused three times below
     val touched = ccOld.join(broadcast(verts), Seq("id"), "left_semi")
-      .localCheckpoint()
+      .transform(Barrier(_))
     val contracted = newEdges
       .join(broadcast(touched.select(col("id").as("u"),
         col("comp").as("_lu"))), Seq("u"), "left_outer")
@@ -365,7 +365,7 @@ object Graph {
     val members = labels
       .join(broadcast(affected), Seq("comp"), "left_semi")
       .join(broadcast(del), Seq("id"), "left_anti")
-      .localCheckpoint()
+      .transform(Barrier(_))
     val mu = members.select(col("id").as("u"))
     val mv = members.select(col("id").as("v"))
     val subEdges = edges
@@ -411,7 +411,7 @@ object Graph {
     // the degree-annotated join, and the vertex set all derive from
     // it, and without the checkpoint each derivation would re-execute
     // the caller's whole edge-construction pipeline
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
+    val e = Barrier(edges.select(col("src"), col("dst")))
     // hybrid solve (same discipline as [[connectedComponents]]): a
     // bounded-size graph runs the identical truncating fixed-point
     // arithmetic on the driver — Long `/` on non-negative values IS
@@ -437,10 +437,10 @@ object Graph {
           col("node"))
     }
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("_deg"))
-    val withDeg = e.join(deg, "src").localCheckpoint()
+    val withDeg = Barrier(e.join(deg, "src"))
     val verts = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+      .distinct().transform(Barrier(_))
     val base = ((100L - dampPct) * scale) / 100L
     var ranks = verts.withColumn("pr", lit(scale))
     var i = 0
@@ -453,10 +453,7 @@ object Graph {
         .select(col("node"),
           (lit(base) + expr(s"($dampPct * coalesce(_in, 0L)) DIV 100"))
             .as("pr"))
-        .localCheckpoint()
-      // no unpersist: it routes through the CacheManager, which has no
-      // entry for localCheckpoint'd plans — superseded rounds' blocks
-      // are freed by the ContextCleaner once their RDDs are GC'd
+        .transform(Barrier(_))
       ranks = next
       i += 1
     }
@@ -469,7 +466,7 @@ object Graph {
     * set), so a vertex is expanded exactly once no matter how many
     * paths reach it; with min-label BFS the first arrival IS the
     * minimum distance. Per round: one join + one anti join + a
-    * `localCheckpoint` (same flat-lineage discipline as
+    * [[Barrier]] (same flat-lineage discipline as
     * [[connectedComponents]]). The round count is bounded by
     * construction, so no convergence guard is needed — but an empty
     * frontier short-circuits the loop.
@@ -486,7 +483,7 @@ object Graph {
     */
   def boundedHops(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       localSolveMaxEdges: Long = 1L << 21): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
+    val e = Barrier(edges.select(col("src"), col("dst")))
     // hybrid solve (same discipline as [[connectedComponents]] /
     // [[pageRankInt]]): below the bounded edge threshold, a driver
     // BFS replaces maxHops × (join + anti join + checkpoint) rounds
@@ -515,15 +512,14 @@ object Graph {
           col("id"))
     }
     var settled = seeds.select(col("id")).distinct()
-      .withColumn("hops", lit(0)).localCheckpoint()
+      .withColumn("hops", lit(0)).transform(Barrier(_))
     var frontier = settled.select(col("id"))
     var h = 1
     while (h <= maxHops && !frontier.isEmpty) {
       val next = frontier.join(e, col("id") === col("src"))
         .select(col("dst").as("id")).distinct()
         .join(settled.select(col("id")), Seq("id"), "left_anti")
-        .withColumn("hops", lit(h))
-        .localCheckpoint()
+        .withColumn("hops", lit(h)).transform(Barrier(_))
       // the union is NOT re-checkpointed: both children already are,
       // so lineage stays flat (depth grows only with the bounded hop
       // count) — re-materializing the whole settled set every round
@@ -561,8 +557,7 @@ object Graph {
   def boundedCost(edges: DataFrame, seeds: DataFrame, maxCost: Long,
       maxIter: Int = 50, localSolveMaxEdges: Long = 1L << 21)
       : DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .localCheckpoint()
+    val e = Barrier(edges.select(col("src"), col("dst"), col("w")))
     val isLong = e.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     if (isLong && e.count() <= localSolveMaxEdges) {
@@ -594,7 +589,7 @@ object Graph {
           col("id"))
     }
     var labels = seeds.select(col("id")).distinct()
-      .withColumn("cost", lit(0L)).localCheckpoint()
+      .withColumn("cost", lit(0L)).transform(Barrier(_))
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
@@ -612,7 +607,7 @@ object Graph {
         .unionByName(relaxed.withColumn("_old", lit(null).cast("long")))
         .groupBy(col("id"))
         .agg(min(col("cost")).as("cost"), min(col("_old")).as("_old"))
-        .localCheckpoint()
+        .transform(Barrier(_))
       changed = next
         .filter(col("_old").isNull || col("cost") < col("_old"))
         .count()
@@ -655,7 +650,7 @@ object Graph {
   def bipartiteComponents(membership: DataFrame, maxIter: Int = 20,
       localSolveMaxRows: Long = 1L << 21): DataFrame = {
     val mem = membership.select(col("id"), col("key"))
-      .localCheckpoint() // every round joins against it
+      .transform(Barrier(_)) // every round joins against it
     // hybrid solve (r13 — the connectedComponents discipline applied
     // here): the iterative loop costs several jobs per round in fixed
     // overhead, which dominates when the membership table is small
@@ -704,7 +699,7 @@ object Graph {
     }
     var labels = mem.select(col("id")).distinct()
       .select(col("id"), col("id").as("comp"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     var iter = 0
     var changed = 1L
     while (iter < maxIter && changed > 0) {
@@ -721,7 +716,7 @@ object Graph {
           hopped.select(col("id").as("comp"), col("comp").as("_cc")),
           Seq("comp"), "left_outer")
         .select(col("id"), coalesce(col("_cc"), col("comp")).as("comp"))
-        .localCheckpoint()
+        .transform(Barrier(_))
       changed = jumped
         .join(labels.withColumnRenamed("comp", "_old"), Seq("id"))
         .filter(col("comp") =!= col("_old")).count()
@@ -778,12 +773,11 @@ object Graph {
     val adj = edges.select(col("v"), col("u"))
       .unionByName(e)
       .unionByName(nodes.select(col("v"), col("v").as("u")))
-      .distinct()
-      .localCheckpoint()
+      .distinct().transform(Barrier(_))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("v")).orderBy(col("_c").desc, col("lab"))
     var labels = nodes.select(col("v"), col("v").as("lab"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     var r = 0
     while (r < iters) {
       labels = adj
@@ -792,8 +786,7 @@ object Graph {
         .agg(count(lit(1)).as("_c"))
         .withColumn("_rk", row_number().over(w))
         .filter(col("_rk") === 1)
-        .select(col("v"), col("lab"))
-        .localCheckpoint()
+        .select(col("v"), col("lab")).transform(Barrier(_))
       r += 1
     }
     labels.select(col("v").as("id"), col("lab").as("comm"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.functions.TextFunctions
 
 /** Word-bigram backoff language model with INTEGER-EXACT scoring —
@@ -37,7 +38,7 @@ import graft.functions.TextFunctions
   *
   * Train cost: two aggregates over the trusted slice (unigrams,
   * bigrams) — the slice is read twice, its token stream is never
-  * materialized. The vocab-bounded count tables localCheckpoint so
+  * materialized. The vocab-bounded count tables checkpoint so
   * the four downstream consumers (prune, constants, c₁ attach,
   * scoring joins) never re-touch the corpus.
   */
@@ -83,15 +84,15 @@ object LangModel {
     val uni0 = docs
       .select(explode(TextFunctions.lowerTokens(textCol)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // vocab-bounded; feeds prune + c1 attach
+      .transform(Barrier(_)) // vocab-bounded; feeds prune + c1 attach
     val uni = uni0.orderBy(col("c").desc, col("w")).limit(uniK)
-      .localCheckpoint()
+      .transform(Barrier(_))
     val bi = transitions(docs, Seq.empty, textCol)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
       .orderBy(col("c12").desc, col("w1"), col("w2")).limit(biK)
       .join(uni0.withColumnRenamed("w", "w1")
         .withColumnRenamed("c", "c1"), Seq("w1"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val Array(row) = uni.agg(
       sum(col("c")).as("n"), count(lit(1)).as("v")).collect()
     BigramLm(bi, uni, row.getLong(0), row.getLong(1))
@@ -130,23 +131,23 @@ object LangModel {
       .groupBy(col("w"))
       .agg(count(lit(1)).as("_cs"),
         count(when(col("_isT"), 1)).as("_ct"))
-      .localCheckpoint() // feeds both prunes + both c1 attaches
+      .transform(Barrier(_)) // feeds both prunes + both c1 attaches
     val biBoth = transitions(d, Seq("_isT"), textCol)
       .groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("_cs12"),
         count(when(col("_isT"), 1)).as("_ct12"))
-      .localCheckpoint() // feeds both bigram prunes
+      .transform(Barrier(_)) // feeds both bigram prunes
     def model(cUni: String, cBi: String): BigramLm = {
       val uni0 = uniBoth.filter(col(cUni) > 0)
         .select(col("w"), col(cUni).as("c"))
       val uni = uni0.orderBy(col("c").desc, col("w")).limit(uniK)
-        .localCheckpoint()
+        .transform(Barrier(_))
       val bi = biBoth.filter(col(cBi) > 0)
         .select(col("w1"), col("w2"), col(cBi).as("c12"))
         .orderBy(col("c12").desc, col("w1"), col("w2")).limit(biK)
         .join(uni0.withColumnRenamed("w", "w1")
           .withColumnRenamed("c", "c1"), Seq("w1"))
-        .localCheckpoint()
+        .transform(Barrier(_))
       val Array(row) = uni.agg(
         sum(col("c")).as("n"), count(lit(1)).as("v")).collect()
       BigramLm(bi, uni, row.getLong(0), row.getLong(1))

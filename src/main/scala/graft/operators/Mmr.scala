@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 
 /** Maximal Marginal Relevance (Carbonell & Goldstein 1998) — greedy
   * diversified top-k re-ranking: pick the candidate maximizing
@@ -23,7 +24,7 @@ import org.apache.spark.sql.functions._
   * exchanges are keyed on qid over candidate-bounded tables (queries
   * × ≤ maxCand rows — retriever output, never the corpus); after the
   * first hash-partition every subsequent window/join reuses the qid
-  * clustering. The remaining-set is localCheckpointed per step: each
+  * clustering. The remaining-set is checkpointed per step: each
   * step reads its predecessor TWICE (argmax + update), and without
   * the cut the recompute tree doubles per level (the q221
   * two-consumer rule, compounded).
@@ -50,13 +51,13 @@ object Mmr {
       : DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val simsC = sims.select(col("qid"), col("a"), col("b"),
-      col("sim").cast("long").as("sim")).localCheckpoint()
+      col("sim").cast("long").as("sim")).transform(Barrier(_))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("cid"))
     var rem = cand
       .select(col("qid"), col("cid"), col("rel").cast("long").as("rel"),
         lit(0L).as("max_sim"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     var out: DataFrame = null
     for (step <- 1 to k) {
       val picked = rem
@@ -65,7 +66,7 @@ object Mmr {
         .filter(col("_rn") === 1)
         .select(col("qid"), col("cid"), lit(step).as("step"),
           col("score").as("mmr_score"))
-        .localCheckpoint() // selection + the rem update both read it
+        .transform(Barrier(_)) // selection + the rem update both read it
       out = if (out == null) picked else out.unionByName(picked)
       if (step < k) {
         rem = rem
@@ -78,7 +79,7 @@ object Mmr {
           .select(col("qid"), col("cid"), col("rel"),
             greatest(col("max_sim"), coalesce(col("_s"), lit(0L)))
               .as("max_sim"))
-          .localCheckpoint()
+          .transform(Barrier(_))
       }
     }
     out.select(col("qid"), col("step"), col("cid"), col("mmr_score"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.functions.TextFunctions
 import graft.operators.LangModel.flog2
 
@@ -51,7 +52,7 @@ object NaiveBayes {
   final case class NbModel(bits: DataFrame, classes: DataFrame)
 
   /** Train on a labeled slice. Both returned tables are
-    * vocab/class-bounded and localCheckpointed — the labeled corpus is
+    * vocab/class-bounded and checkpointed — the labeled corpus is
     * touched twice (token counts, doc counts) and never again.
     */
   def train(docs: DataFrame, labelCol: String, textCol: Column,
@@ -61,13 +62,12 @@ object NaiveBayes {
         explode(TextFunctions.lowerTokens(textCol)).as("w"))
     val wc0 = toks.groupBy(col("w"), col("label"))
       .agg(count(lit(1)).as("cwc"))
-      .localCheckpoint() // vocab prune + per-class mass both read it
+      .transform(Barrier(_)) // vocab prune + per-class mass both read it
     val vocab = wc0.groupBy(col("w")).agg(sum(col("cwc")).as("_tc"))
       .orderBy(col("_tc").desc, col("w")).limit(vocabK)
-      .select(col("w"))
-      .localCheckpoint()
+      .select(col("w")).transform(Barrier(_))
     val wc = wc0.join(vocab, Seq("w")) // pruned (w, label, cwc)
-      .localCheckpoint()
+      .transform(Barrier(_))
     val vRows = vocab.count()
     // per-class constants over the PRUNED vocab + doc-count priors.
     // nDocs = Σ per-class doc counts — summed from the C-row count
@@ -78,7 +78,7 @@ object NaiveBayes {
     // already counted)
     val classCounts = docs.groupBy(col(labelCol).as("label"))
       .agg(count(lit(1)).as("_ndc"))
-      .localCheckpoint() // C rows; prior join + the nDocs fold read it
+      .transform(Barrier(_)) // C rows; prior join + the nDocs fold read it
     val nDocs = classCounts.agg(coalesce(sum(col("_ndc")), lit(0L)))
       .head().getLong(0)
     val classes = classCounts
@@ -88,7 +88,7 @@ object NaiveBayes {
         (flog2(lit(nDocs)) - flog2(col("_ndc"))).as("prior_bits"),
         flog2(coalesce(col("_nc"), lit(0L)) + lit(vRows))
           .as("unseen_bits"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     // dense |V|×C bits table: every vocab word gets a row per class
     // (unseen-in-class words at the class's max penalty), so scoring
     // is ONE broadcast join — no per-class null handling downstream
@@ -97,7 +97,7 @@ object NaiveBayes {
       .select(col("w"), col("label"),
         (col("unseen_bits") - flog2(coalesce(col("cwc"), lit(0L)) + 1L))
           .as("w_bits"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     NbModel(bits, classes)
   }
 

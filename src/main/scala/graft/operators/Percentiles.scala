@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Barrier
 
 /** Exact continuous percentiles by distributed rank selection.
   *
@@ -133,7 +134,7 @@ object Percentiles {
     val sorted = data
       .repartitionByRange(nPart, col("g"), col("v"))
       .sortWithinPartitions(col("g"), col("v"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val rdd = sorted.rdd.map(r => (r.getString(0), r.getDouble(1)))
     // range partitioning splits a group across at most adjacent
     // partitions, so the sum of per-partition distincts over-counts
@@ -217,7 +218,7 @@ object Percentiles {
     // two join sides, and each consumption would otherwise re-stream
     // the full sorted data
     val picked = spark.createDataFrame(pickedRdd, pickedSchema)
-      .localCheckpoint()
+      .transform(Barrier(_))
 
     // tiny: |groups|·|ps| rows joined against the flanking values
     import spark.implicits._

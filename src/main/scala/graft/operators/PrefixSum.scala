@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.core.Barrier
 
 /** Distributed exclusive prefix sum (scan) — the primitive Spark's
   * window API cannot express at scale: `Window.orderBy(...)` with no
@@ -14,7 +15,7 @@ import org.apache.spark.sql.types.LongType
   *
   *  1. range-repartition on the order key and sort within partitions
   *     (one exchange — the sort Spark would do anyway), materialized
-  *     once with localCheckpoint so both passes see the identical
+  *     once behind a [[Barrier]] so both passes see the identical
   *     layout;
   *  2. per-partition totals → driver (ONE long per partition — the
   *     bounded-collect pattern), exclusive-scanned into partition
@@ -57,7 +58,7 @@ object PrefixSum {
     val sorted = df
       .repartitionByRange(nPart, orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.map(col): _*)
-      .localCheckpoint()
+      .transform(Barrier(_))
     val vIdx = sorted.schema.fieldIndex(valueCol)
     val partTotals = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
       var s = 0L
@@ -100,7 +101,7 @@ object PrefixSum {
     val sorted = df
       .repartitionByRange(nPart, orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.map(col): _*)
-      .localCheckpoint()
+      .transform(Barrier(_))
     val partCounts = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
       var n = 0L
       it.foreach(_ => n += 1L)

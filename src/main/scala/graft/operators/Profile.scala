@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.functions.TextFunctions
 import graft.operators.LangModel.flog2
 
@@ -105,10 +106,10 @@ object Profile {
     require(minCount >= 1 && topK >= 1,
       s"minCount/topK must be >= 1, got $minCount/$topK")
     val tr = LangModel.transitions(df, Seq.empty, textCol)
-      .localCheckpoint() // bigram + both marginal aggregates read it
+      .transform(Barrier(_)) // bigram + both marginal aggregates read it
     val bi = tr.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
-      .localCheckpoint() // N and the filtered join both read it
+      .transform(Barrier(_)) // N and the filtered join both read it
     val n = bi.agg(coalesce(sum(col("c12")), lit(0L)).as("n"))
     val left = tr.groupBy(col("w1")).agg(count(lit(1)).as("c1"))
     val right = tr.groupBy(col("w2")).agg(count(lit(1)).as("c2"))
@@ -154,7 +155,7 @@ object Profile {
       .join(wc(newDf, "c2"), Seq("w"), "full_outer")
       .select(coalesce(col("c1"), lit(0L)).as("c1"),
         coalesce(col("c2"), lit(0L)).as("c2"))
-      .localCheckpoint() // the totals and the TVD pass both read it
+      .transform(Barrier(_)) // the totals and the TVD pass both read it
     val tot = j.agg(
       coalesce(sum(col("c1")), lit(0L)).as("_n1"),
       coalesce(sum(col("c2")), lit(0L)).as("_n2"),
@@ -199,7 +200,7 @@ object Profile {
     val wc = df
       .select(explode(TextFunctions.lowerTokens(textCol)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // totals + the top-k cut both read it
+      .transform(Barrier(_)) // totals + the top-k cut both read it
     val top = wc.orderBy(col("c").desc, col("w")).limit(topK)
       .agg(coalesce(sum(col("c")), lit(0L)).as("_topc"))
     wc.agg(
@@ -314,7 +315,7 @@ object Profile {
       .groupBy(flog2(col("rk")).as("octave"))
       .agg(count(lit(1)).as("n_types"), sum(col("c")).as("mass"),
         min(col("c")).as("min_c"), max(col("c")).as("max_c"))
-      .localCheckpoint() // ≤64 rows; totals + share pass both read it
+      .transform(Barrier(_)) // ≤64 rows; totals + share pass both read it
     val tot = oct.agg(coalesce(sum(col("mass")), lit(0L)).as("_tot"))
     oct.crossJoin(broadcast(tot))
       .selectExpr("octave", "n_types", "mass", "min_c", "max_c",
@@ -352,7 +353,7 @@ object Profile {
       .select(col(keyCol).cast("string").as("src"),
         explode(TextFunctions.lowerTokens(textCol)).as("w"))
       .groupBy(col("src"), col("w")).agg(count(lit(1)).as("cs"))
-      .localCheckpoint() // marginal + totals + join all read it
+      .transform(Barrier(_)) // marginal + totals + join all read it
     val wt = sw.groupBy(col("w"))
       .agg(sum(col("cs")).as("ct"), count(lit(1)).as("nsrc"))
     val st = sw.groupBy(col("src"))
@@ -424,7 +425,7 @@ object Profile {
         perDoc.withColumn("_one", lit(1L)), Seq("doc"), "_one", "_rk0")
       .withColumn("bucket",
         expr(s"CAST(_rk0 * $buckets DIV ${n}L AS BIGINT) + 1"))
-      .localCheckpoint() // per-bucket rollup + first-occurrence join
+      .transform(Barrier(_)) // per-bucket rollup + first-occurrence join
     val firstOcc = docs
       .select(col("doc"), explode(col("t")).as("w"))
       .groupBy(col("w")).agg(min(col("doc")).as("doc"))

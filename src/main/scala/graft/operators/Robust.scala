@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 
 /** Robust outlier gating over an integer metric — the median / MAD
   * (median absolute deviation) filter a curation pipeline runs on
@@ -77,8 +78,8 @@ object Robust {
     val counts = df
       .groupBy(col(valueCol).cast("long").as("v"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // the median and the deviation table both read it
-    val med = med2OfCounts(counts).localCheckpoint() // 1 row, read twice
+      .transform(Barrier(_)) // the median and the deviation table both read it
+    val med = Barrier(med2OfCounts(counts)) // 1 row, read twice
     val dev = counts.crossJoin(broadcast(med))
       .select(abs(lit(2L) * col("v") - col("med2")).as("v"), col("c"))
       .groupBy(col("v")).agg(sum(col("c")).as("c"))

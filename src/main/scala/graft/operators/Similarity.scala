@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 
 /** Similarity search over embedding columns (ARRAY<FLOAT>).
   *
@@ -121,7 +122,7 @@ object Similarity {
   }
 
   /** The SemDeDup assignment stage: every vector joined back to its
-    * [[ivfAssign]] cell with its norm hoisted, localCheckpointed ONCE
+    * [[ivfAssign]] cell with its norm hoisted, behind ONE [[Barrier]]
     * (both pair sides read it; re-deriving would re-run the centroid
     * scan twice). Exposed so the plan guard can drive the real pair
     * stage against real inputs.
@@ -134,7 +135,7 @@ object Similarity {
       .select(col("vec_id"), col("centroid_id"))
       .join(vectors.select(col("vec_id"), col("embedding")), "vec_id")
       .withColumn("_n", norm(col("embedding")))
-      .localCheckpoint()
+      .transform(Barrier(_))
 
   /** The SemDeDup pair stage, exposed as its own seam so the plan
     * guard (PlanShapeSpec) can pin its shape directly: verified
@@ -176,7 +177,7 @@ object Similarity {
     * Scale shape: within-cluster pair cost is Σ c² over cluster
     * sizes — the knob is the centroid count, exactly the SemDeDup
     * recipe (more cells → smaller c). The assignment is computed ONCE
-    * and localCheckpointed (both pair sides read it; re-deriving
+    * and checkpointed (both pair sides read it; re-deriving
     * would re-run the centroid scan twice), the pair join shuffles on
     * centroid_id only — vectors never ride an all-pairs or
     * cross-cluster exchange — and the component closure runs in the
@@ -211,7 +212,7 @@ object Similarity {
     * Each round is one distributed pass: centroids (k·d values)
     * broadcast into the assignment scan, then ONE shuffle of
     * (centroid, dim) partials for the update — the corpus is
-    * localCheckpointed once and never re-read from storage. Between
+    * checkpointed once and never re-read from storage. Between
     * rounds the driver collects exactly k·d fixed-point components
     * (bounded, corpus-independent — the same O(1)-per-round
     * discipline as Bpe.learn), so a 100 TB corpus costs `rounds`
@@ -233,7 +234,7 @@ object Similarity {
     val spark = vectors.sparkSession
     import spark.implicits._
     val emb = vectors.select(col("vec_id"), col("embedding"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     def update(cents: DataFrame): DataFrame =
       ivfAssign(emb, cents)
         .select(col("vec_id"), col("centroid_id"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.functions.TextFunctions
 
 /** Winnowing fingerprints (Schleimer, Wilkerson & Aiken 2003 — the
@@ -87,7 +88,7 @@ object Winnow {
     // is only self-consistent because both sides read the same cap
     val kept = keptIndex(fps, maxDf)
     val pairs = sharedFromKept(kept)
-      .localCheckpoint() // both directions read it
+      .transform(Barrier(_)) // both directions read it
     val nf = kept.groupBy(col("doc")).agg(count(lit(1)).as("nfp"))
     val dirs = pairs
       .select(col("a").as("doc"), col("b").as("partner"), col("shared"))
@@ -121,12 +122,12 @@ object Winnow {
   def keptIndex(fps: DataFrame, maxDf: Int): DataFrame = {
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
     val byFp = fps.select(col("doc"), col("fp")).distinct()
-      .localCheckpoint() // the df cap + the surviving join both read it
+      .transform(Barrier(_)) // the df cap + the surviving join both read it
     val keep = byFp.groupBy(col("fp"))
       .agg(count(lit(1)).as("_nd"))
       .filter(col("_nd") <= maxDf && col("_nd") >= 2)
       .select(col("fp"))
-    byFp.join(keep, Seq("fp")).localCheckpoint()
+    Barrier(byFp.join(keep, Seq("fp")))
   }
 
   /** Pair counts over an already-built [[keptIndex]]. */

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.operators.{IncrementalAgg, Similarity}
 
 /** Second-half round-6 additions: MIN/MAX-aware CDC retraction (the
@@ -226,7 +226,7 @@ object Extended12 {
         Tables.loadParallel(spark, dir, "documents"), "text", "doc_id",
         maxDist = 3, bands = 4)
       .select($"id_a".as("u"), $"id_b".as("v"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val ccOld = Graph.connectedComponents(
       pairs.filter(!isNew($"u") && !isNew($"v")))
     Graph.incrementalComponents(ccOld,
@@ -300,7 +300,7 @@ object Extended12 {
     val pairs = Dedup.simhashNearDupPairs(docs, "text", "doc_id",
         maxDist = 3, bands = 4)
       .select($"id_a".as("u"), $"id_b".as("v"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val ccOld = Graph.connectedComponents(
       pairs.filter(!isNew($"u") && !isNew($"v")))
     val ccAll = Graph.incrementalComponents(ccOld,
@@ -312,7 +312,7 @@ object Extended12 {
       .withColumn("is_new", isNew($"doc_id"))
       .withColumn("rep_old",
         when(!$"is_new", coalesce($"comp_old", $"doc_id")))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val anchorRep = broadcast(members.filter(!$"is_new")
         .groupBy($"comp").agg(min($"doc_id").as("anchor_id")))
       .join(members.select($"doc_id".as("anchor_id"),
@@ -362,7 +362,7 @@ object Extended12 {
     val pairs = Dedup.simhashNearDupPairs(docs, "text", "doc_id",
         maxDist = 3, bands = 4)
       .select($"id_a".as("u"), $"id_b".as("v"))
-      .localCheckpoint() // labeling AND retained edge log
+      .transform(Barrier(_)) // labeling AND retained edge log
     val labels = Graph.connectedComponents(pairs)
     val deleted = docs.select($"doc_id".as("id"))
       .filter($"id" % 10 < 2)

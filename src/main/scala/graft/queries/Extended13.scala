@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.operators.{IncrementalAgg, Packing}
 
 /** Round-6 second-session additions: materialized next-fit sequence
@@ -181,7 +181,7 @@ object Extended13 {
     // through a checkpoint)
     val mass = d.groupBy($"lang").agg(sum($"n").as("toks"))
       .withColumn("wt", isqrt($"toks"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val tot = mass.agg(sum($"toks").as("total_toks"),
       sum($"wt").as("total_w"))
     // all operands non-negative → DIV ≡ flooring //; the one-row

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.functions.TDigest
 
 /** Round-6 final tranche: the t-digest mergeable quantile state
@@ -161,7 +161,7 @@ object Extended14 {
       .select(($"doc_id" % 4).as("period"),
         explode(graft.functions.TextFunctions.lowerTokens($"text"))
           .as("tok"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val total = toks.count()
     // maintenance layer: one bounded summary per period
     val perPeriod = toks.groupBy($"period")

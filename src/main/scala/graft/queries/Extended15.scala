@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.operators.Sampling
 
 /** Round-6 final additions: the curation primitives between "score the
@@ -59,7 +59,7 @@ object Extended15 {
     // (the take's broadcast and the final rollup join) — checkpoint so
     // the corpus-count aggregate runs once (the q221 reuse lesson)
     val alloc = Sampling.allocateLargestRemainder(
-      counts, Seq("source"), "n_docs", 97L).localCheckpoint()
+      counts, Seq("source"), "n_docs", 97L).transform(Barrier(_))
     val taken = Sampling.takeStratified(docs, Seq("source"), "doc_id",
         alloc)
       .groupBy($"source")
@@ -129,7 +129,7 @@ object Extended15 {
     import spark.implicits._
     def docs = Tables.loadParallel(spark, dir, "documents")
       .select($"doc_id", $"source", $"text")
-    // training is eager (localCheckpoints + a constants collect) on
+    // training is eager (barriers + a constants collect) on
     // the trusted slice; the pruned model broadcasts into the scoring
     val lm = graft.operators.LangModel.trainBigram(
       docs.filter($"source".isin("src0", "src1", "src2", "src3", "src4")),
@@ -188,7 +188,7 @@ object Extended15 {
       .select(($"doc_id" % 4).as("period"),
         explode(graft.functions.TextFunctions.lowerTokens($"text"))
           .as("w"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     // maintenance layer: one 4×512 grid per period, map-side combined
     val perPeriod = toks.groupBy($"period")
       .agg(CountMin.sketch(512)($"w").as("sk"))
@@ -300,7 +300,7 @@ object Extended15 {
       .select($"source",
         explode(graft.functions.TextFunctions.lowerTokens($"text"))
           .as("w"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     def grid(src: String): Array[Long] =
       toks.filter($"source" === src)
         .agg(CountMin.sketch(512)($"w")).head().getSeq[Long](0).toArray
@@ -643,14 +643,14 @@ object Extended15 {
         Dedup.simhashNearDupPairs(docs, "text", "doc_id",
           maxDist = 3, bands = 4)
           .select($"id_a".as("u"), $"id_b".as("v")))
-      .localCheckpoint() // duplicate-pairs-bounded, two consumers
+      .transform(Barrier(_)) // duplicate-pairs-bounded, two consumers
     // narrow (3 longs/row) with two consumers below (nGroups +
     // meanCi's pass) — checkpoint, the q221 reuse rule again
     val grouped = docs.select($"doc_id", $"n_chars")
       .join(broadcast(labels), $"doc_id" === $"id", "left")
       .select($"doc_id", $"n_chars",
         coalesce($"comp", $"doc_id").as("grp"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val nGroups = grouped.select($"grp").distinct().count()
     Bootstrap.meanCi(grouped, "grp", "n_chars",
         reps = 40, loRank = 2, hiRank = 39)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.operators.{Calibrate, RankCorr, RankEval, RetrievalEval,
   Similarity}
 
@@ -105,7 +105,7 @@ object Extended16 {
       val queries = emb.filter($"vec_id" < 8)
         .select($"vec_id".as("qid"), $"label".as("ql"),
           $"embedding".as("qvec"))
-        .localCheckpoint()
+        .transform(Barrier(_))
       val ranked = Similarity.bruteForceTopK(
         broadcast(queries.select($"qid", $"qvec")),
         emb.select($"vec_id".as("cid"), $"embedding".as("cvec")), k)
@@ -178,7 +178,7 @@ object Extended16 {
       // checkpoint so the pruned scan runs once
       val q = emb.filter($"vec_id" < 8)
         .select($"vec_id".as("qid"), $"embedding".as("qvec"))
-        .localCheckpoint()
+        .transform(Barrier(_))
       val rankA = Similarity.bruteForceTopK(broadcast(q),
         emb.select($"vec_id".as("cid"), $"embedding".as("cvec")), 20)
         .select($"qid", $"cid", $"rank")

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.operators.{Association, Mmr, NaiveBayes, Profile}
 
 /** Round-7 tranche II: the classify / agree / compose layer a
@@ -337,7 +337,7 @@ object Extended17 {
             .otherwise(transform(e, _ => lit(0L)))
         }
       val c = emb.select($"vec_id", codes($"embedding").as("codes"))
-        .localCheckpoint() // corpus codes + the query slice read it
+        .transform(Barrier(_)) // corpus codes + the query slice read it
       val qc = c.filter($"vec_id" < 6)
         .select($"vec_id".as("qid"), $"codes".as("qcodes"))
       def dot(a: org.apache.spark.sql.Column,
@@ -352,7 +352,7 @@ object Extended17 {
         .withColumn("rn", row_number().over(w))
         .filter($"rn" <= 12)
         .select($"qid", $"cid", $"codes", $"rel")
-        .localCheckpoint() // the pair self-join reads it twice
+        .transform(Barrier(_)) // the pair self-join reads it twice
       val sims = cand.select($"qid", $"cid".as("a"),
           $"codes".as("_ca"))
         .join(cand.select($"qid", $"cid".as("b"), $"codes".as("_cb")),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Waterfill}
 import graft.plans.MultiContainsCount
@@ -93,7 +93,7 @@ object Extended20 {
     // every doc (singletons included) arrives labeled — no spine rejoin
     val cc = Dedup.simhashComponents(docs, "text", "doc_id")
       .select($"id".as("doc_id"), $"comp")
-      .localCheckpoint() // sizes + output both read it
+      .transform(Barrier(_)) // sizes + output both read it
     val sizes = cc.groupBy($"comp").agg(count(lit(1)).as("n_members"))
     cc.join(sizes, Seq("comp"))
       .withColumn("weight_ppm",
@@ -140,7 +140,7 @@ object Extended20 {
       .groupBy($"source")
       .agg(sum(size(TextFunctions.lowerTokens($"text")).cast("long"))
         .as("toks"))
-      .localCheckpoint() // budget agg + the waterfill scan both read it
+      .transform(Barrier(_)) // budget agg + the waterfill scan both read it
     val total = totals.agg(coalesce(sum($"toks"), lit(0L)))
       .as[Long].head()
     Waterfill.allocate(totals, "source", "toks", 3 * total / 5)

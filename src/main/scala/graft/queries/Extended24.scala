@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.operators.{Graph, Winnow}
 
 /** Round-8 tranche X: the pair-free dedup grouping — connected
@@ -42,11 +42,11 @@ object Extended24 {
     val docs = Tables.loadParallel(spark, dir, "documents")
     val byFp = Winnow.fingerprints(docs, "doc_id", "text", k = 5, w = 4)
       .select($"doc".as("id"), $"fp".as("key")).distinct()
-      .localCheckpoint() // df cap + membership both read it
+      .transform(Barrier(_)) // df cap + membership both read it
     val keep = byFp.groupBy($"key").agg(count(lit(1)).as("_nd"))
       .filter($"_nd".between(2, 20)).select($"key")
     val cc = Graph.bipartiteComponents(byFp.join(keep, Seq("key")))
-      .localCheckpoint() // membership + sizes both read it
+      .transform(Barrier(_)) // membership + sizes both read it
     // docs sharing a kept fp got a component; the rest are singletons
     val sizes = cc.groupBy($"comp").agg(count(lit(1)).as("n_members"))
     docs.select($"doc_id")

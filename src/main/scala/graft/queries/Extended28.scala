@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.operators.{ClusterEval, Coreset, Sampling}
 
 /** Round-9 tranches XV+XVI: cluster-separation index, diversity
@@ -238,7 +238,7 @@ object Extended28 {
       .select($"doc_id".as("id"),
         graft.functions.Let(gray)(g => Multimodal.dHash60(g))
           .as("sig"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     Dedup.hashNearDupPairs(sigs, maxDist = 3, bands = 4)
       .groupBy($"dist")
       .agg(count(lit(1)).as("n_pairs"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.functions.Exact._
 import graft.functions.{MisraGries, TextFunctions}
 import graft.functions.TextFunctions.{lowerTokens, chunksOfTokens}
@@ -116,7 +116,7 @@ object Extended3 {
     // pass stays bounded-memory)
     val toks = Tables.loadParallel(spark, dir, "documents")
       .select(explode(lowerTokens($"text")).as("tok"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val total = toks.count()
     val cands: Seq[String] = toks
       .agg(MisraGries.candidates(512)($"tok").as("c"))
@@ -157,7 +157,7 @@ object Extended3 {
         explode(graft.functions.Let(lowerTokens($"text"))(t =>
           chunksOfTokens(t, chunkSize = 8, overlap = 0)))
           .as("chunk"))
-      .localCheckpoint() // df agg and per-doc rollup both read it
+      .transform(Barrier(_)) // df agg and per-doc rollup both read it
     val df = chunks.groupBy($"chunk")
       .agg(countDistinct($"doc_id").as("df"))
     chunks.join(df, "chunk")
@@ -218,7 +218,7 @@ object Extended3 {
     import spark.implicits._
     val s = Tables.loadParallel(spark, dir, "documents")
       .select($"doc_id", TextFunctions.sortedShingles($"text").as("sh"))
-      .localCheckpoint() // probe and corpus sides share the staging
+      .transform(Barrier(_)) // probe and corpus sides share the staging
     val probes = s.filter($"doc_id" < 10 && size($"sh") > 0)
       .select($"doc_id".as("id_probe"), $"sh".as("sh_p"))
     s.join(broadcast(probes), $"doc_id" =!= $"id_probe")
@@ -386,42 +386,29 @@ object Extended3 {
       .orderBy($"source", $"rn")
   }
 
-  /** Correlated LATERAL subquery — top-2 orders per customer via an
-    * ORDER BY … LIMIT inside the lateral (the SQL-surface twin of
-    * q25's aggregator top-k). Catalyst decorrelates it into a ranked
-    * join rather than re-executing the subquery per outer row — the
-    * shape that survives a fact-scale outer side.
-    */
-  val q135_lateral_topk: Q = Q(
-    "q135_lateral_topk",
+  private val q135Sql =
     """SELECT c_custkey, o_orderkey, o_totalprice
       |FROM customer c, LATERAL (
       |  SELECT o_orderkey, o_totalprice FROM orders o
       |  WHERE o.o_custkey = c.c_custkey
       |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
       |WHERE c_custkey <= 100
-      |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin) {
+      |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin
+
+  /** Correlated LATERAL subquery — top-2 orders per customer via an
+    * ORDER BY … LIMIT inside the lateral (the SQL-surface twin of
+    * q25's aggregator top-k). Catalyst decorrelates it into a ranked
+    * join rather than re-executing the subquery per outer row — the
+    * shape that survives a fact-scale outer side.
+    */
+  val q135_lateral_topk: Q = Q("q135_lateral_topk", q135Sql) {
     (spark, dir) =>
     Tables.load(spark, dir, "customer").createOrReplaceTempView("customer")
     Tables.load(spark, dir, "orders").createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT c_custkey, o_orderkey, o_totalprice
-        |FROM customer c, LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-        |WHERE c_custkey <= 100
-        |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin)
+    spark.sql(q135Sql)
   }
 
-  /** Scalar subqueries in the predicate: parts priced above the
-    * corpus mean, compared in exact cross-multiplied decimals
-    * (`price · n > Σprice` — never a decimal AVG, whose result scale
-    * and rounding are engine-specific). Both scalars broadcast as
-    * one-row subquery results.
-    */
-  val q136_scalar_subquery: Q = Q(
-    "q136_scalar_subquery",
+  private val q136Sql =
     """SELECT p_brand, COUNT(*) AS n,
       |  CAST(MIN(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
       |    AS min_price
@@ -429,17 +416,17 @@ object Extended3 {
       |WHERE CAST(p_retailprice AS DECIMAL(18,2))
       |    * (SELECT COUNT(*) FROM part)
       |  > (SELECT SUM(CAST(p_retailprice AS DECIMAL(18,2))) FROM part)
-      |GROUP BY p_brand ORDER BY p_brand""".stripMargin) { (spark, dir) =>
+      |GROUP BY p_brand ORDER BY p_brand""".stripMargin
+
+  /** Scalar subqueries in the predicate: parts priced above the
+    * corpus mean, compared in exact cross-multiplied decimals
+    * (`price · n > Σprice` — never a decimal AVG, whose result scale
+    * and rounding are engine-specific). Both scalars broadcast as
+    * one-row subquery results.
+    */
+  val q136_scalar_subquery: Q = Q("q136_scalar_subquery", q136Sql) { (spark, dir) =>
     Tables.load(spark, dir, "part").createOrReplaceTempView("part")
-    spark.sql(
-      """SELECT p_brand, COUNT(*) AS n,
-        |  CAST(MIN(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS min_price
-        |FROM part
-        |WHERE CAST(p_retailprice AS DECIMAL(18,2))
-        |    * (SELECT COUNT(*) FROM part)
-        |  > (SELECT SUM(CAST(p_retailprice AS DECIMAL(18,2))) FROM part)
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin)
+    spark.sql(q136Sql)
   }
 
   /** PERCENTILE_DISC quartiles per return flag — the discrete cousin

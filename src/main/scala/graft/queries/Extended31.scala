@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Decontam, Dedup, ExactSubstr, Similarity}
 
@@ -93,7 +93,7 @@ object Extended31 {
     val benchGrams = graft.core.Par.bg {
       graft.operators.Decontam.benchGramsOf(
         docs.filter(TextFunctions.datasetSplit($"doc_id") === "test"),
-        "doc_id", "text", n = 13).localCheckpoint()
+        "doc_id", "text", n = 13).transform(Barrier(_))
     }
     val s1 = stage1(spark, docs)
     val s2 = stage2(spark, s1, docs)
@@ -123,8 +123,7 @@ object Extended31 {
     docs
       .select($"doc_id", TextFunctions.fingerprint($"text").as("_fp"))
       .groupBy($"_fp").agg(min($"doc_id").as("doc_id"))
-      .select($"doc_id")
-      .localCheckpoint()
+      .select($"doc_id").transform(Barrier(_))
   }
 
   /** stage 2 — exact-substring coverage gate (q287's spans): drop
@@ -144,8 +143,7 @@ object Extended31 {
         size(TextFunctions.lowerTokens($"text")).as("_n"))
       .join(cov, Seq("doc_id"), "left")
       .filter(coalesce($"_dup", lit(0L)) * 2 < $"_n")
-      .select($"doc_id")
-      .localCheckpoint()
+      .select($"doc_id").transform(Barrier(_))
   }
 
   /** stage 3 — MinHash+LSH near-dup dedup over the substring-gate
@@ -160,8 +158,7 @@ object Extended31 {
     import spark.implicits._
     Dedup.nearDupDedup(docs.join(s2, "doc_id"),
         "text", "doc_id", jaccardThreshold = 0.8, k = 16, bands = 4)
-      .select($"doc_id")
-      .localCheckpoint()
+      .select($"doc_id").transform(Barrier(_))
   }
 
   /** stage 4 — SemDeDup over the survivors' embeddings (vec_id =
@@ -180,7 +177,7 @@ object Extended31 {
         centroids, cosThreshold = 0.30)
       .filter($"kept")
       .select($"vec_id".as("doc_id"))
-      .localCheckpoint()
+      .transform(Barrier(_))
   }
 
   /** stage 5 — decontamination (q306's audit): the TRAIN-split
@@ -204,7 +201,7 @@ object Extended31 {
       .select($"doc_id")
     train.select($"doc_id")
       .join(dirty, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Barrier(_))
   }
 
   /** stage 6 — per-source token-budget packing (q75's greedy rule:

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Decontam, Dedup, ExactSubstr, Multimodal}
 
@@ -175,7 +175,7 @@ object Extended32 {
     val s1 = standing
       .select($"doc_id", TextFunctions.fingerprint($"text").as("_fp"))
       .groupBy($"_fp").agg(min($"doc_id").as("doc_id"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val s1Docs = docs.join(s1.select($"doc_id"), "doc_id")
     // ONE standing anchor index for BOTH consumers (r13, guide §2.4
     // "remove shuffles outright"/§1.2 "don't compute things twice"):
@@ -199,8 +199,7 @@ object Extended32 {
             size(TextFunctions.lowerTokens($"text")).as("_n"))
           .join(covS, Seq("doc_id"), "left")
           .filter(coalesce($"_dup", lit(0L)) * 2 < $"_n")
-          .select($"doc_id")
-          .localCheckpoint()
+          .select($"doc_id").transform(Barrier(_))
         // the standing index = every doc that ENTERED yesterday's
         // minhash stage (S2) — see the scaladoc note on non-transitive
         // Jaccard. Checkpointed (r13): the incremental probe reads it
@@ -210,7 +209,7 @@ object Extended32 {
         // scaladoc prescribes persisting.
         val histIdx = Dedup.bandIndex(docs.join(s2, "doc_id"),
             "text", "doc_id", k = 16, bands = 4)
-          .localCheckpoint()
+          .transform(Barrier(_))
         (s2, histIdx)
       },
       {
@@ -218,8 +217,7 @@ object Extended32 {
           .select($"doc_id", TextFunctions.fingerprint($"text").as("_fp"))
           .groupBy($"_fp").agg(min($"doc_id").as("doc_id"))
           .join(s1.select($"_fp"), Seq("_fp"), "left_anti")
-          .select($"doc_id")
-          .localCheckpoint()
+          .select($"doc_id").transform(Barrier(_))
         val d1 = docs.join(i1, "doc_id")
         val cov = ExactSubstr.incrementalDupSpansOfOcc(occS,
             ExactSubstr.occIndex(d1, "doc_id", "text", k = 8),
@@ -230,15 +228,13 @@ object Extended32 {
             size(TextFunctions.lowerTokens($"text")).as("_n"))
           .join(cov, Seq("doc_id"), "left")
           .filter(coalesce($"_dup", lit(0L)) * 2 < $"_n")
-          .select($"doc_id")
-          .localCheckpoint()
+          .select($"doc_id").transform(Barrier(_))
         (i1, i2)
       })
     val i3 = Dedup.incrementalNearDup(histIdx, docs.join(i2, "doc_id"),
         "text", "doc_id", jaccardThreshold = 0.8, k = 16, bands = 4)
       .filter(!$"is_dup")
-      .select($"id".as("doc_id"))
-      .localCheckpoint()
+      .select($"id".as("doc_id")).transform(Barrier(_))
     val train = docs.join(i3, "doc_id")
       .filter(TextFunctions.datasetSplit($"doc_id") === "train")
     val benchmark =

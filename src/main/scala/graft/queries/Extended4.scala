@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.functions.Exact._
 import graft.operators.{BloomJoin, Graph, Scd}
 
@@ -700,7 +700,7 @@ object Extended4 {
     import spark.implicits._
     val items = Tables.load(spark, dir, "lineitem")
       .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
-      .localCheckpoint() // pairs, supports, and the total all read it
+      .transform(Barrier(_)) // pairs, supports, and the total all read it
     val pairs = graft.operators.Graph.coPairs(items, $"o", $"p",
         spark.sessionState.conf.numShufflePartitions, packKey = true)
       .select($"item_a", $"item_b", $"n".as("n_ab"))
@@ -751,7 +751,7 @@ object Extended4 {
           explode(graft.functions.TextFunctions.lowerTokens($"text"))
             .as("tok"))
         .filter($"tok".isin(terms: _*))
-        .localCheckpoint() // df and tf both read the filtered postings
+        .transform(Barrier(_)) // df and tf both read the filtered postings
       val dfreq = toks.groupBy($"tok")
         .agg(countDistinct($"doc_id").as("df"))
       val bigN = Tables.load(spark, dir, "documents")

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 
 /** Round-6 surface batch: corpus-level chunk ("line") dedup with
   * global first-occurrence retention, and the runtime-error-safe
@@ -627,7 +627,7 @@ object Extended5 {
       .groupBy(($"l_partkey" * 2).cast("long").as("p"),
         ($"l_suppkey" * 2 + 1).cast("long").as("s"))
       .agg(min($"l_quantity".cast("long")).as("w"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val edges = lanes.select($"p".as("src"), $"s".as("dst"), $"w")
       .unionByName(lanes.select($"s".as("src"), $"p".as("dst"), $"w"))
     val seeds = Seq(1L).toDF("id")

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.functions.TextFunctions._
 import graft.operators.AsOfJoin
 
@@ -63,7 +63,7 @@ object Extended7 {
           graft.plans.Md5PrefixLongs(sortedShingles($"text", 5)))
           .as("hv"))
       .filter($"hv".isNotNull)
-      .localCheckpoint()
+      .transform(Barrier(_))
     val trainSet = g.filter($"split" === "train").select($"hv").distinct()
     val hits = g.filter($"split" === "test")
       .join(trainSet, Seq("hv"), "left_semi")
@@ -122,7 +122,7 @@ object Extended7 {
           .cast("long").as("sw10k"))
       .select($"doc_id", $"lang", $"nt",
         expr("sw10k DIV nt").as("qbp"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val byLang = Window.partitionBy($"lang")
     val t = d
       .withColumn("rn",
@@ -245,7 +245,7 @@ object Extended7 {
     val c = g
       .withColumn("cum", sum($"cnt").over(byType.orderBy($"cents")))
       .withColumn("n", sum($"cnt").over(byType))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val t = c.groupBy($"event_type")
       .agg(min(when($"cum" * 20 >= $"n", $"cents")).as("lo"),
         min(when($"cum" * 20 >= $"n" * 19, $"cents")).as("hi"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 
 /** Round-8 surface batch: corpus-level duplicated-span fraction (the
   * Gopher/MassiveText repetition signal at corpus scope), temperature-
@@ -64,7 +64,7 @@ object Extended8 {
           graft.plans.Md5PrefixLongs(sortedShingles($"text", 8)))
           .as("hv"))
       .filter($"hv".isNotNull)
-      .localCheckpoint()
+      .transform(Barrier(_))
     // shingles are distinct WITHIN a doc already, so the document
     // frequency is a plain count per hash
     val c = g.groupBy($"hv").agg(count(lit(1)).as("df"))
@@ -241,7 +241,7 @@ object Extended8 {
     val s = Tables.loadParallel(spark, dir, "documents")
       .groupBy($"source")
       .agg(sum(size(lowerTokens($"text")).cast("long")).as("toks"))
-      .localCheckpoint() // tiny; feeds three derived aggregates
+      .transform(Barrier(_)) // tiny; feeds three derived aggregates
     val tot = s.agg(count(lit(1)).as("n"), sum($"toks").as("x"))
     val pairs = s.select($"toks".as("ta"))
       .crossJoin(broadcast(s.select($"toks".as("tb"))))

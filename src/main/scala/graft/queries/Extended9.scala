@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.operators.Similarity
 
 /** Round-8 additions: per-document repetition quality rules (the
@@ -232,7 +232,7 @@ object Extended9 {
     val tok = Tables.loadParallel(spark, dir, "documents")
       .select($"source", explode_outer(lowerTokens($"text")).as("w"))
       .filter($"w".isNotNull)
-      .localCheckpoint() // vocab induction + coverage rollup both read it
+      .transform(Barrier(_)) // vocab induction + coverage rollup both read it
     val vocab = tok.groupBy($"w").agg(count(lit(1)).as("n"))
       .orderBy($"n".desc, $"w").limit(20)
       .select($"w", lit(1).as("_inv"))
@@ -296,11 +296,11 @@ object Extended9 {
     val big = docs.select(explode_outer(bigArr).as("p"))
       .filter($"p".isNotNull)
       .select($"p.wa", $"p.wb")
-      .localCheckpoint() // pair counts AND the bigram total read it
+      .transform(Barrier(_)) // pair counts AND the bigram total read it
     val uni = docs
       .select(explode_outer(lowerTokens($"text")).as("w"))
       .filter($"w".isNotNull)
-      .localCheckpoint() // unigram counts AND the token total read it
+      .transform(Barrier(_)) // unigram counts AND the token total read it
     val bc = big.groupBy($"wa", $"wb").agg(count(lit(1)).as("n_ab"))
       .filter($"n_ab" >= 5)
     val uc = uni.groupBy($"w").agg(count(lit(1)).as("n"))
@@ -351,7 +351,7 @@ object Extended9 {
       .filter($"w".isNotNull)
       .groupBy($"source", $"w")
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // feeds tf AND the source-df aggregate
+      .transform(Barrier(_)) // feeds tf AND the source-df aggregate
     val dfs = tf.groupBy($"w").agg(count(lit(1)).as("dfs"))
     val ns = Tables.load(spark, dir, "documents")
       .select(countDistinct($"source").as("ns"))
@@ -397,7 +397,7 @@ object Extended9 {
     val m = Tables.load(spark, dir, "lineitem")
       .groupBy($"l_orderkey".as("k"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // stats, hot count, and top-5 all read it
+      .transform(Barrier(_)) // stats, hot count, and top-5 all read it
     val g = m.agg(count(lit(1)).as("n_keys"), sum($"n").as("n_rows"),
       max($"n").as("max_mult"))
     val hot = m.crossJoin(broadcast(g))
@@ -537,7 +537,7 @@ object Extended9 {
     val h = Tables.load(spark, dir, "events")
       .groupBy(date_trunc("hour", $"ts").as("hour"))
       .agg(count(lit(1)).as("x"))
-      .localCheckpoint() // moments and the flag scan both read it
+      .transform(Barrier(_)) // moments and the flag scan both read it
     val g = h.agg(count(lit(1)).as("n"), sum($"x").as("s"),
       sum($"x" * $"x").as("ss"))
     h.crossJoin(broadcast(g))
@@ -607,7 +607,7 @@ object Extended9 {
         .select($"vec_id", $"label"),
         $"doc_id" === $"vec_id")
       .select($"label", $"lang", $"n_chars")
-      .localCheckpoint() // stats and dominance both read it
+      .transform(Barrier(_)) // stats and dominance both read it
     val lc = j.groupBy($"label", $"lang").agg(count(lit(1)).as("n"))
     val wL = Window.partitionBy($"label")
     val dom = lc
@@ -752,7 +752,7 @@ object Extended9 {
     import spark.implicits._
     val e = Tables.load(spark, dir, "events")
       .select($"user_id", unix_micros($"ts").as("us"), $"event_type")
-      .localCheckpoint() // signup mins and purchase mins both read it
+      .transform(Barrier(_)) // signup mins and purchase mins both read it
     val s = e.filter($"event_type" === "signup")
       .groupBy($"user_id").agg(min($"us").as("s_us"))
     val p = e.filter($"event_type" === "purchase")
@@ -762,7 +762,7 @@ object Extended9 {
     val lat = p.join(s, Seq("user_id"))
       .select(expr("(p_us - s_us) DIV 1000000").as("lat_s"),
         lit(1).as("_g"))
-      .localCheckpoint() // the quartile operator scans it three times
+      .transform(Barrier(_)) // the quartile operator scans it three times
     val qs = graft.operators.Percentiles
       .exactDisc(lat.withColumn("lat_d", $"lat_s".cast("double")),
         "_g", "lat_d", Seq(0.25, 0.5, 0.75))
@@ -799,7 +799,7 @@ object Extended9 {
     val d = Tables.load(spark, dir, "events")
       .groupBy($"ts".cast("date").as("day"))
       .agg(count(lit(1)).as("x"))
-      .localCheckpoint() // cumulative walk and totals both read it
+      .transform(Barrier(_)) // cumulative walk and totals both read it
     val w = Window.orderBy($"day")
     val c = d
       .withColumn("sk", sum($"x").over(w))

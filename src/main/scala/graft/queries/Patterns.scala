@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.operators._
 
 /** The bootcamp's signature patterns (SURVEY modules 1/2/4a) applied to
@@ -543,13 +543,10 @@ object Patterns {
         $"l_partkey", $"l_suppkey", shufflePartitions, packKey = true,
         spreadGeneration = true)
       .select($"item_a".as("u"), $"item_b".as("v"), $"n")
-    // localCheckpoint, not cache: triangleCensus reads the edge list
-    // three times, and checkpoint blocks free on GC instead of
-    // accumulating in the shared session's CacheManager
+    // a barrier: triangleCensus reads the edge list three times
     val edges = pairs
       .orderBy($"n".desc, $"u", $"v").limit(2000)
-      .select($"u", $"v")
-      .localCheckpoint()
+      .select($"u", $"v").transform(Barrier(_))
     Graph.triangleCensus(edges)
   }
 

@@ -156,12 +156,7 @@ object Relational {
       .limit(25)
   }
 
-  /** GROUPING SETS + GROUPING() level labels (reference A8:
-    * `grouping_sets.sql:13-34`). Uses Spark SQL over a temp view — the
-    * reference's own S4 pattern.
-    */
-  val q7_grouping_sets: Q = Q(
-    "q7_grouping_sets",
+  private val q7Sql =
     """SELECT COALESCE(o_orderstatus, '(all)') AS order_status,
       |  COALESCE(o_orderpriority, '(all)') AS order_priority,
       |  CAST(GROUPING(o_orderstatus) AS INT) + CAST(GROUPING(o_orderpriority) AS INT) AS grouping_level,
@@ -169,17 +164,15 @@ object Relational {
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
       |FROM orders
       |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), (o_orderpriority), ())
-      |ORDER BY 1, 2""".stripMargin) { (spark, dir) =>
+      |ORDER BY 1, 2""".stripMargin
+
+  /** GROUPING SETS + GROUPING() level labels (reference A8:
+    * `grouping_sets.sql:13-34`). Uses Spark SQL over a temp view — the
+    * reference's own S4 pattern.
+    */
+  val q7_grouping_sets: Q = Q("q7_grouping_sets", q7Sql) { (spark, dir) =>
     Tables.load(spark, dir, "orders").createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT COALESCE(o_orderstatus, '(all)') AS order_status,
-        |  COALESCE(o_orderpriority, '(all)') AS order_priority,
-        |  CAST(GROUPING(o_orderstatus) AS INT) + CAST(GROUPING(o_orderpriority) AS INT) AS grouping_level,
-        |  COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), (o_orderpriority), ())
-        |ORDER BY 1, 2""".stripMargin)
+    spark.sql(q7Sql)
   }
 
   /** COALESCE / NULLIF / GREATEST (reference P9) + JSON property-bag

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Barrier, Tables}
 import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Multimodal, Similarity}
 
@@ -120,14 +120,12 @@ object TrainingData {
     import spark.implicits._
     // shingles sorted ONCE per doc → per-pair scoring is a codegen'd
     // merge walk (SortedIntersectCount), no per-pair hash sets.
-    // localCheckpoint: both join branches read the staged shingles —
+    // a barrier: both join branches read the staged shingles —
     // without it each side re-tokenizes the full corpus (reference
-    // X3, the shared-aggregate pattern); checkpoint instead of cache
-    // so the blocks free on GC rather than pinning the CacheManager
-    // for the session's lifetime
+    // X3, the shared-aggregate pattern)
     val s = Tables.loadParallel(spark, dir, "documents")
       .select($"doc_id", sortedShingles($"text").as("sh"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val a = s.filter($"doc_id" < 40)
       .select($"doc_id".as("id_a"), $"sh".as("sh_a"))
     val b = s.select($"doc_id".as("id_b"), $"sh".as("sh_b"))
@@ -525,7 +523,7 @@ object TrainingData {
     val f = Tables.load(spark, dir, "documents")
       .select($"source", prefixFp.as("fp"),
         datasetSplit($"doc_id").as("split"))
-      .localCheckpoint()
+      .transform(Barrier(_))
     val trainFps = f.filter($"split" === "train")
       .select($"fp").distinct()
       .withColumn("_hit", lit(1))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.operators.{Distributional, IncrementalAgg}
 
 /** Streaming distribution-drift monitor: every micro-batch of
@@ -43,7 +44,7 @@ object DriftMonitor {
       .join(ref.select(col("b"), col("n").as("nq")), Seq("b"), "left")
       .select(coalesce(col("np"), lit(0L)).as("np"),
         coalesce(col("nq"), lit(0L)).as("nq"))
-      .localCheckpoint() // totals pass + term pass on ≤ B rows
+      .transform(Barrier(_)) // totals pass + term pass on ≤ B rows
     val t = d.agg(sum(col("np")), sum(col("nq"))).head()
     val (tp, tq) = (t.getLong(0), t.getLong(1))
     val mnat = floor(log(
@@ -76,8 +77,7 @@ object DriftMonitor {
         prior: Option[DataFrame]): DataFrame = {
       // checkpoint: the counts feed the KL compare AND the merge,
       // and foreachBatch frames must not be recomputed across jobs
-      val counts = Distributional.bucketCounts(batch, b)
-        .localCheckpoint()
+      val counts = Barrier(Distributional.bucketCounts(batch, b))
       prior match {
         case Some(model) =>
           val (kl, psi, nToks) = divergences(counts, model, b)

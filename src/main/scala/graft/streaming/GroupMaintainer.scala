@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Barrier
 import graft.operators.{Dedup, Graph}
 
 /** Streaming near-dup GROUP maintenance: every arriving micro-batch
@@ -42,9 +43,9 @@ object GroupMaintainer {
       }
       val pairs = Dedup.incrementalNearDupPairs(index, batch,
           "text", "doc_id", jaccardThreshold, k, bands)
-        .localCheckpoint() // consumed by the CC solve AND the count
+        .transform(Barrier(_)) // consumed by the CC solve AND the count
       val newLabels = Graph.incrementalComponents(labels, pairs)
-        .localCheckpoint() // one materialization for stats + save
+        .transform(Barrier(_)) // one materialization for stats + save
       val newIndex = index.unionByName(
         Dedup.bandIndex(batch, "text", "doc_id", k, bands))
       val g = newLabels.groupBy(col("comp"))

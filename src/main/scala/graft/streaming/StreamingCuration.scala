@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.Barrier
 import graft.functions.TextFunctions
 import graft.operators.{Decontam, Dedup, ExactSubstr}
 
@@ -106,7 +107,7 @@ object StreamingCuration {
     protected def step(batch: DataFrame, epochId: Long,
         prior: Option[LadderState]): LadderState = {
       val st = prior.getOrElse(bootstrap(batch))
-      val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
+      val b = Barrier(batch.select(col("doc_id"), col("text")))
 
       // 1_exact — min id per fingerprint in the batch, minus
       // fingerprints the standing corpus already keeps
@@ -115,9 +116,9 @@ object StreamingCuration {
           TextFunctions.fingerprint(col("text")).as("_fp"))
         .groupBy(col("_fp")).agg(min(col("doc_id")).as("doc_id"))
         .join(st.fpKept.select(col("_fp")), Seq("_fp"), "left_anti")
-        .localCheckpoint() // feeds census, d1, and the state union
+        .transform(Barrier(_)) // feeds census, d1, and the state union
       val d1 = b.join(i1.select(col("doc_id")), "doc_id")
-        .localCheckpoint() // stage-2 entrants: census side + state
+        .transform(Barrier(_)) // stage-2 entrants: census side + state
 
       // 2_exactsubstr — batch spans vs standing entrants ∪ earlier
       // in this batch; the operator asserts the append-only contract
@@ -129,16 +130,15 @@ object StreamingCuration {
           size(TextFunctions.lowerTokens(col("text"))).as("_n"))
         .join(cov, Seq("doc_id"), "left")
         .filter(coalesce(col("_dup"), lit(0L)) * 2 < col("_n"))
-        .select(col("doc_id"))
-        .localCheckpoint()
-      val d2 = b.join(i2, "doc_id").localCheckpoint()
+        .select(col("doc_id")).transform(Barrier(_))
+      val d2 = Barrier(b.join(i2, "doc_id"))
 
       // 3_minhash — vs the maintained entrant band index
       val i3 = Dedup.incrementalNearDup(st.bandIdx, d2,
           "text", "doc_id", jaccardThreshold, k, bands)
         .filter(!col("is_dup"))
         .select(col("id").as("doc_id"))
-        .localCheckpoint()
+        .transform(Barrier(_))
 
       // 4_decontam — the batch's train split vs the static benchmark
       val train = b.join(i3, "doc_id")
@@ -149,7 +149,7 @@ object StreamingCuration {
         .select(col("doc_id"))
       val i4 = train.select(col("doc_id"))
         .join(dirty, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+        .transform(Barrier(_))
 
       val (n1, c1) = census(i1.select(col("doc_id")))
       val (n2, c2) = census(i2)

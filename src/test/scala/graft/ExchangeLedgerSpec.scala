@@ -28,7 +28,7 @@ class ExchangeLedgerSpec extends SparkSpec {
       .map { l => val p = l.split(" ", 2); p(0) -> p(1) }
 
   test("every query's exchange counts match the checked-in ledger") {
-    val path = java.nio.file.Paths.get("/root/repo/EXCHANGES.txt")
+    val path = SparkSpec.root.resolve("EXCHANGES.txt")
     assert(java.nio.file.Files.exists(path),
       "EXCHANGES.txt missing — generate it with " +
         "`runMain graft.PlanScan exchanges /root/testdata/sf0.001 EXCHANGES.txt`")

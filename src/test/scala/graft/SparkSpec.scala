@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,16 +45,43 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
+
+  /** The checkout under test: sbt forks the test JVM in the project's
+    * base directory, so specs write under this checkout's `target/`
+    * and read its ledgers, whichever copy of the repo runs them.
+    */
+  val root: Path = Paths.get("").toAbsolutePath
+  val target: Path = root.resolve("target")
+
+  lazy val session: SparkSession = build("local[4]", "graft-test")
+
+  /** A real two-executor cluster on one host, for specs that lose an
+    * executor: `local-cluster[2,1,1024]` starts a standalone master,
+    * two workers and one 1-core, 1 GiB executor JVM per worker. The
+    * workers launch executors from `$SPARK_HOME/jars`, and the executors
+    * load the engine from this checkout's compiled classes. The
+    * barrier's reliable checkpoints go under `checkpointDir` and are
+    * removed once their plans are garbage-collected.
+    */
+  def cluster(checkpointDir: String): SparkSession =
+    build("local-cluster[2,1,1024]", "graft-cluster-test",
+      "spark.executor.extraClassPath" ->
+        target.resolve("scala-2.13/classes").toString,
+      "spark.checkpoint.dir" -> checkpointDir,
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
+
+  private def build(master: String, app: String,
+      extra: (String, String)*): SparkSession = {
     val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
+      .master(master)
+      .appName(app)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
-        "/root/repo/target/spark-warehouse")
+        target.resolve("spark-warehouse").toString)
       .config("spark.ui.enabled", "false")
       .config(graft.core.Sessions.localFs)
+      .config(extra.toMap)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

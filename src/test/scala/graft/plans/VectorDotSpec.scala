@@ -54,7 +54,7 @@ class VectorDotSpec extends SparkSpec {
   test("runs inside whole-stage codegen") {
     // parquet roundtrip: a local relation would be pre-computed by
     // ConvertToLocalRelation and never reach codegen
-    val path = "/root/repo/target/tmp-vecdot"
+    val path = SparkSpec.target.resolve("tmp-vecdot").toString
     vecs.write.mode("overwrite").parquet(path)
     val plan = spark.read.parquet(path).select(VectorDot($"a", $"b"))
       .queryExecution.executedPlan.toString

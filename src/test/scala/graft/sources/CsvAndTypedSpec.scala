@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
@@ -16,7 +16,7 @@ class CsvAndTypedSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val csvPath = {
-    val dir = Paths.get("/root/repo/target/tmp-csv")
+    val dir = SparkSpec.target.resolve("tmp-csv")
     Files.createDirectories(dir)
     val f = dir.resolve("devices.csv")
     Files.writeString(f,

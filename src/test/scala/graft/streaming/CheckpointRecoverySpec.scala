@@ -15,7 +15,7 @@ class CheckpointRecoverySpec extends SparkSpec {
   test("restart from checkpoint neither loses nor duplicates batches") {
     implicit val ctx = spark.sqlContext
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ckpt").toString
+      SparkSpec.target, "ckpt").toString
     val out = s"$base/out"
     val ckpt = s"$base/checkpoint"
 
@@ -47,7 +47,7 @@ class CheckpointRecoverySpec extends SparkSpec {
     "replays the epoch with no loss, no duplicates, no partial reads") {
     implicit val ctx = spark.sqlContext
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ckpt_mid").toString
+      SparkSpec.target, "ckpt_mid").toString
     val out = s"$base/out"
     val ckpt = s"$base/checkpoint"
 
@@ -107,7 +107,7 @@ class CheckpointRecoverySpec extends SparkSpec {
     "re-emit") {
     implicit val ctx = spark.sqlContext
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ckpt_state").toString
+      SparkSpec.target, "ckpt_state").toString
     val out = s"$base/out"
     val ckpt = s"$base/checkpoint"
     def ev(host: String, t: String): WebEvent =

@@ -78,7 +78,7 @@ class StreamingFailureModesSpec extends SparkSpec {
     "exactly-once survives the retry storm") {
     implicit val ctx = spark.sqlContext
     val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ckpt_storm").toString
+      SparkSpec.target, "ckpt_storm").toString
     val out = s"$base/out"
     val ckpt = s"$base/checkpoint"
 

@@ -34,6 +34,10 @@ Checks:
      only in core/Sessions.scala; under src/test, only in SparkSpec.scala,
      which applies `Sessions.localFs` — so the tests run on the same
      `file:` filesystem as the mains.
+  9. One stage barrier (a ratchet at zero): under src/main, `.localCheckpoint(`
+     and `.checkpoint(` appear only in core/Barrier.scala, the one place
+     that decides how lineage is cut (local blocks under a local master,
+     reliable files otherwise).
 """
 import glob
 import json
@@ -55,15 +59,28 @@ RETIRED_BENCH_LABELS = frozenset({
 })
 
 # Check 7's ceiling: the repeated-window line count once the shared
-# oracle fragments moved into queries.OracleSql (726 before). Lower it
-# when a change removes more; never raise it.
-MAX_REPEATED_SQL_LINES = 34
+# oracle fragments moved into queries.OracleSql (726 before, then 34:
+# the spark.sql twins of three oracles, now bound once). Never raise it.
+MAX_REPEATED_SQL_LINES = 0
 WINDOW, WINDOW_MIN_CHARS = 5, 150
 
 
 def read(path):
     with open(os.path.join(REPO, path), encoding="utf-8") as f:
         return f.read()
+
+
+def only_in(home, pattern, tree="src/main"):
+    """The .scala files under `tree`, other than `home`, whose text
+    matches `pattern` (repo-relative paths, sorted)."""
+    hits = []
+    for f in sorted(glob.glob(os.path.join(REPO, tree, "**/*.scala"),
+                              recursive=True)):
+        rel = os.path.relpath(f, REPO)
+        if rel != home and re.search(pattern,
+                                     open(f, encoding="utf-8").read()):
+            hits.append(rel)
+    return hits
 
 
 def repeated_sql_windows():
@@ -141,13 +158,10 @@ def main() -> int:
                         "registered in SparkEntry")
 
     # 6. one schema source: parquet reads only through core.Tables
-    tables_src = os.path.join(REPO, "src/main/scala/graft/core/Tables.scala")
-    for f in sorted(glob.glob(os.path.join(REPO, "src/main/scala/**/*.scala"),
-                              recursive=True)):
-        if f != tables_src and re.search(r"\bread\s*\.\s*parquet\b",
-                                         open(f, encoding="utf-8").read()):
-            errs.append(f"{os.path.relpath(f, REPO)} calls read.parquet — "
-                        "read driver tables through core.Tables.load")
+    for rel in only_in("src/main/scala/graft/core/Tables.scala",
+                       r"\bread\s*\.\s*parquet\b"):
+        errs.append(f"{rel} calls read.parquet — "
+                    "read driver tables through core.Tables.load")
 
     # 7. repeated oracle SQL ratchet
     repeated, covered = repeated_sql_windows()
@@ -164,17 +178,19 @@ def main() -> int:
     recipes = {"src/main": "src/main/scala/graft/core/Sessions.scala",
                "src/test": "src/test/scala/graft/SparkSpec.scala"}
     for tree, home in recipes.items():
-        for f in sorted(glob.glob(os.path.join(REPO, tree, "**/*.scala"),
-                                  recursive=True)):
-            rel = os.path.relpath(f, REPO)
-            if rel != home and "SparkSession.builder" in open(
-                    f, encoding="utf-8").read():
-                errs.append(f"{rel} builds a SparkSession — build it only in "
-                            f"{home}")
+        for rel in only_in(home, r"SparkSession\.builder", tree):
+            errs.append(f"{rel} builds a SparkSession — build it only in "
+                        f"{home}")
     if not re.search(r"\.config\(\s*(graft\.core\.)?Sessions\.localFs\s*\)",
                      read(recipes["src/test"])):
         errs.append(f"{recipes['src/test']} does not apply Sessions.localFs — "
                     "the tests would run on another file: filesystem")
+
+    # 9. one stage barrier: lineage is cut only in core.Barrier
+    for rel in only_in("src/main/scala/graft/core/Barrier.scala",
+                       r"\.(localCheckpoint|checkpoint)\("):
+        errs.append(f"{rel} cuts lineage itself — call core.Barrier(ds) "
+                    "instead")
 
     if errs:
         print("DRIFT: FAIL")
@@ -184,7 +200,7 @@ def main() -> int:
     print(f"DRIFT: OK ({len(led)} queries consistent across ledger, "
           "COVERAGE, STATUS, bench snapshot, SparkEntry; parquet read "
           f"only in Tables; {len(covered)} repeated oracle SQL lines; "
-          "one session recipe)")
+          "one session recipe; one stage barrier)")
     return 0
 
 
