@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.mutable
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** The one dev harness (not part of the SparkEntry surface). Every timed
   * mode goes through [[Bench.measure]] — the benchmark's own warm-up,
@@ -12,8 +13,10 @@ import scala.collection.mutable
   * for Bench. Modes:
   *  - `time`: each query's median and per-pass wall times;
   *  - `prof`: per-stage SparkListener report over the timed passes —
-  *    stages sorted by duration with the head of their callsite and
-  *    the straggler anatomy (longest task's GC/CPU, median task);
+  *    stages sorted by duration with the head of their callsite, the
+  *    straggler anatomy (longest task's GC/CPU, median task) and the
+  *    summed executor deserialize time, plus the codegen compilations
+  *    the timed passes made;
   *  - `plan`: the formatted physical plan, `explain("formatted")`;
   *  - `anchor`: a solo steady-state snapshot in the
   *    [[BenchFormat.fullJson]] schema, written to
@@ -66,12 +69,16 @@ object Probe {
 
   private final case class St(id: Int, name: String, ms: Long,
       tasks: Int, inMb: Double, shrMb: Double, shwMb: Double,
-      maxTaskMs: Long, maxGcMs: Long, maxCpuMs: Long, medTaskMs: Long)
+      maxTaskMs: Long, maxGcMs: Long, maxCpuMs: Long, medTaskMs: Long,
+      deserMs: Long)
 
   /** Per-stage profile (guide §7.1 without the UI): every stage's wall
     * time, task count and input/shuffle volumes over the timed passes
     * — the "which operator owns the time" answer an end-to-end number
-    * can't give.
+    * can't give. Two fixed costs a task pays before it runs are shown
+    * too: the Janino compilations (`CodegenMetrics`, counted from the
+    * first timed job's start) and each stage's summed executor
+    * deserialize time.
     */
   private def prof(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, names: Seq[String]): Unit = {
@@ -83,7 +90,12 @@ object Probe {
     val maxGc = mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val maxCpu = mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val durs = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    @volatile var compiles0 = -1L
     val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (compiles0 < 0) compiles0 = compiles
       override def onTaskEnd(
           te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         val d = te.taskInfo.duration
@@ -118,7 +130,8 @@ object Probe {
           m.shuffleReadMetrics.totalBytesRead / 1e6,
           m.shuffleWriteMetrics.bytesWritten / 1e6,
           maxTask(i.stageId), maxGc(i.stageId), maxCpu(i.stageId),
-          if (ds.nonEmpty) ds(ds.size / 2) else 0L)
+          if (ds.nonEmpty) ds(ds.size / 2) else 0L,
+          m.executorDeserializeTime)
       }
     }
     val t = Bench.measure(spark, sfDir, names, Some(listener))
@@ -129,10 +142,14 @@ object Probe {
     println(f"[prof] stage-time sum ${total / 1e3}%.3f s over " +
       f"${stages.size} stages, ${stages.map(_.tasks).sum} tasks " +
       f"(across ${t.runs} passes)")
+    val compiled = if (compiles0 < 0) 0L else compiles - compiles0
+    println(s"[prof] codegen compilations $compiled, " +
+      f"executor deserialize ${stages.map(_.deserMs).sum / 1e3}%.3f s " +
+      "(summed over tasks)")
     stages.sortBy(-_.ms).take(40).foreach { s =>
       println(f"[prof] ${s.ms}%6d ms  ${s.tasks}%4d tasks  " +
         f"maxT=${s.maxTaskMs}%5d medT=${s.medTaskMs}%5d " +
-        f"gc=${s.maxGcMs}%4d cpu=${s.maxCpuMs}%5d  " +
+        f"gc=${s.maxGcMs}%4d cpu=${s.maxCpuMs}%5d deser=${s.deserMs}%5d  " +
         f"in=${s.inMb}%7.1f  sr=${s.shrMb}%7.1f  sw=${s.shwMb}%7.1f  " +
         s"#${s.id} ${s.name.linesIterator.next().take(90)}")
     }

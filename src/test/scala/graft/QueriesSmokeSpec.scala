@@ -8,9 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, collect_list}
 
 /** The one execution sweep over the query surface. Every declared
-  * query is built and collected at sf0.001 in two child sessions that
-  * carry nothing but UTC and a shuffle width — 4 and 7 — so one pass
-  * checks three contracts per query:
+  * query is built and collected at sf0.001 in two child sessions
+  * whose only runtime confs are UTC and a shuffle width — 4 and 7 —
+  * so one pass checks three contracts per query:
   *   - it runs and returns rows (t1-style smoke; deep value
   *     correctness is the DuckDB oracle's job,
   *     `tools/check_oracle.py`);
@@ -163,8 +163,11 @@ object QueriesSmokeSpec {
   /** A line led by a single margin `|` (not DuckDB's `||`). */
   private val LeftoverMargin = """(?m)^[ \t]*\|(?!\|).*$""".r
 
-  /** A vanilla child session: UTC and the shuffle width, no
-    * graft-specific conf. */
+  /** A child session: UTC and the shuffle width are its only session
+    * confs, so a query that needs a conf set on `spark` at runtime
+    * fails here. It shares the context and its `SparkConf`
+    * (`Sessions.common`: the `file:` filesystem, one executor class
+    * loader), so the codegen cache serves it what `spark` compiled. */
   private def child(spark: SparkSession, width: Int): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.session.timeZone", "UTC")

@@ -4,11 +4,13 @@ import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one local session per suite, UTC, small shuffle
+/** Shared test harness: one local session per suite, small shuffle
   * width (mirrors the reference's own lab setting,
-  * `Caching.ipynb:92`), the engine's `file:` filesystem
-  * (`Sessions.localFs`, so every sink and streaming spec runs on what
-  * the mains run), plus a chispa-style DataFrame equality assert
+  * `Caching.ipynb:92`), the settings every engine session carries
+  * (`Sessions.common`: UTC, the engine's `file:` filesystem, one
+  * executor class loader for every session, so every sink and
+  * streaming spec runs on what the mains run), plus a chispa-style
+  * DataFrame equality assert
   * (reference test pattern, `3-spark-fundamentals/src/tests/`).
   */
 trait SparkSpec extends AnyFunSuite {
@@ -76,11 +78,9 @@ object SparkSpec {
       .master(master)
       .appName(app)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         target.resolve("spark-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Sessions.localFs)
+      .config(graft.core.Sessions.common)
       .config(extra.toMap)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -31,9 +31,9 @@ Checks:
      at or below MAX_REPEATED_SQL_LINES. A fragment more than one query
      uses belongs in queries.OracleSql.
   8. One session recipe: under src/main, `SparkSession.builder` appears
-     only in core/Sessions.scala; under src/test, only in SparkSpec.scala,
-     which applies `Sessions.localFs` — so the tests run on the same
-     `file:` filesystem as the mains.
+     only in core/Sessions.scala; under src/test, only in SparkSpec.scala.
+     Both apply `Sessions.common` — so the tests run with the mains'
+     time zone, `file:` filesystem and executor class loader.
   9. One stage barrier (a ratchet at zero): under src/main, `.localCheckpoint(`
      and `.checkpoint(` appear only in core/Barrier.scala, the one place
      that decides how lineage is cut (local blocks under a local master,
@@ -174,17 +174,18 @@ def main() -> int:
             "; ".join(", ".join(f"{f}:{i}" for f, i in v) +
                       f" {k.splitlines()[0]!r}" for k, v in worst))
 
-    # 8. one session recipe, and the tests share its filesystem
+    # 8. one session recipe, and the tests share its settings
     recipes = {"src/main": "src/main/scala/graft/core/Sessions.scala",
                "src/test": "src/test/scala/graft/SparkSpec.scala"}
     for tree, home in recipes.items():
         for rel in only_in(home, r"SparkSession\.builder", tree):
             errs.append(f"{rel} builds a SparkSession — build it only in "
                         f"{home}")
-    if not re.search(r"\.config\(\s*(graft\.core\.)?Sessions\.localFs\s*\)",
-                     read(recipes["src/test"])):
-        errs.append(f"{recipes['src/test']} does not apply Sessions.localFs — "
-                    "the tests would run on another file: filesystem")
+    applies_common = r"\.config\(\s*(graft\.core\.)?(Sessions\.)?common\s*\)"
+    for home in recipes.values():
+        if not re.search(applies_common, read(home)):
+            errs.append(f"{home} does not apply Sessions.common — the tests "
+                        "and the mains would run on different settings")
 
     # 9. one stage barrier: lineage is cut only in core.Barrier
     for rel in only_in("src/main/scala/graft/core/Barrier.scala",
