@@ -1,4 +1,8 @@
 package graft
+
+import org.apache.logging.log4j.core.{Filter, LogEvent}
+import org.apache.logging.log4j.core.filter.AbstractFilter
+
 object Bench {
 
   /** Run `f` with the global-window warning muted — ONLY for queries
@@ -14,48 +18,25 @@ object Bench {
     * surfaces — the same discrimination QueriesSmokeSpec's warning
     * sweep applies.
     */
-  private[graft] def muteGwinWarnings[A](mute: Boolean)(f: => A): A = {
-    if (!mute) return f
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.{Filter, LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.config.Configurator
-    import org.apache.logging.log4j.core.filter.AbstractFilter
-    val muteFilter = new AbstractFilter(
-        Filter.Result.DENY, Filter.Result.NEUTRAL) {
+  private[graft] def muteGwinWarnings[A](mute: Boolean)(f: => A): A =
+    if (!mute) f
+    else Gwin.filtered(new AbstractFilter(Filter.Result.DENY,
+        Filter.Result.NEUTRAL) {
       override def filter(event: LogEvent): Filter.Result =
         if (event.getMessage.getFormattedMessage
             .contains(Gwin.WarningText)) Filter.Result.DENY
         else Filter.Result.NEUTRAL
-    }
-    // resolve the context through SPARK's classloader (the warning
-    // sweep's lesson: under layered classloaders the default context
-    // can differ from the one the Spark jars' loggers live in)
-    val ctx = LogManager.getContext(
-      classOf[org.apache.spark.sql.execution.window.WindowExec]
-        .getClassLoader, false).asInstanceOf[LoggerContext]
-    val cfg = ctx.getConfiguration
-    // setLevel first (at the current effective level — no level
-    // change): it materializes a SPECIFIC LoggerConfig per logger, so
-    // the filter attaches there and never to the root config
-    Gwin.WindowLoggers.foreach { n =>
-      Configurator.setLevel(n, LogManager.getLogger(n).getLevel)
-      cfg.getLoggerConfig(n).addFilter(muteFilter)
-    }
-    ctx.updateLoggers()
-    try f
-    finally {
-      Gwin.WindowLoggers.foreach(n =>
-        cfg.getLoggerConfig(n).removeFilter(muteFilter))
-      ctx.updateLoggers()
-    }
-  }
+    }, level = None)(f)
 
   /** What [[measure]] observed: each query's successful pass times in
-    * pass order (empty = failed every pass), the passes run, and the
-    * host-speed calibration pair taken after warm-up.
+    * pass order (empty = failed every pass), the passes run, the
+    * host-speed calibration pair taken after warm-up, and what Spark
+    * ran for each query over its successful passes (its [[core.Trace]]
+    * records, joined).
     */
   final case class Timing(passes: Seq[(String, List[Double])], runs: Int,
-      calibCpu: Double, calibSpark: Double) {
+      calibCpu: Double, calibSpark: Double,
+      records: Seq[(String, graft.core.Trace.Record)]) {
 
     /** Per-query median; -1 sentinel for a query that failed in EVERY
       * pass, so a crash is never mistaken for a fast success. */
@@ -74,13 +55,12 @@ object Bench {
   /** The one warm-up + timing loop ([[main]] and [[Probe]] share it):
     * warm every query at sf0.001, settle, calibrate the host, then
     * time `SPARK_GRAFT_BENCH_RUNS` (default 3) alternating passes over
-    * `names` at `sfDir`. `listener`, if given, is attached for the
-    * timed passes only.
+    * `names` at `sfDir`. Each timed call runs in a [[core.Trace]] keyed
+    * by its query's name; the timed span is the call alone, without the
+    * trace's bus drain.
     */
   def measure(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      names: Seq[String],
-      listener: Option[org.apache.spark.scheduler.SparkListener] = None)
-      : Timing = {
+      names: Seq[String]): Timing = {
     val fns = SparkEntry.queries
     // warmup: run EVERY query once at the smallest SF. The schemas are
     // identical across SFs, so each query's generated code and JIT'd
@@ -123,25 +103,27 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
-    listener.foreach(spark.sparkContext.addSparkListener)
+    val records = scala.collection.mutable.Map.empty[String,
+      graft.core.Trace.Record].withDefaultValue(graft.core.Trace.Record.empty)
     for (_ <- 1 to runs; name <- names) {
       val fn = fns(name)
-      val t0 = System.nanoTime()
       // noop sink: materializes every output column (a bare .count()
       // would let Catalyst prune all per-row computation away and
       // under-measure projection-heavy queries)
       try {
-        muteGwinWarnings(Gwin.allowed(name)) {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val (secs, rec) = graft.core.Trace(spark, name) {
+          val t0 = System.nanoTime()
+          muteGwinWarnings(Gwin.allowed(name)) {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          }
+          (System.nanoTime() - t0) / 1e9
         }
-        times(name) = times(name) :+ (System.nanoTime() - t0) / 1e9
+        times(name) = times(name) :+ secs
+        records(name) = records(name) ++ rec
       } catch { case scala.util.control.NonFatal(_) => () }
     }
-    listener.foreach { l =>
-      Thread.sleep(300) // let the listener bus deliver the last events
-      spark.sparkContext.removeSparkListener(l)
-    }
-    Timing(names.map(q => q -> times(q)), runs, calibCpu, calibSpark)
+    Timing(names.map(q => q -> times(q)), runs, calibCpu, calibSpark,
+      names.map(q => q -> records(q)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -156,7 +138,7 @@ object Bench {
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       "/root/repo/BENCH_FULL.json")
     val fullJson = BenchFormat.fullJson(t.medians, t.total, t.runs,
-      t.calibCpu, t.calibSpark, t.errors, sfDir)
+      t.calibCpu, t.calibSpark, t.errors, sfDir, t.records)
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch {

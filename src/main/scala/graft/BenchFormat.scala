@@ -31,19 +31,26 @@ object BenchFormat {
     s"""{"cpu_md5_sec":${r3(calibCpu)},"spark_range_sec":${r3(calibSpark)}}"""
 
   /** The complete payload: every query's median at millisecond
-    * precision plus totals, calibration pair, and error list. One
-    * JSON document (single line — file readers don't care, and
-    * single-line keeps it concatenation-safe for logs).
+    * precision plus totals, calibration pair, and error list, and per
+    * label the `layers` Spark ran for it — jobs, stages, tasks and Σ
+    * executor CPU seconds, summed over the label's successful passes
+    * (its [[graft.core.Trace]] records). One JSON document (single
+    * line — file readers don't care, and single-line keeps it
+    * concatenation-safe for logs).
     */
   def fullJson(results: Seq[(String, Double)], total: Double, runs: Int,
       calibCpu: Double, calibSpark: Double, errors: Seq[String],
-      sf: String): String = {
+      sf: String, layers: Seq[(String, graft.core.Trace.Record)]): String = {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val ls = layers.map { case (k, r) =>
+      s""""$k":{"jobs":${r.jobs.size},"stages":${r.stages.size},""" +
+        s""""tasks":${r.tasks},"cpu_s":${r3(r.cpuSeconds)}}"""
+    }.mkString("{", ",", "}")
     s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
       s""""runs":$runs,"calib":${calibJson(calibCpu, calibSpark)},""" +
-      s""""queries":$qs,"errors":$errJson,"sf":"$sf"}"""
+      s""""queries":$qs,"errors":$errJson,"sf":"$sf","layers":$ls}"""
   }
 
   /** The one stdout line, ≤ `maxBytes`. `results` must be sorted by

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{Filter, LoggerContext}
+import org.apache.logging.log4j.core.config.Configurator
+
 /** THE single declaration of the bounded partition-less-window
   * allowlist: `Bench`'s per-query warning mute, `GwinBoundsSpec`'s
   * executable bounds and `QueriesSmokeSpec`'s warning-attribution
@@ -24,6 +28,36 @@ object Gwin {
     * allowlisted query still surfaces.
     */
   val WarningText = "No Partition Defined"
+
+  /** Run `f` with `filter` on each of [[WindowLoggers]]' own logger
+    * configs, after setting each logger's level to `level` (its current
+    * level when None). The one log4j hook on these loggers: Bench's mute
+    * DENYs the warning, the tier-1 sweep counts it.
+    */
+  private[graft] def filtered[A](filter: Filter, level: Option[Level])(
+      f: => A): A = {
+    // resolve the context through SPARK's classloader: under layered
+    // classloaders (sbt's test loader) the default context can differ
+    // from the one the Spark jars' loggers live in, and a filter added
+    // there sees nothing
+    val ctx = LogManager.getContext(
+      classOf[org.apache.spark.sql.execution.window.WindowExec]
+        .getClassLoader, false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    // setLevel first: it materializes a SPECIFIC LoggerConfig per
+    // logger, so the filter attaches there and never to the root config
+    WindowLoggers.foreach { n =>
+      Configurator.setLevel(n,
+        level.getOrElse(LogManager.getLogger(n).getLevel))
+      cfg.getLoggerConfig(n).addFilter(filter)
+    }
+    ctx.updateLoggers()
+    try f
+    finally {
+      WindowLoggers.foreach(n => cfg.getLoggerConfig(n).removeFilter(filter))
+      ctx.updateLoggers()
+    }
+  }
 
   /** Queries whose FINAL plan carries a partition-less window (their
     * ledger row says gwin>0) -> (max rows into any of those windows,

@@ -56,6 +56,22 @@ object Bridge {
         exp.extraStrategies = exp.extraStrategies :+ s
     }
 
+  /** Block until the listener bus has delivered every event posted so
+    * far (`listenerBus` is `private[spark]`). A listener's counts are
+    * complete for the work that finished before the call only after
+    * it returns; `graft.core.Trace` reads its records here.
+    */
+  def drain(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The listeners of class `L` on `sc`'s bus — the check half of a
+    * check-then-add install.
+    */
+  def listenersOf[L <: org.apache.spark.scheduler.SparkListenerInterface](
+      sc: org.apache.spark.SparkContext)(
+      implicit tag: scala.reflect.ClassTag[L]): Seq[L] =
+    sc.listenerBus.findListenersByClass[L]().toSeq
+
   /** Idempotently add an optimizer rule to a live session (the
     * runtime counterpart of `injectOptimizerRule`; same concurrency
     * discipline as [[addStrategy]]).

@@ -90,11 +90,31 @@ class BenchFormatSpec extends SparkSpec {
   test("full payload carries the exact name -> median map") {
     val rs = fakeResults(10)
     val full = BenchFormat.fullJson(rs, rs.map(_._2).sum, 3, 1.0, 2.0,
-      Nil, "sfX")
+      Nil, "sfX", Nil)
     val doc = parse(full)
     val qs = doc("queries").asInstanceOf[org.apache.spark.sql.Row]
     rs.foreach { case (name, sec) =>
       assert(math.abs(qs.getAs[Double](name) - sec) < 0.001)
     }
+  }
+
+  test("full payload carries a layers object per label") {
+    val stage = graft.core.Trace.Stage(1, "s", "", 10L, 3, 0L, 0L, 0L, 0L,
+      1500000000L, Seq(1L, 2L, 3L), 0L, 0L)
+    val job = graft.core.Trace.Job(0, None, Seq("s"))
+    val layers = Seq(
+      "q1" -> graft.core.Trace.Record(Seq(job), Seq(stage, stage), 4L),
+      "q2" -> graft.core.Trace.Record.empty)
+    val doc = parse(BenchFormat.fullJson(Seq("q1" -> 1.0, "q2" -> 2.0), 3.0,
+      3, 1.0, 2.0, Nil, "sfX", layers))
+    // additions only: every key older snapshots carry is still there
+    assert(doc.keySet == Set("metric", "value", "unit", "runs", "calib",
+      "queries", "errors", "sf", "layers"))
+    val ls = doc("layers").asInstanceOf[org.apache.spark.sql.Row]
+    val q1 = ls.getAs[org.apache.spark.sql.Row]("q1")
+    assert(q1.getAs[Long]("jobs") == 1L && q1.getAs[Long]("stages") == 2L)
+    assert(q1.getAs[Long]("tasks") == 6L && q1.getAs[Double]("cpu_s") == 3.0)
+    val q2 = ls.getAs[org.apache.spark.sql.Row]("q2")
+    assert(q2.getAs[Long]("jobs") == 0L && q2.getAs[Long]("stages") == 0L)
   }
 }

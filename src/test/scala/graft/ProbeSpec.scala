@@ -22,7 +22,34 @@ class ProbeSpec extends SparkSpec {
       assert(row.getAs[Double]("value") == median)
       assert(row.getAs[scala.collection.Seq[String]]("errors").isEmpty)
       assert(row.getAs[String]("sf") == sfDir)
+      val layer = row.getAs[org.apache.spark.sql.Row]("layers")
+        .getAs[org.apache.spark.sql.Row]("q1_agg")
+      assert(layer.getAs[Long]("jobs") > 0 &&
+        layer.getAs[Long]("tasks") >= layer.getAs[Long]("stages"), layer)
     } finally java.nio.file.Files.deleteIfExists(out)
+  }
+
+  test("prof prints the stage lines, the stage-time sum and the codegen " +
+    "compilations of the timed passes") {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(buf) {
+      Probe.run(spark, "prof", sfDir, Seq("q1_agg"), None)
+    }
+    val lines = buf.toString("UTF-8").linesIterator.toSeq
+    val text = lines.mkString("\n")
+    assert(lines.exists(_.matches("""\[prof\] q1_agg median \d+\.\d{3} s""")),
+      text)
+    val sum = ("""\[prof\] stage-time sum \d+\.\d{3} s over (\d+) stages, """ +
+      """(\d+) tasks \(across \d+ passes\)""").r
+    val (stages, tasks) = lines.collectFirst {
+      case sum(s, t) => (s.toInt, t.toInt)
+    }.getOrElse(fail(s"no stage-time sum line:\n$text"))
+    assert(stages > 0 && tasks >= stages, text)
+    assert(lines.exists(_.matches("""\[prof\] codegen compilations \d+, """ +
+      """executor deserialize \d+\.\d{3} s \(summed over tasks\)""")), text)
+    val stageLines = lines.filter(_.matches(
+      """\[prof\] +\d+ ms +\d+ tasks  maxT= *\d+ medT= *\d+ .*#\d+ .*"""))
+    assert(stageLines.size == math.min(stages, 40), text)
   }
 
   test("plan prints the formatted physical plan") {

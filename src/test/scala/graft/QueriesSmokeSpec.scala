@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.{Configurator, Property}
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.{Filter, LogEvent}
+import org.apache.logging.log4j.core.filter.AbstractFilter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, collect_list}
 
@@ -42,7 +41,7 @@ class QueriesSmokeSpec extends SparkSpec {
   private lazy val sweep: Sweep = {
     val (s4, s7) = widths
     // full session init first: Spark's first initialization
-    // reconfigures log4j2, which would silently drop an appender
+    // reconfigures log4j2, which would silently drop a filter
     // attached earlier
     s4.range(1).count()
     countWarnings(s4) {
@@ -78,13 +77,13 @@ class QueriesSmokeSpec extends SparkSpec {
         "not declared in Gwin (declare a bound + GwinBoundsSpec test, " +
         s"or rewrite via PrefixSum); $Unattributed means the warning " +
         s"carried no query: ${offenders.mkString(", ")}")
-    // the sweep must actually SEE the known warners — an appender
+    // the sweep must actually SEE the known warners — a filter
     // wiring regression would otherwise pass vacuously
     val declared = Gwin.LedgerBounds.keySet ++ Gwin.EagerGwinAllowed
     assert(declared.forall(hits.contains),
       s"declared queries emitted no warning: " +
         s"${(declared -- hits.keySet).toSeq.sorted} — either the " +
-        "window is gone (remove the declaration) or the appender " +
+        "window is gone (remove the declaration) or the filter " +
         s"wiring broke; saw: ${hits.keySet.toSeq.sorted}")
   }
 
@@ -150,11 +149,6 @@ object QueriesSmokeSpec {
   final case class Sweep(outcomes: Map[String, Outcome],
       warnings: Map[String, Int])
 
-  /** Local property naming the query a thread is building and running.
-    * Spark copies local properties into its subquery and broadcast
-    * threads, and threads the query spawns inherit them, so a warning
-    * logged on any of those threads names its query. */
-  private val QueryProperty = "graft.sweep.query"
   private val Unattributed = "<no query>"
 
   /** An interpolation left in oracle text: `$` and a name or `{`. */
@@ -177,14 +171,14 @@ object QueriesSmokeSpec {
 
   /** Build and collect `query` in both sessions at once — width 4 on
     * this thread, width 7 on a `Par.bg` thread, which inherits the
-    * local properties — with [[QueryProperty]] set to `name`. */
+    * local properties — under the `core.Trace` key `name`. Spark
+    * copies that key into its subquery, broadcast and AQE threads too,
+    * so a warning logged on any of them names its query. */
   private def atBothWidths(s4: SparkSession, s7: SparkSession, name: String)(
       query: SparkSession => DataFrame): Outcome = {
-    val sc = s4.sparkContext
     def canon(s: SparkSession): Seq[String] =
       query(s).collect().map(_.toString).sorted.toSeq
-    sc.setLocalProperty(QueryProperty, name)
-    try {
+    try graft.core.Trace.keyed(s4.sparkContext, name) {
       val (a, b) = graft.core.Par.join2(canon(s4), canon(s7))
       val diff = if (a == b) None else Some(
         s"${a.size} vs ${b.size} rows; first diff: " +
@@ -193,52 +187,30 @@ object QueriesSmokeSpec {
             .map { case (x, y) => s"$x != $y" }.getOrElse("?"))
       Outcome(a.size, diff, None)
     } catch { case e: Throwable => Outcome(0, None, Some(e)) }
-    finally sc.setLocalProperty(QueryProperty, null)
   }
 
-  /** Run `f` with an appender on [[Gwin.WindowLoggers]] that counts
-    * each "No Partition Defined" warning under the query named by the
-    * logging thread's [[QueryProperty]]. */
+  /** Run `f` with a filter on [[Gwin.WindowLoggers]] (at WARN, whatever
+    * the console level) that counts each "No Partition Defined" warning
+    * under the `core.Trace` key of the logging thread. */
   private def countWarnings(spark: SparkSession)(
       f: => Map[String, Outcome]): Sweep = {
     val sc = spark.sparkContext
     val hits = new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.atomic.AtomicInteger]()
-    val appender = new AbstractAppender("gwin-sweep", null, null,
-        false, Property.EMPTY_ARRAY) {
-      override def append(event: LogEvent): Unit =
+    val counter = new AbstractFilter() {
+      override def filter(event: LogEvent): Filter.Result = {
         if (event.getMessage.getFormattedMessage
             .contains(Gwin.WarningText)) {
-          val q = Option(sc.getLocalProperty(QueryProperty))
+          val q = Option(sc.getLocalProperty(graft.core.Trace.Key))
             .getOrElse(Unattributed)
           hits.computeIfAbsent(q,
             _ => new java.util.concurrent.atomic.AtomicInteger())
             .incrementAndGet()
         }
-    }
-    appender.start()
-    // resolve the context through SPARK's classloader: under sbt's
-    // layered test classloader, getContext(false) from test code can
-    // return a DIFFERENT LoggerContext than the one the Spark jars'
-    // loggers live in, and an appender added there captures nothing
-    val ctx = LogManager.getContext(
-      classOf[org.apache.spark.sql.execution.window.WindowExec]
-        .getClassLoader, false).asInstanceOf[LoggerContext]
-    val cfg = ctx.getConfiguration
-    // pass WARN events to the appender whatever the console level
-    Gwin.WindowLoggers.foreach { n =>
-      Configurator.setLevel(n, Level.WARN)
-      cfg.getLoggerConfig(n).addAppender(appender, Level.WARN, null)
-    }
-    ctx.updateLoggers()
-    val outcomes =
-      try f
-      finally {
-        Gwin.WindowLoggers.foreach(n =>
-          cfg.getLoggerConfig(n).removeAppender(appender.getName))
-        ctx.updateLoggers()
-        appender.stop()
+        Filter.Result.NEUTRAL
       }
+    }
+    val outcomes = Gwin.filtered(counter, Some(Level.WARN))(f)
     import scala.jdk.CollectionConverters._
     Sweep(outcomes, hits.asScala.map { case (q, n) => q -> n.get }.toMap)
   }

@@ -1,9 +1,5 @@
 package graft.core
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart}
 import graft.SparkSpec
 import graft.operators.Graph
 
@@ -18,41 +14,10 @@ class BarrierSpec extends SparkSpec {
   private val LongForm = "callSite.long"
 
   /** (call site the job was submitted under, its stage names) for
-    * every job `body` starts. The bus delivers events in order, so once
-    * a sentinel job's end arrives every job `body` started has been seen.
-    */
-  private def jobsOf(body: => Unit): Seq[(String, Seq[String])] = {
-    val sc = spark.sparkContext
-    val group = s"barrier-spec-${System.nanoTime}"
-    val sentinel = "barrier-spec-sentinel"
-    val jobs = new ConcurrentLinkedQueue[(String, Seq[String])]
-    @volatile var sentinelId = -1
-    val sentinelDone = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == sentinel)
-            sentinelId = e.jobId
-          else jobs.add(e.properties.getProperty(ShortForm) ->
-            e.stageInfos.map(_.name))
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinelId) sentinelDone.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "barrier")
-      body
-      sc.setJobDescription(sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelDone.await(60, TimeUnit.SECONDS), "sentinel never ended")
-      jobs.asScala.toSeq
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+    * every job `body` starts. */
+  private def jobsOf(body: => Unit): Seq[(String, Seq[String])] =
+    Trace(spark, "barrier")(body)._2.jobs
+      .map(j => j.callSite.orNull -> j.stageNames)
 
   test("the stages a barrier starts inside an operator are named after " +
     "the operator's file, not Barrier.scala") {

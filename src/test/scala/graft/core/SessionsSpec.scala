@@ -2,7 +2,6 @@ package graft.core
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
 import graft.SparkSpec
 import graft.streaming.StreamingJobs
@@ -16,8 +15,9 @@ import graft.streaming.StreamingJobs
   */
 class SessionsSpec extends SparkSpec {
 
-  private def compilations: Long =
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  /** The codegen compilations `body` makes. */
+  private def compilations(body: => Unit): Long =
+    Trace(spark, "sessions")(body)._2.compilations
 
   test("a second AvailableNow drain compiles nothing") {
     val base = Files.createTempDirectory("graft_sessions_drain").toString
@@ -31,10 +31,9 @@ class SessionsSpec extends SparkSpec {
       StreamingJobs.incrementalDrain(spark, landing, s"$base/ckpt$run",
         s"$base/out$run", StreamingJobs.processedEvents)
     drain("1")
-    val before = compilations
-    drain("2")
-    assert(compilations == before,
-      s"the second drain compiled ${compilations - before} classes")
+    val compiled = compilations(drain("2"))
+    assert(compiled == 0,
+      s"the second drain compiled $compiled classes")
     assert(spark.read.parquet(s"$base/out2").count() == 40)
   }
 
@@ -45,9 +44,9 @@ class SessionsSpec extends SparkSpec {
         .groupBy("k").sum("v")
         .collect().toSet
     val expected = query(spark)
-    val before = compilations
-    assert(query(spark.newSession()) == expected)
-    assert(compilations == before,
-      s"the new session compiled ${compilations - before} classes")
+    val compiled =
+      compilations(assert(query(spark.newSession()) == expected))
+    assert(compiled == 0,
+      s"the new session compiled $compiled classes")
   }
 }

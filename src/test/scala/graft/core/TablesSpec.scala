@@ -1,11 +1,5 @@
 package graft.core
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart}
-
 import graft.SparkSpec
 
 /** S4: temp-view registration + SQL over the registered catalog, and
@@ -46,37 +40,9 @@ class TablesSpec extends SparkSpec {
   }
 
   test("loading every table starts no Spark job") {
-    val sc = spark.sparkContext
-    val group = s"tables-load-${System.nanoTime}"
-    val sentinel = "tables-load-sentinel"
-    val loadJobs = new AtomicInteger
-    @volatile var sentinelId = -1
-    val sentinelDone = new CountDownLatch(1)
-    // the bus delivers events in order, so once the sentinel's end
-    // arrives every job the loads started has been counted
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == sentinel)
-            sentinelId = e.jobId
-          else loadJobs.incrementAndGet()
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinelId) sentinelDone.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "Tables.load")
-      Tables.names.foreach(n => Tables.load(spark, sfDir, n))
-      sc.setJobDescription(sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelDone.await(60, TimeUnit.SECONDS), "sentinel never ended")
-      assert(loadJobs.get == 0,
-        s"loading ${Tables.names.size} tables started ${loadJobs.get} jobs")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (_, rec) = Trace(spark, "Tables.load")(
+      Tables.names.foreach(n => Tables.load(spark, sfDir, n)))
+    assert(rec.jobs.isEmpty,
+      s"loading ${Tables.names.size} tables started ${rec.jobs.size} jobs")
   }
 }

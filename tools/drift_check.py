@@ -38,6 +38,10 @@ Checks:
      and `.checkpoint(` appear only in core/Barrier.scala, the one place
      that decides how lineage is cut (local blocks under a local master,
      reliable files otherwise).
+ 10. One tracer (a ratchet at zero): under src/main and src/test,
+     `extends SparkListener`, `new SparkListener` and `addSparkListener`
+     appear only in core/Trace.scala, the one place that decides how
+     Spark work is attributed to a name and when its counts are complete.
 """
 import glob
 import json
@@ -193,6 +197,14 @@ def main() -> int:
         errs.append(f"{rel} cuts lineage itself — call core.Barrier(ds) "
                     "instead")
 
+    # 10. one tracer: the only SparkListener lives in core.Trace
+    listener = r"\b(extends|new)\s+([\w.]+\.)?SparkListener\b|\baddSparkListener\b"
+    for tree in ("src/main", "src/test"):
+        for rel in only_in("src/main/scala/graft/core/Trace.scala", listener,
+                           tree):
+            errs.append(f"{rel} defines or adds a SparkListener — attribute "
+                        "Spark work through core.Trace instead")
+
     if errs:
         print("DRIFT: FAIL")
         for e in errs:
@@ -201,7 +213,7 @@ def main() -> int:
     print(f"DRIFT: OK ({len(led)} queries consistent across ledger, "
           "COVERAGE, STATUS, bench snapshot, SparkEntry; parquet read "
           f"only in Tables; {len(covered)} repeated oracle SQL lines; "
-          "one session recipe; one stage barrier)")
+          "one session recipe; one stage barrier; one tracer)")
     return 0
 
 
