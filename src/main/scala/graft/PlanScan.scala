@@ -9,7 +9,6 @@ object PlanScan {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("broadcast")) return broadcastAudit(args)
     if (args.headOption.contains("exchanges")) return exchangeLedger(args)
-    if (args.headOption.contains("diff")) return exchangeDiff(args)
     val sfDir =
       args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = graft.core.Sessions.local("4", logLevel = "ERROR")
@@ -131,38 +130,6 @@ object PlanScan {
       case None => lines.foreach(l => println(s"[exchanges] $l"))
     }
     spark.stop()
-  }
-
-  /** `runMain graft.PlanScan diff [sfDirA] [sfDirB]`: regenerate the
-    * exchange ledger at BOTH scale factors and exit non-zero on any
-    * per-query divergence — the cross-SF size-stability check
-    * (ExchangeLedgerSpec's second test) as a standalone command for
-    * the bench harness / CI. Identical ledgers across two orders of
-    * magnitude prove no broadcast flips or join-strategy demotions
-    * hide behind the small-SF plans.
-    */
-  private def exchangeDiff(args: Array[String]): Unit = {
-    val a = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val b = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val spark = graft.core.Sessions.local("4", logLevel = "ERROR")
-    def toMap(lines: Seq[String]) =
-      lines.map { l => val p = l.split(" ", 2); p(0) -> p(1) }.toMap
-    val la = toMap(exchangeLedgerLines(spark, a))
-    val lb = toMap(exchangeLedgerLines(spark, b))
-    val diverged = (la.keySet ++ lb.keySet).toSeq.sorted.flatMap { n =>
-      (la.get(n), lb.get(n)) match {
-        case (Some(x), Some(y)) if x == y => None
-        case (x, y) => Some(s"$n: $a '${x.getOrElse("<absent>")}' vs " +
-          s"$b '${y.getOrElse("<absent>")}'")
-      }
-    }
-    spark.stop()
-    if (diverged.isEmpty)
-      println(s"[diff] ${la.size} queries: ledgers identical")
-    else {
-      diverged.foreach(d => println(s"[diff] $d"))
-      sys.exit(1)
-    }
   }
 
   /** `runMain graft.PlanScan broadcast [sfDir]`: flag every

@@ -57,8 +57,7 @@ object Verify {
       .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import BenchFormat.r3
     val timesJson = scala.jdk.CollectionConverters
       .MapHasAsScala(times).asScala.toSeq.sortBy(_._1)
       .map { case (n, t) => s"${q(n)}: ${r3(t)}" }

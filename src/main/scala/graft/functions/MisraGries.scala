@@ -97,7 +97,7 @@ object MisraGries {
 
 /** The same algorithm finishing to its counter MAP instead of the
   * candidate keys — the maintainable state for cross-batch
-  * heavy-hitter tracking ([[graft.streaming.HeavyHittersMonitor]]):
+  * heavy-hitter tracking (q238_mg_incremental merges one per period):
   * per-batch summaries merge with the Agarwal-trim exactly like
   * partial buffers do inside one aggregation, so the n/(k+1)
   * candidate guarantee holds over the whole stream regardless of

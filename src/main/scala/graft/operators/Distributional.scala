@@ -41,15 +41,6 @@ object Distributional {
       .drop("_hv", "text")
   }
 
-  /** Hashed-unigram bucket counts of a corpus slice: (b, n) with one
-    * row per OCCUPIED bucket (≤ B rows). The mergeable-partial form —
-    * counts from two slices merge by summing on b
-    * ([[IncrementalAgg.mergePartials]]), which is what the streaming
-    * drift monitor accumulates per epoch. */
-  def bucketCounts(docs: DataFrame, b: Int = DefaultBuckets): DataFrame =
-    tokenBuckets(docs.select(col("text")), b)
-      .groupBy(col("b")).agg(count(lit(1)).as("n"))
-
   /** DSIR importance scores (Xie et al. 2023): every non-target doc
     * scored by the add-one-smoothed log-likelihood ratio of its hashed
     * unigrams under the target vs raw models. Input: (doc_id, source,

@@ -42,6 +42,11 @@ Checks:
      `extends SparkListener`, `new SparkListener` and `addSparkListener`
      appear only in core/Trace.scala, the one place that decides how
      Spark work is attributed to a name and when its counts are complete.
+ 11. One streaming surface (a ratchet at zero): every top-level object,
+     class or trait under src/main/scala/graft/streaming/ is named, with
+     comments stripped, in some other file under src/main or
+     perfbench/src. A stream object that only its own spec reaches is
+     a second path for a job the engine already does one way.
 """
 import glob
 import json
@@ -84,6 +89,66 @@ def only_in(home, pattern, tree="src/main"):
         if rel != home and re.search(pattern,
                                      open(f, encoding="utf-8").read()):
             hits.append(rel)
+    return hits
+
+
+def strip_comments(src):
+    """Scala source without its // and (nested) /* */ comments; string
+    literals, which may hold `//` (as in `file://`), are kept."""
+    out, i, n = [], 0, len(src)
+    while i < n:
+        if src.startswith('"""', i):
+            j = src.find('"""', i + 3)
+            j = n if j < 0 else j + 3
+            while j < n and src[j] == '"':
+                j += 1
+        elif src[i] == '"':
+            j = i + 1
+            while j < n and src[j] not in '"\n':
+                j += 2 if src[j] == "\\" else 1
+            j += 1
+        elif src.startswith("//", i):
+            i = src.find("\n", i)
+            i = n if i < 0 else i
+            continue
+        elif src.startswith("/*", i):
+            depth, i = 1, i + 2
+            while i < n and depth:
+                if src.startswith("/*", i):
+                    depth, i = depth + 1, i + 2
+                elif src.startswith("*/", i):
+                    depth, i = depth - 1, i + 2
+                else:
+                    i += 1
+            continue
+        else:
+            j = i + 1
+        out.append(src[i:j])
+        i = j
+    return "".join(out)
+
+
+def unreached_streaming():
+    """Check 11's measure: the top-level types under streaming/ that no
+    other file under src/main or perfbench/src names (comments
+    stripped), as "file: Name" strings."""
+    files = sorted(glob.glob(os.path.join(REPO, "src/main/**/*.scala"),
+                             recursive=True) +
+                   glob.glob(os.path.join(REPO, "perfbench/src/**/*.scala"),
+                             recursive=True))
+    code = {f: strip_comments(open(f, encoding="utf-8").read())
+            for f in files}
+    words = {f: set(re.findall(r"\w+", c)) for f, c in code.items()}
+    top = re.compile(r"^(?:(?:abstract|final|sealed|case)\s+)*"
+                     r"(?:object|class|trait)\s+(\w+)", re.M)
+    hits = []
+    for f in files:
+        rel = os.path.relpath(f, REPO)
+        if not rel.startswith("src/main/scala/graft/streaming/"):
+            continue
+        for name in top.findall(code[f]):
+            if not any(name in w for g, w in words.items() if g != f):
+                hits.append(f"{os.path.basename(rel)}: {name}")
     return hits
 
 
@@ -205,6 +270,14 @@ def main() -> int:
             errs.append(f"{rel} defines or adds a SparkListener — attribute "
                         "Spark work through core.Trace instead")
 
+    # 11. one streaming surface: every stream object has a caller
+    unreached = unreached_streaming()
+    if unreached:
+        errs.append(f"{len(unreached)} streaming/ types that no other main "
+                    "or perfbench file names — call them from an entry "
+                    "point or delete them with their specs: " +
+                    ", ".join(unreached))
+
     if errs:
         print("DRIFT: FAIL")
         for e in errs:
@@ -213,7 +286,8 @@ def main() -> int:
     print(f"DRIFT: OK ({len(led)} queries consistent across ledger, "
           "COVERAGE, STATUS, bench snapshot, SparkEntry; parquet read "
           f"only in Tables; {len(covered)} repeated oracle SQL lines; "
-          "one session recipe; one stage barrier; one tracer)")
+          "one session recipe; one stage barrier; one tracer; "
+          "one streaming surface)")
     return 0
 
 

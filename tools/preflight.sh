@@ -12,7 +12,11 @@
 #   2. the full oracle sweep at sf0.01 (graft.Verify +
 #      tools/check_oracle.py) — every declared query must hash-match;
 #   3. tools/drift_check.py — ledgers/COVERAGE/STATUS/bench-snapshot/
-#      SparkEntry cross-referenced (the documentation-drift class).
+#      SparkEntry cross-referenced (the documentation-drift class);
+#   4. the bench residual gate — tools/bench_compare.py --gate over the
+#      two newest BENCH_local_r*.json snapshots (skipped with fewer);
+#   5. the solo-anchor gate — tools/bench_compare.py --gate over the two
+#      newest BENCH_anchor_r*.json tables (baseline-only with one).
 # Prints PREFLIGHT: PASS/FAIL and the per-stage outcome; writes the
 # run record to tools/preflight_last.txt (cited by STATUS.md).
 set -u

@@ -1,7 +1,8 @@
 #!/bin/bash
 # Run a graft main class directly from compiled classes (no sbt):
 #   tools/run_main.sh graft.Probe time <sfDir> q157_similarity_join
-# Mirrors build.sbt's forked-run JVM flags (JDK17 add-opens, UTC, no UI).
+# Mirrors build.sbt's forked-run JVM flags (JDK17 add-opens, heap); the
+# session settings come from graft.core.Sessions.common.
 # Requires `sbt compile` to have produced target/scala-2.13/classes.
 set -euo pipefail
 CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
@@ -15,6 +16,4 @@ for p in java.base/java.lang java.base/java.lang.invoke \
          java.base/sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
-exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-16g}" -cp "$CP" "$@"
+exec java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-16g}" -cp "$CP" "$@"
