@@ -79,12 +79,6 @@ object PlanScan {
     (sh, bc, sc, gw)
   }
 
-  /** Partition-less window count alone — the PlanShapeSpec pin helper
-    * for queries that must NEVER plan a global window.
-    */
-  def globalWindowCount(df: org.apache.spark.sql.DataFrame): Int =
-    exchangeCounts(df)._4
-
   /** One ledger line per query, sorted by name. Queries are planned
     * 8 at a time from a thread pool (r12 verdict #1 — suite wall
     * time): building a query's DataFrame executes its eager

@@ -243,56 +243,9 @@ object TDigest {
         .ExpressionEncoder[Seq[Double]]()
   }
 
-  /** Sketch column → the merged Sketch — the MAINTENANCE-side merge
-    * (base ∪ delta digests → the new maintained state), completing
-    * the q110 `mergeSketches` analogue for quantiles: a digest table
-    * updates per refresh by unioning base and delta frames and
-    * aggregating this per key; [[MergeAgg]] is the read side of the
-    * same state.
-    */
-  class MergeSketchAgg(delta: Int)
-      extends Aggregator[Sketch, Buf, Sketch] {
-    private val inner = new MergeAgg(delta, Nil)
-    override def zero: Buf = inner.zero
-    override def reduce(b: Buf, s: Sketch): Buf = inner.reduce(b, s)
-    override def merge(a: Buf, b: Buf): Buf = inner.merge(a, b)
-    override def finish(b: Buf): Sketch = {
-      val f = mergeBufs(b, Buf(Nil, Nil, Nil), delta)
-      Sketch(f.means, f.weights)
-    }
-    override def bufferEncoder: Encoder[Buf] = bufEncoder
-    override def outputEncoder: Encoder[Sketch] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Sketch]()
-  }
-
-  /** `agg`-ready: quantile estimates of a double column. */
-  def quantiles(delta: Int, qs: Seq[Double])(col: Column): Column =
-    udaf(new QuantilesAgg(delta, qs), Encoders.scalaDouble).apply(col)
-
   /** `agg`-ready: the digest of a double column, as a struct. */
   def sketch(delta: Int)(col: Column): Column =
     udaf(new SketchAgg(delta), Encoders.scalaDouble).apply(col)
-
-  /** (value, weight) pairs → the digest itself — the weighted
-    * maintainable state; merges through [[MergeAgg]]/[[mergeQuantiles]]
-    * exactly like the unweighted [[SketchAgg]] output.
-    */
-  class WeightedSketchAgg(delta: Int)
-      extends Aggregator[(Double, Long), WBuf, Sketch] {
-    private val inner = new WeightedQuantilesAgg(delta, Nil)
-    override def zero: WBuf = inner.zero
-    override def reduce(b: WBuf, x: (Double, Long)): WBuf =
-      inner.reduce(b, x)
-    override def merge(a: WBuf, b: WBuf): WBuf = inner.merge(a, b)
-    override def finish(b: WBuf): Sketch = {
-      val f = inner.merge(b, zero) // flush via merge with empty
-      Sketch(f.means, f.weights)
-    }
-    override def bufferEncoder: Encoder[WBuf] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[WBuf]()
-    override def outputEncoder: Encoder[Sketch] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Sketch]()
-  }
 
   /** `agg`-ready: weighted quantiles of (value, weight) columns. */
   def weightedQuantiles(delta: Int, qs: Seq[Double])(
@@ -300,17 +253,6 @@ object TDigest {
     udaf(new WeightedQuantilesAgg(delta, qs),
       Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong))
       .apply(value, weight)
-
-  /** `agg`-ready: the weighted digest of (value, weight) columns. */
-  def weightedSketch(delta: Int)(value: Column, weight: Column): Column =
-    udaf(new WeightedSketchAgg(delta),
-      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong))
-      .apply(value, weight)
-
-  /** `agg`-ready: merged Sketch of a sketch column (maintenance). */
-  def mergeSketch(delta: Int)(col: Column): Column =
-    udaf(new MergeSketchAgg(delta), Encoders.product[Sketch])
-      .apply(col.getField("means"), col.getField("weights"))
 
   /** `agg`-ready: quantiles of the union behind a sketch column.
     * `udaf` with a product input encoder flattens the case class into

@@ -10,15 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Validate {
 
-  /** Pass the value through, failing the job on violations — the
-    * strict CHECK-constraint stance for curated warehouse loads.
-    */
-  def enumStrict(c: Column, allowed: Seq[String]): Column =
-    when(c.isNull || c.isin(allowed: _*), c)
-      .otherwise(raise_error(concat(
-        lit("enum violation: '"), c,
-        lit(s"' not in ${allowed.mkString("{", ",", "}")}"))))
-
   /** Quarantine stance: out-of-domain values become NULL (count them
     * separately and route to a dead-letter table).
     */
@@ -53,27 +44,12 @@ object Validate {
     (df.observe(obs, metrics.head, metrics.tail: _*), obs)
   }
 
-  /** Streaming form of [[observed]]: `Observation` only supports
-    * batch queries, so attach a NAMED observe node instead and read
-    * the per-micro-batch metric row from
-    * `StreamingQueryProgress.observedMetrics(name)` — the same
-    * zero-extra-pass accumulators, reported per batch (a per-batch
-    * quality feed for alerting, not a global total; sum across
-    * progress events for cumulative numbers).
-    */
-  def observedStream(df: DataFrame, name: String,
-      checks: Seq[(String, Column)]): DataFrame = {
-    require(checks.nonEmpty, "at least one check is required")
-    val metrics = observeMetrics(checks)
-    df.observe(name, metrics.head, metrics.tail: _*)
-  }
-
   private def observeMetrics(checks: Seq[(String, Column)])
       : Seq[Column] =
     count(lit(1)).as("n_rows") +:
       checks.map { case (n, pred) =>
-        // sum over ZERO rows is NULL — an empty micro-batch / filtered
-        // partition must report 0 violations, not break getAs[Long]
+        // sum over ZERO rows is NULL — an empty frame must report 0
+        // violations, not break getAs[Long]
         coalesce(sum(pred.cast("long")), lit(0L)).as(n)
       }
 }

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.core.Barrier
 import graft.functions.{Let, TextFunctions}
 
-/** Deduplication operators for training-data pipelines: exact
-  * (fingerprint group-by), MinHash+LSH banding, SimHash, and n-gram
-  * Jaccard verification.
+/** Deduplication operators for training-data pipelines: chunk-level
+  * fingerprints, MinHash+LSH banding, SimHash, and n-gram Jaccard
+  * verification (exact dedup is q43's fingerprint count, inline).
   *
   * Scale design: signatures (fingerprint, minhash, bands, simhash) are
   * ALL per-row Catalyst expression trees — zero shuffles to compute
@@ -17,16 +17,6 @@ import graft.functions.{Let, TextFunctions}
   * LSH-bucket collisions, never the full O(n²) pair space.
   */
 object Dedup {
-
-  /** Exact dedup: keep the lowest-id row per normalized-text
-    * fingerprint (reference A9/W2 dedup patterns, made total-ordered).
-    */
-  def exactDedup(df: DataFrame, textCol: String, idCol: String)
-      : DataFrame =
-    df.withColumn("_fp", TextFunctions.fingerprint(col(textCol)))
-      .groupBy(col("_fp"))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
-      .drop("_fp")
 
   /** Chunk ("line")-level dedup classification — the RefinedWeb/Gopher
     * "remove lines duplicated across the corpus" stage at sub-document

@@ -7,18 +7,14 @@ import org.apache.spark.sql.functions._
   * columns with a typed metadata struct, plus decode / resize /
   * frame-sample operators.
   *
-  * Decode status: IMAGES decode for real — [[imageDecoder]] plugs the
-  * JDK's own `javax.imageio` codecs (PNG/JPEG/GIF/BMP, headless-safe)
-  * into [[decodePartitions]], so byte→pixels→features runs end-to-end
-  * distributed (MultimodalCodecSpec proves exact pixel sums on real
-  * PNGs). AUDIO decodes for real too — [[audioDecoder]] /
-  * [[pcmWindowDecoder]] plug `javax.sound.sampled.AudioSystem`
-  * (WAV/PCM, AIFF, AU — all stock-JDK) into the same seam, feeding
-  * the SAME per-window energy grid the column pipeline computes
-  * (AudioCodecSpec proves exact sample sums and window energies on
-  * real WAV bytes). VIDEO decodes for real as of round 12 for the
-  * one container a stock JDK can honestly own: MJPEG (or raw-DIB)
-  * frames in an AVI/RIFF container — [[aviFrames]] walks the RIFF
+  * Decode status: IMAGES decode for real — [[imageGridDecoder]] runs
+  * the JDK's own `javax.imageio` codecs (PNG/JPEG/GIF/BMP,
+  * headless-safe) down to the luma grid [[dHash60]] hashes
+  * (MultimodalCodecSpec checks it on real PNGs). AUDIO is the column
+  * pipeline over samples: [[windowEnergies]] computes the per-window
+  * energy grid q304 checks against the oracle. VIDEO decodes for real
+  * for the one container a stock JDK can honestly own: MJPEG (or
+  * raw-DIB) frames in an AVI/RIFF container — [[aviFrames]] walks the RIFF
   * chunk tree (pure public byte-format knowledge: fourcc + LE u32
   * size + even padding), and [[videoFrameDecoder]] feeds each frame
   * through the SAME JDK ImageIO path [[imageGridDecoder]] already
@@ -26,7 +22,7 @@ import org.apache.spark.sql.functions._
   * proven parts (VideoCodecSpec pins the law
   * `videoFrameDecoder(aviBytes(frames)) == frames.map(grid)` plus
   * the quarantine matrix). Codecs the JDK lacks (H.264 etc.)
-  * quarantine per the q304 law: ok=false / empty, never throw.
+  * quarantine per the q304 law: an empty grid, never a throw.
   * `decodePixelsStub` remains as the generic non-JDK-codec seam
   * demo.
   */
@@ -71,8 +67,7 @@ object Multimodal {
     * at bit 63, Spark's wraps; 60 bits sidesteps both). Pure column
     * arithmetic over the grid, so a deterministic pixel source is
     * oracle-checkable end-to-end; real decodes feed the same grid from
-    * [[imageDecoder]]'s pixels (spec-proven — codecs can't run in
-    * SQL).
+    * [[imageGridDecoder]] (spec-proven — codecs can't run in SQL).
     *
     * @param gray array<long> of 66 luma values, row-major 6 rows × 11
     *             columns (the downsample: one column overlap per
@@ -95,13 +90,13 @@ object Multimodal {
     * everywhere — the grid is deterministic for given bytes, so the
     * downstream hash/banding pipeline behaves exactly as the
     * oracle-checked synthetic-grid path (q303). Returns empty on
-    * undecodable bytes (the quarantine convention of
-    * [[imageDecoder]]).
+    * undecodable bytes: at corpus scale a bad blob must quarantine,
+    * never kill the job.
     */
   def imageGridDecoder(rows: Int, cols: Int)
       : Array[Byte] => Seq[Long] = {
-    // fail at construction on the driver (the pcmWindowDecoder rule):
-    // a 0/negative grid would divide by zero inside every task
+    // fail at construction on the driver: a 0/negative grid would
+    // divide by zero inside every task
     require(rows > 0 && cols > 0, "grid dims must be positive")
     bytes =>
     val img =
@@ -142,137 +137,11 @@ object Multimodal {
     }
   }
 
-  /** Exact decoded-audio features — the audio analog of
-    * [[ImageFeatures]]: sample rate, exact sample count, and the
-    * integer sum of absolute 16-bit sample values (deterministic, so
-    * the distributed decode is assertable bit-for-bit against a local
-    * reference). `ok=false` quarantines undecodable payloads.
-    */
-  final case class AudioFeatures(sampleRate: Int, nSamples: Long,
-      absSum: Long, ok: Boolean)
-
-  /** Decode audio bytes with the stock JDK codec
-    * (`javax.sound.sampled.AudioSystem`: WAV/PCM, AIFF, AU) to 16-bit
-    * signed channel-0 samples. Returns null for unrecognized or
-    * non-16-bit-PCM payloads (the quarantine convention). Frames are
-    * parsed per the container's declared endianness; multi-channel
-    * audio takes channel 0 (the dedup/fingerprint convention — energy
-    * grids must be channel-stable, not mixdown-dependent).
-    */
-  private def readPcm16(bytes: Array[Byte]): (Int, Array[Int]) = {
-    val in =
-      try javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      catch {
-        case _: javax.sound.sampled.UnsupportedAudioFileException => null
-        case _: java.io.IOException => null
-      }
-    if (in == null) null
-    else
-      try {
-        val fmt = in.getFormat
-        val pcm = javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-        if (fmt.getEncoding != pcm || fmt.getSampleSizeInBits != 16) null
-        else {
-          val raw = in.readAllBytes()
-          val frameSize = fmt.getFrameSize
-          val n = raw.length / frameSize
-          val out = new Array[Int](n)
-          val (lo, hi) = if (fmt.isBigEndian) (1, 0) else (0, 1)
-          var i = 0
-          while (i < n) {
-            val base = i * frameSize
-            out(i) = ((raw(base + hi).toInt << 8) |
-              (raw(base + lo) & 0xff)).toShort.toInt
-            i += 1
-          }
-          (fmt.getSampleRate.toInt, out)
-        }
-      } catch {
-        case _: java.io.IOException => null
-      } finally in.close()
-  }
-
-  /** REAL audio decode via the JDK codec — exact integer sample
-    * statistics, quarantine on undecodable bytes. Shape: a decoder
-    * function to hand to [[decodePartitions]], mirroring
-    * [[imageDecoder]].
-    */
-  def audioDecoder(): Array[Byte] => AudioFeatures = { bytes =>
-    val dec = readPcm16(bytes)
-    if (dec == null) AudioFeatures(0, 0L, 0L, ok = false)
-    else {
-      val (rate, samples) = dec
-      var s = 0L
-      var i = 0
-      while (i < samples.length) { s += math.abs(samples(i).toLong); i += 1 }
-      AudioFeatures(rate, samples.length.toLong, s, ok = true)
-    }
-  }
-
-  /** Real-codec feeder for the per-window energy grid: decode audio
-    * bytes and emit one exact energy (Σ sample², in longs) per
-    * hop-spaced window — the SAME window arithmetic as the column
-    * pipeline [[windowEnergies]] (trailing partial window included),
-    * so real decoded bytes and SQL-synthesized samples flow through
-    * one grid shape and the codec-law spec can assert them equal.
-    * Empty on quarantine (the [[imageGridDecoder]] convention).
-    */
-  def pcmWindowDecoder(windowSamples: Int, hopSamples: Int)
-      : Array[Byte] => Seq[Long] = {
-    // fail at construction on the driver (like windowEnergiesFold),
-    // not as a mid-job executor task error inside the lambda
-    require(windowSamples > 0 && hopSamples > 0,
-      "window and hop must be positive")
-    bytes =>
-    val dec = readPcm16(bytes)
-    if (dec == null) Seq.empty
-    else {
-      val samples = dec._2
-      val n = samples.length
-      if (n == 0) Seq.empty
-      else (0 to (n - 1) / hopSamples).map { w =>
-        val start = w * hopSamples
-        val end = math.min(start + windowSamples, n)
-        var e = 0L
-        var i = start
-        while (i < end) {
-          e += samples(i).toLong * samples(i); i += 1
-        }
-        e
-      }
-    }
-  }
-
-  /** Synthesize a one-channel 16-bit PCM WAV container from samples —
-    * the fixture-builder for codec-law specs and media test tables
-    * (the encode direction of [[audioDecoder]], via the same JDK
-    * codec so round-trips are exact: PCM is lossless).
-    */
-  def wavBytes(samples: Array[Short], sampleRate: Int): Array[Byte] = {
-    val fmt = new javax.sound.sampled.AudioFormat(
-      sampleRate.toFloat, 16, 1, true, false) // signed, little-endian
-    val raw = new Array[Byte](samples.length * 2)
-    var i = 0
-    while (i < samples.length) {
-      raw(2 * i) = (samples(i) & 0xff).toByte
-      raw(2 * i + 1) = ((samples(i) >> 8) & 0xff).toByte
-      i += 1
-    }
-    val stream = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(raw), fmt, samples.length.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(stream,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
-  }
-
   /** Per-window audio energies as a PURE COLUMN function: window w
     * (0-based, hop-spaced, trailing partial included) gets
     * Σ sample² over [w·hop, min(w·hop+windowLen, n)) — exact longs,
-    * so SQL-synthesized samples are oracle-checkable end-to-end while
-    * real decodes feed the identical grid from [[pcmWindowDecoder]]
-    * (spec-proven — codecs can't run in SQL). Computed by the native
+    * so SQL-synthesized samples are oracle-checkable end-to-end.
+    * Computed by the native
     * [[graft.plans.WindowEnergiesExpr]] kernel (one primitive loop
     * per row — the HOF form boxed every sample ~window/hop times and
     * dominated q304's bench cost); [[windowEnergiesFold]] keeps the
@@ -319,8 +188,7 @@ object Multimodal {
 
   /** Synthesize a single-video-stream AVI container from already-
     * encoded frame payloads (JPEGs for MJPEG, BMP/DIB for raw) — the
-    * fixture-builder direction of [[aviFrames]], mirroring
-    * [[wavBytes]]. Standard RIFF shape: RIFF('AVI ' LIST('hdrl' avih
+    * fixture-builder direction of [[aviFrames]]. Standard RIFF shape: RIFF('AVI ' LIST('hdrl' avih
     * LIST('strl' strh strf)) LIST('movi' 00dc…) idx1), chunks padded
     * to even length with the size field recording the TRUE length —
     * the detail the parser must honor, so the round-trip law
@@ -485,33 +353,9 @@ object Multimodal {
       }
   }
 
-  /** Exact decoded-video features — the video analog of
-    * [[ImageFeatures]]/[[AudioFeatures]]: frame count, summed exact
-    * luma over all decodable frames, and the count that decoded.
-    * `ok=false` quarantines undecodable containers.
-    */
-  final case class VideoFeatures(nFrames: Int, nDecoded: Int,
-      lumaSum: Long, ok: Boolean)
-
-  /** Decoder-function form for [[decodePartitions]], mirroring
-    * [[imageDecoder]]/[[audioDecoder]].
-    */
-  def videoDecoder(): Array[Byte] => VideoFeatures = {
-    val img = imageDecoder()
-    bytes =>
-      aviFrames(bytes) match {
-        case None => VideoFeatures(0, 0, 0L, ok = false)
-        case Some(frames) =>
-          val feats = frames.map(img)
-          VideoFeatures(frames.length, feats.count(_.ok),
-            feats.filter(_.ok).map(_.lumaSum).sum, ok = true)
-      }
-  }
-
   /** Synthesize an encoded image from a pixel function — the encode
-    * direction of [[imageDecoder]]/[[imageGridDecoder]] (the
-    * [[wavBytes]] convention), for codec-law fixtures and the q308
-    * in-query AVI synthesis. `format` is any ImageIO writer name
+    * direction of [[imageGridDecoder]], for codec-law fixtures and the
+    * q308 in-query AVI synthesis. `format` is any ImageIO writer name
     * ("bmp" is lossless; "jpg" is the MJPEG frame payload).
     */
   def imageBytes(width: Int, height: Int, format: String)(
@@ -558,66 +402,6 @@ object Multimodal {
       meta.getField("duration_s").as("duration_s"))
   }
 
-  /** Decoded-image features: exact integer pixel statistics, so the
-    * distributed decode is assertable bit-for-bit against a local
-    * reference decode. `ok=false` marks undecodable payloads (wrong
-    * magic bytes, truncated file) — kept as rows, not errors: at
-    * corpus scale a bad blob must quarantine, never kill the job.
-    */
-  final case class ImageFeatures(width: Int, height: Int,
-      lumaSum: Long, ok: Boolean)
-
-  /** REAL image decode via the JDK's `javax.imageio` (PNG/JPEG/GIF/
-    * BMP — present in every headless JRE, no external codec needed).
-    * Shape: a decoder function to hand to [[decodePartitions]];
-    * `ImageIO.read` returns null for unrecognized bytes, which maps
-    * to the quarantine row. Luma is the integer BT.601 weighting
-    * (299R+587G+114B)/1000 summed over all pixels — deterministic,
-    * overflow-safe to ~6 giga-pixels per image.
-    */
-  def imageDecoder(): Array[Byte] => ImageFeatures = { bytes =>
-    val img =
-      try javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      catch { case _: java.io.IOException => null }
-    if (img == null) ImageFeatures(0, 0, 0L, ok = false)
-    else {
-      var s = 0L
-      var y = 0
-      while (y < img.getHeight) {
-        var x = 0
-        while (x < img.getWidth) {
-          val rgb = img.getRGB(x, y)
-          s += (299L * ((rgb >> 16) & 0xff) + 587L * ((rgb >> 8) & 0xff)
-            + 114L * (rgb & 0xff)) / 1000L
-          x += 1
-        }
-        y += 1
-      }
-      ImageFeatures(img.getWidth, img.getHeight, s, ok = true)
-    }
-  }
-
-  /** The per-partition imperative decode path — the Scala analog of a
-    * Pandas-UDF/`mapInPandas` batch decode. A real pipeline plugs a
-    * codec in `decode`; the decoder handle is constructed ONCE per
-    * partition and reused across rows (the connection/codec-reuse
-    * pattern `mapPartitions` exists for). The codec itself is the
-    * stubbed seam — this stand-in must stay deterministic.
-    */
-  def decodePartitions[T](df: DataFrame,
-      makeDecoder: () => Array[Byte] => T)(
-      implicit enc: org.apache.spark.sql.Encoder[(Long, T)])
-      : org.apache.spark.sql.Dataset[(Long, T)] = {
-    import df.sparkSession.implicits._
-    df.select(col("media_id").cast("long"), col("bytes"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        val decode = makeDecoder() // one decoder per partition
-        rows.map { case (id, bytes) => (id, decode(bytes)) }
-      }
-  }
-
   /** Frame sampling plan for video rows: one struct per sampled frame
     * at `fps` — pure plan arithmetic, distributed via explode. Videos
     * shorter than one frame interval emit zero rows: the guard
@@ -640,9 +424,8 @@ object Multimodal {
     * `t_end_s` clamps to the duration). Same plan-arithmetic explode
     * discipline as [[sampleFrames]], same descending-`sequence` guard.
     * `energy` is the decode seam's deterministic stand-in for a real
-    * per-window RMS (md5-derived, so the oracle can replay it); a
-    * codec build swaps it for actual sample math inside
-    * [[decodePartitions]].
+    * per-window RMS (md5-derived, so the oracle can replay it);
+    * [[windowEnergies]] is the exact sample math.
     */
   def sampleWindows(df: DataFrame, windowS: Int, hopS: Int): DataFrame = {
     require(windowS > 0 && hopS > 0, "window and hop must be positive")

@@ -426,15 +426,4 @@ object Similarity {
     val rng = new scala.util.Random(seed)
     Seq.fill(nPlanes)(Seq.fill(dim)(rng.nextGaussian()))
   }
-
-  /** LSH-bucketed ANN: histogram of bucket occupancy — the telemetry
-    * that sizes the probe set.
-    */
-  def srpBucketHistogram(vectors: DataFrame, nPlanes: Int, dim: Int)
-      : DataFrame =
-    vectors
-      .withColumn("bucket", srpBucket(col("embedding"),
-        planes(nPlanes, dim)))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_vectors"))
 }

@@ -5,10 +5,9 @@ import graft.core.Tables
 import graft.operators.{Multimodal, Similarity}
 
 /** Round-10 tranche I: the two capability closers the round-9 verdict
-  * named — REAL audio window energies through the same column grid
-  * the JDK-codec decode path feeds (q304, the audio analog of q303's
-  * image treatment), and SemDeDup-style semantic dedup composed from
-  * the existing ANN kernels (q305).
+  * named — audio window energies through an exact column grid (q304,
+  * the audio analog of q303's image treatment), and SemDeDup-style
+  * semantic dedup composed from the existing ANN kernels (q305).
   *
   * Reference anchor: the curriculum's vector/similarity labs
   * (`3-spark-fundamentals`); audio + semantic dedup are the
@@ -23,9 +22,7 @@ object Extended29 {
     * a 16-sample hop (5 s / 2 s at 8 Hz — q115's grid in samples),
     * trailing partials included; energy = Σ s² exact in longs. The
     * oracle replays samples, window arithmetic, and energy — so the
-    * whole audio pipeline short of the codec is cross-engine-checked,
-    * while AudioCodecSpec proves REAL WAV bytes decoded by
-    * [[Multimodal.pcmWindowDecoder]] land in the IDENTICAL grid.
+    * whole audio pipeline short of the codec is cross-engine-checked.
     * Samples are Let-bound: windowEnergies' per-window lambdas would
     * otherwise re-inline (and re-synthesize) the whole sample array
     * per window — the documented HOF trap (q303's lesson).

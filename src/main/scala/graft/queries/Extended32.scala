@@ -48,9 +48,9 @@ object Extended32 {
     * frame counts and per-frame energies Σ cell² bit-for-bit. Any bug
     * in the RIFF writer, the walker, the BMP round-trip, or the block
     * downsample lands on different grid values and breaks the hash.
-    * Scale shape: one codec per partition ([[Multimodal
-    * .decodePartitions]]' discipline), ids-only shuffle to the bucket
-    * aggregate, bytes never leave the task that made them.
+    * Scale shape: one codec per partition (`mapPartitions`), ids-only
+    * shuffle to the bucket aggregate, bytes never leave the task that
+    * made them.
     */
   val q308_video_frames: Q = Q(
     "q308_video_frames",
@@ -78,8 +78,8 @@ object Extended32 {
       .filter(pmod($"doc_id", lit(3)) === 2)
       .select($"doc_id").as[Long]
     val grids = vids.mapPartitions { ids =>
-      // decoder constructed once per partition (the codec-reuse
-      // pattern decodePartitions established)
+      // decoder constructed once per partition (codec reuse across
+      // the partition's rows)
       val decode = Multimodal.videoFrameDecoder(rows, cols)
       ids.map { id =>
         val cl = id % 512

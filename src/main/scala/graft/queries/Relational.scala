@@ -233,10 +233,10 @@ object Relational {
         // ≤5% error, and a sketch whose TYPICAL error is 5% sits on
         // the boundary (measured: all five sf0.1 groups land outside).
         // At 1% rsd the 5% envelope is ~5σ of headroom at every SF.
-        // COST of that headroom (graft.functions.Sketches): 2^14
-        // registers ≈ 12.8 KiB/group vs the default's 0.4 KiB — ~32×,
-        // fine at 5 groups, NOT fine at a 10⁶-group GROUP BY; there
-        // use Sketches.rsdForBudget(nGroups) instead of a constant.
+        // COST of that headroom (Spark's HLL++ precision
+        // p = ⌈2·log₂(1.106/rsd)⌉): 2^14 registers ≈ 12.8 KiB/group
+        // vs the default's 0.4 KiB — ~32×, fine at 5 groups, NOT fine
+        // at a 10⁶-group GROUP BY, where rsd must follow group count.
         approx_count_distinct($"user_id", rsd = 0.01)
           .as("n_users_approx"))
     exact.join(broadcast(approx), Seq("event_type"))

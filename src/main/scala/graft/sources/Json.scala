@@ -26,19 +26,6 @@ object Json {
       : DataFrame =
     spark.read.schema(schema).option("mode", "FAILFAST").json(path)
 
-  /** Permissive read routing malformed lines to `_corrupt_record`
-    * (the dead-letter column) instead of failing the job — the
-    * streaming-ingest stance where one bad producer must not stop
-    * the pipeline.
-    */
-  def readWithCorruptColumn(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    spark.read
-      .schema(schema.add("_corrupt_record", "string"))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-
   /** JSON-lines write (one object per line, gzip-friendly). */
   def write(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)

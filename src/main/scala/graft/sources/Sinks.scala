@@ -42,31 +42,6 @@ object Sinks {
     df.write.format(format).mode(SaveMode.Overwrite)
       .bucketBy(buckets, key).sortBy(key).saveAsTable(name)
 
-  /** Z-ordered layout write: range-partition by the Morton key of two
-    * dimension columns, sort files on it, and write `nFiles` files —
-    * the OPTIMIZE ZORDER layout pass. Rows close in EITHER dimension
-    * land in the same or adjacent files, so parquet min/max footer
-    * stats prune selective filters on BOTH columns from one physical
-    * ordering (a single-column sort prunes only its own column). The
-    * write is one range shuffle regardless of table size; at 100 TB
-    * `nFiles` scales with the cluster and the same call holds.
-    *
-    * The two columns must already be bounded to 16-bit non-negative
-    * ints (dictionary ids, bucketed values) — [[graft.functions
-    * .ZOrder.morton2]]'s contract, asserted there.
-    */
-  def saveZOrdered(df: DataFrame, name: String,
-      colA: String, colB: String, nFiles: Int = 8,
-      format: String = "parquet"): Unit = {
-    import org.apache.spark.sql.functions.col
-    df.withColumn("_z",
-        graft.functions.ZOrder.morton2(col(colA), col(colB)))
-      .repartitionByRange(nFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.format(format).mode(SaveMode.Overwrite).saveAsTable(name)
-  }
-
   /** Small-file compaction — the table-maintenance pass a streaming or
     * micro-batch ingest needs periodically: thousands of KB-sized
     * files (one per epoch × partition) make every downstream scan pay

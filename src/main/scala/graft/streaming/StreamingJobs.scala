@@ -278,8 +278,8 @@ object StreamingJobs {
     // epoch ids are monotonic, so one high-watermark long replaces an
     // ever-growing Set (which would leak one boxed Long per micro-batch
     // for the process lifetime); a re-delivered batch always carries an
-    // already-seen (≤ watermark) epoch — `EpochSink`'s rule with a
-    // process-local watermark instead of a store
+    // already-seen (≤ watermark) epoch — `IncrementalAggSink`'s rule
+    // with a process-local watermark instead of a store
     private var maxSeen = Long.MinValue
     def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
       if (epochId > maxSeen) {
@@ -331,24 +331,46 @@ object StreamingJobs {
     * merge ≡ recompute law q103 proves in batch). This is the
     * append-stream alternative to an output-mode=update stateful agg:
     * each epoch costs one delta aggregation + one key-wise merge
-    * regardless of history size. A merge is not idempotent the way a
-    * batch overwrite is, so the table lives in an [[EpochSink]] store.
+    * regardless of history size.
+    *
+    * Exactly-once: Structured Streaming re-delivers an epoch after a
+    * crash (and may re-run the last one on restart), and a merge is
+    * not idempotent the way a batch overwrite is — a replayed epoch
+    * would merge its delta twice. So the store keeps the table
+    * TOGETHER with the epoch id it was committed at:
+    *  - `load()` returns `(table, committedEpoch)`, or None before the
+    *    first commit;
+    *  - `save(table, epochId)` must persist the two atomically (write
+    *    table + id to a staging location and rename, or one table
+    *    transaction) and must materialize the table before returning —
+    *    frames derived from the batch are only valid inside its epoch.
+    *
+    * [[apply]] skips every epoch at or below the stored one without
+    * starting a Spark job; otherwise it merges the batch into the
+    * prior table and saves the result with the epoch. There is no
+    * in-memory watermark: a restarted sink reads the epoch from the
+    * same store as the table, so it cannot merge a replay.
     */
   class IncrementalAggSink(
       aggregate: DataFrame => DataFrame,
       keys: Seq[String], sumCols: Seq[String],
       maxCols: Seq[String] = Nil, minCols: Seq[String] = Nil,
       load: () => Option[(DataFrame, Long)],
-      save: (DataFrame, Long) => Unit)
-      extends EpochSink[DataFrame](load, save) {
-    protected def step(batch: DataFrame, epochId: Long,
-        prior: Option[DataFrame]): DataFrame = {
+      save: (DataFrame, Long) => Unit) {
+    private def step(batch: DataFrame, prior: Option[DataFrame])
+        : DataFrame = {
       val delta = aggregate(batch)
       prior match {
         case Some(base) => graft.operators.IncrementalAgg
           .mergePartials(base, delta, keys, sumCols, maxCols, minCols)
         case None => delta
       }
+    }
+
+    def apply(batch: DataFrame, epochId: Long): Unit = synchronized {
+      val stored = load()
+      if (stored.forall(_._2 < epochId))
+        save(step(batch, stored.map(_._1)), epochId)
     }
   }
 }

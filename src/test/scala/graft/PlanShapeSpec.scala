@@ -974,7 +974,7 @@ class PlanShapeSpec extends SparkSpec {
     "global ordinal is the two-phase scan, the bucket a pure " +
     "integer function") {
     val df = SparkEntry.queries("q289_fact_ntile")(spark, sfDir)
-    assert(PlanScan.globalWindowCount(df) == 0)
+    assert(PlanScan.exchangeCounts(df)._4 == 0)
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("Window"),
       s"a window on the 6M-row fact table funnels it into one task:\n$p")
@@ -986,7 +986,7 @@ class PlanShapeSpec extends SparkSpec {
     Seq("q125_ntile_deciles", "q126_dist_ranks", "q212_quantile_norm")
       .foreach { q =>
         val df = SparkEntry.queries(q)(spark, sfDir)
-        assert(PlanScan.globalWindowCount(df) == 0,
+        assert(PlanScan.exchangeCounts(df)._4 == 0,
           s"$q plans a partition-less window — the whole relation " +
             "funnels through one task")
       }
@@ -1003,7 +1003,7 @@ class PlanShapeSpec extends SparkSpec {
     "may ROW_NUMBER, the engine ranks via PrefixSum's two-phase scan") {
     Seq("q292_zipf_fit", "q293_rank_freq_octaves").foreach { q =>
       val df = SparkEntry.queries(q)(spark, sfDir)
-      assert(PlanScan.globalWindowCount(df) == 0,
+      assert(PlanScan.exchangeCounts(df)._4 == 0,
         s"$q plans a partition-less window over the vocabulary")
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("Window"),
@@ -1016,7 +1016,7 @@ class PlanShapeSpec extends SparkSpec {
     "broadcast, no partition-less windows") {
     Seq("q294_cluster_quality", "q299_davies_bouldin").foreach { q =>
       val df = SparkEntry.queries(q)(spark, sfDir)
-      assert(PlanScan.globalWindowCount(df) == 0,
+      assert(PlanScan.exchangeCounts(df)._4 == 0,
         s"$q plans a partition-less window")
       val sections = df.queryExecution
         .explainString(org.apache.spark.sql.execution.ExplainMode
@@ -1122,7 +1122,7 @@ class PlanShapeSpec extends SparkSpec {
     "join, no window, no shuffle before the bucket aggregate; the " +
     "sample array is Let-bound (synthesized once, not per window)") {
     val df = SparkEntry.queries("q304_audio_energy")(spark, sfDir)
-    assert(PlanScan.globalWindowCount(df) == 0)
+    assert(PlanScan.exchangeCounts(df)._4 == 0)
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("Join"), s"q304 must not join:\n$p")
     // Let-binding proof: the per-sample synth pmod appears a bounded

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, Encoders}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -17,6 +18,12 @@ class TDigestSpec extends SparkSpec {
       (($"id" * 2654435761L) % 100000).cast("double").as("v"))
     .repartition(16)
 
+  // quantile estimates through the Aggregator SQL registers as
+  // tdigest_p50_p95 (GraftFunctions), at any delta and probes
+  private def quantiles(delta: Int, qs: Seq[Double])(col: Column) =
+    udaf(new TDigest.QuantilesAgg(delta, qs), Encoders.scalaDouble)
+      .apply(col)
+
   private def exactRank(vs: Array[Double], q: Double): Double = {
     val s = vs.sorted
     s(math.min(s.length - 1, math.max(0, (q * s.length).toInt)))
@@ -24,7 +31,7 @@ class TDigestSpec extends SparkSpec {
 
   test("group digests estimate quantiles within the rank envelope") {
     val got = df.groupBy($"g")
-      .agg(TDigest.quantiles(100, Seq(0.5, 0.95))($"v").as("est"))
+      .agg(quantiles(100, Seq(0.5, 0.95))($"v").as("est"))
       .as[(Long, Seq[Double])].collect().toMap
     val raw = df.as[(Long, Double)].collect().groupBy(_._1)
       .view.mapValues(_.map(_._2)).toMap
@@ -64,7 +71,7 @@ class TDigestSpec extends SparkSpec {
         ($"id" % 1000).cast("double").as("v"))
       .repartition(16)
       .groupBy($"g")
-      .agg(TDigest.quantiles(50, Seq(0.5))($"v").as("est"))
+      .agg(quantiles(50, Seq(0.5))($"v").as("est"))
       .as[(Long, Seq[Double])]
     assert(got.count() == 100000L)
     // each group holds exactly {g%1000, (g+100000)%1000} = two equal
@@ -73,59 +80,10 @@ class TDigestSpec extends SparkSpec {
     assert(sample._2 == Seq(777.0), s"g=777: $sample")
   }
 
-  test("weighted sketch feeds the same mergeQuantiles route") {
-    // weight w ≡ w duplicate rows: the weighted sketch of (v, 3)
-    // must estimate like the unweighted digest of v repeated 3x
-    val weighted = spark.range(0, 2000)
-      .select((($"id" * 2654435761L) % 100000).cast("double").as("v"),
-        lit(3L).as("w"),
-        ($"id" % 5).as("batch"))
-      .groupBy($"batch")
-      .agg(TDigest.weightedSketch(100)($"v", $"w").as("sk"))
-      .agg(TDigest.mergeQuantiles(100, Seq(0.5, 0.95))($"sk").as("est"))
-      .as[Seq[Double]].head()
-    val vs = spark.range(0, 2000)
-      .select((($"id" * 2654435761L) % 100000).cast("double").as("v"))
-      .as[Double].collect()
-    val Seq(p50, p95) = weighted
-    // uniform weights change nothing about ranks: same envelope as
-    // the unweighted merged route
-    assert(math.abs(vs.count(_ <= p50).toDouble / vs.length - 0.5)
-      <= 0.06, s"weighted merged p50=$p50")
-    assert(math.abs(vs.count(_ <= p95).toDouble / vs.length - 0.95)
-      <= 0.06, s"weighted merged p95=$p95")
-  }
-
-  test("maintained digest table: base+delta mergeSketch then read " +
-    "estimates like a direct digest of the union") {
-    // the q110 maintenance choreography: per-key base and delta
-    // digest frames union, mergeSketch re-compresses the state, the
-    // read side answers from the maintained column only
-    val base = df.filter($"g" < 2).groupBy($"g")
-      .agg(TDigest.sketch(100)($"v").as("sk"))
-    val delta = df.filter($"g" >= 2)
-      .withColumn("g", $"g" - 2) // collide keys so merging happens
-      .groupBy($"g").agg(TDigest.sketch(100)($"v").as("sk"))
-    val maintained = base.union(delta).groupBy($"g")
-      .agg(TDigest.mergeSketch(100)($"sk").as("sk"))
-    val got = maintained
-      .agg(TDigest.mergeQuantiles(100, Seq(0.5, 0.95))($"sk").as("est"))
-      .as[Seq[Double]].head()
-    val vs = df.select($"v").as[Double].collect()
-    val Seq(p50, p95) = got
-    assert(math.abs(vs.count(_ <= p50).toDouble / vs.length - 0.5)
-      <= 0.06, s"maintained p50=$p50")
-    assert(math.abs(vs.count(_ <= p95).toDouble / vs.length - 0.95)
-      <= 0.06, s"maintained p95=$p95")
-    // the state stays bounded after the merge
-    val sk = maintained.select($"sk.means").as[Seq[Double]].collect()
-    assert(sk.forall(m => m.nonEmpty && m.size <= 200))
-  }
-
   test("single-value groups return that value exactly") {
     val got = Seq((1L, 42.5)).toDF("g", "v")
       .groupBy($"g")
-      .agg(TDigest.quantiles(100, Seq(0.1, 0.5, 0.9))($"v").as("est"))
+      .agg(quantiles(100, Seq(0.1, 0.5, 0.9))($"v").as("est"))
       .as[(Long, Seq[Double])].head()
     assert(got._2 == Seq(42.5, 42.5, 42.5))
   }

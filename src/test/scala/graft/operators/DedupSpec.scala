@@ -19,13 +19,6 @@ class DedupSpec extends SparkSpec {
     (1L, base), (2L, base), (3L, nearDup), (4L, unrelated))
     .toDF("doc_id", "text")
 
-  test("exactDedup collapses identical texts, keeps lowest id") {
-    val got = Dedup.exactDedup(docs, "text", "doc_id")
-      .orderBy($"doc_id").collect()
-    assert(got.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
-      Seq((1L, 2L), (3L, 1L), (4L, 1L)))
-  }
-
   test("LSH candidate pairs find exact and near dups, not unrelated") {
     val pairs = Dedup.lshCandidatePairs(docs, "text", "doc_id")
       .as[(Long, Long)].collect().toSet

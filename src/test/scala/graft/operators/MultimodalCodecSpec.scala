@@ -7,53 +7,13 @@ import javax.imageio.ImageIO
 
 import graft.SparkSpec
 
-/** End-to-end REAL image decode: actual PNG/JPEG bytes, encoded with
-  * the JDK codec, round-trip through the distributed
-  * [[Multimodal.decodePartitions]] + [[Multimodal.imageDecoder]] path
-  * and come back with exact pixel statistics. This closes the r6
-  * verdict's "decode stub" gap for images — no external codec library
-  * needed, `javax.imageio` ships in every headless JRE. Audio/video
-  * stay stubbed (no JDK codec exists for them).
+/** End-to-end REAL image decode: actual PNG bytes, encoded with the
+  * JDK codec, decode through [[Multimodal.imageGridDecoder]] into the
+  * luma grid [[Multimodal.dHash60]] hashes — no external codec
+  * library needed, `javax.imageio` ships in every headless JRE.
   */
 class MultimodalCodecSpec extends SparkSpec {
   import spark.implicits._
-
-  private def png(w: Int, h: Int, seed: Int): (Array[Byte], Long) = {
-    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    var luma = 0L
-    for (y <- 0 until h; x <- 0 until w) {
-      val r = (seed * 31 + x * 7 + y * 13) & 0xff
-      val g = (seed * 17 + x * 3 + y * 11) & 0xff
-      val b = (seed * 23 + x * 5 + y * 19) & 0xff
-      img.setRGB(x, y, (r << 16) | (g << 8) | b)
-      luma += (299L * r + 587L * g + 114L * b) / 1000L
-    }
-    val bos = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", bos)
-    (bos.toByteArray, luma)
-  }
-
-  test("real PNG bytes decode distributed with exact pixel sums; " +
-    "garbage bytes quarantine as ok=false") {
-    val images = Seq(
-      1L -> png(7, 5, 42), 2L -> png(64, 48, 7), 3L -> png(1, 1, 0))
-    val rows = images.map { case (id, (bytes, _)) => (id, bytes) } ++
-      Seq(99L -> Array[Byte](1, 2, 3, 4)) // not an image
-    val df = rows.toDF("media_id", "bytes").repartition(3)
-    val out = Multimodal
-      .decodePartitions(df, Multimodal.imageDecoder _)
-      .collect().toMap
-    images.foreach { case (id, (_, luma)) =>
-      val f = out(id)
-      assert(f.ok, s"image $id failed to decode")
-      assert(f.lumaSum == luma,
-        s"image $id: decoded lumaSum ${f.lumaSum} != local $luma")
-    }
-    assert(out(1L).width == 7 && out(1L).height == 5)
-    assert(out(2L).width == 64 && out(2L).height == 48)
-    assert(!out(99L).ok && out(99L).width == 0,
-      "garbage bytes must quarantine, not crash")
-  }
 
   test("real PNG pixels feed dHash60 end-to-end: decoded grid -> " +
     "column hash == JVM reference; perturbed copy lands nearby, a " +
@@ -94,19 +54,5 @@ class MultimodalCodecSpec extends SparkSpec {
       "a lightly perturbed copy must hash nearby")
     assert(ham(sigs(1L), sigs(3L)) > ham(sigs(1L), sigs(2L)),
       "an unrelated image must be farther than the perturbed copy")
-  }
-
-  test("JPEG decodes through the same seam (width/height; lossy " +
-    "pixels not asserted)") {
-    val img = new BufferedImage(16, 9, BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 9; x <- 0 until 16)
-      img.setRGB(x, y, (x * 16) << 16 | (y * 28) << 8 | 0x40)
-    val bos = new ByteArrayOutputStream()
-    ImageIO.write(img, "jpg", bos)
-    val df = Seq((5L, bos.toByteArray)).toDF("media_id", "bytes")
-    val out = Multimodal
-      .decodePartitions(df, Multimodal.imageDecoder _)
-      .collect().toMap
-    assert(out(5L).ok && out(5L).width == 16 && out(5L).height == 9)
   }
 }

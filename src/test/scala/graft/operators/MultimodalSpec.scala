@@ -41,19 +41,6 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("decodePartitions reuses one decoder per partition") {
-    import org.apache.spark.sql.Encoders
-    implicit val enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt)
-    val decoderBuilds = spark.sparkContext.longAccumulator("builds")
-    val got = Multimodal.decodePartitions(media.repartition(2), () => {
-      decoderBuilds.add(1) // one per partition, NOT per row
-      (bytes: Array[Byte]) => bytes.length
-    }).collect().toMap
-    assert(got == Map(0L -> 3, 1L -> 11, 2L -> 3))
-    assert(decoderBuilds.value <= 2,
-      s"decoder must be built per partition, got ${decoderBuilds.value}")
-  }
-
   test("sampleFrames emits duration*fps frames for videos only") {
     val frames = Multimodal.sampleFrames(media, 2.0)
     val ids = frames.select($"media_id").distinct()
@@ -90,5 +77,38 @@ class MultimodalSpec extends SparkSpec {
     val e = Multimodal.sampleWindows(media, 5, 2)
       .select($"energy").as[Long].collect()
     assert(e.forall(x => x >= 0 && x < 1000))
+  }
+
+  test("windowEnergies == JVM reference energies at window-boundary " +
+    "lengths (trailing partial window included)") {
+    val (win, hop) = (40, 16)
+    // lengths probing the window arithmetic: exact multiple, one
+    // short of a hop boundary, mid-window, single sample
+    val clips = Seq(1L -> 640, 2L -> 639, 3L -> 100, 4L -> 1)
+      .map { case (id, n) =>
+        id -> Array.tabulate(n)(i => (id * 131 + i * 17) % 251 - 125)
+      }
+    def refEnergies(s: Array[Long]): Seq[Long] =
+      (0 to (s.length - 1) / hop).map { w =>
+        s.slice(w * hop, math.min(w * hop + win, s.length))
+          .map(v => v * v).sum
+      }
+    val colSide = clips.map { case (id, s) => (id, s.toSeq) }
+      .toDF("id", "samples")
+      .select($"id",
+        Multimodal.windowEnergies($"samples", win, hop).as("e"))
+      .as[(Long, Seq[Long])].collect().toMap
+    clips.foreach { case (id, s) =>
+      assert(colSide(id) == refEnergies(s),
+        s"clip $id: column windowEnergies != JVM reference")
+    }
+  }
+
+  test("windowEnergies on an empty sample array is empty, never a " +
+    "fabricated window (the descending-sequence guard)") {
+    val out = Seq((1L, Seq.empty[Long])).toDF("id", "samples")
+      .select(Multimodal.windowEnergies($"samples", 4, 2).as("e"))
+      .as[Seq[Long]].head()
+    assert(out.isEmpty)
   }
 }

@@ -124,10 +124,12 @@ class SimilaritySpec extends SparkSpec {
 
   test("SRP buckets are deterministic and group identical vectors") {
     val doubled = vecs.unionByName(vecs)
-    val h1 = Similarity.srpBucketHistogram(doubled, 8, 16)
-      .as[(Long, Long)].collect().toMap
-    val h2 = Similarity.srpBucketHistogram(doubled, 8, 16)
-      .as[(Long, Long)].collect().toMap
+    // bucket occupancy, planes re-derived from the seed on each call
+    def histogram() = doubled
+      .groupBy(Similarity.srpBucket($"embedding", Similarity.planes(8, 16)))
+      .count().as[(Long, Long)].collect().toMap
+    val h1 = histogram()
+    val h2 = histogram()
     assert(h1 == h2, "bucketing must be deterministic")
     assert(h1.values.sum == 100)
     assert(h1.values.forall(_ % 2 == 0),

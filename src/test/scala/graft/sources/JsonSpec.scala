@@ -38,10 +38,17 @@ class JsonSpec extends SparkSpec {
     intercept[Exception] {
       Json.read(spark, dir, schema).collect()
     }
-    // Spark disallows querying ONLY _corrupt_record straight off the
-    // file (the parser would have nothing to fail on) — materialize
-    // the parsed result first, as its own error message instructs
-    val got = Json.readWithCorruptColumn(spark, dir, schema).cache()
+    // control: the same schema read PERMISSIVE parses the good line
+    // and routes only the malformed one to `_corrupt_record`, so the
+    // FAILFAST failure above is that line's. Spark disallows querying
+    // ONLY _corrupt_record straight off the file (the parser would
+    // have nothing to fail on) — materialize the parsed result first,
+    // as its own error message instructs
+    val got = spark.read
+      .schema(schema.add("_corrupt_record", "string"))
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .json(dir).cache()
     try {
       assert(got.count() == 2)
       assert(got.filter($"_corrupt_record".isNotNull).count() == 1,

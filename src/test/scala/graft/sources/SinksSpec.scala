@@ -112,49 +112,6 @@ class SinksSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("z-ordered layout: per-file bounding boxes shrink on BOTH dims") {
-    // full 64×64 grid: every (x, y); 8 files of 512 rows each. A
-    // z-curve segment of 512 consecutive codes covers ~one aligned
-    // 512-cell block, so each file's (x-range × y-range) bounding box
-    // is a small fraction of the 64×64 domain — which is exactly what
-    // lets parquet min/max footers prune a filter on EITHER column.
-    // A round-robin layout spreads every file across the full domain.
-    val grid = spark.range(64 * 64).select(
-      ($"id" % 64).cast("int").as("x"),
-      ($"id" / 64).cast("int").as("y"))
-    def sumBoxArea(table: String): Long = {
-      val loc = Sinks.tableLocation(spark, table)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        loc, spark.sparkContext.hadoopConfiguration)
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(loc))
-        .map(_.getPath.toString)
-        .filter(p => p.endsWith(".parquet") || p.contains("part-"))
-        .filterNot(_.contains("_SUCCESS"))
-      files.map { f =>
-        val r = spark.read.parquet(f)
-          .agg(min($"x"), max($"x"), min($"y"), max($"y")).head()
-        (r.getInt(1) - r.getInt(0) + 1).toLong *
-          (r.getInt(3) - r.getInt(2) + 1)
-      }.sum
-    }
-    try {
-      Sinks.saveZOrdered(grid, "t_zorder", "x", "y", nFiles = 8)
-      Sinks.saveTable(grid.repartition(8), "t_roundrobin")
-      val (zArea, rrArea) = (sumBoxArea("t_zorder"),
-        sumBoxArea("t_roundrobin"))
-      // round-robin: every file spans ~the whole 4096-cell domain
-      // (sum ≈ 8·4096). Z-order: aligned blocks, sum ≈ 4096-ish.
-      assert(zArea < rrArea / 3,
-        s"z-order must cluster both dims: z=$zArea roundrobin=$rrArea")
-      // the layout is purely physical: the rows are unchanged
-      assert(spark.table("t_zorder").count() == 4096)
-      assert(spark.table("t_zorder").agg(sum($"x") + sum($"y"))
-        .head().getLong(0) ==
-        grid.agg(sum($"x") + sum($"y")).head().getLong(0))
-    } finally Seq("t_zorder", "t_roundrobin").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
   test("compaction rewrites a fragmented table into sized files") {
     try {
       // simulate micro-batch fragmentation: 64 tiny files

@@ -20,7 +20,7 @@
 # Prints PREFLIGHT: PASS/FAIL and the per-stage outcome; writes the
 # run record to tools/preflight_last.txt (cited by STATUS.md).
 set -u
-cd /root/repo
+cd "$(dirname "$0")/.."
 out=/tmp/preflight_verify
 rec=tools/preflight_last.txt
 fail=0

@@ -5,7 +5,8 @@
 # session settings come from graft.core.Sessions.common.
 # Requires `sbt compile` to have produced target/scala-2.13/classes.
 set -euo pipefail
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$REPO/target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke \
          java.base/java.lang.reflect java.base/java.io java.base/java.net \
