@@ -1,32 +1,6 @@
 package graft
 
-import org.apache.logging.log4j.core.{Filter, LogEvent}
-import org.apache.logging.log4j.core.filter.AbstractFilter
-
 object Bench {
-
-  /** Run `f` with the global-window warning muted — ONLY for queries
-    * [[Gwin]] declares (final-plan windows in `Gwin.LedgerBounds`, or
-    * eager ones in `Gwin.EagerGwinAllowed`). Their warnings are
-    * indistinguishable in the log from a real scale-killer's, so
-    * muting them makes a NEW unbounded-window warning stand out in
-    * the bench tail instead of drowning among the known-benign ones.
-    *
-    * Muted by message CONTENT, not logger level (r11 ADVICE): a
-    * log4j2 filter drops exactly the "No Partition Defined" text, so
-    * a different WindowExec warning from an allowlisted query still
-    * surfaces — the same discrimination QueriesSmokeSpec's warning
-    * sweep applies.
-    */
-  private[graft] def muteGwinWarnings[A](mute: Boolean)(f: => A): A =
-    if (!mute) f
-    else Gwin.filtered(new AbstractFilter(Filter.Result.DENY,
-        Filter.Result.NEUTRAL) {
-      override def filter(event: LogEvent): Filter.Result =
-        if (event.getMessage.getFormattedMessage
-            .contains(Gwin.WarningText)) Filter.Result.DENY
-        else Filter.Result.NEUTRAL
-    }, level = None)(f)
 
   /** What [[measure]] observed: each query's successful pass times in
     * pass order (empty = failed every pass), the passes run, the
@@ -52,7 +26,7 @@ object Bench {
     def total: Double = medians.map(_._2).filter(_ >= 0).sum
   }
 
-  /** The one warm-up + timing loop ([[main]] and [[Probe]] share it):
+  /** The one warm-up + timing loop ([[run]] and [[Probe]] share it):
     * warm every query at sf0.001, settle, calibrate the host, then
     * time `SPARK_GRAFT_BENCH_RUNS` (default 3) alternating passes over
     * `names` at `sfDir`. Each timed call runs in a [[core.Trace]] keyed
@@ -72,15 +46,9 @@ object Bench {
     // jobs from separate threads fine, and the tiny sf0.001 jobs
     // underutilize local[32] one at a time
     val warmDir = "/root/testdata/sf0.001"
-    // warmup is 8-way concurrent, so per-query mute scoping is
-    // impossible here — mute globally for its duration; a real
-    // scale-killer's warning still surfaces unmuted in the measured
-    // passes below
-    muteGwinWarnings(mute = true) {
-      graft.core.Par.sweep8(names) { q =>
-        try fns(q)(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+    graft.core.Par.sweep8(names) { q =>
+      try fns(q)(spark, warmDir).write.format("noop").mode("overwrite").save()
+      catch { case scala.util.control.NonFatal(_) => () }
     }
     // settle before measuring: the warmup leaves cached plans plus a
     // GC + ContextCleaner backlog (broadcast/shuffle cleanup runs
@@ -113,9 +81,7 @@ object Bench {
       try {
         val (secs, rec) = graft.core.Trace(spark, name) {
           val t0 = System.nanoTime()
-          muteGwinWarnings(Gwin.allowed(name)) {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          }
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         }
         times(name) = times(name) :+ secs
@@ -126,17 +92,31 @@ object Bench {
       names.map(q => q -> records(q)))
   }
 
+  /** `graft.Bench [query...]`: every query, or the named ones
+    * ([[SparkEntry.select]]), at `$SPARK_GRAFT_SF_DIR`. */
   def main(args: Array[String]): Unit = {
+    val names = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Sessions.local(cpus)
-    val t = measure(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted)
     // full payload to a FILE, one compact ≤1900-byte line to stdout —
     // the driver keeps only the last ~2000 stdout chars, and round 9's
     // single 12 KB line came back front-truncated (parsed: null). See
     // BenchFormat for the contract.
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       "/root/repo/BENCH_FULL.json")
+    val spark = graft.core.Sessions.local(cpus)
+    try println(run(spark, sfDir, names, fullPath))
+    finally spark.stop()
+  }
+
+  /** Time `names` at `sfDir` ([[measure]]), write the full
+    * [[BenchFormat.fullJson]] snapshot to `fullPath` and return the one
+    * compact stdout line. A failed write is reported on stderr; the line
+    * still names `fullPath`.
+    */
+  def run(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      names: Seq[String], fullPath: String): String = {
+    val t = measure(spark, sfDir, names)
     val fullJson = BenchFormat.fullJson(t.medians, t.total, t.runs,
       t.calibCpu, t.calibSpark, t.errors, sfDir, t.records)
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
@@ -145,8 +125,7 @@ object Bench {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] could not write $fullPath: $e")
     }
-    println(BenchFormat.compactLine(t.medians, t.total, t.runs,
-      t.calibCpu, t.calibSpark, t.errors, sfDir, fullPath))
-    spark.stop()
+    BenchFormat.compactLine(t.medians, t.total, t.runs,
+      t.calibCpu, t.calibSpark, t.errors, sfDir, fullPath)
   }
 }

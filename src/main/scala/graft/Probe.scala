@@ -1,67 +1,97 @@
 package graft
 
-/** The one dev harness (not part of the SparkEntry surface). Every timed
-  * mode goes through [[Bench.measure]] — the benchmark's own warm-up,
-  * settle and median-of-passes loop — so a probe number and a Bench
-  * number are the same measurement of one query.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The one dev harness (not part of the SparkEntry surface): one
+  * session, the queries chosen by [[SparkEntry.select]] as for Bench
+  * and Verify. The timed mode goes through [[Bench.measure]] — the
+  * benchmark's own warm-up, settle and median-of-passes loop — so a
+  * probe number and a Bench number are the same measurement of one
+  * query.
   *
-  * `runMain graft.Probe <mode> <sfDir> <query>...`, cores from
+  * `runMain graft.Probe <mode> <sfDir> [query...]`, cores from
   * `SPARK_GRAFT_CPUS` and passes from `SPARK_GRAFT_BENCH_RUNS`, as
   * for Bench. Modes:
-  *  - `time`: each query's median and per-pass wall times;
-  *  - `prof`: per-stage report over the timed passes, read from their
+  *  - `prof`: each query's median and per-pass wall times, then a
+  *    per-stage report over the timed passes, read from their
   *    [[core.Trace]] records — stages sorted by duration with the head
   *    of their callsite, the straggler anatomy (longest task's GC/CPU,
   *    median task) and the summed executor deserialize time, plus the
   *    codegen compilations the timed passes made;
   *  - `plan`: the formatted physical plan, `explain("formatted")`;
-  *  - `anchor`: a solo steady-state snapshot in the
-  *    [[BenchFormat.fullJson]] schema, written to
-  *    `$SPARK_GRAFT_BENCH_FULL` (tools/make_anchor.py sets it). Two
-  *    anchors from different rounds feed preflight stage 5's
-  *    engine-drift gate without in-sweep contention.
+  *  - `exchanges`: the EXCHANGES.txt ledger line of each query, on
+  *    stdout with no prefix, so
+  *    `tools/run_main.sh graft.Probe exchanges <sfDir> > EXCHANGES.txt`
+  *    over the sf0.001 tables regenerates the ledger;
+  *  - `bcast`: the broadcast-direction audit ([[bcastHits]]);
+  *  - `scan`: the expression-marker scan ([[markerCounts]]).
   */
 object Probe {
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: runMain graft.Probe time|prof|plan|anchor <sfDir> <query>...")
+    require(args.length >= 2, "usage: runMain graft.Probe " +
+      "prof|plan|exchanges|bcast|scan <sfDir> [query...]")
     val spark = graft.core.Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), logLevel = "ERROR")
-    try run(spark, args(0), args(1), args.drop(2).toSeq,
-      sys.env.get("SPARK_GRAFT_BENCH_FULL"))
+    try run(spark, args(0), args(1), args.drop(2).toSeq)
     finally spark.stop()
   }
 
-  def run(spark: org.apache.spark.sql.SparkSession, mode: String,
-      sfDir: String, names: Seq[String], out: Option[String]): Unit = {
-    val queries = SparkEntry.queries
-    val unknown = names.filterNot(queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(" ")}")
+  def run(spark: SparkSession, mode: String,
+      sfDir: String, names: Seq[String]): Unit = {
+    val qs = SparkEntry.select(names)
     mode match {
+      case "prof" => prof(spark, sfDir, qs)
       case "plan" =>
-        names.foreach(q => queries(q)(spark, sfDir).explain("formatted"))
-      case "time" =>
-        val t = Bench.measure(spark, sfDir, names)
-        t.medians.zip(t.passes).foreach { case ((q, med), (_, ts)) =>
-          if (ts.isEmpty) println(s"[time] $q failed every pass")
-          else println(f"[time] $q median $med%.3f s (passes " +
-            ts.map(x => f"$x%.3f").mkString(" ") + ")")
-        }
-      case "prof" => prof(spark, sfDir, names)
-      case "anchor" =>
-        val path = out.getOrElse(throw new IllegalArgumentException(
-          "anchor mode writes its snapshot to $SPARK_GRAFT_BENCH_FULL"))
-        val t = Bench.measure(spark, sfDir, names.sorted)
-        val json = BenchFormat.fullJson(t.medians, t.total, t.runs,
-          t.calibCpu, t.calibSpark, t.errors, sfDir, t.records)
-        java.nio.file.Files.write(java.nio.file.Paths.get(path),
-          (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        println(s"[anchor] wrote ${names.size} solo medians to $path " +
-          f"(calib cpu=${t.calibCpu}%.3f spark=${t.calibSpark}%.3f)")
+        val queries = SparkEntry.queries
+        qs.foreach(q => queries(q)(spark, sfDir).explain("formatted"))
+      case "exchanges" =>
+        PlanScan.exchangeLedgerLines(spark, sfDir, qs).foreach(println)
+      case "bcast" =>
+        PlanScan.sweep(spark, sfDir, qs)(bcastHits)
+          .foreach(l => println(s"[bcast] $l"))
+      case "scan" =>
+        PlanScan.sweep(spark, sfDir, qs)(markerCounts)
+          .foreach(l => println(s"[scan] $l"))
       case other => throw new IllegalArgumentException(
-        s"unknown mode '$other' (time|prof|plan|anchor)")
+        s"unknown mode '$other' (prof|plan|exchanges|bcast|scan)")
     }
+  }
+
+  /** Every BroadcastExchange whose input carries a per-row corpus key
+    * (doc_id/text/embedding/event_id/l_orderkey) — the q218 failure
+    * class, where the planner broadcasts the corpus-sized stream
+    * instead of the bounded model/dimension. Hits need eyeballing
+    * (a top-k or probe-set broadcast legitimately keeps doc_id), but
+    * every scale-fatal direction mistake surfaces here.
+    */
+  private def bcastHits(df: DataFrame): Seq[String] = {
+    val corpusKeys = Seq("doc_id#", "text#", "embedding#", "event_id#",
+      "l_orderkey#")
+    df.queryExecution
+      .explainString(org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted"))
+      .split("\n\n").toSeq
+      .filter(_.startsWith("("))
+      .flatMap { s =>
+        val head = s.linesIterator.next()
+        val keys = corpusKeys.filter(s.contains)
+        if (head.contains("BroadcastExchange") && keys.nonEmpty)
+          Some(s"${keys.mkString(",")} in $head")
+        else None
+      }
+  }
+
+  /** Occurrences of expensive expression markers in the optimized
+    * plan — a duplicated `split(`/`md5(` inside one plan usually means
+    * a filter/projection recompute trap. */
+  private def markerCounts(df: DataFrame): Seq[String] = {
+    val plan = df.queryExecution.optimizedPlan.toString
+    val counts = Seq("split(", "md5(", "minhash_sig", "regexp_count",
+      "transform(", "aggregate(", "vector_dot")
+      .map(m => m -> plan.sliding(m.length).count(_ == m)).filter(_._2 > 0)
+    if (counts.isEmpty) Nil
+    else Seq(counts.map { case (m, c) => s"$m$c" }.mkString(" "))
   }
 
   /** Per-stage profile (guide §7.1 without the UI): every stage's wall
@@ -73,11 +103,14 @@ object Probe {
     * anatomy (longest task's GC and CPU, median task) tells a skewed
     * stage from a GC pause or a compile inside a task.
     */
-  private def prof(spark: org.apache.spark.sql.SparkSession,
+  private def prof(spark: SparkSession,
       sfDir: String, names: Seq[String]): Unit = {
     val t = Bench.measure(spark, sfDir, names)
-    t.medians.foreach { case (q, med) =>
+    t.medians.zip(t.passes).foreach { case ((q, med), (_, ts)) =>
       println(f"[prof] $q median $med%.3f s")
+      val shown = if (ts.isEmpty) "none succeeded"
+        else ts.map(x => f"$x%.3f").mkString(" ")
+      println(s"[prof] $q passes $shown")
     }
     val rec = t.records.map(_._2).foldLeft(core.Trace.Record.empty)(_ ++ _)
     val stages = rec.stages
@@ -113,5 +146,5 @@ object Probe {
       .mkString(" | ").trim
 
   private val HarnessFrames = Seq("graft.Bench", "graft.Probe",
-    "graft.Gwin", "graft.core.Barrier", "graft.core.Trace")
+    "graft.core.Barrier", "graft.core.Trace")
 }

@@ -29,6 +29,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map(q => q.name -> q.run).toMap
 
+  /** The one query rule of the mains (Bench, Verify, Probe): no names
+    * means every query, sorted by name; otherwise the names as given,
+    * and an unknown one fails here, before any Spark work. */
+  def select(names: Seq[String]): Seq[String] = {
+    val all = allQueries.map(_.name)
+    val unknown = names.filterNot(all.toSet)
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown queries: ${unknown.mkString(" ")}")
+    if (names.isEmpty) all.sorted else names
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables (every query declares one). */
   def oracleSql: Map[String, String] =

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
-    // optional extra args: restrict to the named queries (dev loop)
-    val only: Set[String] = rest.toSet
+    // optional extra args: restrict to the named queries (dev loop);
+    // an unknown name fails here, before the session starts
+    val names = SparkEntry.select(rest)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
@@ -22,17 +23,16 @@ object Verify {
     // schedules concurrent jobs from separate threads, and the small
     // per-query jobs underutilize local[32] one at a time. Results
     // are deterministic per query regardless of scheduling.
-    graft.core.Par.sweep8(SparkEntry.queries.toSeq
-        .filter { case (name, _) => only.isEmpty || only(name) }) {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          times.put(name, (System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    val queries = SparkEntry.queries
+    graft.core.Par.sweep8(names) { name =>
+      val t0 = System.nanoTime()
+      try {
+        queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        times.put(name, (System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
     }
     val breaches = scala.jdk.CollectionConverters
       .MapHasAsScala(times).asScala.toSeq
@@ -54,7 +54,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
+      .filter { case (k, _) => names.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     import BenchFormat.r3

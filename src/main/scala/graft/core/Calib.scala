@@ -9,7 +9,7 @@ package graft.core
   * The two probes measure DIFFERENT host dimensions: cpu_md5 =
   * single-thread CPU, spark_range = parallel throughput + scheduler.
   * Taken by [[graft.Bench.measure]], so the full-sweep snapshots and
-  * the solo-anchor tables ([[graft.Probe]] `anchor`) normalize
+  * the solo-anchor tables (`graft.Bench` on named queries) normalize
   * identically.
   */
 object Calib {

@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local-session recipe every entry point (Bench, Verify,
-  * Probe, PlanScan) shares: `local[cpus]` with the shuffle
+/** The one local-session recipe every main (Bench, Verify, Probe)
+  * shares: `local[cpus]` with the shuffle
   * width matched to the core count (not the 200 default — a local run
   * has no 200-slot cluster to fill) plus [[common]], the settings the
   * test harness applies too. Keeping it in one place stops the config

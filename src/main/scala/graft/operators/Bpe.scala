@@ -153,22 +153,13 @@ object Bpe {
       .toDF("rank", "a", "b", "cnt")
   }
 
-  private val corpusCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Merge]]()
-
-  /** Merge table for a documents corpus, learned once per (corpus
-    * dir, rounds) and shared — a tokenizer is trained ONCE and its
-    * merge table ships to every consumer; the four BPE queries model
-    * that instead of each re-running an identical 16-round induction.
-    * Safe because `learn` is deterministic in its input and the
-    * testdata dirs are immutable for a JVM's lifetime;
-    * `computeIfAbsent` also serializes concurrent learners of the
-    * same corpus (Verify/Bench build queries from 8 threads).
+  /** Merge table for a documents corpus: the word frequencies of
+    * `dir`'s documents, learned for `rounds` merges. Each caller learns
+    * its own table, so a query's time includes its tokenizer training.
     */
   def learnCorpus(spark: SparkSession, dir: String, rounds: Int)
-      : Seq[Merge] =
-    corpusCache.computeIfAbsent((dir, rounds), { _ =>
-      val docs = graft.core.Tables.loadParallel(spark, dir, "documents")
-      learn(wordFreq(docs, col("text")), rounds)
-    })
+      : Seq[Merge] = {
+    val docs = graft.core.Tables.loadParallel(spark, dir, "documents")
+    learn(wordFreq(docs, col("text")), rounds)
+  }
 }

@@ -8,7 +8,8 @@ package graft
   * a bench regression rounds later — this turns it into a named test
   * failure the same `sbt test`. After a DELIBERATE plan change, review
   * the diff and regenerate:
-  * `sbt "runMain graft.PlanScan exchanges /root/testdata/sf0.001 EXCHANGES.txt"`.
+  * `tools/run_main.sh graft.Probe exchanges <sfDir> > EXCHANGES.txt`
+  * over the sf0.001 tables.
   *
   * The second test is the SCALE argument made executable: the same
   * ledger regenerated at sf0.1 (100× the rows) must be IDENTICAL —
@@ -24,14 +25,14 @@ class ExchangeLedgerSpec extends SparkSpec {
       .map { l => val p = l.split(" ", 2); p(0) -> p(1) }.toMap
 
   private lazy val atSf0001: Seq[(String, String)] =
-    PlanScan.exchangeLedgerLines(spark, sfDir)
+    PlanScan.exchangeLedgerLines(spark, sfDir, SparkEntry.select(Nil))
       .map { l => val p = l.split(" ", 2); p(0) -> p(1) }
 
   test("every query's exchange counts match the checked-in ledger") {
     val path = SparkSpec.root.resolve("EXCHANGES.txt")
     assert(java.nio.file.Files.exists(path),
       "EXCHANGES.txt missing — generate it with " +
-        "`runMain graft.PlanScan exchanges /root/testdata/sf0.001 EXCHANGES.txt`")
+        s"`tools/run_main.sh graft.Probe exchanges $sfDir > EXCHANGES.txt`")
     val recorded = toMap(scala.jdk.CollectionConverters
       .ListHasAsScala(java.nio.file.Files.readAllLines(path)).asScala
       .toSeq)
@@ -54,7 +55,9 @@ class ExchangeLedgerSpec extends SparkSpec {
   test("exchange counts are IDENTICAL at sf0.001 and sf0.1 — plans " +
     "are size-stable across two orders of magnitude") {
     val atSf01 = toMap(
-      PlanScan.exchangeLedgerLines(spark, "/root/testdata/sf0.1"))
+      PlanScan.exchangeLedgerLines(spark,
+        java.nio.file.Paths.get(sfDir).resolveSibling("sf0.1").toString,
+        SparkEntry.select(Nil)))
     val diverged = atSf0001.collect {
       case (n, c) if atSf01.get(n).exists(_ != c) =>
         s"$n: sf0.001 '$c' vs sf0.1 '${atSf01(n)}'"

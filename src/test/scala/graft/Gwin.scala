@@ -5,13 +5,12 @@ import org.apache.logging.log4j.core.{Filter, LoggerContext}
 import org.apache.logging.log4j.core.config.Configurator
 
 /** THE single declaration of the bounded partition-less-window
-  * allowlist: `Bench`'s per-query warning mute, `GwinBoundsSpec`'s
-  * executable bounds and `QueriesSmokeSpec`'s warning-attribution
-  * test all read THIS object. `GwinBoundsSpec` also pins
-  * [[LedgerBounds]]' names to the `gwin>0` rows of the committed
-  * `EXCHANGES.txt` (which `ExchangeLedgerSpec` pins to the live
-  * plans), so a query rename or a new global window breaks exactly
-  * one declaration.
+  * allowlist: `GwinBoundsSpec`'s executable bounds and
+  * `QueriesSmokeSpec`'s warning-attribution test both read THIS
+  * object. `GwinBoundsSpec` also pins [[LedgerBounds]]' names to the
+  * `gwin>0` rows of the committed `EXCHANGES.txt` (which
+  * `ExchangeLedgerSpec` pins to the live plans), so a query rename or
+  * a new global window breaks exactly one declaration.
   */
 object Gwin {
 
@@ -23,19 +22,17 @@ object Gwin {
     "org.apache.spark.sql.execution.window.WindowExec",
     "org.apache.spark.sql.execution.window.WindowGroupLimitExec")
 
-  /** The warning text the mute keys on — matched on message CONTENT
-    * (r11 ADVICE), so a NEW, different WindowExec warning from an
-    * allowlisted query still surfaces.
+  /** The warning text the tier-1 sweep counts, matched on message
+    * CONTENT, so a different WindowExec warning is never counted as it.
     */
   val WarningText = "No Partition Defined"
 
   /** Run `f` with `filter` on each of [[WindowLoggers]]' own logger
-    * configs, after setting each logger's level to `level` (its current
-    * level when None). The one log4j hook on these loggers: Bench's mute
-    * DENYs the warning, the tier-1 sweep counts it.
+    * configs, after setting each logger's level to WARN, whatever the
+    * console level. The one log4j hook on these loggers: the tier-1
+    * sweep counts the warning through it.
     */
-  private[graft] def filtered[A](filter: Filter, level: Option[Level])(
-      f: => A): A = {
+  private[graft] def filtered[A](filter: Filter)(f: => A): A = {
     // resolve the context through SPARK's classloader: under layered
     // classloaders (sbt's test loader) the default context can differ
     // from the one the Spark jars' loggers live in, and a filter added
@@ -47,8 +44,7 @@ object Gwin {
     // setLevel first: it materializes a SPECIFIC LoggerConfig per
     // logger, so the filter attaches there and never to the root config
     WindowLoggers.foreach { n =>
-      Configurator.setLevel(n,
-        level.getOrElse(LogManager.getLogger(n).getLevel))
+      Configurator.setLevel(n, Level.WARN)
       cfg.getLoggerConfig(n).addFilter(filter)
     }
     ctx.updateLoggers()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.{Filter, LogEvent}
 import org.apache.logging.log4j.core.filter.AbstractFilter
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -210,7 +209,7 @@ object QueriesSmokeSpec {
         Filter.Result.NEUTRAL
       }
     }
-    val outcomes = Gwin.filtered(counter, Some(Level.WARN))(f)
+    val outcomes = Gwin.filtered(counter)(f)
     import scala.jdk.CollectionConverters._
     Sweep(outcomes, hits.asScala.map { case (q, n) => q -> n.get }.toMap)
   }

@@ -53,6 +53,11 @@ Checks:
      kernel against), and every declared name must still be unreached,
      so the map cannot go stale. Main code that only its own spec
      reaches is a second path for a job the engine already does one way.
+ 12. One harness (a ratchet): under src/main, `def main(` appears only in
+     Bench.scala (timings and the snapshot), Verify.scala (the oracle
+     dump) and Probe.scala (the one dev main: profiles, plans, ledger).
+     Another main is a second harness with its own session and its own
+     query rule.
 """
 import glob
 import json
@@ -79,7 +84,6 @@ RETIRED_BENCH_LABELS = frozenset({
 # "<file stem>.<name>", or the bare name when the file is named after it.
 DECLARED_UNREACHED = {
     # entry points
-    "PlanScan": "main: the exchange-ledger scan (tools, ExchangeLedgerSpec)",
     "Verify": "main: the correctness dump check_oracle.py reads",
     "SparkEntry.entry": "the driver contract's entry object",
     "GraftFunctions": "SQL registration of the custom expressions",
@@ -126,6 +130,10 @@ DECLARED_UNREACHED = {
     "Multimodal.windowEnergiesFold": "WindowEnergiesSpec's reference for "
                                      "WindowEnergiesExpr",
 }
+
+# Check 12's mains: the only src/main files that define `def main(`.
+MAINS = frozenset(f"src/main/scala/graft/{m}.scala"
+                  for m in ("Bench", "Verify", "Probe"))
 
 # Check 7's ceiling: the repeated-window line count once the shared
 # oracle fragments moved into queries.OracleSql (726 before, then 34:
@@ -349,6 +357,13 @@ def main() -> int:
                     "longer unreached (now named elsewhere, or deleted) — "
                     "drop them from the map: " + ", ".join(stale))
 
+    # 12. one harness: the three mains and no fourth
+    for rel in only_in(None, r"\bdef\s+main\s*\("):
+        if rel not in MAINS:
+            errs.append(f"{rel} defines a main — the engine's mains are "
+                        "Bench, Verify and Probe; make it a mode of Probe "
+                        "instead")
+
     if errs:
         print("DRIFT: FAIL")
         for e in errs:
@@ -358,7 +373,8 @@ def main() -> int:
           "COVERAGE, STATUS, bench snapshot, SparkEntry; parquet read "
           f"only in Tables; {len(covered)} repeated oracle SQL lines; "
           "one session recipe; one stage barrier; one tracer; "
-          f"one reachable surface, {len(DECLARED_UNREACHED)} declared)")
+          f"one reachable surface, {len(DECLARED_UNREACHED)} declared; "
+          f"one harness, {len(MAINS)} mains)")
     return 0
 
 

@@ -3,7 +3,8 @@
 pick the top-N slowest ORACLE-CHECKED queries from the newest
 committed full-sweep snapshot (older snapshots also carry retired
 bench-only labels, which the ledger filter drops) and run
-`graft.Probe anchor` on them at sf0.1, writing BENCH_anchor_r<N>.json.
+`graft.Bench` on just them at sf0.1 (SPARK_GRAFT_SF_DIR), writing the
+full snapshot to BENCH_anchor_r<N>.json (SPARK_GRAFT_BENCH_FULL).
 Two anchors from different rounds feed preflight stage 5's
 engine-drift gate via bench_compare --gate. Not shipped engine code —
 a development harness.
@@ -39,9 +40,9 @@ def main() -> int:
     print(f"anchoring top-{len(names)} from "
           f"{os.path.basename(snaps[-1])}: {names}")
     out = os.path.join(REPO, f"BENCH_anchor_r{rnd}.json")
-    cmd = ["sbt", "-batch",
-           "runMain graft.Probe anchor " + sf_dir + " " + " ".join(names)]
-    env = dict(os.environ, SPARK_GRAFT_BENCH_FULL=out)
+    cmd = ["sbt", "-batch", "runMain graft.Bench " + " ".join(names)]
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
+               SPARK_GRAFT_BENCH_FULL=out)
     rc = subprocess.run(cmd, cwd=REPO, env=env).returncode
     if rc == 0 and os.path.exists(out):
         print(f"anchor written: {out}")

@@ -95,7 +95,7 @@ echo "[preflight] bench gate: $b_ok"
 # stage 5: SOLO-ANCHOR gate (r11 verdict ask #1) — the full-sweep
 # snapshots of r9b–r11b were all host-noise-bound; the committed
 # BENCH_anchor_r*.json tables time the top queries ONE AT A TIME
-# (`graft.Probe anchor` via tools/make_anchor.py), so two anchors from
+# (`graft.Bench <names>` via tools/make_anchor.py), so two anchors from
 # different rounds gate engine drift on the expensive queries without
 # in-sweep contention. Skipped (recorded) while only one anchor
 # exists — that one is the baseline the next round compares against.

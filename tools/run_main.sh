@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a graft main class directly from compiled classes (no sbt):
-#   tools/run_main.sh graft.Probe time <sfDir> q157_similarity_join
+#   tools/run_main.sh graft.Probe prof <sfDir> q157_similarity_join
 # Mirrors build.sbt's forked-run JVM flags (JDK17 add-opens, heap); the
 # session settings come from graft.core.Sessions.common.
 # Requires `sbt compile` to have produced target/scala-2.13/classes.
