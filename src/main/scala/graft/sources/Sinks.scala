@@ -47,9 +47,15 @@ object Sinks {
     * files (one per epoch × partition) make every downstream scan pay
     * a task per file and every footer a round trip. Rewrite the table
     * into `ceil(bytes / targetFileBytes)` files via a round-robin
-    * repartition (even sizes without a shuffle key), then swap —
-    * write-new-then-replace, the same idempotent-rewrite stance as
+    * repartition (even sizes without a shuffle key), cut at a
+    * [[graft.core.Barrier]], then overwrite the table from the cut in
+    * one write — the same idempotent-rewrite stance as
     * [[graft.operators.Upsert.overwritePartitions]].
+    *
+    * The barrier materializes the rows before the overwrite drops the
+    * files its plan would read: locally in the block manager, and
+    * under any other master in Spark's checkpoint dir, so losing an
+    * executor mid-rewrite loses nothing.
     *
     * Returns (files_before, files_after). At 100 TB the same call
     * runs per PARTITION (compact recent partitions only) — whole-table
@@ -66,14 +72,8 @@ object Sinks {
     val (bytes, filesBefore) = tableStats(spark, name)
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1)
       / targetFileBytes).toInt
-    val compacted = spark.table(name).repartition(nFiles)
-    // materialize BEFORE overwriting the source table: the lazy plan
-    // reads the very files the overwrite would truncate
-    val tmp = s"${name}_compacting"
-    compacted.write.mode("overwrite").format("parquet").saveAsTable(tmp)
-    spark.table(tmp).write.mode("overwrite").format("parquet")
-      .saveAsTable(name)
-    spark.sql(s"DROP TABLE $tmp")
+    graft.core.Barrier(spark.table(name).repartition(nFiles))
+      .write.mode("overwrite").format("parquet").saveAsTable(name)
     (filesBefore, tableStats(spark, name)._2)
   }
 

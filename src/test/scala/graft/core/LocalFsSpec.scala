@@ -85,8 +85,7 @@ class LocalFsSpec extends SparkSpec {
       assert(Sinks.compact(spark, "t_localfs")._1 > 1)
     } finally {
       rec.stop()
-      Seq("t_localfs", "t_localfs_compacting").foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
+      spark.sql("DROP TABLE IF EXISTS t_localfs")
     }
     val jfr = Files.createTempFile("graft_localfs", ".jfr")
     rec.dump(jfr)

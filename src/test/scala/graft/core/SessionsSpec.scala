@@ -1,17 +1,28 @@
 package graft.core
 
+import java.io.{ByteArrayOutputStream, ObjectOutputStream}
+import java.net.URI
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.mapred.JobConf
 import org.apache.spark.sql.Row
-import graft.SparkSpec
+import org.apache.spark.util.SerializableConfiguration
+import graft.{SparkEntry, SparkSpec}
 import graft.streaming.StreamingJobs
 
-/** [[Sessions.common]]'s class-loader contract: every session's tasks
-  * share the executor's default class loader, so the codegen cache
-  * (keyed by class loader and code) serves code one session compiled
-  * to the next. With session artifact isolation on, each cloned
-  * streaming session and each `newSession()` compiles its executor
-  * classes again.
+/** What every engine session shares with the mains:
+  *  - [[Sessions.common]]'s class-loader contract: every session's
+  *    tasks share the executor's default class loader, so the codegen
+  *    cache (keyed by class loader and code) serves code one session
+  *    compiled to the next. With session artifact isolation on, each
+  *    cloned streaming session and each `newSession()` compiles its
+  *    executor classes again;
+  *  - a codegen cache that holds a pass over `bootcamp`'s queries;
+  *  - [[Sessions.trimHadoopConf]]: the Hadoop configuration every file
+  *    task receives carries the keys set in code and none of Hadoop's
+  *    XML defaults, and files still round-trip through it.
   */
 class SessionsSpec extends SparkSpec {
 
@@ -19,14 +30,19 @@ class SessionsSpec extends SparkSpec {
   private def compilations(body: => Unit): Long =
     Trace(spark, "sessions")(body)._2.compilations
 
+  /** 40 web events as parquet under `base/landing`. */
+  private def landing(base: String): (String, Set[Row]) = {
+    val rows = (0 until 40).map(i => Row("/p", "ref", "ua", s"h${i % 3}.com",
+      s"10.0.0.${i % 5}", "{}", f"2024-01-01T00:${i % 60}%02d:00.000Z"))
+    val dir = s"$base/landing"
+    spark.createDataFrame(rows.asJava, StreamingJobs.webEventSchema)
+      .write.parquet(dir)
+    (dir, rows.toSet)
+  }
+
   test("a second AvailableNow drain compiles nothing") {
     val base = Files.createTempDirectory("graft_sessions_drain").toString
-    val landing = s"$base/landing"
-    spark.createDataFrame(
-      (0 until 40).map(i => Row("/p", "ref", "ua", s"h${i % 3}.com",
-        s"10.0.0.${i % 5}", "{}", f"2024-01-01T00:${i % 60}%02d:00.000Z"))
-        .asJava,
-      StreamingJobs.webEventSchema).write.parquet(landing)
+    val (landing, _) = this.landing(base)
     def drain(run: String): Unit =
       StreamingJobs.incrementalDrain(spark, landing, s"$base/ckpt$run",
         s"$base/out$run", StreamingJobs.processedEvents)
@@ -48,5 +64,65 @@ class SessionsSpec extends SparkSpec {
       compilations(assert(query(spark.newSession()) == expected))
     assert(compiled == 0,
       s"the new session compiled $compiled classes")
+  }
+
+  /** `bootcamp`, the benchmark's batch workload
+    * (`perfbench/src/perfbench/Main.scala`). */
+  private val Bootcamp = Seq("q7_grouping_sets", "q14_join_anti",
+    "q15_funnel", "q22_running_sum", "q30_scd_streaks", "q31_datelist_int",
+    "q32_growth_accounting", "q39_cumulative_dim")
+
+  test("a second pass over bootcamp's queries compiles nothing") {
+    def pass(): Unit = Bootcamp.foreach(q =>
+      SparkEntry.queries(q)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save())
+    pass()
+    val compiled = compilations(pass())
+    assert(compiled == 0,
+      s"the second pass compiled $compiled classes")
+  }
+
+  private def sources(conf: Configuration): Set[String] =
+    conf.iterator.asScala.flatMap(e =>
+      Option(conf.getPropertySources(e.getKey)).toSeq.flatten).toSet
+
+  test("the session's Hadoop confs hold the keys set in code, no XML " +
+      "defaults") {
+    val session = spark.sparkContext.hadoopConfiguration
+    val copy = spark.sessionState.newHadoopConf()
+    for ((name, conf) <- Seq("session" -> session, "newHadoopConf" -> copy,
+        "JobConf" -> new JobConf(copy))) {
+      assert(conf.size <= 32, s"$name holds ${conf.size} keys")
+      val xml = sources(conf).filter(_.endsWith("-default.xml"))
+      assert(xml.isEmpty, s"$name holds keys from $xml")
+    }
+  }
+
+  test("fs.file.impl still resolves to LocalFs.Checked") {
+    val conf = spark.sessionState.newHadoopConf()
+    assert(conf.getClass("fs.file.impl", null) == classOf[LocalFs.Checked])
+    assert(FileSystem.get(new URI("file:///"), conf)
+      .isInstanceOf[LocalFs.Checked])
+  }
+
+  test("the session's Hadoop conf serializes to under 8 KiB") {
+    val bytes = new ByteArrayOutputStream
+    val out = new ObjectOutputStream(bytes)
+    out.writeObject(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    out.close()
+    assert(bytes.size < 8 * 1024, s"${bytes.size} bytes")
+  }
+
+  test("a parquet write, read and drain return the rows written") {
+    val base = Files.createTempDirectory("graft_sessions_trip").toString
+    val (landing, rows) = this.landing(base)
+    assert(spark.read.schema(StreamingJobs.webEventSchema).parquet(landing)
+      .collect().toSet == rows)
+    StreamingJobs.incrementalDrain(spark, landing, s"$base/ckpt",
+      s"$base/out", identity)
+    val out = spark.read.schema(StreamingJobs.webEventSchema)
+      .parquet(s"$base/out").collect()
+    assert(out.length == rows.size && out.toSet == rows)
   }
 }

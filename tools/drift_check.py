@@ -32,8 +32,9 @@ Checks:
      uses belongs in queries.OracleSql.
   8. One session recipe: under src/main, `SparkSession.builder` appears
      only in core/Sessions.scala; under src/test, only in SparkSpec.scala.
-     Both apply `Sessions.common` — so the tests run with the mains'
-     time zone, `file:` filesystem and executor class loader.
+     Both apply `Sessions.common` and call `Sessions.trimHadoopConf` — so
+     the tests run with the mains' time zone, `file:` filesystem,
+     executor class loader and Hadoop configuration (no XML defaults).
   9. One stage barrier (a ratchet at zero): under src/main, `.localCheckpoint(`
      and `.checkpoint(` appear only in core/Barrier.scala, the one place
      that decides how lineage is cut (local blocks under a local master,
@@ -323,10 +324,16 @@ def main() -> int:
             errs.append(f"{rel} builds a SparkSession — build it only in "
                         f"{home}")
     applies_common = r"\.config\(\s*(graft\.core\.)?(Sessions\.)?common\s*\)"
+    # a call, not the definition: `def trimHadoopConf(` does not count
+    trims_conf = r"(?<!def )\btrimHadoopConf\("
     for home in recipes.values():
         if not re.search(applies_common, read(home)):
             errs.append(f"{home} does not apply Sessions.common — the tests "
                         "and the mains would run on different settings")
+        if not re.search(trims_conf, strip_comments(read(home))):
+            errs.append(f"{home} does not call Sessions.trimHadoopConf — the "
+                        "tests and the mains would ship different Hadoop "
+                        "configurations to their tasks")
 
     # 9. one stage barrier: lineage is cut only in core.Barrier
     for rel in only_in("src/main/scala/graft/core/Barrier.scala",
