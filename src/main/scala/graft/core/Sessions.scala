@@ -2,12 +2,15 @@ package graft.core
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.internal.SQLConf
 
 /** The one local-session recipe every main (Bench, Verify, Probe)
   * shares: `local[cpus]` with the shuffle
   * width matched to the core count (not the 200 default — a local run
-  * has no 200-slot cluster to fill) plus [[common]] and
-  * [[trimHadoopConf]], which the test harness applies too. Keeping it
+  * has no 200-slot cluster to fill) plus [[common]],
+  * [[trimHadoopConf]] and [[sizeCodegenCache]], which the test harness
+  * applies too. Keeping it
   * in one place stops the config block from drifting across mains —
   * exactly how round 4's dead legacy-conf pins multiplied.
   */
@@ -63,7 +66,9 @@ object Sessions {
     * the next power of two above the whole surface. The cache keeps
     * only what was compiled, so a run that compiles fewer classes
     * holds no more. `SessionsSpec` fails if a second pass over
-    * `bootcamp`'s queries compiles anything.
+    * `bootcamp`'s queries compiles more than an occasional 4 classes.
+    * Spark reads the size only once; [[sizeCodegenCache]] makes it
+    * read this one.
     */
   val common: Map[String, String] = localFs ++ Map(
     "spark.sql.session.timeZone" -> "UTC",
@@ -78,6 +83,7 @@ object Sessions {
       .config(common)
       .getOrCreate()
     trimHadoopConf(spark)
+    sizeCodegenCache(spark)
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }
@@ -127,4 +133,19 @@ object Sessions {
     loadDefaults.setBoolean(conf, false)
     conf.reloadConfiguration()
   }
+
+  /** Size Spark's codegen cache from this session's conf. Spark reads
+    * `spark.sql.codegen.cache.maxEntries` once per JVM, through
+    * `SQLConf.get`, when `CodeGenerator` first loads. On a thread with
+    * no active session that is Spark's default conf, so the first
+    * compile there fixes the cache at 100 entries whatever [[common]]
+    * says. The test harness meets this: its session is built on one
+    * suite's thread and used from others, and in a full tier-1 run a
+    * second pass over `bootcamp`'s queries compiled 94 classes. Loading
+    * `CodeGenerator` here, under the session's conf, fixes the size at
+    * session start; a JVM that compiled before its first session keeps
+    * the size it had.
+    */
+  def sizeCodegenCache(spark: SparkSession): Unit =
+    SQLConf.withExistingConf(spark.sessionState.conf)(CodeGenerator)
 }

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Caching.ipynb:92`), the settings every engine session carries
   * (`Sessions.common`: UTC, the engine's `file:` filesystem, one
   * executor class loader for every session, so every sink and
-  * streaming spec runs on what the mains run) and the mains' trimmed
-  * Hadoop configuration (`Sessions.trimHadoopConf`), plus a chispa-style
+  * streaming spec runs on what the mains run), the mains' trimmed
+  * Hadoop configuration (`Sessions.trimHadoopConf`) and codegen cache
+  * size (`Sessions.sizeCodegenCache`), plus a chispa-style
   * DataFrame equality assert
   * (reference test pattern, `3-spark-fundamentals/src/tests/`).
   */
@@ -85,6 +86,7 @@ object SparkSpec {
       .config(extra.toMap)
       .getOrCreate()
     graft.core.Sessions.trimHadoopConf(s)
+    graft.core.Sessions.sizeCodegenCache(s)
     s.sparkContext.setLogLevel("WARN")
     s
   }

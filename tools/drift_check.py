@@ -32,9 +32,10 @@ Checks:
      uses belongs in queries.OracleSql.
   8. One session recipe: under src/main, `SparkSession.builder` appears
      only in core/Sessions.scala; under src/test, only in SparkSpec.scala.
-     Both apply `Sessions.common` and call `Sessions.trimHadoopConf` — so
-     the tests run with the mains' time zone, `file:` filesystem,
-     executor class loader and Hadoop configuration (no XML defaults).
+     Both apply `Sessions.common` and call `Sessions.trimHadoopConf` and
+     `Sessions.sizeCodegenCache` — so the tests run with the mains' time
+     zone, `file:` filesystem, executor class loader, Hadoop configuration
+     (no XML defaults) and codegen cache size.
   9. One stage barrier (a ratchet at zero): under src/main, `.localCheckpoint(`
      and `.checkpoint(` appear only in core/Barrier.scala, the one place
      that decides how lineage is cut (local blocks under a local master,
@@ -324,16 +325,20 @@ def main() -> int:
             errs.append(f"{rel} builds a SparkSession — build it only in "
                         f"{home}")
     applies_common = r"\.config\(\s*(graft\.core\.)?(Sessions\.)?common\s*\)"
-    # a call, not the definition: `def trimHadoopConf(` does not count
-    trims_conf = r"(?<!def )\btrimHadoopConf\("
+    calls = {"trimHadoopConf": "ship different Hadoop configurations to "
+                               "their tasks",
+             "sizeCodegenCache": "hold different numbers of generated "
+                                 "classes"}
     for home in recipes.values():
         if not re.search(applies_common, read(home)):
             errs.append(f"{home} does not apply Sessions.common — the tests "
                         "and the mains would run on different settings")
-        if not re.search(trims_conf, strip_comments(read(home))):
-            errs.append(f"{home} does not call Sessions.trimHadoopConf — the "
-                        "tests and the mains would ship different Hadoop "
-                        "configurations to their tasks")
+        for name, differ in calls.items():
+            # a call, not the definition: `def trimHadoopConf(` does not count
+            if not re.search(rf"(?<!def )\b{name}\(",
+                             strip_comments(read(home))):
+                errs.append(f"{home} does not call Sessions.{name} — the "
+                            f"tests and the mains would {differ}")
 
     # 9. one stage barrier: lineage is cut only in core.Barrier
     for rel in only_in("src/main/scala/graft/core/Barrier.scala",
